@@ -13,9 +13,16 @@ of it natively — the shim rewrites the rest:
 - ``sqlite_master`` works because the engine registers a compat view
   (engine.py) — no rewrite needed here.
 
-The rewriter is token-aware (single-quoted strings and quoted identifiers
-are never rewritten inside) and uses balanced-paren argument extraction for
-function reshapes — not naive regex over the whole text.
+One lexer serves the whole front door: ``_TOKEN_RX`` / ``_split_tokens``
+is the only code that knows SQL's lexical rules (strings with the ``''``
+escape, ``"…"`` and `` `…` `` identifiers, ``--`` and ``/* */``
+comments). Every scan works on its output or on the same-length mask built
+from it (``_div_mask``: literals and quoted identifiers → NUL, comments →
+spaces), with ``_div_find_close`` / ``_div_split_args`` for balanced parens
+and ``_find_depth0`` for clause keywords. Comments never pass the front
+door: ``rewrite``, ``bind_params`` and ``split_statements`` blank them to
+spaces on entry, so no pass sees one, and nothing inside a literal or a
+quoted identifier is ever rewritten.
 """
 
 from __future__ import annotations
@@ -96,49 +103,77 @@ _STRFTIME_EXPR = {
 }
 
 
+# The front door's whole lexical grammar, as in SQLite's tokenizer:
+# '…' strings ('' is the only escape), "…" and `…` quoted identifiers,
+# and both comment forms. Text between matches is code. An unterminated
+# token runs to the end of the input.
+_TOKEN_RX = re.compile(
+    r"(?P<string>'[^']*(?:''[^']*)*'?)"
+    r'|(?P<dquote>"[^"]*"?)'
+    r"|(?P<backtick>`[^`]*`?)"
+    r"|(?P<comment>--[^\n]*|/\*.*?(?:\*/|\Z))",
+    re.S,
+)
+
+
 def _split_tokens(sql: str) -> list[tuple[str, str]]:
-    """Split into ('code' | 'string' | 'dquote' | 'backtick', text) chunks."""
+    """Split into ('code' | 'string' | 'dquote' | 'backtick' | 'comment',
+    text) chunks — the only place that knows SQL's lexical rules."""
     out: list[tuple[str, str]] = []
-    i, n = 0, len(sql)
-    buf = []
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            if buf:
-                out.append(("code", "".join(buf)))
-                buf = []
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            out.append(("string", sql[i : j + 1]))
-            i = j + 1
-        elif ch == '"':
-            if buf:
-                out.append(("code", "".join(buf)))
-                buf = []
-            j = sql.find('"', i + 1)
-            j = j if j != -1 else n - 1
-            out.append(("dquote", sql[i : j + 1]))
-            i = j + 1
-        elif ch == "`":
-            if buf:
-                out.append(("code", "".join(buf)))
-                buf = []
-            j = sql.find("`", i + 1)
-            j = j if j != -1 else n - 1
-            out.append(("backtick", sql[i : j + 1]))
-            i = j + 1
-        else:
-            buf.append(ch)
-            i += 1
-    if buf:
-        out.append(("code", "".join(buf)))
+    pos = 0
+    for m in _TOKEN_RX.finditer(sql):
+        if m.start() > pos:
+            out.append(("code", sql[pos : m.start()]))
+        out.append((m.lastgroup, m.group()))
+        pos = m.end()
+    if pos < len(sql):
+        out.append(("code", sql[pos:]))
     return out
+
+
+def blank_comments(sql: str) -> str:
+    """``sql`` with every comment blanked to same-length spaces (SQLite
+    reads a comment as whitespace). Runs once at each entry point —
+    rewrite, bind_params, the statement splitter — so no later pass
+    ever sees a comment."""
+    if "--" not in sql and "/*" not in sql:
+        return sql
+    return _TOKEN_RX.sub(
+        lambda m: " " * len(m.group()) if m.lastgroup == "comment" else m.group(),
+        sql,
+    )
+
+
+_TRIGGER_HEAD_RX = re.compile(r"\s*create\s+(?:temp(?:orary)?\s+)?trigger\b", re.I)
+_STMT_END_RX = re.compile(r";|\b(?:case|end)\b", re.I)
+
+
+def split_statements(script: str) -> list[str]:
+    """Split a script on ``;`` with SQLite's rule: semicolons inside
+    literals, quoted identifiers and comments never split, and inside
+    ``CREATE TRIGGER`` only the ``;`` after the body's closing ``END``
+    does (a ``CASE … END`` in the body is not that END). Comments are
+    blanked; empty statements are dropped."""
+    sql = blank_comments(script)
+    mask = _div_mask(sql)
+    stmts: list[str] = []
+    start = cases = 0
+    in_trigger = _TRIGGER_HEAD_RX.match(mask) is not None
+    for m in _STMT_END_RX.finditer(mask):
+        tok = m.group().lower()
+        if tok == "case":
+            cases += 1
+        elif tok == "end":
+            if cases:
+                cases -= 1
+            else:
+                in_trigger = False
+        elif not in_trigger:
+            stmts.append(sql[start : m.start()])
+            start, cases = m.end(), 0
+            in_trigger = _TRIGGER_HEAD_RX.match(mask, start) is not None
+    stmts.append(sql[start:])
+    return [s for s in (x.strip() for x in stmts) if s]
 
 
 def _escape_string_backslashes(sql: str) -> str:
@@ -220,7 +255,8 @@ def bind_params(sql: str, params) -> str:
     Placeholders inside string literals and quoted identifiers are never
     touched (token-aware, like the rest of the shim). Values are rendered
     as SQLite-dialect literals BEFORE ``rewrite``, so string escaping and
-    type handling ride the existing literal pipeline."""
+    type handling ride the existing literal pipeline. Comments are
+    blanked first: a ``?`` inside one is not a placeholder."""
     named = isinstance(params, dict)
     seq = None if named else list(params)
     used: set = set()
@@ -254,10 +290,10 @@ def bind_params(sql: str, params) -> str:
         used.add(idx)
         return _render_param(seq[idx - 1])
 
-    parts = []
-    for kind, text in _split_tokens(sql):
-        parts.append(_PLACEHOLDER_RX.sub(sub, text) if kind == "code" else text)
-    bound = "".join(parts)
+    bound = "".join(
+        _PLACEHOLDER_RX.sub(sub, text) if kind == "code" else text
+        for kind, text in _split_tokens(blank_comments(sql))
+    )
     if named:
         extra = set(params) - used
     else:
@@ -281,73 +317,37 @@ def _requote_identifiers(sql: str) -> str:
     return "".join(parts)
 
 
-def _in_string(sql: str, pos: int) -> bool:
-    """True if ``pos`` falls inside a single-quoted literal — scans with the
-    same doubled-``''`` escape handling as _split_tokens (a plain quote-parity
-    count miscounts ``'it''s'`` and skips legitimate rewrite sites)."""
-    i = 0
-    in_str = False
-    while i < pos:
-        if sql[i] == "'":
-            if in_str and i + 1 < len(sql) and sql[i + 1] == "'":
-                i += 2  # escaped quote inside the literal
-                continue
-            in_str = not in_str
-        i += 1
-    return in_str
-
-
 def _find_call(sql: str, name: str, start: int = 0) -> tuple[int, int, list[str]] | None:
     """Locate ``name( … )`` at a code position; return (start, end_exclusive,
-    args) with balanced-paren, quote-aware arg splitting."""
-    low = sql.lower()
+    args) with balanced-paren, token-aware arg splitting."""
     name_l = name.lower()
-    i = start
-    while True:
-        i = low.find(name_l, i)
-        if i == -1:
-            return None
-        before = sql[i - 1] if i > 0 else " "
-        after_idx = i + len(name_l)
+    if sql.lower().find(name_l, start) == -1:
+        return None
+    mask = _div_mask(sql)
+    low = mask.lower()
+    for m in re.compile(re.escape(name_l)).finditer(low, start):
+        i, j = m.start(), m.end()
         # must be a standalone identifier followed by '('
-        if (before.isalnum() or before in "_`\"'") or after_idx >= len(sql):
-            i += len(name_l)
+        if i > 0 and (sql[i - 1].isalnum() or sql[i - 1] in "_`\"'"):
             continue
-        j = after_idx
-        while j < len(sql) and sql[j] in " \t\n":
+        while j < len(mask) and mask[j] in " \t\n":
             j += 1
-        if j >= len(sql) or sql[j] != "(":
-            i += len(name_l)
-            continue
-        # check we're not inside a string literal ('' escapes handled)
-        if _in_string(sql, i):
-            i += len(name_l)
+        if j >= len(mask) or mask[j] != "(":
             continue
         # not a parenthesized TYPE name: `CAST(x AS CHAR(5))` must survive
-        if re.search(r"\bas\s*$", sql[:i], re.IGNORECASE):
-            i += len(name_l)
+        k = i
+        while k > 0 and mask[k - 1].isspace():
+            k -= 1
+        if low[k - 2 : k] == "as" and (
+            k < 3 or not (low[k - 3].isalnum() or low[k - 3] == "_")
+        ):
             continue
-        depth, k = 0, j
-        args: list[str] = []
-        arg_start = j + 1
-        in_str = False
-        while k < len(sql):
-            ch = sql[k]
-            if ch == "'":
-                in_str = not in_str
-            elif not in_str:
-                if ch == "(":
-                    depth += 1
-                elif ch == ")":
-                    depth -= 1
-                    if depth == 0:
-                        args.append(sql[arg_start:k])
-                        return i, k + 1, [a.strip() for a in args if a.strip() or len(args) > 0]
-                elif ch == "," and depth == 1:
-                    args.append(sql[arg_start:k])
-                    arg_start = k + 1
-            k += 1
-        return None  # unbalanced; leave untouched
+        close = _div_find_close(mask, j, len(mask))
+        if close == -1:
+            return None  # unbalanced; leave untouched
+        args = _div_split_args(mask, j + 1, close)
+        return i, close + 1, [sql[a:b].strip() for a, b in args]
+    return None
 
 
 def _rewrite_calls(sql: str, name: str, builder) -> str:
@@ -1463,7 +1463,7 @@ def _rewrite_total_over(sql: str) -> str:
     to the prefix parse by the cast pass, as in _total."""
     if "total" not in sql.lower():
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     for m in _TOTAL_OVER_RX.finditer(mask):
@@ -2228,12 +2228,14 @@ def _div_str_lit_type(content: str) -> str | None:
 
 
 def _div_mask(sql: str) -> str:
-    """Same-length scan mask: code chars verbatim, string/backtick chars
-    replaced by NUL so operators and parens inside them are invisible."""
-    return "".join(
-        text if kind == "code" else "\x00" * len(text)
-        for kind, text in _split_tokens(sql)
-    )
+    """Same-length scan mask: code chars verbatim, string and quoted-
+    identifier chars replaced by NUL so operators and parens inside them
+    are invisible, comments by spaces."""
+    return _TOKEN_RX.sub(_mask_token, sql)
+
+
+def _mask_token(m: re.Match) -> str:
+    return (" " if m.lastgroup == "comment" else "\x00") * (m.end() - m.start())
 
 
 def _div_find_close(mask: str, open_pos: int, end: int) -> int:
@@ -2266,6 +2268,18 @@ def _div_split_args(mask: str, start: int, end: int) -> list[tuple[int, int]]:
             a = i + 1
     spans.append((a, end))
     return spans
+
+
+def _find_depth0(mask: str, rx: re.Pattern, start: int = 0) -> re.Match | None:
+    """First match of ``rx`` in ``mask`` at paren depth 0, counting from
+    ``start`` — the clause-keyword finder (WHERE, RETURNING, UNION …)."""
+    depth, last = 0, start
+    for m in rx.finditer(mask, start):
+        depth += mask.count("(", last, m.start()) - mask.count(")", last, m.start())
+        last = m.start()
+        if depth == 0:
+            return m
+    return None
 
 
 def _case_marks(sql, mask, pos, end):
@@ -2466,7 +2480,7 @@ def _rewrite_case_truthiness(sql: str) -> str:
     touched; simple CASE (`CASE x WHEN v`) compares values and is left
     alone. Wraps are pure insertions, so nested CASE conditions compose
     (positions never collide)."""
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     for m in _CASE_WORD_RX.finditer(mask):
@@ -2574,7 +2588,7 @@ def _strip_unary_plus(sql: str) -> str:
     predecessor is a word char."""
     if "+" not in sql:
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits = []
     i = 0
@@ -2647,7 +2661,7 @@ def _rewrite_numlit_arith(sql: str) -> str:
     there (`s = '7'` is a TEXT compare)."""
     if "'" not in sql:
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     i = 0
     while i < len(mask):
@@ -2815,7 +2829,7 @@ def _rewrite_concat_grouping(sql: str) -> str:
     if "||" not in sql:
         return sql
     for _ in range(sql.count("||") + 1):
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         edit = None
         pos = 0
         while edit is None:
@@ -2879,7 +2893,7 @@ def _rewrite_null_postfix(sql: str) -> str:
     low = sql.lower()
     if "null" not in low:
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     for m in _NULL_POSTFIX_RX.finditer(mask):
         word = re.sub(r"\s+", " ", low[m.start():m.end()])
@@ -2932,7 +2946,7 @@ def _rewrite_exists_operand(sql: str) -> str:
     (the raw EXISTS word would read as already-boolean)."""
     if "exists" not in sql.lower():
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     last_end = -1
     for m in _EXISTS_WORD_RX.finditer(mask):
@@ -3054,7 +3068,7 @@ def _rewrite_bare_not(sql: str) -> str:
     form now runs instead of crashing (r15)."""
     if not re.search(r"(?i)\bnot\b", sql):
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     consumed_end = -1
@@ -3126,7 +3140,7 @@ def _strip_indexed_clauses(sql: str) -> str:
     the engine's CREATE INDEX is already a recorded no-op)."""
     if "indexed" not in sql.lower():
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     out, last = [], 0
     for m in _INDEXED_RX.finditer(mask):
         out.append(sql[last:m.start()])
@@ -3150,7 +3164,7 @@ def _rewrite_values_columns(sql: str) -> str:
     list after a bare user alias); a top-level VALUES statement (or
     compound arm) is wrapped `SELECT * FROM ( … ) AS …`. INSERT's
     VALUES (previous token an identifier or `)`) is untouched."""
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     n_seen = 0
@@ -3346,7 +3360,7 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
 
     # sweep 1: unary ~ over a non-INTEGER primary
     for _ in range(sql.count("~") + 1):
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         done = False
         i = len(sql) - 1
         while i >= 0:
@@ -3370,7 +3384,7 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
             break
     # sweep 2: binary chains
     for _ in range(len(sql)):
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         cands = _bitop_positions(mask)
         if not cands:
             return sql
@@ -3479,7 +3493,7 @@ def _rewrite_row_values(sql: str) -> str:
     if "(" not in sql:
         return sql
     for _ in range(sql.count("(") + 1):
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         low = sql.lower()
         hit = None
         pos = 0
@@ -3666,7 +3680,7 @@ def _rewrite_compare_affinity(
     # arm, each needing its own iteration — budget for them
     for _ in range(sql.count("=") + sql.count("<") + sql.count(">")
                    + 1 + 4 * sql.lower().count("case")):
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         pos = 0
         replaced = False
         while pos < len(sql):
@@ -3996,7 +4010,7 @@ def _rewrite_range_affinity(sql: str, coltypes) -> str:
       DROPS junk ones (they can never match; NULL items kept for the
       three-valued result); TEXT x renders numeric items as SQLite
       text. Subquery / non-literal lists stay untouched."""
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     for m in _BETWEEN_RX.finditer(mask):
@@ -4800,7 +4814,7 @@ def _rewrite_is_operator(sql: str, coltypes) -> str:
     if " is " not in sql.lower() and "\tis " not in sql.lower():
         if not re.search(r"(?i)\bis\b", sql):
             return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     for m in _IS_WORD_RX.finditer(mask):
@@ -5000,7 +5014,7 @@ def _cmp_chain_render(span: str, coltypes) -> str | None:
         if not inner:
             return None
         core = inner
-    mask = _blank_comments(core, _div_mask(core))
+    mask = _div_mask(core)
     conds: list[str] = []
     saw_real = False
     pos, end = 0, len(core)
@@ -5432,7 +5446,7 @@ def _rewrite_bare_minmax(sql: str) -> str:
     if "min(" not in low and "max(" not in low and "min (" not in low \
             and "max (" not in low:
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     for sm in _SELECT_WORD_RX.finditer(mask):
         # select list span: to the matching depth-0 FROM
@@ -5617,7 +5631,7 @@ def _strip_rank_frames(sql: str) -> str:
     from their OVER specs so the form runs with SQLite semantics."""
     if "over" not in sql.lower():
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     edits: list[tuple[int, int, str]] = []
     for m in _OVER_PAREN_RX.finditer(mask):
@@ -5673,7 +5687,7 @@ def _rewrite_limit_forms(sql: str) -> str:
     literal limit means no limit at all (Spark rejects negatives)."""
     if "limit" not in sql.lower():
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     for m in _LIMIT_WORD_RX.finditer(mask):
         i = _skip_ws(mask, m.end())
@@ -5781,7 +5795,7 @@ def _rewrite_clause_truthiness(sql: str) -> str:
     clause produces zero edits. ON is only a truthiness context after a
     JOIN (never INSERT's ON CONFLICT, never DDL — CREATE statements are
     skipped wholesale)."""
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     low = sql.lower()
     if low.lstrip()[:6] == "create":
         return sql
@@ -6333,10 +6347,7 @@ _FILTER_KW_RX = re.compile(r"(?i)\bFILTER\s*\(")
 
 def _rewrite_filter_over(sql: str) -> str:
     while True:
-        code = "".join(
-            text if kind == "code" else " " * len(text)
-            for kind, text in _split_tokens(sql)
-        )
+        code = _div_mask(sql)
         edit = None
         for m in _FILTER_KW_RX.finditer(code):
             fopen = code.index("(", m.start())
@@ -6756,31 +6767,6 @@ def _item_alias(sql, mask, low, a, b):
     return None  # operator: mid-expression
 
 
-def _blank_comments(sql: str, mask: str) -> str:
-    """Mask with `--` line comments and /* */ block comments blanked to
-    NUL (the literal mask leaves comment text verbatim — Spark parses
-    SQL comments natively, but operator scans must not fire inside)."""
-    if "--" not in sql and "/*" not in sql:
-        return mask
-    out = list(mask)
-    i, n = 0, len(mask)
-    while i < n:
-        if out[i] == "-" and i + 1 < n and out[i + 1] == "-":
-            j = sql.find("\n", i)
-            j = n if j == -1 else j
-            out[i:j] = "\x00" * (j - i)
-            i = j
-            continue
-        if out[i] == "/" and i + 1 < n and out[i + 1] == "*":
-            j = sql.find("*/", i + 2)
-            j = n if j == -1 else j + 2
-            out[i:j] = "\x00" * (j - i)
-            i = j
-            continue
-        i += 1
-    return "".join(out)
-
-
 def _rev_primary_start(sql: str, mask: str, e: int):
     """Start index of the tight-binding primary ENDING at e (exclusive):
     a literal/backtick token, an identifier (with t.c qualifiers), or a
@@ -6851,7 +6837,7 @@ def _rewrite_json_arrows(sql: str) -> str:
     if "->" not in sql:
         return sql
     while True:
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         pos = mask.find("->")
         if pos == -1:
             return sql
@@ -6918,7 +6904,7 @@ def _rewrite_string_aliases(sql: str) -> str:
     identifier alias."""
     if "'" not in sql:
         return sql
-    mask = _blank_comments(sql, _div_mask(sql))
+    mask = _div_mask(sql)
     edits = [
         # original case preserved (the lowercased `name` is for the
         # affinity map only; result column names keep the user's case)
@@ -6988,7 +6974,7 @@ def _apply_shadow(
 ) -> dict[str, str]:
     """Catalog column types with derived-scope alias rebinds applied
     (see _alias_shadow_types)."""
-    shadow = _alias_shadow_types(sql, _blank_comments(sql, mask), coltypes)
+    shadow = _alias_shadow_types(sql, mask, coltypes)
     if not shadow:
         return coltypes
     merged = dict(coltypes)
@@ -7095,7 +7081,7 @@ def _vd_compound_operand(text: str) -> bool:
         return False
     if _VD_COMPOUND_BLOCK_RX.search(s):
         return False
-    mask = _blank_comments(s, _div_mask(s))
+    mask = _div_mask(s)
     a, b, t = _div_scan_primary(s, mask, 0, len(s), None, [])
     return a == 0 and b == len(s) and t != "kw"
 
@@ -7404,7 +7390,7 @@ def _vd_render_text(expr: str) -> str | None:
     if m:
         word = "min" if m.group(1).lower() == "least" else "max"
         target = f"{word}({m.group(2)})"
-    mask = _blank_comments(target, _div_mask(target))
+    mask = _div_mask(target)
     cond = _vd_analyze_call(
         target, mask, target.lower(), 0, len(target), _ACTIVE_COLUMN_TYPES,
         numeric_only=True, rendering=True,
@@ -7972,7 +7958,7 @@ def _rewrite_value_dependent_div(
     # re-match (their operands are parenthesized, not direct calls), so
     # the count of operator sites bounds the loop — cap generously above
     for _ in range(sum(sql.count(c) for c in scan_chars) + 1):
-        mask = _blank_comments(sql, _div_mask(sql))
+        mask = _div_mask(sql)
         low = sql.lower()
         pos = 0
         replaced = False
@@ -8160,12 +8146,8 @@ def rewrite(sql: str, column_types: dict[str, str] | None = None) -> str:
     affinities are tracked — still correct, just more conservative."""
     global _ACTIVE_COLUMN_TYPES
     _ACTIVE_COLUMN_TYPES = column_types
-    sql = _strip_rank_frames(sql)
-    code = "".join(
-        text if kind == "code" else " " * len(text)
-        for kind, text in _split_tokens(sql)
-    )
-    if re.search(r"(?i)\bGROUPS\s+(BETWEEN|\d+|UNBOUNDED|CURRENT)\b", code):
+    sql = _strip_rank_frames(blank_comments(sql))
+    if re.search(r"(?i)\bGROUPS\s+(BETWEEN|\d+|UNBOUNDED|CURRENT)\b", _div_mask(sql)):
         # Spark SQL has no GROUPS frame mode; fail with the reduction
         # instead of surfacing Spark's opaque parse error
         raise FilesqlError(

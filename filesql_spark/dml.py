@@ -125,36 +125,24 @@ def dml_returning(engine, sql: str):
     return rows
 
 
-def _code_only(sql: str) -> str:
-    """The statement with string literals / quoted identifiers blanked to
-    same-length spaces (positions stay aligned with ``sql``) — keyword
-    guards must never fire on user data inside literals."""
-    return "".join(
-        text if kind == "code" else " " * len(text)
-        for kind, text in dialect._split_tokens(sql)
-    )
+_RETURNING_RX = re.compile(r"\bRETURNING\b", re.I)
+_ON_CONFLICT_RX = re.compile(r"\bON\s+CONFLICT\b", re.I)
+_WHERE_RX = re.compile(r"\bWHERE\b", re.I)
 
 
 def _strip_returning(sql: str) -> tuple[str, list[str] | None]:
     """Split a trailing ``RETURNING expr, …`` off a DML statement.
 
-    The keyword is located on the literal-blanked text (a column value
-    containing the word 'returning' must not trigger), at any paren
-    depth 0 position — SQLite only allows it as the final clause."""
-    code = _code_only(sql)
-    depth = 0
-    for m in re.finditer(r"[()]|\bRETURNING\b", code, re.I):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            exprs = _split_level0(sql[m.end() :].strip().rstrip(";"))
-            if not exprs:
-                raise FilesqlError("RETURNING requires at least one expression")
-            return sql[: m.start()], exprs
-    return sql, None
+    The keyword is located on the token mask (a column value containing
+    the word 'returning' must not trigger), at paren depth 0 — SQLite
+    only allows it as the final clause."""
+    m = dialect._find_depth0(dialect._div_mask(sql), _RETURNING_RX)
+    if m is None:
+        return sql, None
+    exprs = _split_level0(sql[m.end() :].strip().rstrip(";"))
+    if not exprs:
+        raise FilesqlError("RETURNING requires at least one expression")
+    return sql[: m.start()], exprs
 
 
 # ------------------------------------------------------------------- INSERT
@@ -174,19 +162,12 @@ _ON_CONFLICT_TAIL_RE = re.compile(
 
 def _strip_on_conflict(sql: str) -> tuple[str, str | None]:
     """Split a depth-0 ``ON CONFLICT …`` tail off an INSERT (located on
-    literal-blanked text, like RETURNING — data containing the words must
-    not trigger)."""
-    code = _code_only(sql)
-    depth = 0
-    for m in re.finditer(r"[()]|\bON\s+CONFLICT\b", code, re.I):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            return sql[: m.start()], sql[m.end() :].strip().rstrip(";")
-    return sql, None
+    the token mask, like RETURNING — data containing the words must not
+    trigger)."""
+    m = dialect._find_depth0(dialect._div_mask(sql), _ON_CONFLICT_RX)
+    if m is None:
+        return sql, None
+    return sql[: m.start()], sql[m.end() :].strip().rstrip(";")
 
 
 def _resolve_key(engine, table, target, cols_src: str | None, form: str) -> list[str]:
@@ -218,7 +199,7 @@ def _rewrite_excluded(expr: str) -> str:
     """``excluded.col`` → the joined incoming-row column ``__exc_col``
     (SQLite upsert's name for the row that failed to insert). Operates on
     code positions only — literals containing 'excluded.' are data."""
-    code = _code_only(expr)
+    code = dialect._div_mask(expr)
     out, last = [], 0
     pat = re.compile(rf"\bexcluded\s*\.\s*{_IDENT}", re.I)
     for m in pat.finditer(code):
@@ -689,46 +670,19 @@ _UPDATE_RE = re.compile(
 )
 
 
-def _split_level0(text: str, sep: str = ",") -> list[str]:
-    """Split on commas at paren depth 0, outside string literals."""
-    parts, depth, in_str, start = [], 0, False, 0
-    for i, ch in enumerate(text):
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif ch == sep and depth == 0:
-                parts.append(text[start:i])
-                start = i + 1
-    parts.append(text[start:])
-    return [p.strip() for p in parts if p.strip()]
+def _split_level0(text: str) -> list[str]:
+    """Split on commas at paren depth 0, outside literals and quoted
+    identifiers."""
+    spans = dialect._div_split_args(dialect._div_mask(text), 0, len(text))
+    return [p for p in (text[a:b].strip() for a, b in spans) if p]
 
 
 def _extract_where(body: str) -> tuple[str, str | None]:
-    """Split '... WHERE pred' at depth 0 (quote-aware)."""
-    depth, in_str = 0, False
-    low = body.lower()
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and low.startswith("where", i) and (
-                i == 0 or not body[i - 1].isalnum()
-            ):
-                nxt = i + 5
-                if nxt >= len(body) or not body[nxt].isalnum():
-                    return body[:i].strip(), body[nxt:].strip().rstrip(";")
-        i += 1
-    return body.strip().rstrip(";"), None
+    """Split '... WHERE pred' at the depth-0 WHERE keyword."""
+    m = dialect._find_depth0(dialect._div_mask(body), _WHERE_RX)
+    if m is None:
+        return body.strip().rstrip(";"), None
+    return body[: m.start()].strip(), body[m.end() :].strip().rstrip(";")
 
 
 def _update(engine, sql: str) -> tuple[int, "object | None"]:

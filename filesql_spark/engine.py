@@ -269,6 +269,7 @@ class Engine:
         the reference's database/sql surface (filesql.go: plain
         ``db.QueryContext(ctx, query, args...)``)."""
         self._flush_views()
+        sql = dialect.blank_comments(sql)
         if params is not None:
             sql = dialect.bind_params(sql, params)
         sql = dialect.substitute_session_functions(
@@ -303,7 +304,7 @@ class Engine:
             # REPLACE is SQLite's alias for INSERT OR REPLACE.
             from filesql_spark import dml
 
-            return dml.dml_returning(self, _strip_comments(sql).strip())
+            return dml.dml_returning(self, sql.strip())
         if stmt == "EXPLAIN":
             # SQLite's EXPLAIN [QUERY PLAN] <select> — surfaced honestly
             # as Spark's plan. QUERY PLAN keeps SQLite's exact schema
@@ -349,6 +350,7 @@ class Engine:
         from filesql_spark import dml
 
         self._flush_views()
+        sql = dialect.blank_comments(sql)
         if params is not None:
             sql = dialect.bind_params(sql, params)
         sql = dialect.substitute_session_functions(
@@ -392,9 +394,9 @@ class Engine:
             self.release(name)
             return 0
         if stmt in ("INSERT", "REPLACE", "UPDATE", "DELETE", "CREATE", "DROP", "ALTER"):
-            # comments are legal anywhere in SQLite DML; the dml regex
-            # parsers anchor on the keyword, so blank comments first
-            n = dml.execute(self, _strip_comments(sql).strip())
+            # the dml regex parsers anchor on the keyword: comments were
+            # blanked on entry
+            n = dml.execute(self, sql.strip())
             if stmt in ("INSERT", "REPLACE", "UPDATE", "DELETE"):
                 self._changes = n
                 self._total_changes += n
@@ -408,16 +410,15 @@ class Engine:
         reference's examples feed such scripts verbatim
         (example_test.go:295). Returns the total affected-row count.
 
-        Statement splitting is quote-aware (semicolons inside string
-        literals or quoted identifiers don't split) via the dialect
-        tokenizer; ``--`` and ``/* */`` comments are allowed between
-        statements.
+        Statements split with SQLite's rule (dialect.split_statements):
+        semicolons inside literals, quoted identifiers, comments and
+        trigger bodies don't split.
         """
         total = 0
-        for stmt in _split_statements(script):
+        for stmt in dialect.split_statements(script):
             kw = _first_keyword(stmt)
             if not kw:
-                continue  # comment-only fragment
+                continue  # no leading keyword
             if kw in ("SELECT", "WITH", "VALUES", "PRAGMA"):
                 self.query(stmt).count()
             else:
@@ -760,78 +761,8 @@ def _view_ident(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def _strip_comments(script: str) -> str:
-    """Blank ``--`` and ``/* */`` comments (outside quotes) to spaces.
-
-    Must run BEFORE tokenizing: a semicolon inside a comment would split
-    mid-statement, and an apostrophe in a comment (``-- don't``) would
-    open a phantom string token swallowing the rest of the script
-    (ADVICE r4). Quote scanning mirrors _split_tokens, including the
-    doubled-``''`` escape."""
-    out: list[str] = []
-    i, n = 0, len(script)
-    while i < n:
-        ch = script[i]
-        if ch == "-" and script.startswith("--", i):
-            j = script.find("\n", i)
-            j = j if j != -1 else n
-            out.append(" " * (j - i))
-            i = j
-        elif ch == "/" and script.startswith("/*", i):
-            j = script.find("*/", i + 2)
-            j = j + 2 if j != -1 else n
-            out.append(" " * (j - i))
-            i = j
-        elif ch == "'":
-            j = i + 1
-            while j < n:
-                if script[j] == "'" and j + 1 < n and script[j + 1] == "'":
-                    j += 2
-                    continue
-                if script[j] == "'":
-                    break
-                j += 1
-            out.append(script[i : j + 1])
-            i = j + 1
-        elif ch in '"`':
-            j = script.find(ch, i + 1)
-            j = j if j != -1 else n - 1
-            out.append(script[i : j + 1])
-            i = j + 1
-        else:
-            out.append(ch)
-            i += 1
-    return "".join(out)
-
-
-def _split_statements(script: str) -> list[str]:
-    """Comment- and quote-aware split of a SQL script on ``;`` (string
-    literals and quoted identifiers are opaque to the splitter; comments
-    are blanked first — see _strip_comments)."""
-    from filesql_spark.dialect import _split_tokens
-
-    stmts: list[str] = []
-    cur: list[str] = []
-    for kind, text in _split_tokens(_strip_comments(script)):
-        if kind != "code":
-            cur.append(text)
-            continue
-        while ";" in text:
-            head, text = text.split(";", 1)
-            cur.append(head)
-            stmts.append("".join(cur))
-            cur = []
-        cur.append(text)
-    stmts.append("".join(cur))
-    return [s for s in (x.strip() for x in stmts) if s]
-
-
 def _first_keyword(sql: str) -> str:
-    import re
-
-    # strip leading whitespace and -- / /* */ comments
-    s = re.sub(r"^(\s*(--[^\n]*\n|/\*.*?\*/))*\s*", "", sql, flags=re.S)
-    m = re.match(r"(\w+)", s)
+    m = re.match(r"\s*(\w+)", dialect.blank_comments(sql))
     return m.group(1).upper() if m else ""
 
 

@@ -24,6 +24,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from filesql_spark import dialect
 from filesql_spark.errors import FilesqlError
 
 MAX_ITERATIONS = 200
@@ -39,32 +40,16 @@ def is_recursive(sql: str) -> bool:
     return _RECURSIVE_RE.match(sql) is not None
 
 
+_UNION_RX = re.compile(r"\bunion\b(\s+all\b)?", re.I)
+
+
 def _split_top_level_union(body: str) -> tuple[str, str, bool]:
     """Split the CTE body at the top-level UNION [ALL]; returns
     (base, step, is_union_all)."""
-    depth, in_str = 0, False
-    low = body.lower()
-    i = 0
-    while i < len(body):
-        ch = body[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif depth == 0 and low.startswith("union", i):
-                before_ok = i == 0 or not body[i - 1].isalnum()
-                after = i + 5
-                if before_ok and (after >= len(body) or not body[after].isalnum()):
-                    rest = body[after:]
-                    m = re.match(r"\s+all\b", rest, re.I)
-                    if m:
-                        return body[:i], rest[m.end() :], True
-                    return body[:i], rest, False
-        i += 1
-    raise FilesqlError("recursive CTE body must be 'base UNION [ALL] step'")
+    m = dialect._find_depth0(dialect._div_mask(body), _UNION_RX)
+    if m is None:
+        raise FilesqlError("recursive CTE body must be 'base UNION [ALL] step'")
+    return body[: m.start()], body[m.end() :], m.group(1) is not None
 
 
 def _extract(sql: str) -> tuple[str, list[str] | None, str, str]:
@@ -78,22 +63,9 @@ def _extract(sql: str) -> tuple[str, list[str] | None, str, str]:
         if m.group("cols")
         else None
     )
-    # find the matching close paren of "AS ("
-    depth, in_str = 1, False
-    i = m.end()
-    while i < len(sql):
-        ch = sql[i]
-        if ch == "'":
-            in_str = not in_str
-        elif not in_str:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-        i += 1
-    if depth != 0:
+    # the close paren matching "AS ("
+    i = dialect._div_find_close(dialect._div_mask(sql), m.end() - 1, len(sql))
+    if i == -1:
         raise FilesqlError("unbalanced parentheses in recursive CTE")
     body = sql[m.end() : i]
     main = sql[i + 1 :].strip()

@@ -125,9 +125,7 @@ def parse_create_trigger(sql: str) -> tuple[Trigger, bool]:
         update_of = tuple(
             c.strip().strip('"`[]').lower() for c in m.group("ofcols").split(",")
         )
-    body = tuple(
-        s.strip() for s in _split_stmts(m.group("body")) if s.strip()
-    )
+    body = tuple(dialect.split_statements(m.group("body")))
     if not body:
         raise FilesqlError("CREATE TRIGGER: empty body")
     for stmt in body:
@@ -139,7 +137,7 @@ def parse_create_trigger(sql: str) -> tuple[Trigger, bool]:
                     "contains RAISE() (a plain SELECT's results would be "
                     "discarded)"
                 )
-            if re.search(r"(?i)\braise\s*\(\s*ignore\b", _code_only(stmt)):
+            if re.search(r"(?i)\braise\s*\(\s*ignore\b", dialect._div_mask(stmt)):
                 # reject at CREATE time, not first fire
                 raise FilesqlError(
                     "RAISE(IGNORE) is not supported: the statement applies "
@@ -172,40 +170,12 @@ def parse_create_trigger(sql: str) -> tuple[Trigger, bool]:
     )
 
 
-def _split_stmts(body: str) -> list[str]:
-    """Split trigger-body statements on ';' outside literals/parens."""
-    out, depth, cur = [], 0, []
-    for kind, text in dialect._split_tokens(body):
-        if kind != "code":
-            cur.append(text)
-            continue
-        for ch in text:
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == ";" and depth == 0:
-                out.append("".join(cur))
-                cur = []
-            else:
-                cur.append(ch)
-    out.append("".join(cur))
-    return out
-
-
-def _code_only(stmt: str) -> str:
-    return "".join(
-        text if kind == "code" else " " * len(text)
-        for kind, text in dialect._split_tokens(stmt)
-    )
-
-
 def _has_transition_ref(stmt: str) -> bool:
-    return re.search(r"(?i)\b(new|old)\s*\.", _code_only(stmt)) is not None
+    return re.search(r"(?i)\b(new|old)\s*\.", dialect._div_mask(stmt)) is not None
 
 
 def _contains_raise(stmt: str) -> bool:
-    return re.search(r"(?i)\braise\s*\(", _code_only(stmt)) is not None
+    return re.search(r"(?i)\braise\s*\(", dialect._div_mask(stmt)) is not None
 
 
 # ------------------------------------------------------------------- RAISE
@@ -240,7 +210,8 @@ def _rewrite_raise_calls(stmt: str) -> str:
         pos = a + len(marker)
 
 
-_TAIL_KWS = frozenset({"where", "group", "having", "order", "limit"})
+_TAIL_RX = re.compile(r"(?i)\b(?:where|group|having|order|limit)\b")
+_FROM_OR_TAIL_RX = re.compile(r"(?i)\b(?:from|where|group|having|order|limit)\b")
 
 
 def _splice_tx_source(stmt: str, view: str) -> str:
@@ -251,26 +222,14 @@ def _splice_tx_source(stmt: str, view: str) -> str:
     — SQLite evaluates the body once per transition row; the cross join
     is the set-based equivalent). NEW./OLD. resolve as fields of the
     relation's ``new``/``old`` struct columns."""
-    code = _code_only(stmt)
-    depth = 0
-    from_pos = None
-    tail_pos = None
-    for m in re.finditer(r"[()]|\b[A-Za-z_][A-Za-z0-9_]*\b", code):
-        tok = m.group(0)
-        if tok == "(":
-            depth += 1
-        elif tok == ")":
-            depth -= 1
-        elif depth == 0:
-            w = tok.lower()
-            if w == "from" and from_pos is None:
-                from_pos = m.start()
-            elif w in _TAIL_KWS:
-                tail_pos = m.start()
-                break
-    insert = f" CROSS JOIN {view} " if from_pos is not None else f" FROM {view} "
-    if tail_pos is not None:
-        return stmt[:tail_pos] + insert + stmt[tail_pos:]
+    code = dialect._div_mask(stmt)
+    m = dialect._find_depth0(code, _FROM_OR_TAIL_RX)
+    insert = f" FROM {view} "
+    if m is not None and m.group().lower() == "from":
+        insert = f" CROSS JOIN {view} "
+        m = dialect._find_depth0(code, _TAIL_RX, m.end())
+    if m is not None:
+        return stmt[: m.start()] + insert + stmt[m.start() :]
     return stmt + insert
 
 
@@ -528,19 +487,15 @@ def _body_delete(engine, stmt: str, tx: DataFrame) -> None:
 
 def _level0_tuples(values_src: str) -> list[str]:
     """['a, b', 'c, d'] from 'VALUES (a, b), (c, d)' minus the keyword."""
+    from filesql_spark import dml
+
     tuples = []
-    for piece in _split_level0_commas(values_src):
+    for piece in dml._split_level0(values_src):
         piece = piece.strip().rstrip(";").strip()
         if not (piece.startswith("(") and piece.endswith(")")):
             raise FilesqlError(f"cannot parse VALUES tuple: {piece[:80]}")
         tuples.append(piece[1:-1])
     return tuples
-
-
-def _split_level0_commas(text: str) -> list[str]:
-    from filesql_spark.dml import _split_level0
-
-    return _split_level0(text)
 
 
 _TX_SEQ = 0

@@ -479,6 +479,81 @@ def test_dml_with_comments(eng):
     assert n == 1
 
 
+# ------------------------------------------------- one lexer vs sqlite3
+# Comments, quoted identifiers and trigger bodies follow SQLite's single
+# tokenizer; every case runs the same script and query through stdlib
+# sqlite3 and compares rows.
+
+_LEX_SETUP = """
+CREATE TABLE t (id INTEGER, name TEXT, amount INTEGER);
+INSERT INTO t VALUES (1, 'a', 10), (2, 'b', 20), (3, 'c', 30);
+"""
+
+
+def _lex_differential(eng, script, sql):
+    import sqlite3
+
+    con = sqlite3.connect(":memory:")
+    con.executescript(script)
+    want = con.execute(sql).fetchall()
+    con.close()
+    eng.execute_script(script)
+    got = [tuple(r) for r in eng.query(sql).collect()]
+    assert got == want, (sql, got, want)
+    return got
+
+
+def test_comment_with_apostrophe_matches_sqlite(eng):
+    got = _lex_differential(
+        eng, _LEX_SETUP,
+        "SELECT id, amount / 3 AS q -- don't divide by zero\n"
+        "FROM t WHERE name = 'b'",
+    )
+    assert got == [(2, 6)]
+    eng.execute("DROP TABLE t")
+    got = _lex_differential(
+        eng, _LEX_SETUP,
+        "SELECT id /* the customer's id */, amount / 3 AS q "
+        "FROM t WHERE name = 'b'",
+    )
+    assert got == [(2, 6)]
+
+
+def test_quoted_identifier_with_comma_in_call_matches_sqlite(eng):
+    got = _lex_differential(
+        eng, _LEX_SETUP,
+        'SELECT upper("n,m") AS u FROM (SELECT name AS "n,m" FROM t) ORDER BY u',
+    )
+    assert got == [("A",), ("B",), ("C",)]
+
+
+def test_update_set_quoted_identifier_with_comma_matches_sqlite(eng):
+    from filesql_spark import dml
+
+    assert dml._split_level0('a = 1, "x,y" = 2') == ["a = 1", '"x,y" = 2']
+    script = (
+        'CREATE TABLE u (id INTEGER, "x,y" INTEGER);'
+        "INSERT INTO u VALUES (1, 10), (2, 20);"
+        'UPDATE u SET "x,y" = "x,y" + 1, id = id * 10 WHERE id = 2;'
+    )
+    got = _lex_differential(eng, script, 'SELECT id, "x,y" FROM u ORDER BY id')
+    assert got == [(1, 10), (20, 21)]
+
+
+def test_execute_script_keeps_trigger_body_whole(eng):
+    script = """
+    CREATE TABLE b (id INTEGER);
+    CREATE TABLE c (v INTEGER);
+    CREATE TRIGGER tr AFTER INSERT ON b BEGIN
+      INSERT INTO c VALUES (NEW.id);
+      INSERT INTO c VALUES (CASE WHEN NEW.id > 1 THEN NEW.id * 10 ELSE 0 END);
+    END;
+    INSERT INTO b VALUES (1), (2);
+    """
+    got = _lex_differential(eng, script, "SELECT v FROM c ORDER BY v")
+    assert got == [(0,), (1,), (2,), (20,)]
+
+
 def test_upsert_golden_vs_sqlite(eng):
     """Golden integration: run one upsert-heavy script through this engine
     AND through the actual reference dialect engine (stdlib sqlite3);
@@ -866,6 +941,21 @@ def test_params_null_and_placeholder_in_literal(eng):
     r = eng.query("SELECT (? IS NULL) AS isn, '?' AS q FROM sample LIMIT 1",
                   [None]).collect()
     assert bool(r[0].isn) is True and r[0].q == "?"
+    # nor is one inside a comment: sqlite3 binds a single parameter
+    import sqlite3
+
+    from filesql_spark import dialect
+
+    assert dialect.bind_params("SELECT ? AS a -- why?\n", [1]).strip() == "SELECT 1 AS a"
+    con = sqlite3.connect(":memory:")
+    con.executescript("CREATE TABLE sample (id INTEGER); INSERT INTO sample VALUES (1);")
+    for sql, params in [
+        ("SELECT ? AS a -- why?\n", [1]),
+        ("SELECT /* ?1 or :x? */ ? AS a FROM sample WHERE id = ?", [2, 1]),
+    ]:
+        want = con.execute(sql, params).fetchall()
+        assert [tuple(r) for r in eng.query(sql, params).collect()] == want
+    con.close()
 
 
 def test_params_errors(eng):

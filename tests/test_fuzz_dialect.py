@@ -273,6 +273,61 @@ def test_expression_corpus_matches_sqlite(spark, tmp_path, seed):
             assert g == x, (seed, i, e, g, x)
 
 
+# Comments carrying every character a scanner could mistake for a token
+# boundary: quotes, placeholders, statement separators.
+_COMMENTS = [
+    "/* it's a \"q\" ? ; */",
+    "-- don't ?1 ; \"x\n",
+    "/*'*/",
+    "--?;'\n",
+    "/* :n ; */",
+]
+
+
+def _commented(rng: random.Random, sql: str) -> str:
+    """``sql`` with some spaces outside string literals replaced by
+    comments (the generator quotes only with '…', '' escaped)."""
+    out, in_str = [], False
+    for ch in sql:
+        if ch == "'":
+            in_str = not in_str
+        elif ch == " " and not in_str and rng.random() < 0.3:
+            ch = f" {rng.choice(_COMMENTS)} "
+        out.append(ch)
+    return "".join(out)
+
+
+@pytest.mark.parametrize("seed", [2024, 77, 31337])
+def test_commented_expression_corpus_matches_sqlite(spark, tmp_path, seed):
+    """The seeded expression corpus above, with comments interleaved:
+    comments are whitespace to sqlite3, so they must be to the shim."""
+    rng = random.Random(seed)
+    exprs = [_gen(rng, rng.randint(1, 4))[0] for _ in range(60)]
+    crng = random.Random(-seed)
+    select = "SELECT " + ", ".join(
+        f"{_commented(crng, e)} {crng.choice(_COMMENTS)} AS c{i}"
+        for i, e in enumerate(exprs)
+    )
+
+    con = sqlite3.connect(":memory:")
+    expected = con.execute(select).fetchone()
+    con.close()
+
+    (tmp_path / "one.csv").write_text("id\n1\n")
+    eng = fs.open(str(tmp_path / "one.csv"), spark=spark)
+    try:
+        got = eng.query(select + " FROM one").collect()[0]
+    finally:
+        eng.close()
+
+    for i, e in enumerate(exprs):
+        g, x = _norm(got[i]), _norm(expected[i])
+        if isinstance(g, float) or isinstance(x, float):
+            assert g == pytest.approx(x, rel=1e-9, abs=1e-9), (seed, i, e)
+        else:
+            assert g == x, (seed, i, e, g, x)
+
+
 # ------------------------------------------------------------ division
 # Affinity-tracked generator: every production's SQLite result affinity
 # ('int' | 'real') is statically certain, so `/` and `%` land exactly on
