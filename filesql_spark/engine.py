@@ -7,18 +7,33 @@ DataFrames, queried via spark.sql behind the SQLite-dialect shim, dumped via
 the sinks package, with the same auto-save hooks.
 
 State model: ``_tables`` maps name → DataFrame (the current committed-or-
-working version). DML rewrites the DataFrame and re-registers the view —
-a lazy plan mutation, no materialization. Transactions are snapshot/swap of
-the registry dict (begin → shallow copy; rollback → restore; commit → drop
-snapshot + optional auto-save), mirroring save.go:268-294, 340-361.
+working version). Every stored version is an in-memory snapshot, the
+reference's ingest-once ``:memory:`` database in Spark terms:
+``_reregister`` is the one snapshot point, and it stores
+``df.localCheckpoint(eager=False)``. A loaded table's file is parsed, and a
+DML/DDL/trigger result is computed, once, on the version's first read;
+every later statement, view, RETURNING and dump reads executor memory
+instead of re-parsing the file and replaying the table's DML history.
+Transactions are snapshot/swap of the registry dict (begin → shallow copy;
+rollback → restore; commit → drop snapshot + optional auto-save),
+mirroring save.go:268-294, 340-361. An old version stays alive only while
+a transaction snapshot, a savepoint or a statement's unwind state
+references it; Spark's ContextCleaner frees it after that.
+
+Caveats of local checkpoints: snapshots live in executor block storage,
+which suits the engine's local mode (driver and executor are one JVM); on
+a cluster, a lost executor loses the snapshots it held. A source file
+edited after ``open`` is seen only until its table's first read.
 """
 
 from __future__ import annotations
 
 import os
 import re
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 from filesql_spark import dialect
@@ -57,8 +72,9 @@ class Engine:
         # views are DYNAMIC — they see base-table changes — but a Spark
         # DataFrame captures the base plan at spark.sql() time, so every
         # table mutation re-derives the registered views from these defs
-        # (analysis-only cost; plans stay lazy). r11 fix: views were
-        # frozen at CREATE VIEW time before this.
+        # (analysis-only cost: a view stays a plan over the tables'
+        # current snapshots, never a snapshot itself). r11 fix: views
+        # were frozen at CREATE VIEW time before this.
         self._view_defs: dict[str, str] = {}
         self._origins: dict[str, str] = {}  # table → original file path
         # declared PRIMARY KEY columns (from CREATE TABLE), the implicit
@@ -118,11 +134,24 @@ class Engine:
 
     def load_paths(self, paths: list[str]) -> None:
         """Collect + load every input path (reference Build/Open flow,
-        builder.go:255-344)."""
-        for path in collect_files_from_paths(paths):
-            result = load_file(self.spark, path)
-            self._temp_files.extend(result.temp_files)
-            for name, df in result.tables:
+        builder.go:255-344).
+
+        Files load concurrently, one thread per Spark core; the tables
+        register on this thread in input order, so a duplicate name fails
+        the same way on every run. If a file fails, the temp files of
+        every file that did load are recorded (``close`` removes them)
+        and the first error in input order is raised."""
+        files = collect_files_from_paths(paths)
+        load = inheritable_thread_target(self.spark)(
+            lambda path: load_file(self.spark, path)
+        )
+        with ThreadPoolExecutor(self.spark.sparkContext.defaultParallelism) as pool:
+            futures = [pool.submit(load, path) for path in files]
+        for fut in futures:
+            if fut.exception() is None:
+                self._temp_files.extend(fut.result().temp_files)
+        for path, fut in zip(files, futures):
+            for name, df in fut.result().tables:
                 if name in self._tables:
                     # hard error, like stream_processor.go:109-121
                     raise DuplicateTableError(
@@ -131,14 +160,16 @@ class Engine:
                 self.register(name, df, origin=path)
 
     def register(self, name: str, df: DataFrame, origin: str | None = None) -> None:
-        self._tables[name] = df
         if origin:
             self._origins[name] = origin
-        df.createOrReplaceTempView(_view_ident(name))
-        self._mark_views_dirty()
-        self._refresh_catalog_views()
+        self._reregister(name, df)
 
     def _reregister(self, name: str, df: DataFrame) -> None:
+        """Store ``df`` as the table's current version: the engine's one
+        snapshot point (see the module docstring). The lazy local
+        checkpoint plans ``df`` now and computes it on its first read;
+        from then on the version is a scan of executor memory."""
+        df = df.localCheckpoint(eager=False)
         self._tables[name] = df
         df.createOrReplaceTempView(_view_ident(name))
         self._mark_views_dirty()
@@ -710,7 +741,11 @@ def open(*paths: str, spark: SparkSession | None = None) -> Engine:  # noqa: A00
     if not paths:
         raise FilesqlError("at least one path is required")
     eng = Engine(spark=spark)
-    eng.load_paths(list(paths))
+    try:
+        eng.load_paths(list(paths))
+    except BaseException:
+        eng.close()  # drop the views and spill files of what did load
+        raise
     return eng
 
 

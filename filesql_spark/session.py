@@ -24,6 +24,15 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = max(os.cpu_count() or 8, 8)
 
 
+def default_driver_memory(physical_bytes: int | None = None) -> str:
+    """Driver heap for local mode: half of physical RAM, capped at 32g and
+    never below Spark's own 1g default. A heap as large as the machine
+    gets the JVM killed before it ever collects its garbage."""
+    if physical_bytes is None:
+        physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, physical_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "filesql_spark",
     master: str | None = None,
@@ -45,7 +54,7 @@ def get_spark(
     # heap starves 32 task threads (and a deep ANTLR parse alone can OOM
     # it — seen in round 10's fuzz corpus). Size it to the machine; on a
     # real cluster the submit config overrides this.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory()
 
     b = (
         SparkSession.builder.appName(app_name)

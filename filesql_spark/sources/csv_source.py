@@ -96,7 +96,9 @@ def read_delimited(
         .option("encoding", "UTF-8")
         # RFC-4180 embedded newlines (reference uses encoding/csv which
         # handles them, file.go:452-493). Trade-off: multiLine files are
-        # not split across tasks — for cluster-scale CSVs that are known
+        # not split across tasks. The one-task parse runs once per table
+        # (on the first read of its in-memory snapshot, engine.py), not
+        # once per statement; for cluster-scale CSVs that are known
         # newline-free, flip this off to restore splittable scans.
         .option("multiLine", True)
         # RFC-4180 quote escaping is a doubled quote; Spark's default

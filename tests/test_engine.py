@@ -1233,3 +1233,117 @@ def test_explain_query_plan_corpus(eng):
         text = "\n".join(r.detail for r in rows)
         for needle in needles:
             assert needle in text, (sql, needle, text)
+
+
+# ---------------------------------------------------- in-memory snapshots
+# Every table version is a lazy local checkpoint: computed on its first
+# read, then served from executor memory (engine.py, "State model").
+
+
+def _materialized(df) -> bool:
+    """Whether a stored table version has been read (its local
+    checkpoint is filled)."""
+    return df._jdf.queryExecution().analyzed().rdd().isCheckpointed()
+
+
+def test_autosave_over_original_counts_each_row_once(spark, tmp_path):
+    # the table is never read before the first commit overwrites its
+    # file; the next statement must build on the snapshot, not re-read
+    # the rewritten file (which double-counted the inserted row)
+    import sqlite3
+
+    path = tmp_path / "t.csv"
+    path.write_text("id,v\n1,10\n2,20\n3,30\n")
+    stmts = [
+        "BEGIN", "INSERT INTO t VALUES (4, 40)", "COMMIT",
+        "BEGIN", "UPDATE t SET v = v + 1 WHERE id = 1", "COMMIT",
+    ]
+    con = sqlite3.connect(":memory:", isolation_level=None)
+    con.executescript(
+        "CREATE TABLE t (id INTEGER, v INTEGER);"
+        "INSERT INTO t VALUES (1, 10), (2, 20), (3, 30);"
+    )
+    for s in stmts:
+        con.execute(s)
+    want = con.execute("SELECT count(*), sum(v) FROM t").fetchall()
+    con.close()
+    e = fs.Builder().add_path(str(path)).enable_auto_save("", on="commit").open(
+        spark=spark
+    )
+    try:
+        for s in stmts:
+            e.execute(s)
+        got = [tuple(r) for r in e.query("SELECT count(*), sum(v) FROM t").collect()]
+    finally:
+        e.close()
+    assert got == want == [(4, 101)]
+    assert path.read_text().splitlines() == ["id,v", "1,11", "2,20", "3,30", "4,40"]
+
+
+def test_open_failure_closes_engine(spark, tmp_path, monkeypatch):
+    import lzma
+    import tempfile
+
+    from filesql_spark.errors import EmptyFileError
+
+    spill = tmp_path / "spill"
+    spill.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(spill))
+    (tmp_path / "snap_leak_a.csv.xz").write_bytes(lzma.compress(b"id,v\n1,10\n"))
+    (tmp_path / "snap_leak_empty.csv").write_text("")
+    (tmp_path / "snap_leak_empty2.csv").write_text("")
+    with pytest.raises(EmptyFileError, match=r"snap_leak_empty\.csv"):
+        fs.open(
+            str(tmp_path / "snap_leak_a.csv.xz"),
+            str(tmp_path / "snap_leak_empty.csv"),
+            str(tmp_path / "snap_leak_empty2.csv"),
+            spark=spark,
+        )
+    assert list(spill.iterdir()) == []
+    assert not spark.catalog.tableExists("snap_leak_a")
+
+
+_SNAP_SETUP = [
+    "CREATE TABLE t (id INTEGER PRIMARY KEY, v INTEGER)",
+    "CREATE TRIGGER no_neg BEFORE INSERT ON t BEGIN "
+    "SELECT RAISE(ABORT, 'negative') WHERE NEW.v < 0; END",
+    "INSERT INTO t VALUES (1, 10), (2, 20)",
+]
+
+
+@pytest.mark.parametrize(
+    "stmts",
+    [
+        ["BEGIN", "INSERT INTO t VALUES (3, 30)", "ROLLBACK"],
+        [
+            "BEGIN", "INSERT INTO t VALUES (3, 30)", "SAVEPOINT sp",
+            "INSERT INTO t VALUES (4, 40)", "ROLLBACK TO sp", "COMMIT",
+        ],
+        ["INSERT INTO t VALUES (3, 30)", "INSERT INTO t VALUES (4, -1)"],
+    ],
+    ids=["rollback", "rollback_to", "raise_abort"],
+)
+def test_unwind_restores_unread_version_matches_sqlite(eng, stmts):
+    import sqlite3
+
+    from filesql_spark.errors import TriggerRaise
+
+    con = sqlite3.connect(":memory:", isolation_level=None)
+    want_errors, got_errors = [], []
+    for s in _SNAP_SETUP + stmts:
+        try:
+            con.execute(s)
+        except sqlite3.DatabaseError as err:
+            want_errors.append((s, str(err)))
+        try:
+            eng.execute(s)
+        except TriggerRaise as err:
+            got_errors.append((s, str(err)))
+    want = con.execute("SELECT id, v FROM t ORDER BY id").fetchall()
+    con.close()
+    # the restored version was never read: its first read is this query
+    assert not _materialized(eng.table("t"))
+    got = [tuple(r) for r in eng.query("SELECT id, v FROM t ORDER BY id").collect()]
+    assert got == want
+    assert [s for s, _ in got_errors] == [s for s, _ in want_errors]
+    assert _materialized(eng.table("t"))

@@ -717,3 +717,49 @@ def test_window_filter_rewrite_is_single_window(spark, tmp_path):
         assert "Join" not in plan
     finally:
         eng.close()
+
+
+def test_view_plan_stays_flat_under_repeated_updates(spark, tmp_path):
+    """Every table version is an in-memory snapshot, so a view that
+    filters on a column rewritten by k UPDATEs plans over one scan of
+    the latest version. Before snapshots, each UPDATE stacked a CASE
+    projection and the pushed-down filter grew with k."""
+    import filesql_spark as fs
+
+    (tmp_path / "hot.csv").write_text(
+        "id,v\n" + "".join(f"{i},{i}\n" for i in range(20))
+    )
+    eng = fs.open(str(tmp_path / "hot.csv"), spark=spark)
+    try:
+        eng.execute("CREATE VIEW hot_v AS SELECT * FROM hot WHERE v > 5")
+
+        def nodes() -> int:
+            qe = eng.query("SELECT * FROM hot_v")._jdf.queryExecution()
+            return len(qe.optimizedPlan().toString().splitlines())
+
+        sizes = []
+        for _ in range(12):
+            eng.execute("UPDATE hot SET v = v + 2 WHERE v % 2 = 0")
+            sizes.append(nodes())
+        assert sizes[-1] == sizes[0], sizes
+        # evens end at 24..42, odds stay 1..19: 10 + 7 rows exceed 5
+        assert eng.query("SELECT count(*) AS n FROM hot_v").collect()[0].n == 17
+    finally:
+        eng.close()
+
+
+def test_loaded_csv_read_from_memory_after_first_read(spark, tmp_path):
+    """After a loaded CSV table's first read, queries scan the table's
+    snapshot in executor memory, not the file."""
+    import filesql_spark as fs
+
+    (tmp_path / "mem.csv").write_text("id,v\n1,10\n2,20\n3,30\n")
+    eng = fs.open(str(tmp_path / "mem.csv"), spark=spark)
+    try:
+        assert eng.query("SELECT sum(v) AS s FROM mem").collect()[0].s == 60
+        qe = eng.query("SELECT id FROM mem WHERE v > 10")._jdf.queryExecution()
+        assert "Relation" not in qe.optimizedPlan().toString()
+        assert "FileScan" not in qe.executedPlan().toString()
+        assert "ExistingRDD" in qe.executedPlan().toString()
+    finally:
+        eng.close()
