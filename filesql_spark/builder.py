@@ -17,6 +17,7 @@ from pyspark.sql import SparkSession
 
 from filesql_spark.engine import AutoSaveConfig, Engine
 from filesql_spark.errors import ValidationError
+from filesql_spark.naming import sanitize_name, table_name_from_path
 from filesql_spark.sources.detect import FORMAT_EXTENSIONS
 
 
@@ -102,8 +103,16 @@ class Builder:
 
                 result = load_file(eng.spark, tmp)
                 eng._temp_files.extend(result.temp_files)
-                for _auto_name, df in result.tables:
-                    eng.register(table_name, df, origin=None)
+                # one table keeps the reader's name; the sheets of a
+                # multi-sheet workbook are {table_name}_{sheet}, as a
+                # file's sheets are {file}_{sheet}
+                stem = sanitize_name(table_name_from_path(tmp))
+                for auto_name, df in result.tables:
+                    name = table_name
+                    if len(result.tables) > 1:
+                        name = f"{table_name}_{auto_name[len(stem) + 1:]}"
+                    eng.register(name, df, origin=None)
+            eng._flush()
         except BaseException:
             eng.close()
             raise

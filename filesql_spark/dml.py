@@ -1,7 +1,8 @@
 """DML / DDL emulation over temp views (SURVEY §2.B DML rows, §7.2 phase 5).
 
 SQLite mutates B-trees; Spark DataFrames are immutable. Each statement
-rewrites the table's DataFrame lazily and re-registers the view:
+rewrites the table's DataFrame lazily and stores it as the table's new
+version in the engine catalog:
 
 - INSERT  → union of the existing plan with a literal VALUES (or SELECT) plan
 - UPSERT  → ``INSERT OR REPLACE/IGNORE`` and ``ON CONFLICT(key) DO
@@ -16,7 +17,7 @@ rewrites the table's DataFrame lazily and re-registers the view:
   (triggers.py — BEFORE/AFTER/INSTEAD OF + RAISE) — reference advertises
   these via SQLite (README.md:333-334)
 - ALTER TABLE RENAME TO / RENAME COLUMN / ADD COLUMN / DROP COLUMN
-  (SQLite 3.35+ forms) as plan rewrites + view re-registration
+  (SQLite 3.35+ forms) as plan rewrites
 
 Affected-row counts match database/sql's Exec contract.
 """
@@ -76,32 +77,22 @@ def _guarded_dml(engine, fn, sql: str):
     SQLite's scope); FAIL keeps the applied effects. Statements fired
     from inside a trigger cascade pass through — the OUTERMOST statement
     owns the unwind."""
-    if getattr(engine, "_trigger_depth", 0):
+    if engine._trigger_depth:
         return fn(engine, sql)
     from filesql_spark.errors import TriggerRaise
 
-    pre = (dict(engine._tables), dict(engine._views), dict(engine._view_defs))
-    pre_rowid = getattr(engine, "_last_insert_rowid", 0)
-    pre_hwm = dict(getattr(engine, "_rowid_hwm", {}))
+    pre, pre_rowid = engine._catalog.copy(), engine._last_insert_rowid
     try:
         return fn(engine, sql)
     except TriggerRaise as e:
-        if e.kind == "ROLLBACK" and (
-            engine._snapshot is not None or engine._savepoints
-        ):
-            # tables rewind to transaction start, not statement start:
-            # rollback()'s _restore_state clears the rowid high-water
-            # marks so the next INSERT re-counts the restored tables
+        if e.kind == "ROLLBACK" and engine._saves:
+            # tables rewind to transaction start, not statement start
             engine.rollback()
         elif e.kind != "FAIL":
-            tables, views, defs = pre
-            engine._restore_state(
-                tables, views, engine._primary_keys, engine._origins,
-                engine._triggers, defs,
-            )
-            # the statement's rows are undone: the next insert reuses
-            # their rowids, exactly like SQLite's reverted max-rowid
-            engine._rowid_hwm = pre_hwm
+            # the statement's rows are undone, and so are its rowid
+            # marks: the next insert reuses their rowids, exactly like
+            # SQLite's reverted max-rowid
+            engine._catalog = pre
         # last_insert_rowid(): sqlite3 keeps the aborted row's rowid when
         # an AFTER trigger raised (the row was inserted, then undone) but
         # leaves the counter untouched for a BEFORE-trigger raise (no row
@@ -185,7 +176,7 @@ def _resolve_key(engine, table, target, cols_src: str | None, form: str) -> list
                 )
             key.append(by_lower[name.lower()])
         return key
-    pk = engine._primary_keys.get(table)
+    pk = engine._catalog.primary_keys.get(table)
     if not pk:
         raise FilesqlError(
             f"{form} needs a conflict target: table {table!r} has no "
@@ -280,7 +271,7 @@ def _insert(engine, sql: str) -> tuple[int, "object | None"]:
     if or_act and conflict_tail is not None:
         raise FilesqlError("INSERT OR … cannot be combined with ON CONFLICT")
     table = _ident(m)
-    if table not in engine._tables and table in engine._views:
+    if table in engine._catalog.views:
         if or_act or conflict_tail is not None:
             raise FilesqlError(
                 "upsert forms (OR REPLACE/IGNORE, ON CONFLICT) are not "
@@ -333,7 +324,7 @@ def _insert(engine, sql: str) -> tuple[int, "object | None"]:
     n = aligned.count()
     engine._reregister(table, target.unionByName(aligned))
     _track_rowid(engine, table, target, aligned, n)
-    if engine._triggers:
+    if engine._catalog.triggers:
         from filesql_spark import triggers as trig
 
         trig.fire(
@@ -358,7 +349,7 @@ def _track_rowid(engine, table, target, aligned, n: int,
     if n == 0:
         return
     try:
-        pk = engine._primary_keys.get(table)
+        pk = engine._catalog.primary_keys.get(table)
         if pk and len(pk) == 1:
             f = next(
                 (f for f in target.schema.fields if f.name == pk[0]), None
@@ -373,11 +364,11 @@ def _track_rowid(engine, table, target, aligned, n: int,
                     return
         if pk_only:
             return
-        hwm = engine._rowid_hwm.get(table)
+        hwm = engine._catalog.rowid_hwm.get(table)
         if hwm is None:
             hwm = target.count()  # file-loaded rowids are dense 1..R
         hwm += n
-        engine._rowid_hwm[table] = hwm
+        engine._catalog.rowid_hwm[table] = hwm
         engine._last_insert_rowid = hwm
     except Exception:
         pass
@@ -404,7 +395,7 @@ def _returning_over(engine, rows_df, returning: list[str] | None):
 def _view_triggers(engine, table: str, event: str) -> list:
     return [
         t
-        for t in engine._triggers.values()
+        for t in engine._catalog.triggers.values()
         if t.table.lower() == table.lower()
         and t.event == event
         and t.timing == "INSTEAD OF"
@@ -420,7 +411,7 @@ def _view_insert(engine, table, m, returning):
     from filesql_spark import triggers as trig
 
     _require_instead_of(engine, table, "INSERT")
-    target = engine._views[table]
+    target = engine._catalog.views[table][1]
     body = m.group("body").rstrip().rstrip(";")
     src = engine.spark.sql(dialect.rewrite(body, engine._column_types()))
     if m.group("cols"):
@@ -459,7 +450,7 @@ def _view_update(engine, table, m, returning):
     from filesql_spark import triggers as trig
 
     _require_instead_of(engine, table, "UPDATE")
-    df = engine._views[table]
+    df = engine._catalog.views[table][1]
     set_part, where = _extract_where(m.group("body"))
     pred = (
         F.coalesce(F.expr(dialect.rewrite(where, engine._column_types())).cast("boolean"), F.lit(False))
@@ -496,7 +487,7 @@ def _view_delete(engine, table, m, returning):
     from filesql_spark import triggers as trig
 
     _require_instead_of(engine, table, "DELETE")
-    df = engine._views[table]
+    df = engine._catalog.views[table][1]
     rest = m.group("rest").strip().rstrip(";")
     if rest:
         if not rest.lower().startswith("where"):
@@ -518,7 +509,7 @@ def _view_delete(engine, table, m, returning):
 
 
 def _fire_insert_trigger(engine, table, rows_df) -> None:
-    if not engine._triggers:
+    if not engine._catalog.triggers:
         return
     from filesql_spark import triggers as trig
 
@@ -539,7 +530,7 @@ def _upsert_replace(engine, table, target, aligned, key, returning):
     incoming, _ = _dedup_by_key(aligned, key, keep="last")
     survivors = target.join(incoming.select(*key).distinct(), key, "left_anti")
     engine._reregister(table, survivors.unionByName(incoming))
-    engine._rowid_hwm.pop(table, None)
+    engine._catalog.rowid_hwm.pop(table, None)
     _track_rowid(engine, table, target, incoming, n, pk_only=True)
     # SQLite (recursive_triggers OFF, the default the reference inherits):
     # OR REPLACE fires INSERT triggers for the landed rows; the implicit
@@ -556,7 +547,7 @@ def _upsert_nothing(engine, table, target, aligned, key, returning):
     inserted = incoming.join(target.select(*key).distinct(), key, "left_anti")
     n = inserted.count()
     engine._reregister(table, target.unionByName(inserted))
-    engine._rowid_hwm.pop(table, None)
+    engine._catalog.rowid_hwm.pop(table, None)
     _track_rowid(engine, table, target, inserted, n, pk_only=True)
     # SQLite: OR IGNORE / DO NOTHING fire INSERT triggers only for rows
     # that actually inserted
@@ -624,7 +615,7 @@ def _upsert_update(engine, table, target, aligned, key, rest, returning):
     n_inserted = to_insert.count()
     engine._reregister(table, updated.unionByName(to_insert))
     _track_rowid(engine, table, target, to_insert, n_inserted, pk_only=True)
-    if engine._triggers:
+    if engine._catalog.triggers:
         # SQLite: DO UPDATE fires UPDATE triggers on the conflicted rows
         # (old = standing row, new = after SET) and INSERT triggers on
         # the non-conflicted inserted rows
@@ -693,7 +684,7 @@ def _update(engine, sql: str) -> tuple[int, "object | None"]:
     if not m:
         raise FilesqlError(f"cannot parse UPDATE: {sql.strip()[:120]}")
     table = _ident(m)
-    if table not in engine._tables and table in engine._views:
+    if table in engine._catalog.views:
         return _view_update(engine, table, m, returning)
     df = engine.table(table)
     set_part, where = _extract_where(m.group("body"))
@@ -716,7 +707,7 @@ def _update(engine, sql: str) -> tuple[int, "object | None"]:
 
     n = df.filter(pred).count()
     engine._reregister(table, df.withColumns(assigns))
-    if engine._triggers:
+    if engine._catalog.triggers:
         from filesql_spark import triggers as trig
 
         # pre-update plan is immutable → old/new images stay valid
@@ -752,7 +743,7 @@ def _delete(engine, sql: str) -> tuple[int, "object | None"]:
     if not m:
         raise FilesqlError(f"cannot parse DELETE: {sql.strip()[:120]}")
     table = _ident(m)
-    if table not in engine._tables and table in engine._views:
+    if table in engine._catalog.views:
         return _view_delete(engine, table, m, returning)
     df = engine.table(table)
     rest = m.group("rest").strip().rstrip(";")
@@ -766,8 +757,8 @@ def _delete(engine, sql: str) -> tuple[int, "object | None"]:
         pred = F.lit(True)
     n = df.filter(pred).count()
     engine._reregister(table, df.filter(~pred))
-    engine._rowid_hwm.pop(table, None)
-    if engine._triggers:
+    engine._catalog.rowid_hwm.pop(table, None)
+    if engine._catalog.triggers:
         from filesql_spark import triggers as trig
 
         trig.fire(
@@ -784,12 +775,12 @@ def _delete(engine, sql: str) -> tuple[int, "object | None"]:
 # --------------------------------------------------------------------- DDL
 
 _CREATE_TABLE_RE = re.compile(
-    rf"^\s*CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_IDENT}\s*"
+    rf"^\s*CREATE\s+(?:TEMP(?:ORARY)?\s+)?TABLE\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?{_IDENT}\s*"
     r"(?P<body>\(.*\)|AS\s+.*)$",
     re.I | re.S,
 )
 _CREATE_VIEW_RE = re.compile(
-    rf"^\s*CREATE\s+(?:TEMP(?:ORARY)?\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?{_IDENT}\s+AS\s+(?P<body>.*)$",
+    rf"^\s*CREATE\s+(?:TEMP(?:ORARY)?\s+)?VIEW\s+(?P<ine>IF\s+NOT\s+EXISTS\s+)?{_IDENT}\s+AS\s+(?P<body>.*)$",
     re.I | re.S,
 )
 
@@ -829,7 +820,8 @@ def _create(engine, sql: str) -> int:
         t, if_not_exists = trig.parse_create_trigger(sql)
         # SQLite's exact pairing rules and wordings: INSTEAD OF targets
         # views only; BEFORE/AFTER target tables only
-        is_view = t.table in engine._views
+        cat = engine._catalog
+        is_view = t.table in cat.views
         if t.timing == "INSTEAD OF":
             if not is_view:
                 raise FilesqlError(
@@ -839,31 +831,32 @@ def _create(engine, sql: str) -> int:
             raise FilesqlError(
                 f"cannot create {t.timing} trigger on view: {t.table}"
             )
-        elif t.table not in engine._tables:
+        elif t.table not in cat.tables:
             raise FilesqlError(f"no such table: {t.table}")
-        if t.name.lower() in engine._triggers:
+        if t.name.lower() in cat.triggers:
             if if_not_exists:
                 return 0
             raise FilesqlError(f"trigger {t.name} already exists")
-        engine._triggers[t.name.lower()] = t
-        engine._refresh_catalog_views()
+        cat.triggers[t.name.lower()] = t
         return 0
 
     m = _CREATE_VIEW_RE.match(sql)
     if m:
         name = _ident(m)
+        if m.group("ine") and engine._catalog.kind(name):
+            return 0
+        engine._check_free(name)
         body = m.group("body").rstrip().rstrip(";")
         df = engine.spark.sql(dialect.rewrite(body, engine._column_types()))
-        engine._views[name] = df
-        # keep the defining SQL: views are dynamic (engine._rederive_views)
-        engine._view_defs[name] = body
-        df.createOrReplaceTempView(name)
-        engine._refresh_catalog_views()
+        # keep the defining SQL: views are dynamic (engine._flush)
+        engine._catalog.views[name] = (body, df)
         return 0
 
     m = _CREATE_TABLE_RE.match(sql)
     if m:
         name = _ident(m)
+        if m.group("ine") and engine._catalog.kind(name):
+            return 0
         body = m.group("body").strip().rstrip(";")
         pk: list[str] = []
         if body.upper().startswith("AS"):
@@ -887,16 +880,10 @@ def _create(engine, sql: str) -> int:
                     pk = [cname]  # column-level PRIMARY KEY
                 fields.append(f"`{cname}` {ctype}")
             df = engine.spark.createDataFrame([], schema=", ".join(fields))
-        if name in engine._tables:
-            if "IF NOT EXISTS" in sql.upper():
-                return 0
-            # SQLite raises here; silently replacing would drop user data
-            from filesql_spark.errors import DuplicateTableError
-
-            raise DuplicateTableError(f"table {name!r} already exists")
+        # raises if the name is taken: replacing would drop user data
         engine.register(name, df)
         if pk:
-            engine._primary_keys[name] = pk
+            engine._catalog.primary_keys[name] = pk
         return 0
     raise FilesqlError(f"cannot parse CREATE: {sql.strip()[:120]}")
 
@@ -913,39 +900,24 @@ def _drop(engine, sql: str) -> int:
     if_exists = re.search(r"(?i)IF\s+EXISTS", sql) is not None
     if kind == "INDEX":
         return 0
+    cat = engine._catalog
     if kind == "TRIGGER":
-        if name.lower() not in engine._triggers:
+        if name.lower() not in cat.triggers:
             if if_exists:
                 return 0
             raise FilesqlError(f"no such trigger: {name}")
-        del engine._triggers[name.lower()]
-        engine._refresh_catalog_views()
+        del cat.triggers[name.lower()]
         return 0
-    store = engine._tables if kind == "TABLE" else engine._views
-    if name not in store:
+    found = "TABLE" if name in cat.tables else "VIEW" if name in cat.views else None
+    if found is None:
         if if_exists:
             return 0
         raise FilesqlError(f"no such {kind.lower()}: {name}")
-    del store[name]
-    if kind == "VIEW":
-        engine._view_defs.pop(name, None)
-    if kind == "TABLE":
-        # SQLite drops a table's triggers with it (lang_droptable.html)
-        engine._triggers = {
-            k: t
-            for k, t in engine._triggers.items()
-            if t.table.lower() != name.lower()
-        }
-    engine._primary_keys.pop(name, None)
-    engine._rowid_hwm.pop(name, None)
-    from filesql_spark.engine import _view_ident
-
-    engine.spark.catalog.dropTempView(_view_ident(name))
-    if kind == "TABLE":
-        # views over the dropped table keep their last-good DataFrame
-        # (documented divergence) — the flush records the failure
-        engine._mark_views_dirty()
-    engine._refresh_catalog_views()
+    if found != kind:
+        raise FilesqlError(f"use DROP {found} to delete {found.lower()} {name}")
+    # views over a dropped table keep their last-good DataFrame
+    # (documented divergence, engine._flush)
+    cat.drop(name)
     return 0
 
 
@@ -973,11 +945,11 @@ def _resolve_col(df, name: str) -> str | None:
 
 
 def _alter(engine, sql: str) -> int:
-    """SQLite's four ALTER TABLE forms (3.35+), over the versioned-view
-    registry — each rewrites the table's DataFrame plan and re-registers
-    the view, so ALTER participates in transactions/savepoints the same
-    way DML does (the snapshot dicts capture the pre-ALTER plans,
-    origins included).
+    """SQLite's four ALTER TABLE forms (3.35+), over the engine catalog —
+    each rewrites the table's DataFrame plan (RENAME TO moves the table,
+    its side data and its triggers), so ALTER participates in
+    transactions/savepoints the same way DML does (a saved catalog holds
+    the pre-ALTER state, origins included).
 
     - RENAME TO new_name
     - RENAME [COLUMN] old TO new
@@ -992,9 +964,7 @@ def _alter(engine, sql: str) -> int:
         raise FilesqlError(f"cannot parse ALTER: {sql.strip()[:120]}")
     table = _ident(m)
     rest = m.group("rest")
-    if table not in engine._tables:
-        raise FilesqlError(f"no such table: {table}")
-    df = engine._tables[table]
+    df = engine.table(table)  # raises "no such table"
     low = rest.lstrip().lower()
 
     # Table rename only wins on a COMPLETE "RENAME TO <ident>" parse:
@@ -1008,24 +978,12 @@ def _alter(engine, sql: str) -> int:
         except FilesqlError:
             new, tail = None, "x"
         if new is not None and not tail.strip():
-            if new in engine._tables or new in engine._views:
+            if engine._catalog.kind(new):
                 raise FilesqlError(
-                    f"there is already another table or view named {new!r}"
+                    "there is already another table or index with this "
+                    f"name: {new}"
                 )
-            from filesql_spark.engine import _view_ident
-
-            del engine._tables[table]
-            try:
-                engine.spark.catalog.dropTempView(_view_ident(table))
-            except Exception:
-                pass
-            if table in engine._primary_keys:
-                engine._primary_keys[new] = engine._primary_keys.pop(table)
-            if table in engine._origins:
-                engine._origins[new] = engine._origins.pop(table)
-            if table in engine._rowid_hwm:
-                engine._rowid_hwm[new] = engine._rowid_hwm.pop(table)
-            engine._reregister(new, df)
+            engine._catalog.rename_table(table, new)
             return 0
 
     if low.startswith("rename"):
@@ -1044,9 +1002,9 @@ def _alter(engine, sql: str) -> int:
             raise FilesqlError(f"no such column: {old}")
         if _resolve_col(df, new) is not None:
             raise FilesqlError(f"duplicate column name: {new}")
-        if table in engine._primary_keys:
-            engine._primary_keys[table] = [
-                new if c == actual else c for c in engine._primary_keys[table]
+        if table in engine._catalog.primary_keys:
+            engine._catalog.primary_keys[table] = [
+                new if c == actual else c for c in engine._catalog.primary_keys[table]
             ]
         engine._reregister(table, df.withColumnRenamed(actual, new))
         return 0
@@ -1119,7 +1077,7 @@ def _alter(engine, sql: str) -> int:
             raise FilesqlError(f"no such column: {name}")
         if len(df.columns) == 1:
             raise FilesqlError(f"cannot drop the only column of {table!r}")
-        if actual in engine._primary_keys.get(table, []):
+        if actual in engine._catalog.primary_keys.get(table, []):
             # SQLite: "error if the column ... is a PRIMARY KEY"
             raise FilesqlError(f"cannot drop PRIMARY KEY column: {name}")
         engine._reregister(table, df.drop(actual))

@@ -6,19 +6,36 @@ Close()/Commit() (save.go). Here: one SparkSession holding N temp views over
 DataFrames, queried via spark.sql behind the SQLite-dialect shim, dumped via
 the sinks package, with the same auto-save hooks.
 
-State model: ``_tables`` maps name → DataFrame (the current committed-or-
-working version). Every stored version is an in-memory snapshot, the
-reference's ingest-once ``:memory:`` database in Spark terms:
-``_reregister`` is the one snapshot point, and it stores
-``df.localCheckpoint(eager=False)``. A loaded table's file is parsed, and a
-DML/DDL/trigger result is computed, once, on the version's first read;
-every later statement, view, RETURNING and dump reads executor memory
-instead of re-parsing the file and replaying the table's DML history.
-Transactions are snapshot/swap of the registry dict (begin → shallow copy;
-rollback → restore; commit → drop snapshot + optional auto-save),
-mirroring save.go:268-294, 340-361. An old version stays alive only while
-a transaction snapshot, a savepoint or a statement's unwind state
-references it; Spark's ContextCleaner frees it after that.
+State model: one ``Catalog`` value holds everything SQLite keeps in its
+``:memory:`` schema: tables, views (defining SQL + current DataFrame),
+triggers, and the per-table origins, primary keys and rowid marks.
+Tables and views share one case-insensitive namespace, checked in one
+place (``register`` for file loads, Builder readers and CREATE TABLE;
+CREATE VIEW and RENAME ask the same ``Catalog.kind``). Every stored table
+version is an in-memory snapshot, the reference's ingest-once
+``:memory:`` database in Spark terms: ``_reregister`` is the one snapshot
+point, and it stores ``df.localCheckpoint(eager=False)``. A loaded
+table's file is parsed, and a DML/DDL/trigger result is computed, once,
+on the version's first read; every later statement, view, RETURNING and
+dump reads executor memory instead of re-parsing the file and replaying
+the table's DML history.
+
+Because every value in the catalog is immutable, a transaction is a saved
+``catalog.copy()``, mirroring save.go:268-294, 340-361. One save stack
+holds ``(savepoint name, or None for BEGIN, saved catalog)``; rollback,
+ROLLBACK TO and a statement's RAISE unwind all restore by making a saved
+catalog current again. An old table version stays alive only while a
+saved catalog references it; Spark's ContextCleaner frees it after that.
+
+The Spark-side objects (one temp view per table and view, and
+``sqlite_master``) are derived from the catalog by ``_flush``, on entry
+to ``query``/``execute``, before a trigger's WHEN and before each
+trigger-body statement. It binds what changed, drops what is gone,
+re-derives the views when a table changed (SQLite views are dynamic),
+and rebuilds ``sqlite_master`` only when its rows change. ``open`` ends
+with a flush, so the loaded tables and ``sqlite_master`` are Spark temp
+views right away; a bare ``spark.sql`` sees a statement's change only
+after the engine's next ``query``/``execute``.
 
 Caveats of local checkpoints: snapshots live in executor block storage,
 which suits the engine's local mode (driver and executor are one JVM); on
@@ -31,7 +48,7 @@ from __future__ import annotations
 import os
 import re
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field, fields, replace
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
@@ -57,6 +74,58 @@ class AutoSaveConfig:
     compression: str | None = None
 
 
+@dataclass
+class Catalog:
+    """The database schema and its per-table side data, as one value.
+    Every entry is immutable (table versions are snapshots, triggers are
+    frozen, a view pairs its SQL with a DataFrame), so a transaction
+    saves a shallow ``copy``."""
+
+    tables: dict[str, DataFrame] = field(default_factory=dict)
+    # view name → (defining SELECT, current DataFrame), in creation order
+    views: dict[str, tuple[str, DataFrame]] = field(default_factory=dict)
+    origins: dict[str, str] = field(default_factory=dict)  # table → source file
+    # declared PRIMARY KEY columns (from CREATE TABLE), the implicit
+    # conflict target for INSERT OR REPLACE/IGNORE and bare ON CONFLICT
+    primary_keys: dict[str, list[str]] = field(default_factory=dict)
+    # lowercased trigger name → triggers.Trigger
+    triggers: dict[str, object] = field(default_factory=dict)
+    # implicit-rowid high-water marks (last_insert_rowid, see Engine.__init__)
+    rowid_hwm: dict[str, int] = field(default_factory=dict)
+
+    def copy(self) -> Catalog:
+        return Catalog(**{f.name: dict(getattr(self, f.name)) for f in fields(self)})
+
+    def kind(self, name: str) -> str | None:
+        """'table' or 'view' if ``name`` is taken in the one namespace
+        both share, matched case-insensitively like SQLite (and Spark's
+        temp views) match identifiers."""
+        key = name.lower()
+        for kind, names in (("table", self.tables), ("view", self.views)):
+            if any(n.lower() == key for n in names):
+                return kind
+        return None
+
+    def drop(self, name: str) -> None:
+        """DROP TABLE/VIEW: the object's triggers and side data go with it
+        (lang_droptable.html, lang_dropview.html)."""
+        for d in (self.tables, self.views, self.primary_keys, self.rowid_hwm):
+            d.pop(name, None)
+        self.triggers = {
+            k: t for k, t in self.triggers.items() if t.table.lower() != name.lower()
+        }
+
+    def rename_table(self, old: str, new: str) -> None:
+        """ALTER TABLE … RENAME TO: the triggers and side data follow."""
+        for d in (self.tables, self.origins, self.primary_keys, self.rowid_hwm):
+            if old in d:
+                d[new] = d.pop(old)
+        self.triggers = {
+            k: replace(t, table=new) if t.table.lower() == old.lower() else t
+            for k, t in self.triggers.items()
+        }
+
+
 class Engine:
     """A loaded database: named DataFrames + SQL front door + export."""
 
@@ -66,36 +135,16 @@ class Engine:
 
         register_udfs(self.spark)  # json1 mutation + json_each (idempotent)
         self.auto_save = auto_save
-        self._tables: dict[str, DataFrame] = {}
-        self._views: dict[str, DataFrame] = {}
-        # view name → defining SELECT text, in creation order. SQLite
-        # views are DYNAMIC — they see base-table changes — but a Spark
-        # DataFrame captures the base plan at spark.sql() time, so every
-        # table mutation re-derives the registered views from these defs
-        # (analysis-only cost: a view stays a plan over the tables'
-        # current snapshots, never a snapshot itself). r11 fix: views
-        # were frozen at CREATE VIEW time before this.
-        self._view_defs: dict[str, str] = {}
-        self._origins: dict[str, str] = {}  # table → original file path
-        # declared PRIMARY KEY columns (from CREATE TABLE), the implicit
-        # conflict target for INSERT OR REPLACE/IGNORE and bare ON CONFLICT
-        self._primary_keys: dict[str, list[str]] = {}
-        # registered triggers, keyed by lowercased name (triggers.py)
-        self._triggers: dict[str, object] = {}
-        self._snapshot: tuple[dict[str, DataFrame], dict[str, DataFrame]] | None = None
-        # SAVEPOINT stack: (lowercased name, (tables, views), primary_keys,
-        # origins, triggers).
-        # A savepoint issued outside BEGIN starts an implicit transaction
-        # (SQLite semantics: releasing the outermost savepoint commits it).
-        self._savepoints: list[
-            tuple[
-                str,
-                tuple[dict[str, DataFrame], dict[str, DataFrame]],
-                dict,
-                dict,
-                dict,
-            ]
-        ] = []
+        self._catalog = Catalog()
+        # save stack: (lowercased savepoint name, or None for BEGIN, saved
+        # catalog). A savepoint issued outside BEGIN starts an implicit
+        # transaction (SQLite: releasing the outermost savepoint commits).
+        self._saves: list[tuple[str | None, Catalog]] = []
+        # what _flush last derived: temp view name → bound DataFrame, and
+        # the rows sqlite_master was built from
+        self._bound: dict[str, DataFrame] = {}
+        self._master_rows: list[tuple] | None = None
+        self._trigger_depth = 0  # trigger cascade depth (triggers.fire)
         self._temp_files: list[str] = []
         self._closed = False
         # connection-state function counters (SQLite changes() /
@@ -125,9 +174,7 @@ class Engine:
         # the suffix-delete/delete-all histories exact and the contract
         # simple; tests pin both the exact and the divergent cases.
         self._last_insert_rowid = 0
-        self._rowid_hwm: dict[str, int] = {}
-        self._views_dirty = False
-        # view name → last re-derivation failure (see _flush_views)
+        # view name → last re-derivation failure (see _flush)
         self._view_errors: dict[str, str] = {}
 
     # ------------------------------------------------------------------ load
@@ -152,68 +199,80 @@ class Engine:
                 self._temp_files.extend(fut.result().temp_files)
         for path, fut in zip(files, futures):
             for name, df in fut.result().tables:
-                if name in self._tables:
-                    # hard error, like stream_processor.go:109-121
-                    raise DuplicateTableError(
-                        f"table {name!r} already exists (from {path})"
-                    )
                 self.register(name, df, origin=path)
 
     def register(self, name: str, df: DataFrame, origin: str | None = None) -> None:
+        """Add table ``name``. File loads, Builder readers and CREATE TABLE
+        all come through here, so this is where a name already taken by a
+        table or view fails (a hard error, like
+        stream_processor.go:109-121)."""
+        self._check_free(name, origin)
         if origin:
-            self._origins[name] = origin
+            self._catalog.origins[name] = origin
         self._reregister(name, df)
+
+    def _check_free(self, name: str, origin: str | None = None) -> None:
+        kind = self._catalog.kind(name)
+        if kind is not None:
+            src = f" (from {origin})" if origin else ""
+            raise DuplicateTableError(f"{kind} {name} already exists{src}")
 
     def _reregister(self, name: str, df: DataFrame) -> None:
         """Store ``df`` as the table's current version: the engine's one
         snapshot point (see the module docstring). The lazy local
         checkpoint plans ``df`` now and computes it on its first read;
         from then on the version is a scan of executor memory."""
-        df = df.localCheckpoint(eager=False)
-        self._tables[name] = df
+        self._catalog.tables[name] = df.localCheckpoint(eager=False)
+
+    def _flush(self) -> None:
+        """Derive the Spark-side objects from the catalog (see the module
+        docstring). When a table changed, every view re-derives from its
+        defining SQL in creation order, so reads see current data; the
+        cost is analysis only, since a view stays a plan over the tables'
+        snapshots. A view whose re-derivation fails (e.g. its base table
+        was dropped) keeps its last-good DataFrame (documented
+        divergence: SQLite errors at view-query time); the failure is
+        recorded in ``_view_errors`` instead of vanishing."""
+        cat, bound = self._catalog, self._bound
+        gone = bound.keys() - cat.tables.keys() - cat.views.keys() - {"sqlite_master"}
+        for name in gone:
+            self.spark.catalog.dropTempView(_view_ident(name))
+            del bound[name]
+        changed = [n for n, df in cat.tables.items() if bound.get(n) is not df]
+        for name in changed:
+            self._bind(name, cat.tables[name])
+        for name, (body, df) in cat.views.items():
+            if gone or changed:
+                try:
+                    df = self.spark.sql(dialect.rewrite(body, self._column_types()))
+                except Exception as e:
+                    self._view_errors[name] = f"{type(e).__name__}: {e}"
+                else:
+                    self._view_errors.pop(name, None)
+                    cat.views[name] = (body, df)
+            if bound.get(name) is not df:
+                self._bind(name, df)
+        rows = self._sqlite_master_rows()
+        if rows != self._master_rows:
+            self._master_rows = rows
+            schema = "type string, name string, tbl_name string, rootpage int, sql string"
+            self._bind("sqlite_master", self.spark.createDataFrame(rows, schema=schema))
+
+    def _bind(self, name: str, df: DataFrame) -> None:
+        """The one place a Spark temp view is created: ``_view_ident``
+        quotes names Spark would reject bare."""
         df.createOrReplaceTempView(_view_ident(name))
-        self._mark_views_dirty()
-        self._refresh_catalog_views()
-
-    def _mark_views_dirty(self) -> None:
-        """A base table changed: registered views re-derive lazily on the
-        next read (r12 ADVICE — eager per-mutation re-analysis was
-        O(views × statements) across a trigger cascade)."""
-        if self._view_defs:
-            self._views_dirty = True
-
-    def _flush_views(self) -> None:
-        """Re-analyze every registered view from its defining SQL if a
-        base table changed since the last read, so reads see current
-        data (SQLite views are dynamic). A view whose re-derivation now
-        fails (e.g. its base table was dropped) keeps its last-good
-        DataFrame (documented divergence: SQLite errors at view-query
-        time) — the failure is recorded in ``_view_errors`` instead of
-        vanishing."""
-        if not getattr(self, "_views_dirty", False):
-            return
-        self._views_dirty = False
-        from filesql_spark import dialect
-
-        for name, body in self._view_defs.items():
-            try:
-                df = self.spark.sql(dialect.rewrite(body, self._column_types()))
-            except Exception as e:
-                self._view_errors[name] = f"{type(e).__name__}: {e}"
-                continue
-            self._view_errors.pop(name, None)
-            self._views[name] = df
-            df.createOrReplaceTempView(name)
+        self._bound[name] = df
 
     # --------------------------------------------------------------- catalog
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._tables:
+        if name not in self._catalog.tables:
             raise FilesqlError(f"no such table: {name}")
-        return self._tables[name]
+        return self._catalog.tables[name]
 
     def table_names(self) -> list[str]:
-        return sorted(self._tables)
+        return sorted(self._catalog.tables)
 
     def _column_types(self) -> dict[str, str]:
         """Lowercased column → SQLite affinity bucket ('int' | 'real' |
@@ -224,7 +283,8 @@ class Engine:
         apply SQLite's numeric coercion inside avg/sum/total — every
         numeric consumer treats it exactly like untracked."""
         out: dict[str, str | None] = {}
-        for df in list(self._tables.values()) + list(self._views.values()):
+        cat = self._catalog
+        for df in [*cat.tables.values(), *(df for _sql, df in cat.views.values())]:
             for f in df.schema.fields:
                 s = f.dataType.simpleString()
                 if s in ("tinyint", "smallint", "int", "bigint"):
@@ -245,41 +305,28 @@ class Engine:
     def _ddl_for(self, name: str) -> str:
         cols = ", ".join(
             f'"{f.name}" {_sqlite_type(f.dataType.simpleString())}'
-            for f in self._tables[name].schema.fields
+            for f in self._catalog.tables[name].schema.fields
         )
         return f'CREATE TABLE "{name}" ({cols})'
 
-    def _refresh_catalog_views(self) -> None:
-        """Maintain the ``sqlite_master`` compat view (filesql.go:224-248;
-        README.md:149 queries it verbatim)."""
-        rows = [
-            (
-                kind,
-                name,
-                name,
-                0,
-                # SQLite stores each object's creating statement verbatim
-                self._ddl_for(name) if kind == "table"
-                else (
-                    f'CREATE VIEW "{name}" AS {self._view_defs[name]}'
-                    if name in self._view_defs else None
-                ),
-            )
-            for kind, names in (("table", self._tables), ("view", self._views))
-            for name in names
-        ] + [
-            ("trigger", t.name, t.table, 0, t.sql)
-            for t in self._triggers.values()
-        ]
-        df = self.spark.createDataFrame(
-            rows, schema="type string, name string, tbl_name string, rootpage int, sql string"
+    def _sqlite_master_rows(self) -> list[tuple]:
+        """Rows of the ``sqlite_master`` compat view (filesql.go:224-248;
+        README.md:149 queries it verbatim). SQLite stores each object's
+        creating statement verbatim; table DDL is synthesized."""
+        cat = self._catalog
+        return (
+            [("table", n, n, 0, self._ddl_for(n)) for n in cat.tables]
+            + [
+                ("view", n, n, 0, f'CREATE VIEW "{n}" AS {body}')
+                for n, (body, _df) in cat.views.items()
+            ]
+            + [("trigger", t.name, t.table, 0, t.sql) for t in cat.triggers.values()]
         )
-        df.createOrReplaceTempView("sqlite_master")
 
     def pragma_table_info(self, name: str) -> DataFrame:
         """PRAGMA table_info(t) compat (filesql.go:275-301 uses it)."""
         fields = self.table(name).schema.fields
-        pk = {c.lower(): i + 1 for i, c in enumerate(self._primary_keys.get(name, []))}
+        pk = {c.lower(): i + 1 for i, c in enumerate(self._catalog.primary_keys.get(name, []))}
         rows = [
             (i, f.name, _sqlite_type(f.dataType.simpleString()), 0, None,
              pk.get(f.name.lower(), 0))
@@ -299,13 +346,13 @@ class Engine:
         sequence, ``:name``/``@name``/``$name`` with a dict) exactly like
         the reference's database/sql surface (filesql.go: plain
         ``db.QueryContext(ctx, query, args...)``)."""
-        self._flush_views()
+        self._flush()
         sql = dialect.blank_comments(sql)
         if params is not None:
             sql = dialect.bind_params(sql, params)
         sql = dialect.substitute_session_functions(
             sql, self._changes, self._total_changes,
-            getattr(self, "_last_insert_rowid", 0),
+            self._last_insert_rowid,
         )
         stmt = _first_keyword(sql)
         if stmt == "PRAGMA":
@@ -380,13 +427,13 @@ class Engine:
         :meth:`query`."""
         from filesql_spark import dml
 
-        self._flush_views()
+        self._flush()
         sql = dialect.blank_comments(sql)
         if params is not None:
             sql = dialect.bind_params(sql, params)
         sql = dialect.substitute_session_functions(
             sql, self._changes, self._total_changes,
-            getattr(self, "_last_insert_rowid", 0),
+            self._last_insert_rowid,
         )
 
         stmt = _first_keyword(sql)
@@ -415,9 +462,7 @@ class Engine:
             # (REINDEX). Accepted so scripts written for SQLite run
             # unchanged; VACUUM keeps SQLite's one observable rule —
             # it refuses inside a transaction.
-            if stmt == "VACUUM" and (
-                self._snapshot is not None or self._savepoints
-            ):
+            if stmt == "VACUUM" and self._saves:
                 raise TransactionError("cannot VACUUM from within a transaction")
             return 0
         if stmt == "RELEASE":
@@ -527,45 +572,27 @@ class Engine:
     # ---------------------------------------------------------- transactions
 
     def begin(self) -> None:
-        if self._snapshot is not None or self._savepoints:
+        if self._saves:
             raise TransactionError(
                 "transaction already in progress (nested BEGIN is not "
                 "supported; use SAVEPOINT for nesting)"
             )
-        self._snapshot = (dict(self._tables), dict(self._views))
-        self._pk_snapshot = dict(self._primary_keys)
-        self._viewdef_snapshot = dict(self._view_defs)
-        # origins too: a rolled-back ALTER … RENAME must not leave the
-        # auto-save origin map pointing at the phantom new name (that
-        # would silently detach the table from its save-back file)
-        self._origin_snapshot = dict(self._origins)
-        # triggers are schema objects: CREATE/DROP TRIGGER rolls back too
-        self._trigger_snapshot = dict(self._triggers)
+        self._saves.append((None, self._catalog.copy()))
 
     def commit(self) -> None:
-        if self._snapshot is None and not self._savepoints:
+        if not self._saves:
             raise TransactionError("no transaction in progress")
-        self._snapshot = None
-        self._savepoints.clear()
+        self._saves.clear()
         if self.auto_save and self.auto_save.on == "commit":
             self._perform_auto_save()
 
     def rollback(self) -> None:
         """Cancel the whole transaction — back to BEGIN, or (for a
         savepoint-started implicit transaction) to the first SAVEPOINT."""
-        if self._snapshot is not None:
-            tables, views = self._snapshot
-            pks = getattr(self, "_pk_snapshot", self._primary_keys)
-            origins = getattr(self, "_origin_snapshot", self._origins)
-            trigs = getattr(self, "_trigger_snapshot", self._triggers)
-            vdefs = getattr(self, "_viewdef_snapshot", self._view_defs)
-        elif self._savepoints:
-            _, (tables, views), pks, origins, trigs, vdefs = self._savepoints[0]
-        else:
+        if not self._saves:
             raise TransactionError("no transaction in progress")
-        self._snapshot = None
-        self._savepoints.clear()
-        self._restore_state(tables, views, pks, origins, trigs, vdefs)
+        self._catalog = self._saves[0][1]
+        self._saves.clear()
 
     # SQLite savepoint semantics (lang_savepoint.html): a savepoint outside
     # a transaction starts one; RELEASE of the outermost savepoint commits
@@ -573,75 +600,25 @@ class Engine:
     # Names match case-insensitively; the most recent binding wins.
 
     def savepoint(self, name: str) -> None:
-        self._savepoints.append(
-            (
-                name.lower(),
-                (dict(self._tables), dict(self._views)),
-                dict(self._primary_keys),
-                dict(self._origins),
-                dict(self._triggers),
-                dict(self._view_defs),
-            )
-        )
+        self._saves.append((name.lower(), self._catalog.copy()))
 
     def _find_savepoint(self, name: str) -> int:
         key = name.lower()
-        for i in range(len(self._savepoints) - 1, -1, -1):
-            if self._savepoints[i][0] == key:
+        for i in range(len(self._saves) - 1, -1, -1):
+            if self._saves[i][0] == key:
                 return i
         raise TransactionError(f"no such savepoint: {name}")
 
     def release(self, name: str) -> None:
-        i = self._find_savepoint(name)
-        del self._savepoints[i:]
-        if not self._savepoints and self._snapshot is None:
-            # outermost savepoint of an implicit transaction → commit
-            if self.auto_save and self.auto_save.on == "commit":
-                self._perform_auto_save()
+        del self._saves[self._find_savepoint(name):]
+        # outermost savepoint of an implicit transaction → commit
+        if not self._saves and self.auto_save and self.auto_save.on == "commit":
+            self._perform_auto_save()
 
     def rollback_to(self, name: str) -> None:
         i = self._find_savepoint(name)
-        _, (tables, views), pks, origins, trigs, vdefs = self._savepoints[i]
-        del self._savepoints[i + 1 :]
-        self._restore_state(
-            dict(tables), dict(views), dict(pks), dict(origins), dict(trigs),
-            dict(vdefs),
-        )
-
-    def _restore_state(
-        self,
-        tables: dict[str, DataFrame],
-        views: dict[str, DataFrame],
-        pks: dict,
-        origins: dict | None = None,
-        triggers: dict | None = None,
-        view_defs: dict | None = None,
-    ) -> None:
-        self._primary_keys = pks
-        if origins is not None:
-            self._origins = origins
-        if triggers is not None:
-            self._triggers = triggers
-        # drop Spark temp views for objects created since the snapshot —
-        # without this a rolled-back CREATE TABLE stays queryable via
-        # spark.sql even though the engine catalog forgot it
-        for name in (set(self._tables) | set(self._views)) - (
-            set(tables) | set(views)
-        ):
-            try:
-                self.spark.catalog.dropTempView(_view_ident(name))
-            except Exception:
-                pass
-        self._tables, self._views = tables, views
-        if view_defs is not None:
-            self._view_defs = view_defs
-        # restored tables may have different row histories — re-count on
-        # the next INSERT rather than trust a stale high-water mark
-        self._rowid_hwm.clear()
-        for name, df in self._tables.items():
-            df.createOrReplaceTempView(_view_ident(name))
-        self._mark_views_dirty()
-        self._refresh_catalog_views()
+        del self._saves[i + 1 :]
+        self._catalog = self._saves[i][1].copy()
 
     # ------------------------------------------------------------- lifecycle
 
@@ -674,16 +651,17 @@ class Engine:
                 self, cfg.output_dir, format=cfg.format or "csv", compression=cfg.compression
             )
             return
-        for name, origin in self._origins.items():
-            if name in self._tables:
-                dump_table_to_path(self._tables[name], origin)
+        cat = self._catalog
+        for name, origin in cat.origins.items():
+            if name in cat.tables:
+                dump_table_to_path(cat.tables[name], origin)
 
     def close(self) -> None:
         if self._closed:
             return
         if self.auto_save and self.auto_save.on == "close":
             self._perform_auto_save()
-        for name in list(self._tables) + list(self._views) + ["sqlite_master"]:
+        for name in self._bound:
             try:
                 self.spark.catalog.dropTempView(_view_ident(name))
             except Exception:
@@ -693,8 +671,8 @@ class Engine:
                 os.unlink(tmp)
             except OSError:
                 pass
-        self._tables.clear()
-        self._views.clear()
+        self._bound.clear()
+        self._catalog = Catalog()
         self._closed = True
 
     def __enter__(self) -> Engine:
@@ -743,6 +721,7 @@ def open(*paths: str, spark: SparkSession | None = None) -> Engine:  # noqa: A00
     eng = Engine(spark=spark)
     try:
         eng.load_paths(list(paths))
+        eng._flush()
     except BaseException:
         eng.close()  # drop the views and spill files of what did load
         raise

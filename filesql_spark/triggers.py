@@ -273,21 +273,21 @@ def fire(
     relation ``tx`` (columns: ``new`` and/or ``old`` structs)."""
     matching = [
         t
-        for t in engine._triggers.values()
+        for t in engine._catalog.triggers.values()
         if t.table.lower() == table.lower() and t.event == event
     ]
     if not matching:
         return
     from filesql_spark.errors import TriggerRaise
 
-    depth = getattr(engine, "_trigger_depth", 0)
+    depth = engine._trigger_depth
     if depth >= _MAX_DEPTH:
         raise FilesqlError(f"trigger cascade exceeds depth {_MAX_DEPTH}")
     engine._trigger_depth = depth + 1
     # sqlite3_last_insert_rowid(): "once the trigger program ends, the
     # value reverts to what it was before the trigger fired" — body
     # INSERTs see their own rowids mid-body, but never leak outward
-    pre_rowid = getattr(engine, "_last_insert_rowid", 0)
+    pre_rowid = engine._last_insert_rowid
     try:
         for t in matching:
             if (
@@ -299,6 +299,9 @@ def fire(
                 continue  # UPDATE OF cols: none of them assigned
             scoped = tx
             if t.when:
+                # a WHEN subquery must see the statement's write and those
+                # of the triggers that fired before this one
+                engine._flush()
                 scoped = scoped.filter(
                     F.coalesce(
                         F.expr(dialect.rewrite(t.when, engine._column_types())).cast("boolean"),
@@ -320,9 +323,9 @@ def fire(
 
 
 def _run_body_stmt(engine, stmt: str, tx: DataFrame) -> None:
-    # an earlier body statement may have mutated a base table; views the
-    # body reads must re-derive first (lazy since r12 — engine._flush_views)
-    engine._flush_views()
+    # an earlier body statement may have mutated a table; the Spark-side
+    # tables and views the body reads must catch up first (engine._flush)
+    engine._flush()
     kw = stmt.split(None, 1)[0].upper()
     if kw == "SELECT":
         _body_select_raise(engine, stmt, tx)
@@ -474,7 +477,7 @@ def _body_delete(engine, stmt: str, tx: DataFrame) -> None:
     engine._reregister(
         table, target.join(F.broadcast(tx), cond, "left_anti")
     )
-    engine._rowid_hwm.pop(table, None)  # freed rowids: re-count next INSERT
+    engine._catalog.rowid_hwm.pop(table, None)  # freed rowids: re-count next INSERT
     fire(
         engine,
         table,

@@ -873,7 +873,7 @@ def test_alter_rename_rollback_restores_origins(spark, tmp_path):
         e.execute("BEGIN")
         e.execute("ALTER TABLE users RENAME TO members")
         e.execute("ROLLBACK")
-        assert "users" in e._origins and "members" not in e._origins
+        assert "users" in e._catalog.origins and "members" not in e._catalog.origins
         e.execute("UPDATE users SET name = 'Zoe' WHERE id = 1")
     finally:
         e.close()  # auto-save on close → must overwrite the ORIGINAL file
@@ -1173,11 +1173,11 @@ def test_view_rederivation_is_lazy_and_failures_recorded(eng):
     eng.execute("INSERT INTO b VALUES (1, 'a')")
     eng.execute("CREATE VIEW vb AS SELECT k * 2 AS kk FROM b")
     assert eng.query("SELECT kk FROM vb").collect()[0].kk == 2
-    # mutation marks dirty; nothing re-analyzed until the next read
+    # the mutation reaches Spark, and the views re-derive, on the next read
     eng.execute("INSERT INTO b VALUES (5, 'z')")
-    assert eng._views_dirty
+    assert eng._bound["b"] is not eng.table("b")
     assert sorted(r.kk for r in eng.query("SELECT kk FROM vb").collect()) == [2, 10]
-    assert not eng._views_dirty
+    assert eng._bound["b"] is eng.table("b")
     # drop the base: the view keeps its last-good rows, and the failure
     # is recorded instead of silently swallowed
     eng.execute("DROP TABLE b")
@@ -1347,3 +1347,163 @@ def test_unwind_restores_unread_version_matches_sqlite(eng, stmts):
     assert got == want
     assert [s for s, _ in got_errors] == [s for s, _ in want_errors]
     assert _materialized(eng.table("t"))
+
+
+# ------------------------------------------------ one catalog vs sqlite3
+# Tables and views share one namespace, and triggers follow the object
+# they are defined on. Each case runs the same statements through stdlib
+# sqlite3 (autocommit) and the engine, and compares the error messages
+# and then the rows of one query.
+
+_NS_SETUP = [
+    "CREATE TABLE t (id INTEGER, v TEXT)",
+    "INSERT INTO t VALUES (1, 'a'), (2, 'b')",
+    "CREATE VIEW v AS SELECT id FROM t WHERE id = 1",
+    "CREATE TABLE log (id INTEGER)",
+]
+_MASTER = "SELECT type, name, tbl_name FROM sqlite_master WHERE name <> 'sample' ORDER BY name"
+
+
+@pytest.mark.parametrize(
+    "stmts, sql",
+    [
+        (["CREATE VIEW t AS SELECT 9 AS id, 'z' AS v"], "SELECT id, v FROM t ORDER BY id"),
+        (["CREATE VIEW v AS SELECT id FROM t WHERE id = 2"], "SELECT id FROM v"),
+        (["CREATE TABLE v (x INTEGER)"], _MASTER),
+        (["CREATE VIEW IF NOT EXISTS v AS SELECT id FROM t WHERE id = 2"], "SELECT id FROM v"),
+        (["DROP TABLE v", "DROP VIEW t"], _MASTER),
+        (["CREATE TABLE T (x INTEGER)", "CREATE VIEW V AS SELECT 1 AS x"], _MASTER),
+        (["ALTER TABLE log RENAME TO v"], _MASTER),
+        (
+            ['CREATE VIEW "my view" AS SELECT v FROM t WHERE id = 2'],
+            'SELECT v FROM "my view"',
+        ),
+        (
+            [
+                "CREATE TRIGGER tv INSTEAD OF INSERT ON v "
+                "BEGIN INSERT INTO log VALUES (NEW.id); END",
+                "DROP VIEW v",
+            ],
+            _MASTER,
+        ),
+        (
+            [
+                "CREATE TRIGGER ta AFTER INSERT ON t "
+                "BEGIN INSERT INTO log VALUES (NEW.id); END",
+                "ALTER TABLE t RENAME TO u",
+                "INSERT INTO u VALUES (3, 'c')",
+            ],
+            "SELECT id FROM log",
+        ),
+        (
+            [
+                "CREATE TRIGGER ta AFTER INSERT ON t "
+                "BEGIN INSERT INTO log VALUES (NEW.id); END",
+                "ALTER TABLE t RENAME TO u",
+            ],
+            "SELECT name, tbl_name FROM sqlite_master WHERE type = 'trigger'",
+        ),
+        # a view over a dropped table heals when the table is recreated
+        (
+            [
+                "DROP TABLE t",
+                "CREATE TABLE t AS SELECT 1 AS id, 'n' AS v UNION ALL SELECT 1, 'm'",
+            ],
+            "SELECT id FROM v",
+        ),
+        # a WHEN subquery sees the firing statement's write
+        (
+            [
+                "CREATE TRIGGER tw AFTER INSERT ON t WHEN (SELECT count(*) FROM t) > 2 "
+                "BEGIN INSERT INTO log VALUES (NEW.id); END",
+                "INSERT INTO t VALUES (3, 'c')",
+            ],
+            "SELECT id FROM log",
+        ),
+        # ... and the write of a trigger that fired before it: whichever
+        # of the two fires first, the other's WHEN is then false
+        (
+            [
+                "CREATE TRIGGER w1 AFTER INSERT ON t WHEN (SELECT count(*) FROM log) = 0 "
+                "BEGIN INSERT INTO log VALUES (NEW.id); END",
+                "CREATE TRIGGER w2 AFTER INSERT ON t WHEN (SELECT count(*) FROM log) = 0 "
+                "BEGIN INSERT INTO log VALUES (NEW.id + 100); END",
+                "INSERT INTO t VALUES (3, 'c')",
+            ],
+            "SELECT count(*) FROM log",
+        ),
+    ],
+    ids=[
+        "view_over_table", "view_twice", "table_over_view", "view_if_not_exists",
+        "drop_wrong_kind", "names_ignore_case", "rename_onto_view", "quoted_view_name",
+        "drop_view_drops_triggers", "rename_trigger_fires", "rename_trigger_tbl_name",
+        "view_heals_on_recreate", "when_sees_statement_write", "when_sees_earlier_trigger_write",
+    ],
+)
+def test_one_namespace_matches_sqlite(eng, stmts, sql):
+    _catalog_differential(eng, stmts, sql)
+
+
+def _catalog_differential(eng, stmts, sql):
+    import sqlite3
+
+    con = sqlite3.connect(":memory:", isolation_level=None)
+    want_errors, got_errors = [], []
+    for s in _NS_SETUP + stmts:
+        try:
+            con.execute(s)
+        except sqlite3.DatabaseError as err:
+            want_errors.append((s, str(err)))
+        try:
+            eng.execute(s)
+        except FilesqlError as err:
+            got_errors.append((s, str(err)))
+    want = con.execute(sql).fetchall()
+    con.close()
+    got = [tuple(r) for r in eng.query(sql).collect()]
+    assert got_errors == want_errors
+    assert got == want
+
+
+@pytest.mark.parametrize("first", ["path", "reader"])
+def test_builder_duplicate_name_raises(spark, tmp_path, first):
+    # the reference treats a duplicate table name as a hard error
+    # (stream_processor.go:109-121), whichever inputs collide
+    (tmp_path / "users.csv").write_text("id\n1\n")
+    b = fs.Builder()
+    if first == "path":
+        b.add_path(str(tmp_path / "users.csv"))
+    else:
+        b.add_reader(b"id\n1\n", "users", "csv")
+    b.add_reader(b"id\n2\n", "users", "csv")
+    with pytest.raises(DuplicateTableError, match="table users already exists"):
+        b.open(spark=spark)
+
+
+def test_dml_with_trigger_never_rebuilds_sqlite_master(eng, monkeypatch):
+    eng.execute("CREATE TABLE log (id INTEGER)")
+    eng.execute(
+        "CREATE TRIGGER tr AFTER INSERT ON sample "
+        "BEGIN INSERT INTO log VALUES (NEW.id); END"
+    )
+    master = eng.query(_MASTER).collect()
+    bound = []
+    bind = eng._bind
+    monkeypatch.setattr(
+        eng, "_bind", lambda name, df: (bound.append(name), bind(name, df))
+    )
+    for k in range(3):
+        eng.execute(f"INSERT INTO sample VALUES ({10 + k}, 'n', 1, 'e')")
+        eng.execute(f"UPDATE sample SET age = age + 1 WHERE id = {10 + k}")
+        eng.execute(f"DELETE FROM sample WHERE id = {10 + k}")
+    assert eng.query("SELECT COUNT(*) AS n FROM log").collect()[0].n == 3
+    assert eng.query(_MASTER).collect() == master
+    assert "sample" in bound and "log" in bound
+    assert "sqlite_master" not in bound
+
+
+def test_open_leaves_spark_side_derived(eng):
+    # open ends with a flush: a bare spark.sql sees the loaded tables and
+    # sqlite_master before any engine statement runs
+    assert eng.spark.sql("SELECT COUNT(*) AS n FROM sample").collect()[0].n == 3
+    assert [r.name for r in eng.spark.sql("SELECT name FROM sqlite_master").collect()] == ["sample"]

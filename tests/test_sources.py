@@ -237,6 +237,34 @@ def test_builder_reader_compressed(spark):
         eng.close()
 
 
+def test_builder_reader_xlsx_sheets(spark, tmp_path):
+    # a one-sheet workbook keeps the reader's name; each sheet of a
+    # multi-sheet one is its own {name}_{sheet} table
+    import filesql_spark as fs
+
+    solo, book = tmp_path / "solo.xlsx", tmp_path / "book.xlsx"
+    _write_minimal_xlsx(solo, [("S", [["id"], [1]])])
+    _write_minimal_xlsx(
+        book,
+        [
+            ("Sheet1", [["id", "name"], [1, "Alice"]]),
+            ("Sheet2", [["id", "value"], [1, 100], [2, 200]]),
+        ],
+    )
+    eng = (
+        fs.Builder()
+        .add_reader(solo.read_bytes(), "solo", "xlsx")
+        .add_reader(book.read_bytes(), "book", "xlsx")
+        .open(spark=spark)
+    )
+    try:
+        assert eng.table_names() == ["book_Sheet1", "book_Sheet2", "solo"]
+        assert eng.query("SELECT name FROM book_Sheet1").collect()[0].name == "Alice"
+        assert eng.query("SELECT SUM(value) AS s FROM book_Sheet2").collect()[0].s == 300
+    finally:
+        eng.close()
+
+
 def test_empty_string_fields_are_null_divergence(spark, tmp_path):
     """Pin the documented ''-vs-NULL divergence surface (SURVEY §1.2,
     README): the reference keeps empty CSV fields as '' (file.go:476-479),
