@@ -437,23 +437,10 @@ def main() -> None:
     # biggest movers vs the committed quiet floor, shrunk until the whole
     # line stays well under the window. Additions-only: every existing
     # field above is unchanged.
-    movers = sorted(
-        (n for n in names if committed.get(n)),
-        key=lambda n: -abs(math.log(max(timings[n], 1e-4) / committed[n])),
-    )
-    slow = sorted(names, key=lambda n: -timings[n])
-    for k_top in (10, 8, 6, 4):
-        summary["top"] = {
-            "slow": {n: timings[n] for n in slow[:k_top]},
-            "mov": {
-                n: [committed[n], timings[n]] for n in movers[:k_top]
-            },
-        }
-        if len(json.dumps(summary)) <= 1700:
-            break
+    top, fits = _fit_top(summary, timings, committed)
     with open(detail_path, "w") as f:
         json.dump(
-            {**summary, "queries": timings, "streaming_setup_sec": streaming_setup,
+            {**summary, "top": top, "queries": timings, "streaming_setup_sec": streaming_setup,
              "queries_pass1": timings_p1, "queries_pass2": timings_p2,
              "queries_remeasured": queries_remeasured,
              "dump_samples": dump_samples, "build_samples": all_build_samples},
@@ -462,8 +449,32 @@ def main() -> None:
         )
         f.write("\n")
     # The compact stdout line is the ONLY thing the driver parses — keep it
-    # under the 2000-char tail window (it's ~330 chars).
-    print(json.dumps(summary))
+    # under the 2000-char tail window (it's ~330 chars without `top`).
+    print(json.dumps({**summary, "top": top} if fits else summary))
+
+
+STDOUT_CAP = 1700  # chars of the stdout summary line, under the 2000-char tail
+
+
+def _fit_top(summary: dict, timings: dict, committed: dict) -> tuple[dict, bool]:
+    """The `top` block (slowest queries, and biggest movers vs the
+    committed floor) at the largest size in (10, 8, 6, 4) for which the
+    summary line with it stays within STDOUT_CAP; returns (top, fits).
+    When even 4 entries overflow, fits is False: the caller drops `top`
+    from stdout and keeps it in the detail file only."""
+    movers = sorted(
+        (n for n in timings if committed.get(n)),
+        key=lambda n: -abs(math.log(max(timings[n], 1e-4) / committed[n])),
+    )
+    slow = sorted(timings, key=lambda n: -timings[n])
+    for k_top in (10, 8, 6, 4):
+        top = {
+            "slow": {n: timings[n] for n in slow[:k_top]},
+            "mov": {n: [committed[n], timings[n]] for n in movers[:k_top]},
+        }
+        if len(json.dumps({**summary, "top": top})) <= STDOUT_CAP:
+            return top, True
+    return top, False
 
 
 if __name__ == "__main__":

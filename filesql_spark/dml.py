@@ -1,23 +1,49 @@
-"""DML / DDL emulation over temp views (SURVEY §2.B DML rows, §7.2 phase 5).
+"""DML / DDL emulation over the engine catalog (SURVEY §2.B DML rows, §7.2 phase 5).
 
 SQLite mutates B-trees; Spark DataFrames are immutable. Each statement
-rewrites the table's DataFrame lazily and stores it as the table's new
-version in the engine catalog:
+computes the table's next DataFrame lazily and stores it as the table's
+new version in the engine catalog.
 
-- INSERT  → union of the existing plan with a literal VALUES (or SELECT) plan
-- UPSERT  → ``INSERT OR REPLACE/IGNORE`` and ``ON CONFLICT(key) DO
-  UPDATE/NOTHING`` as key-joins against the standing view (SQLite 3.24+;
-  the reference inherits them, doc.go:68-77)
-- UPDATE  → ``withColumns(when(pred, new).otherwise(old))``
-- DELETE  → ``filter(NOT coalesce(pred, false))`` (NULL predicate keeps the
-  row, matching SQL three-valued DELETE semantics)
-- RETURNING on all three DML forms (SQLite 3.35+): the affected-rows frame
-  is built on the immutable pre-swap plan and handed back lazily
-- CREATE TABLE/VIEW, DROP, CREATE INDEX (accepted no-op), CREATE TRIGGER
-  (triggers.py — BEFORE/AFTER/INSTEAD OF + RAISE) — reference advertises
-  these via SQLite (README.md:333-334)
-- ALTER TABLE RENAME TO / RENAME COLUMN / ADD COLUMN / DROP COLUMN
-  (SQLite 3.35+ forms) as plan rewrites
+Every write takes one path, the way SQLite compiles a trigger's body
+steps with the code it uses for top-level statements (trigger.c,
+``codeTriggerProgram``): top-level INSERT/UPDATE/DELETE and REPLACE, the
+upsert forms, DML on a view through its INSTEAD OF trigger, and
+trigger-body DML (triggers.py). ``_run`` is the one dispatch; then, per
+statement:
+
+1. **compile** — ``_compile`` resolves the target (table or view) through
+   ``Catalog.resolve`` and aliases its frame by the stored name, so
+   ``t.col`` resolves; named columns resolve case-insensitively; one
+   ``_column_types()`` map serves every dialect rewrite of the statement;
+   ``_compile_set`` is the one SET compiler.
+2. **match** — which rows the statement touches: the WHERE predicate over
+   the target; or, for a trigger-body UPDATE/DELETE that reads
+   ``new.``/``old.``, a broadcast join to the transition relation (the
+   correlation source; a target row matching several transition rows
+   raises); or, for ``ON CONFLICT … DO UPDATE``, a broadcast join to the
+   incoming rows on the conflict key (``excluded.col``; duplicate keys in
+   the batch raise).
+3. **apply** — ``_apply`` stores the new version through
+   ``engine._reregister``. A view is never written: its INSTEAD OF trigger
+   fires instead and the statement reports 0 changes, like SQLite.
+4. **transition** — ``_transition`` builds the ``new``/``old`` relation of
+   the affected rows, once per fired event.
+5. **fire** — ``triggers.fire`` runs the event's triggers over it.
+6. **RETURNING** (SQLite 3.35+) — evaluated over the affected rows, on the
+   immutable pre-swap plan, and handed back lazily.
+
+Per verb: INSERT unions the incoming rows (VALUES or SELECT) onto the
+table; the upserts (``INSERT OR REPLACE/IGNORE``, ``ON CONFLICT(key) DO
+UPDATE/NOTHING``; SQLite 3.24+, doc.go:68-77) are key joins against the
+current version; UPDATE is ``when(match, new).otherwise(old)`` per SET
+column; DELETE keeps the rows the match rejects (a NULL predicate keeps
+the row, SQL's three-valued DELETE).
+
+DDL: CREATE TABLE/VIEW, DROP, CREATE INDEX (accepted no-op), CREATE
+TRIGGER (triggers.py — BEFORE/AFTER/INSTEAD OF + RAISE) — the reference
+advertises these via SQLite (README.md:333-334) — and ALTER TABLE RENAME
+TO / RENAME COLUMN / ADD COLUMN / DROP COLUMN (SQLite 3.35+ forms) as plan
+rewrites.
 
 Affected-row counts match database/sql's Exec contract.
 """
@@ -25,10 +51,12 @@ Affected-row counts match database/sql's Exec contract.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass
 
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from filesql_spark import dialect
+from filesql_spark import dialect, triggers
 from filesql_spark.errors import FilesqlError
 
 _IDENT = r'(?:"(?P<q>[^"]+)"|`(?P<b>[^`]+)`|(?P<p>[\w-￿]+))'
@@ -36,6 +64,11 @@ _IDENT = r'(?:"(?P<q>[^"]+)"|`(?P<b>[^`]+)`|(?P<p>[\w-￿]+))'
 
 def _ident(m: re.Match) -> str:
     return m.group("q") or m.group("b") or m.group("p")
+
+
+def _keyword(sql: str) -> str:
+    words = sql.split(None, 1)
+    return words[0].upper() if words else ""
 
 
 def _replace_alias(sql: str) -> str:
@@ -53,14 +86,9 @@ def _replace_alias(sql: str) -> str:
 
 
 def execute(engine, sql: str) -> int:
-    head = sql.lstrip()
-    kw = head.split(None, 1)[0].upper() if head.split() else ""
-    if kw == "REPLACE":
-        sql, kw = _replace_alias(sql), "INSERT"
-    if kw in ("INSERT", "UPDATE", "DELETE"):
-        fn = {"INSERT": _insert, "UPDATE": _update, "DELETE": _delete}[kw]
-        n, _rows = _guarded_dml(engine, fn, sql)
-        return n
+    kw = _keyword(sql)
+    if kw in ("INSERT", "REPLACE", "UPDATE", "DELETE"):
+        return _run(engine, sql)[0]
     if kw == "CREATE":
         return _create(engine, sql)
     if kw == "DROP":
@@ -70,20 +98,39 @@ def execute(engine, sql: str) -> int:
     raise FilesqlError(f"unsupported statement: {kw}")
 
 
-def _guarded_dml(engine, fn, sql: str):
-    """Run one top-level DML statement with RAISE() unwind semantics
+def dml_returning(engine, sql: str):
+    """INSERT/UPDATE/DELETE … RETURNING … → DataFrame of the returned
+    rows (SQLite 3.35+, inherited by the reference's engine). The
+    mutation is applied as a side effect, like SQLite's."""
+    _n, rows = _run(engine, sql)
+    if rows is None:
+        raise FilesqlError(f"query() on {_keyword(sql)} requires a RETURNING clause")
+    return rows
+
+
+def _run(engine, sql: str, tx: DataFrame | None = None):
+    """The one DML dispatch (``execute``, ``dml_returning`` and
+    trigger-body UPDATE/DELETE): returns (affected rows, RETURNING
+    DataFrame | None). ``tx`` is the correlation source of a trigger-body
+    statement that reads ``new.``/``old.``.
+
+    A top-level statement runs with RAISE() unwind semantics
     (triggers.py): ABORT/ROLLBACK undo the statement's table effects
     (ROLLBACK additionally cancels an enclosing transaction, exactly
     SQLite's scope); FAIL keeps the applied effects. Statements fired
     from inside a trigger cascade pass through — the OUTERMOST statement
     owns the unwind."""
+    kw = _keyword(sql)
+    if kw == "REPLACE":
+        sql, kw = _replace_alias(sql), "INSERT"
+    verb = {"INSERT": _insert, "UPDATE": _update, "DELETE": _delete}[kw]
     if engine._trigger_depth:
-        return fn(engine, sql)
+        return verb(engine, sql, tx)
     from filesql_spark.errors import TriggerRaise
 
     pre, pre_rowid = engine._catalog.copy(), engine._last_insert_rowid
     try:
-        return fn(engine, sql)
+        return verb(engine, sql, tx)
     except TriggerRaise as e:
         if e.kind == "ROLLBACK" and engine._saves:
             # tables rewind to transaction start, not statement start
@@ -102,23 +149,94 @@ def _guarded_dml(engine, fn, sql: str):
         raise
 
 
-def dml_returning(engine, sql: str):
-    """INSERT/UPDATE/DELETE … RETURNING … → DataFrame of the returned
-    rows (SQLite 3.35+, inherited by the reference's engine). The
-    mutation is applied as a side effect, like SQLite's."""
-    kw = sql.lstrip().split(None, 1)[0].upper()
-    if kw == "REPLACE":
-        sql, kw = _replace_alias(sql), "INSERT"
-    fn = {"INSERT": _insert, "UPDATE": _update, "DELETE": _delete}[kw]
-    _n, rows = _guarded_dml(engine, fn, sql)
-    if rows is None:
-        raise FilesqlError(f"query() on {kw} requires a RETURNING clause")
-    return rows
+# ------------------------------------------------------------------ compile
+
+
+@dataclass(frozen=True)
+class _Target:
+    """A compiled statement's target: the stored name, the current frame
+    aliased by that name, whether it is a view, and the one column-type
+    map every dialect rewrite of the statement uses."""
+
+    name: str
+    df: DataFrame
+    view: bool
+    ctypes: dict[str, str]
+
+    @property
+    def columns(self) -> list[str]:
+        return self.df.columns
+
+    def expr(self, src: str) -> Column:
+        return F.expr(dialect.rewrite(src, self.ctypes))
+
+    def pred(self, where: str | None) -> Column:
+        """WHERE → a never-NULL boolean (NULL does not match)."""
+        if where is None:
+            return F.lit(True)
+        return F.coalesce(self.expr(where).cast("boolean"), F.lit(False))
+
+
+def _compile(engine, name: str, event: str) -> _Target:
+    """Resolve the statement's target. DML on a view needs an INSTEAD OF
+    trigger for the event; without one, SQLite's error."""
+    cat = engine._catalog
+    stored = cat.resolve(name)
+    view = stored in cat.views
+    if view:
+        if not any(
+            t.table.lower() == stored.lower() and t.event == event and t.timing == "INSTEAD OF"
+            for t in cat.triggers.values()
+        ):
+            raise FilesqlError(f"cannot modify {stored} because it is a view")
+        df = cat.views[stored][1]
+    else:
+        df = engine.table(name)  # raises "no such table"
+    return _Target(stored, df.alias(stored), view, engine._column_types())
+
+
+def _resolve_col(df, name: str) -> str | None:
+    """Actual column name for a case-insensitive identifier (SQLite and
+    Spark SQL both resolve identifiers case-insensitively)."""
+    return {c.lower(): c for c in df.columns}.get(name.lower())
+
+
+def _compile_set(st: _Target, set_part: str, excluded: bool = False) -> dict[str, Column]:
+    """``SET col = expr, …`` → {stored column: expr cast to its type}: the
+    one SET compiler (UPDATE on a table or view, trigger-body UPDATE, DO
+    UPDATE, where ``excluded`` enables ``excluded.col``)."""
+    types = {f.name: f.dataType for f in st.df.schema.fields}
+    assigns = {}
+    for piece in _split_level0(set_part):
+        col, _eq, src = piece.partition("=")
+        written = col.strip().strip('"`')
+        name = _resolve_col(st.df, written)
+        if name is None:
+            raise FilesqlError(f"no such column: {written}")
+        if excluded:
+            src = _rewrite_excluded(src)
+        assigns[name] = st.expr(src.strip()).cast(types[name])
+    return assigns
+
+
+def _split_level0(text: str) -> list[str]:
+    """Split on commas at paren depth 0, outside literals and quoted
+    identifiers."""
+    spans = dialect._div_split_args(dialect._div_mask(text), 0, len(text))
+    return [p for p in (text[a:b].strip() for a, b in spans) if p]
 
 
 _RETURNING_RX = re.compile(r"\bRETURNING\b", re.I)
 _ON_CONFLICT_RX = re.compile(r"\bON\s+CONFLICT\b", re.I)
 _WHERE_RX = re.compile(r"\bWHERE\b", re.I)
+
+
+def _extract_where(body: str) -> tuple[str, str | None]:
+    """Split '... WHERE pred' at the depth-0 WHERE keyword."""
+    m = dialect._find_depth0(dialect._div_mask(body), _WHERE_RX)
+    if m is None:
+        return body.strip().rstrip(";"), None
+    return body[: m.start()].strip(), body[m.end() :].strip().rstrip(";")
 
 
 def _strip_returning(sql: str) -> tuple[str, list[str] | None]:
@@ -134,6 +252,86 @@ def _strip_returning(sql: str) -> tuple[str, list[str] | None]:
     if not exprs:
         raise FilesqlError("RETURNING requires at least one expression")
     return sql[: m.start()], exprs
+
+
+# ------------------------------------------------ apply, transition, fire
+
+
+def _apply(engine, st: _Target, version, fires, rows, returning, assigns=None):
+    """Store ``version`` as the table's next version (a view stores
+    nothing), fire each ``(event, affected rows, count)`` in ``fires``
+    unless its count is 0 (None = not counted), and return (affected
+    rows, RETURNING over ``rows``). ``assigns`` are an UPDATE's SET."""
+    assigns = assigns or {}
+    if not st.view:
+        engine._reregister(st.name, version)
+    if st.view or engine._catalog.triggers:
+        for event, affected, n in fires:
+            if n != 0:
+                images = assigns if event == "UPDATE" else {}
+                triggers.fire(
+                    engine, st.name, event,
+                    _transition(event, affected, st.columns, images),
+                    set_cols=set(images),
+                )
+    n = 0 if st.view else sum(n or 0 for _event, _affected, n in fires)
+    return n, _returning_over(st, rows, returning)
+
+
+def _transition(event: str, rows, cols: list[str], assigns: dict[str, Column]):
+    """The transition relation: ``new`` and/or ``old`` struct images of
+    the affected rows (``new`` applies an UPDATE's SET assignments)."""
+    old = F.struct(*[F.col(c) for c in cols]).alias("old")
+    new = F.struct(
+        *[assigns[c].alias(c) if c in assigns else F.col(c) for c in cols]
+    ).alias("new")
+    return rows.select(*{"INSERT": [new], "DELETE": [old], "UPDATE": [old, new]}[event])
+
+
+def _returning_over(st: _Target, rows, returning: list[str] | None):
+    """RETURNING evaluates over the affected rows (SQLite semantics); '*'
+    is the row itself, expressions go through the dialect shim."""
+    if returning is None:
+        return None
+    return rows.alias(st.name).select(
+        *["*" if e.strip() == "*" else st.expr(e) for e in returning]
+    )
+
+
+def _track_rowid(engine, table, target, aligned, n: int,
+                 pk_only: bool = False) -> None:
+    """Maintain the last_insert_rowid() bridge (contract and divergences
+    documented at engine.__init__'s counter). Tracking must never fail
+    the INSERT itself. ``pk_only`` is the upsert mode: only the declared
+    integer-PRIMARY-KEY branch applies (the landed-row count does not
+    grow the table by n, so the implicit-rowid high-water arithmetic
+    would corrupt)."""
+    if n == 0:
+        return
+    try:
+        pk = engine._catalog.primary_keys.get(table)
+        if pk and len(pk) == 1:
+            f = next(
+                (f for f in target.schema.fields if f.name == pk[0]), None
+            )
+            if f is not None and f.dataType.simpleString() in (
+                "tinyint", "smallint", "int", "bigint"
+            ):
+                # SQLite's rowid alias: the declared integer PRIMARY KEY
+                v = aligned.agg(F.max(pk[0])).collect()[0][0]
+                if v is not None:
+                    engine._last_insert_rowid = int(v)
+                    return
+        if pk_only:
+            return
+        hwm = engine._catalog.rowid_hwm.get(table)
+        if hwm is None:
+            hwm = target.count()  # file-loaded rowids are dense 1..R
+        hwm += n
+        engine._catalog.rowid_hwm[table] = hwm
+        engine._last_insert_rowid = hwm
+    except Exception:
+        pass
 
 
 # ------------------------------------------------------------------- INSERT
@@ -161,25 +359,23 @@ def _strip_on_conflict(sql: str) -> tuple[str, str | None]:
     return sql[: m.start()], sql[m.end() :].strip().rstrip(";")
 
 
-def _resolve_key(engine, table, target, cols_src: str | None, form: str) -> list[str]:
+def _resolve_key(engine, st: _Target, cols_src: str | None, form: str) -> list[str]:
     """Conflict-target columns: explicit ``ON CONFLICT(cols)``, else the
     table's declared PRIMARY KEY (CREATE TABLE). File-loaded tables have
     no PK, so the implicit forms fail cleanly there."""
     if cols_src:
-        by_lower = {c.lower(): c for c in target.columns}
         key = []
         for c in _split_level0(cols_src):
-            name = c.strip().strip('"`')
-            if name.lower() not in by_lower:
-                raise FilesqlError(
-                    f"{form}: no such column {name!r} in {table!r}"
-                )
-            key.append(by_lower[name.lower()])
+            name = c.strip('"`')
+            resolved = _resolve_col(st.df, name)
+            if resolved is None:
+                raise FilesqlError(f"{form}: no such column {name!r} in {st.name!r}")
+            key.append(resolved)
         return key
-    pk = engine._catalog.primary_keys.get(table)
+    pk = engine._catalog.primary_keys.get(st.name)
     if not pk:
         raise FilesqlError(
-            f"{form} needs a conflict target: table {table!r} has no "
+            f"{form} needs a conflict target: table {st.name!r} has no "
             "declared PRIMARY KEY — use ON CONFLICT(col, …) or declare "
             "the key in CREATE TABLE"
         )
@@ -232,28 +428,36 @@ def _dedup_by_key(aligned, key: list[str], keep: str):
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-    return deduped.unionByName(nk).drop("__seq"), null_key
+    return deduped.unionByName(nk).drop("__seq")
 
 
-def _insert(engine, sql: str) -> tuple[int, "object | None"]:
+def _insert(engine, sql: str, tx=None) -> tuple[int, "object | None"]:
     """Apply an INSERT (incl. SQLite upsert forms); returns
     (affected rows, RETURNING DataFrame | None).
 
     Upsert semantics (SQLite doc.go:68-77 pins the dialect; SQLite 3.24+):
 
     - ``INSERT OR REPLACE``: delete the existing row with the same key,
-      insert the new one. Key = declared PRIMARY KEY.
+      insert the new one. Key = declared PRIMARY KEY. changes() counts
+      each attempted row; the last incoming row per key wins.
     - ``INSERT OR IGNORE`` / ``ON CONFLICT … DO NOTHING``: skip rows whose
-      key already exists.
+      key already exists; the first incoming row per key wins. changes()
+      and RETURNING count inserted rows only.
     - ``ON CONFLICT(key) DO UPDATE SET col = expr [WHERE pred]``: update
       the existing row; ``excluded.col`` refers to the incoming row.
 
     All forms are one anti/left join on the key against the current view —
     a broadcast-sized incoming batch never shuffles the standing table.
     NULL key columns never conflict (SQLite: NULL ≠ NULL), so such rows
-    always insert. Divergence: duplicate keys WITHIN one DO UPDATE batch
-    raise (SQLite applies them sequentially; a distributed plan has no
+    always insert. Triggers fire with SQLite's recursive_triggers=OFF
+    semantics: INSERT triggers for the rows that landed (never DELETE for
+    a replaced row), and for DO UPDATE, UPDATE triggers on the conflicted
+    rows. Divergence: duplicate keys WITHIN one DO UPDATE batch raise
+    (SQLite applies them sequentially; a distributed plan has no
     row-at-a-time order — PostgreSQL makes the same call).
+
+    ``tx`` is always None: a trigger-body INSERT reads the transition
+    relation as a temp view in its SELECT (triggers._body_insert).
     """
     sql, returning = _strip_returning(sql)
     sql, conflict_tail = _strip_on_conflict(sql)
@@ -270,388 +474,100 @@ def _insert(engine, sql: str) -> tuple[int, "object | None"]:
         raise FilesqlError(f"unsupported INSERT OR {or_act}")
     if or_act and conflict_tail is not None:
         raise FilesqlError("INSERT OR … cannot be combined with ON CONFLICT")
-    table = _ident(m)
-    if table in engine._catalog.views:
-        if or_act or conflict_tail is not None:
-            raise FilesqlError(
-                "upsert forms (OR REPLACE/IGNORE, ON CONFLICT) are not "
-                "supported on views"
-            )
-        return _view_insert(engine, table, m, returning)
-    target = engine.table(table)
+    upsert = bool(or_act) or conflict_tail is not None
+    st = _compile(engine, _ident(m), "INSERT")
+    if st.view and upsert:
+        raise FilesqlError(
+            "upsert forms (OR REPLACE/IGNORE, ON CONFLICT) are not "
+            "supported on views"
+        )
     body = m.group("body").rstrip().rstrip(";")
-
-    src = engine.spark.sql(dialect.rewrite(body, engine._column_types()))
-
+    src = engine.spark.sql(dialect.rewrite(body, st.ctypes))
+    names = st.columns
     if m.group("cols"):
-        names = [c.strip().strip('"`') for c in m.group("cols").split(",")]
-    else:
-        names = target.columns
+        names = []
+        for c in _split_level0(m.group("cols")):
+            written = c.strip('"`')
+            resolved = _resolve_col(st.df, written)
+            if resolved is None:
+                raise FilesqlError(f"table {st.name} has no column named {written}")
+            names.append(resolved)
     if len(src.columns) != len(names):
         raise FilesqlError(
             f"INSERT column count mismatch: {len(src.columns)} values for {len(names)} columns"
         )
-    src = src.toDF(*names)
-
     # missing columns → NULL; align types to the target schema
-    target_types = {f.name: f.dataType for f in target.schema.fields}
+    src = src.toDF(*names)
     aligned = src.select(
         *[
-            (F.col(c).cast(target_types[c]) if c in src.columns else F.lit(None).cast(target_types[c])).alias(c)
-            for c in target.columns
+            (F.col(c) if c in names else F.lit(None)).cast(f.dataType).alias(c)
+            for c, f in zip(st.columns, st.df.schema.fields)
         ]
     )
+    if st.view:
+        return _apply(engine, st, None, [("INSERT", aligned, None)], aligned, returning)
 
-    if or_act == "REPLACE":
-        key = _resolve_key(engine, table, target, None, "INSERT OR REPLACE")
-        return _upsert_replace(engine, table, target, aligned, key, returning)
-    if or_act == "IGNORE":
-        key = _resolve_key(engine, table, target, None, "INSERT OR IGNORE")
-        return _upsert_nothing(engine, table, target, aligned, key, returning)
+    target, act = st.df, or_act
     if conflict_tail is not None:
         t = _ON_CONFLICT_TAIL_RE.match(conflict_tail)
         if not t:
             raise FilesqlError(
                 f"cannot parse ON CONFLICT clause: {conflict_tail[:80]}"
             )
-        key = _resolve_key(engine, table, target, t.group("cols"), "ON CONFLICT")
-        if t.group("act").upper() == "NOTHING":
-            return _upsert_nothing(engine, table, target, aligned, key, returning)
-        return _upsert_update(
-            engine, table, target, aligned, key, t.group("rest"), returning
+        key = _resolve_key(engine, st, t.group("cols"), "ON CONFLICT")
+        if t.group("act").upper() != "NOTHING":
+            return _upsert_update(engine, st, aligned, key, t.group("rest"), returning)
+        act = "IGNORE"
+    elif or_act:
+        key = _resolve_key(engine, st, None, f"INSERT OR {or_act}")
+    if act == "REPLACE":
+        n = aligned.count()
+        landed = _dedup_by_key(aligned, key, keep="last")
+        survivors = target.join(landed.select(*key).distinct(), key, "left_anti")
+        version = survivors.unionByName(landed)
+    elif act == "IGNORE":
+        landed = _dedup_by_key(aligned, key, keep="first").join(
+            target.select(*key).distinct(), key, "left_anti"
         )
-
-    n = aligned.count()
-    engine._reregister(table, target.unionByName(aligned))
-    _track_rowid(engine, table, target, aligned, n)
-    if engine._catalog.triggers:
-        from filesql_spark import triggers as trig
-
-        trig.fire(
-            engine,
-            table,
-            "INSERT",
-            aligned.select(
-                F.struct(*[F.col(c) for c in aligned.columns]).alias("new")
-            ),
-        )
-    return n, _returning_over(engine, aligned, returning)
-
-
-def _track_rowid(engine, table, target, aligned, n: int,
-                 pk_only: bool = False) -> None:
-    """Maintain the last_insert_rowid() bridge (contract and divergences
-    documented at engine.__init__'s counter). Tracking must never fail
-    the INSERT itself. ``pk_only`` is the upsert mode: only the declared
-    integer-PRIMARY-KEY branch applies (the landed-row count does not
-    grow the table by n, so the implicit-rowid high-water arithmetic
-    would corrupt)."""
-    if n == 0:
-        return
-    try:
-        pk = engine._catalog.primary_keys.get(table)
-        if pk and len(pk) == 1:
-            f = next(
-                (f for f in target.schema.fields if f.name == pk[0]), None
-            )
-            if f is not None and f.dataType.simpleString() in (
-                "tinyint", "smallint", "int", "bigint"
-            ):
-                # SQLite's rowid alias: the declared integer PRIMARY KEY
-                v = aligned.agg(F.max(pk[0])).collect()[0][0]
-                if v is not None:
-                    engine._last_insert_rowid = int(v)
-                    return
-        if pk_only:
-            return
-        hwm = engine._catalog.rowid_hwm.get(table)
-        if hwm is None:
-            hwm = target.count()  # file-loaded rowids are dense 1..R
-        hwm += n
-        engine._catalog.rowid_hwm[table] = hwm
-        engine._last_insert_rowid = hwm
-    except Exception:
-        pass
-
-
-def _returning_over(engine, rows_df, returning: list[str] | None):
-    """RETURNING evaluates over the affected rows (SQLite semantics); '*'
-    is the row itself, expressions go through the dialect shim."""
-    if returning is None:
-        return None
-    cols = [
-        "*" if e.strip() == "*" else F.expr(dialect.rewrite(e, engine._column_types()))
-        for e in returning
-    ]
-    return rows_df.select(*cols)
-
-
-# --------------------------------------------------- INSTEAD OF (views)
-# DML against a view dispatches here: with a matching INSTEAD OF trigger
-# the body runs INSTEAD of any mutation (the view is never written and
-# changes() stays 0, both SQLite-exact); without one, SQLite's error.
-
-
-def _view_triggers(engine, table: str, event: str) -> list:
-    return [
-        t
-        for t in engine._catalog.triggers.values()
-        if t.table.lower() == table.lower()
-        and t.event == event
-        and t.timing == "INSTEAD OF"
-    ]
-
-
-def _require_instead_of(engine, table: str, event: str) -> None:
-    if not _view_triggers(engine, table, event):
-        raise FilesqlError(f"cannot modify {table} because it is a view")
-
-
-def _view_insert(engine, table, m, returning):
-    from filesql_spark import triggers as trig
-
-    _require_instead_of(engine, table, "INSERT")
-    target = engine._catalog.views[table][1]
-    body = m.group("body").rstrip().rstrip(";")
-    src = engine.spark.sql(dialect.rewrite(body, engine._column_types()))
-    if m.group("cols"):
-        names = [c.strip().strip('"`') for c in m.group("cols").split(",")]
+        n = landed.count()
+        version = target.unionByName(landed)
     else:
-        names = target.columns
-    if len(src.columns) != len(names):
-        raise FilesqlError(
-            f"INSERT column count mismatch: {len(src.columns)} values "
-            f"for {len(names)} columns"
-        )
-    src = src.toDF(*names)
-    types = {f.name: f.dataType for f in target.schema.fields}
-    aligned = src.select(
-        *[
-            (
-                F.col(c).cast(types[c])
-                if c in src.columns
-                else F.lit(None).cast(types[c])
-            ).alias(c)
-            for c in target.columns
-        ]
-    )
-    trig.fire(
-        engine,
-        table,
-        "INSERT",
-        aligned.select(
-            F.struct(*[F.col(c) for c in aligned.columns]).alias("new")
-        ),
-    )
-    return 0, _returning_over(engine, aligned, returning)
+        n, landed = aligned.count(), aligned
+        version = target.unionByName(aligned)
+    if upsert:
+        engine._catalog.rowid_hwm.pop(st.name, None)
+    _track_rowid(engine, st.name, target, landed, n, pk_only=upsert)
+    return _apply(engine, st, version, [("INSERT", landed, n)], landed, returning)
 
 
-def _view_update(engine, table, m, returning):
-    from filesql_spark import triggers as trig
-
-    _require_instead_of(engine, table, "UPDATE")
-    df = engine._catalog.views[table][1]
-    set_part, where = _extract_where(m.group("body"))
-    pred = (
-        F.coalesce(F.expr(dialect.rewrite(where, engine._column_types())).cast("boolean"), F.lit(False))
-        if where
-        else F.lit(True)
-    )
-    types = dict(zip(df.columns, [f.dataType for f in df.schema.fields]))
-    assigns = {}
-    for piece in _split_level0(set_part):
-        col, _eq, expr_src = piece.partition("=")
-        name = col.strip().strip('"`')
-        if name not in df.columns:
-            raise FilesqlError(f"UPDATE: no such column {name!r} in {table!r}")
-        assigns[name] = F.expr(dialect.rewrite(expr_src.strip(), engine._column_types())).cast(
-            types[name]
-        )
-    matched = df.filter(pred)
-    trig.fire(
-        engine,
-        table,
-        "UPDATE",
-        matched.select(
-            F.struct(*[F.col(c) for c in df.columns]).alias("old"),
-            F.struct(
-                *[assigns.get(c, F.col(c)).alias(c) for c in df.columns]
-            ).alias("new"),
-        ),
-        set_cols=set(assigns),
-    )
-    return 0, _returning_over(engine, matched.withColumns(assigns), returning)
-
-
-def _view_delete(engine, table, m, returning):
-    from filesql_spark import triggers as trig
-
-    _require_instead_of(engine, table, "DELETE")
-    df = engine._catalog.views[table][1]
-    rest = m.group("rest").strip().rstrip(";")
-    if rest:
-        if not rest.lower().startswith("where"):
-            raise FilesqlError(f"cannot parse DELETE tail: {rest[:80]}")
-        pred = F.coalesce(
-            F.expr(dialect.rewrite(rest[5:].strip(), engine._column_types())).cast("boolean"),
-            F.lit(False),
-        )
-    else:
-        pred = F.lit(True)
-    doomed = df.filter(pred)
-    trig.fire(
-        engine,
-        table,
-        "DELETE",
-        doomed.select(F.struct(*[F.col(c) for c in df.columns]).alias("old")),
-    )
-    return 0, _returning_over(engine, doomed, returning)
-
-
-def _fire_insert_trigger(engine, table, rows_df) -> None:
-    if not engine._catalog.triggers:
-        return
-    from filesql_spark import triggers as trig
-
-    trig.fire(
-        engine,
-        table,
-        "INSERT",
-        rows_df.select(
-            F.struct(*[F.col(c) for c in rows_df.columns]).alias("new")
-        ),
-    )
-
-
-def _upsert_replace(engine, table, target, aligned, key, returning):
-    """OR REPLACE: last incoming row per key wins; matching standing rows
-    are dropped. changes() counts each attempted row, like SQLite."""
-    n = aligned.count()
-    incoming, _ = _dedup_by_key(aligned, key, keep="last")
-    survivors = target.join(incoming.select(*key).distinct(), key, "left_anti")
-    engine._reregister(table, survivors.unionByName(incoming))
-    engine._catalog.rowid_hwm.pop(table, None)
-    _track_rowid(engine, table, target, incoming, n, pk_only=True)
-    # SQLite (recursive_triggers OFF, the default the reference inherits):
-    # OR REPLACE fires INSERT triggers for the landed rows; the implicit
-    # delete of the replaced row fires nothing
-    _fire_insert_trigger(engine, table, incoming)
-    return n, _returning_over(engine, incoming, returning)
-
-
-def _upsert_nothing(engine, table, target, aligned, key, returning):
-    """OR IGNORE / DO NOTHING: only rows whose key is absent insert; the
-    first incoming row per key wins. changes() counts inserted rows only,
-    and RETURNING omits skipped rows, like SQLite."""
-    incoming, _ = _dedup_by_key(aligned, key, keep="first")
-    inserted = incoming.join(target.select(*key).distinct(), key, "left_anti")
-    n = inserted.count()
-    engine._reregister(table, target.unionByName(inserted))
-    engine._catalog.rowid_hwm.pop(table, None)
-    _track_rowid(engine, table, target, inserted, n, pk_only=True)
-    # SQLite: OR IGNORE / DO NOTHING fire INSERT triggers only for rows
-    # that actually inserted
-    _fire_insert_trigger(engine, table, inserted)
-    return n, _returning_over(engine, inserted, returning)
-
-
-def _upsert_update(engine, table, target, aligned, key, rest, returning):
-    """DO UPDATE SET …: matched standing rows get the SET expressions
-    (``excluded.col`` = incoming row), unmatched incoming rows insert."""
+def _upsert_update(engine, st: _Target, aligned, key, rest, returning):
+    """DO UPDATE SET …: the match is a broadcast join of the standing rows
+    to the incoming rows on the key; matched rows take the SET
+    expressions, unmatched incoming rows insert."""
     set_part, where = _extract_where(rest)
-    if re.match(r"(?i)^\s*NOTHING", set_part):  # defensive; caught earlier
-        raise FilesqlError("DO NOTHING parsed as DO UPDATE")
-
     # duplicate keys within one batch have no distributed row-at-a-time
     # order to apply sequentially — refuse, like PostgreSQL
-    dup = (
-        _dedup_by_key(aligned, key, keep="first")[0].count() != aligned.count()
-    )
-    if dup:
+    if _dedup_by_key(aligned, key, keep="first").count() != aligned.count():
         raise FilesqlError(
             "ON CONFLICT DO UPDATE: the incoming rows contain duplicate "
             "conflict keys; a set-oriented upsert cannot apply them "
             "sequentially — de-duplicate the batch first"
         )
-
     exc = aligned.select(
         F.lit(True).alias("__exc_present"),
         *[F.col(c).alias(f"__exc_{c}") for c in aligned.columns],
     )
-    # alias the standing side so SET/WHERE can qualify columns by table
-    # name (SQLite allows `SET x = t.x + excluded.x`)
-    tgt = target.alias(table)
     cond = None
     for k in key:
-        c = tgt[k].eqNullSafe(F.col(f"__exc_{k}")) & F.col(f"__exc_{k}").isNotNull()
+        c = st.df[k].eqNullSafe(F.col(f"__exc_{k}")) & F.col(f"__exc_{k}").isNotNull()
         cond = c if cond is None else (cond & c)
-    joined = tgt.join(F.broadcast(exc), cond, "left")
-
-    matched = F.coalesce(F.col("__exc_present"), F.lit(False))
+    joined = st.df.join(F.broadcast(exc), cond, "left")
+    hit = F.coalesce(F.col("__exc_present"), F.lit(False))
     if where:
-        matched = matched & F.coalesce(
-            F.expr(dialect.rewrite(_rewrite_excluded(where), engine._column_types())).cast("boolean"),
-            F.lit(False),
-        )
-
-    types = {f.name: f.dataType for f in target.schema.fields}
-    out_cols = []
-    assigns = {}
-    for piece in _split_level0(set_part):
-        col, _eq, expr_src = piece.partition("=")
-        name = col.strip().strip('"`')
-        if name not in types:
-            raise FilesqlError(f"DO UPDATE: no such column {name!r} in {table!r}")
-        assigns[name] = F.expr(
-            dialect.rewrite(_rewrite_excluded(expr_src.strip()), engine._column_types())
-        ).cast(types[name])
-    for c in target.columns:
-        val = F.when(matched, assigns[c]).otherwise(tgt[c]) if c in assigns else tgt[c]
-        out_cols.append(val.alias(c))
-
-    updated = joined.select(*out_cols)
-    n_updated = joined.filter(matched).count()
-    to_insert = aligned.join(target.select(*key).distinct(), key, "left_anti")
-    n_inserted = to_insert.count()
-    engine._reregister(table, updated.unionByName(to_insert))
-    _track_rowid(engine, table, target, to_insert, n_inserted, pk_only=True)
-    if engine._catalog.triggers:
-        # SQLite: DO UPDATE fires UPDATE triggers on the conflicted rows
-        # (old = standing row, new = after SET) and INSERT triggers on
-        # the non-conflicted inserted rows
-        from filesql_spark import triggers as trig
-
-        if n_updated:
-            trig.fire(
-                engine,
-                table,
-                "UPDATE",
-                joined.filter(matched).select(
-                    F.struct(
-                        *[tgt[c].alias(c) for c in target.columns]
-                    ).alias("old"),
-                    F.struct(
-                        *[
-                            (
-                                F.when(matched, assigns[c]).otherwise(tgt[c])
-                                if c in assigns
-                                else tgt[c]
-                            ).alias(c)
-                            for c in target.columns
-                        ]
-                    ).alias("new"),
-                ),
-                set_cols=set(assigns),
-            )
-        if n_inserted:
-            _fire_insert_trigger(engine, table, to_insert)
-    if returning is None:
-        return n_updated + n_inserted, None
-    # RETURNING sees the post-upsert rows: updated (new values) + inserted
-    updated_rows = joined.filter(matched).select(*out_cols)
-    return n_updated + n_inserted, _returning_over(engine, 
-        updated_rows.unionByName(to_insert), returning
-    )
+        hit = hit & st.pred(_rewrite_excluded(where))
+    assigns = _compile_set(st, set_part, excluded=True)
+    inserted = aligned.join(st.df.select(*key).distinct(), key, "left_anti")
+    return _update_apply(engine, st, joined, hit, assigns, returning, inserted)
 
 
 # ------------------------------------------------------------------- UPDATE
@@ -661,71 +577,67 @@ _UPDATE_RE = re.compile(
 )
 
 
-def _split_level0(text: str) -> list[str]:
-    """Split on commas at paren depth 0, outside literals and quoted
-    identifiers."""
-    spans = dialect._div_split_args(dialect._div_mask(text), 0, len(text))
-    return [p for p in (text[a:b].strip() for a, b in spans) if p]
-
-
-def _extract_where(body: str) -> tuple[str, str | None]:
-    """Split '... WHERE pred' at the depth-0 WHERE keyword."""
-    m = dialect._find_depth0(dialect._div_mask(body), _WHERE_RX)
-    if m is None:
-        return body.strip().rstrip(";"), None
-    return body[: m.start()].strip(), body[m.end() :].strip().rstrip(";")
-
-
-def _update(engine, sql: str) -> tuple[int, "object | None"]:
+def _update(engine, sql: str, tx=None) -> tuple[int, "object | None"]:
     """Apply an UPDATE; returns (affected rows, RETURNING DataFrame | None).
-    RETURNING evaluates over the affected rows' NEW values (SQLite 3.35+)."""
+    RETURNING evaluates over the affected rows' NEW values (SQLite 3.35+).
+
+    With a correlation source ``tx`` (a trigger body reading new./old.),
+    the target LEFT-joins the broadcast transition relation on the WHERE
+    predicate; matched rows take the SET expressions, which may read
+    new./old. too."""
     sql, returning = _strip_returning(sql)
     m = _UPDATE_RE.match(sql)
     if not m:
         raise FilesqlError(f"cannot parse UPDATE: {sql.strip()[:120]}")
-    table = _ident(m)
-    if table in engine._catalog.views:
-        return _view_update(engine, table, m, returning)
-    df = engine.table(table)
+    st = _compile(engine, _ident(m), "UPDATE")
     set_part, where = _extract_where(m.group("body"))
-
-    pred = (
-        F.coalesce(F.expr(dialect.rewrite(where, engine._column_types())).cast("boolean"), F.lit(False))
-        if where
-        else F.lit(True)
+    assigns = _compile_set(st, set_part)
+    if tx is None:
+        return _update_apply(engine, st, st.df, st.pred(where), assigns, returning)
+    if where is None:
+        raise FilesqlError(
+            "trigger-body UPDATE referencing new/old requires a WHERE "
+            "clause correlating the target to the transition row"
+        )
+    joined = _with_seq(st.df).join(
+        F.broadcast(tx.withColumn("__hit__", F.lit(1))),
+        st.expr(where).cast("boolean"),
+        "left",
     )
-    assigns = {}
-    for piece in _split_level0(set_part):
-        col, _eq, expr_src = piece.partition("=")
-        name = col.strip().strip('"`')
-        if name not in df.columns:
-            raise FilesqlError(f"UPDATE: no such column {name!r} in {table!r}")
-        new_val = F.expr(dialect.rewrite(expr_src.strip(), engine._column_types())).cast(
-            dict(zip(df.columns, [f.dataType for f in df.schema.fields]))[name]
+    hit = F.col("__hit__").isNotNull()
+    multi = (
+        joined.filter(hit).groupBy("__seq").count()
+        .filter(F.col("count") > 1).limit(1).count()
+    )
+    if multi:
+        raise FilesqlError(
+            f"trigger-body UPDATE on {st.name!r}: a target row matches "
+            "multiple transition rows; SQLite would apply them in rowid "
+            "order, which a distributed plan cannot reproduce"
         )
-        assigns[name] = F.when(pred, new_val).otherwise(F.col(name))
+    return _update_apply(engine, st, joined, hit, assigns, returning, counted=False)
 
-    n = df.filter(pred).count()
-    engine._reregister(table, df.withColumns(assigns))
-    if engine._catalog.triggers:
-        from filesql_spark import triggers as trig
 
-        # pre-update plan is immutable → old/new images stay valid
-        trig.fire(
-            engine,
-            table,
-            "UPDATE",
-            df.filter(pred).select(
-                F.struct(*[F.col(c) for c in df.columns]).alias("old"),
-                F.struct(
-                    *[assigns.get(c, F.col(c)).alias(c) for c in df.columns]
-                ).alias("new"),
-            ),
-            set_cols=set(assigns),
-        )
-    # the pre-update plan is immutable, so the RETURNING frame (affected
-    # rows with assignments applied) stays valid after the view swap
-    return n, _returning_over(engine, df.filter(pred).withColumns(assigns), returning)
+def _update_apply(engine, st, frame, hit, assigns, returning, inserted=None,
+                  counted=True):
+    """The UPDATE apply step over a matched ``frame`` (the target, or its
+    join to a correlation source): rows where ``hit`` holds take the SET
+    ``assigns``. ``inserted`` are a DO UPDATE's non-conflicting rows."""
+    cols = st.columns
+    version = frame.select(
+        *[F.when(hit, assigns[c]).otherwise(F.col(c)).alias(c) if c in assigns else F.col(c)
+          for c in cols]
+    )
+    affected = frame.filter(hit)
+    rows = affected.select(*[assigns[c].alias(c) if c in assigns else F.col(c) for c in cols])
+    fires = [("UPDATE", affected, affected.count() if counted and not st.view else None)]
+    if inserted is not None:
+        n = inserted.count()
+        version, rows = version.unionByName(inserted), rows.unionByName(inserted)
+        engine._catalog.rowid_hwm.pop(st.name, None)
+        _track_rowid(engine, st.name, st.df, inserted, n, pk_only=True)
+        fires.append(("INSERT", inserted, n))
+    return _apply(engine, st, version, fires, rows, returning, assigns)
 
 
 # ------------------------------------------------------------------- DELETE
@@ -735,41 +647,35 @@ _DELETE_RE = re.compile(
 )
 
 
-def _delete(engine, sql: str) -> tuple[int, "object | None"]:
+def _delete(engine, sql: str, tx=None) -> tuple[int, "object | None"]:
     """Apply a DELETE; returns (affected rows, RETURNING DataFrame | None).
-    RETURNING evaluates over the deleted rows (their last values)."""
+    RETURNING evaluates over the deleted rows (their last values). With a
+    correlation source ``tx``, the doomed rows are the target's semi join
+    to the broadcast transition relation on the WHERE predicate."""
     sql, returning = _strip_returning(sql)
     m = _DELETE_RE.match(sql)
     if not m:
         raise FilesqlError(f"cannot parse DELETE: {sql.strip()[:120]}")
-    table = _ident(m)
-    if table in engine._catalog.views:
-        return _view_delete(engine, table, m, returning)
-    df = engine.table(table)
-    rest = m.group("rest").strip().rstrip(";")
-    if rest:
-        if not rest.lower().startswith("where"):
-            raise FilesqlError(f"cannot parse DELETE tail: {rest[:80]}")
-        pred = F.coalesce(
-            F.expr(dialect.rewrite(rest[5:].strip(), engine._column_types())).cast("boolean"), F.lit(False)
-        )
+    st = _compile(engine, _ident(m), "DELETE")
+    tail, where = _extract_where(m.group("rest"))
+    if tail:
+        raise FilesqlError(f"cannot parse DELETE tail: {tail[:80]}")
+    if tx is None:
+        pred = st.pred(where)
+        doomed, kept = st.df.filter(pred), st.df.filter(~pred)
+        n = None if st.view else doomed.count()
     else:
-        pred = F.lit(True)
-    n = df.filter(pred).count()
-    engine._reregister(table, df.filter(~pred))
-    engine._catalog.rowid_hwm.pop(table, None)
-    if engine._catalog.triggers:
-        from filesql_spark import triggers as trig
-
-        trig.fire(
-            engine,
-            table,
-            "DELETE",
-            df.filter(pred).select(
-                F.struct(*[F.col(c) for c in df.columns]).alias("old")
-            ),
-        )
-    return n, _returning_over(engine, df.filter(pred), returning)
+        if where is None:
+            raise FilesqlError(
+                "trigger-body DELETE referencing new/old requires a WHERE clause"
+            )
+        cond = st.expr(where).cast("boolean")
+        doomed = st.df.join(F.broadcast(tx), cond, "left_semi")
+        kept = st.df.join(F.broadcast(tx), cond, "left_anti")
+        n = None
+    if not st.view:
+        engine._catalog.rowid_hwm.pop(st.name, None)  # freed rowids: re-count next INSERT
+    return _apply(engine, st, kept, [("DELETE", doomed, n)], doomed, returning)
 
 
 # --------------------------------------------------------------------- DDL
@@ -821,7 +727,8 @@ def _create(engine, sql: str) -> int:
         # SQLite's exact pairing rules and wordings: INSTEAD OF targets
         # views only; BEFORE/AFTER target tables only
         cat = engine._catalog
-        is_view = t.table in cat.views
+        stored = cat.resolve(t.table)
+        is_view = stored in cat.views
         if t.timing == "INSTEAD OF":
             if not is_view:
                 raise FilesqlError(
@@ -831,7 +738,7 @@ def _create(engine, sql: str) -> int:
             raise FilesqlError(
                 f"cannot create {t.timing} trigger on view: {t.table}"
             )
-        elif t.table not in cat.tables:
+        elif stored is None:
             raise FilesqlError(f"no such table: {t.table}")
         if t.name.lower() in cat.triggers:
             if if_not_exists:
@@ -908,16 +815,17 @@ def _drop(engine, sql: str) -> int:
             raise FilesqlError(f"no such trigger: {name}")
         del cat.triggers[name.lower()]
         return 0
-    found = "TABLE" if name in cat.tables else "VIEW" if name in cat.views else None
+    stored = cat.resolve(name)
+    found = None if stored is None else "TABLE" if stored in cat.tables else "VIEW"
     if found is None:
         if if_exists:
             return 0
         raise FilesqlError(f"no such {kind.lower()}: {name}")
     if found != kind:
-        raise FilesqlError(f"use DROP {found} to delete {found.lower()} {name}")
+        raise FilesqlError(f"use DROP {found} to delete {found.lower()} {stored}")
     # views over a dropped table keep their last-good DataFrame
     # (documented divergence, engine._flush)
-    cat.drop(name)
+    cat.drop(stored)
     return 0
 
 
@@ -935,13 +843,6 @@ def _alter_ident(text: str) -> tuple[str, str]:
     if not m:
         raise FilesqlError(f"cannot parse identifier at: {text[:60]!r}")
     return _ident(m), text[m.end():]
-
-
-def _resolve_col(df, name: str) -> str | None:
-    """Actual column name for a case-insensitive identifier (SQLite and
-    Spark SQL both resolve identifiers case-insensitively — the same
-    by_lower matching the INSERT path uses)."""
-    return {c.lower(): c for c in df.columns}.get(name.lower())
 
 
 def _alter(engine, sql: str) -> int:
@@ -962,7 +863,7 @@ def _alter(engine, sql: str) -> int:
     m = _ALTER_RE.match(sql)
     if not m:
         raise FilesqlError(f"cannot parse ALTER: {sql.strip()[:120]}")
-    table = _ident(m)
+    table = engine._catalog.resolve(_ident(m)) or _ident(m)
     rest = m.group("rest")
     df = engine.table(table)  # raises "no such table"
     low = rest.lstrip().lower()

@@ -96,15 +96,19 @@ class Catalog:
     def copy(self) -> Catalog:
         return Catalog(**{f.name: dict(getattr(self, f.name)) for f in fields(self)})
 
-    def kind(self, name: str) -> str | None:
-        """'table' or 'view' if ``name`` is taken in the one namespace
-        both share, matched case-insensitively like SQLite (and Spark's
-        temp views) match identifiers."""
+    def resolve(self, name: str) -> str | None:
+        """The stored spelling of the table or view ``name`` names in the
+        one namespace both share, or None. Names match case-insensitively,
+        like SQLite (and Spark's temp views) match identifiers."""
         key = name.lower()
-        for kind, names in (("table", self.tables), ("view", self.views)):
-            if any(n.lower() == key for n in names):
-                return kind
-        return None
+        return next((n for n in [*self.tables, *self.views] if n.lower() == key), None)
+
+    def kind(self, name: str) -> str | None:
+        """'table' or 'view' if ``name`` is taken (see ``resolve``)."""
+        stored = self.resolve(name)
+        if stored is None:
+            return None
+        return "table" if stored in self.tables else "view"
 
     def drop(self, name: str) -> None:
         """DROP TABLE/VIEW: the object's triggers and side data go with it
@@ -267,9 +271,10 @@ class Engine:
     # --------------------------------------------------------------- catalog
 
     def table(self, name: str) -> DataFrame:
-        if name not in self._catalog.tables:
+        stored = self._catalog.resolve(name)
+        if stored not in self._catalog.tables:
             raise FilesqlError(f"no such table: {name}")
-        return self._catalog.tables[name]
+        return self._catalog.tables[stored]
 
     def table_names(self) -> list[str]:
         return sorted(self._catalog.tables)
@@ -326,7 +331,8 @@ class Engine:
     def pragma_table_info(self, name: str) -> DataFrame:
         """PRAGMA table_info(t) compat (filesql.go:275-301 uses it)."""
         fields = self.table(name).schema.fields
-        pk = {c.lower(): i + 1 for i, c in enumerate(self._catalog.primary_keys.get(name, []))}
+        keys = self._catalog.primary_keys.get(self._catalog.resolve(name), [])
+        pk = {c.lower(): i + 1 for i, c in enumerate(keys)}
         rows = [
             (i, f.name, _sqlite_type(f.dataType.simpleString()), 0, None,
              pk.get(f.name.lower(), 0))

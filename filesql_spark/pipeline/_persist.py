@@ -18,6 +18,15 @@ referenced by a LAZY result of an EARLIER call silently recomputes on
 its next action (identical values, uncached speed) — correctness is
 unaffected, and the alternative (never releasing) is unbounded pinned
 executor storage at 100 TB.
+
+Determinism contract: "identical values" holds only if the frame is
+deterministic. No non-deterministic column may flow into a frame passed
+to ``swap_persist`` — for example a column computed by the cosine
+UDF in dedup.py (marked ``asNondeterministic``), or by the dialect's
+rand-based rewrites of ``random()`` and ``randomblob()``. Spark is free
+to re-evaluate such a column on recomputation and may get other values,
+so results built from the pinned copy and from the recomputed one could
+disagree.
 """
 
 from __future__ import annotations

@@ -616,8 +616,9 @@ def pq_fit(
             ]
             for row in stats
         }
+        # the seed holds fewer than k codewords on a corpus under k rows
         books = [
-            [upd.get((mi, c), books[mi][c]) for c in range(k)]
+            [upd.get((mi, c), books[mi][c]) for c in range(len(books[mi]))]
             for mi in range(m)
         ]
     return books

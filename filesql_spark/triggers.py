@@ -23,7 +23,13 @@ Supported:
 - Body statements: ``INSERT INTO t [(cols)] VALUES (...), ...`` and
   ``INSERT INTO t [(cols)] SELECT`` / ``UPDATE t SET ... [WHERE ...]`` /
   ``DELETE FROM t [WHERE ...]``, each free to reference ``new.col`` /
-  ``old.col``; plus single-expression ``SELECT`` statements containing
+  ``old.col``. They run through dml.py's one statement path, as SQLite
+  compiles body steps with its top-level INSERT/UPDATE/DELETE code: an
+  INSERT's VALUES become a SELECT over the transition relation, and an
+  UPDATE/DELETE that reads new./old. takes the transition relation as
+  its correlation source (a broadcast join on the WHERE predicate). The
+  target may be a table or a view with an INSTEAD OF trigger, matched
+  case-insensitively. Plus single-expression ``SELECT`` statements containing
   ``RAISE(ABORT|FAIL|ROLLBACK, msg)`` (the precondition-check pattern,
   both the ``SELECT RAISE(…) WHERE cond`` and ``SELECT CASE WHEN cond
   THEN RAISE(…) END`` spellings), evaluated set-based over the
@@ -33,11 +39,12 @@ Supported:
   guard; SQLite's row-order-dependent FAIL partial effects have no
   distributed equivalent — set-based all-rows effects are kept instead).
 - ``INSTEAD OF`` triggers on views (r11): DML against a view with a
-  matching INSTEAD OF trigger builds the transition relation from the
-  view's rows (INSERT: the would-be rows; UPDATE/DELETE: matching view
-  rows with SET applied for ``new``) and runs the body INSTEAD of
-  mutating — the view itself is never written, and ``changes()``
-  reports 0, both exactly as SQLite. Registration errors use SQLite's
+  matching INSTEAD OF trigger takes the same path as DML on a table, up
+  to the apply step: the transition relation holds the view's rows
+  (INSERT: the would-be rows; UPDATE/DELETE: matching view rows with SET
+  applied for ``new``) and the body runs INSTEAD of mutating — the view
+  itself is never written, and ``changes()`` reports 0, both exactly as
+  SQLite. Registration errors use SQLite's
   wording ("cannot create INSTEAD OF trigger on table: t" / "cannot
   create BEFORE trigger on view: v").
 - Cascading triggers fire (depth-capped); ``DROP TRIGGER`` removes one.
@@ -57,7 +64,10 @@ Documented divergences (each raises or is noted, never silent):
   *statement*, not once per affected row (statement-trigger semantics);
   relative updates like ``SET n = n + 1`` therefore bump once per fire,
   not once per row.  INSERT bodies are exempt: they always produce one
-  row per transition row, exactly like SQLite.
+  row per transition row, exactly like SQLite. A top-level table
+  statement that changes no row fires nothing, like SQLite's FOR EACH
+  ROW triggers; view and trigger-body statements are not counted, so
+  they fire over whatever rows matched, possibly none.
 - Upsert branches fire triggers with SQLite's recursive_triggers=OFF
   semantics (the default, inherited by the reference): OR REPLACE fires
   INSERT triggers for the landed rows (the implicit delete of a
@@ -314,7 +324,7 @@ def fire(
             except TriggerRaise as e:
                 # overwrite at every cascade level: the OUTERMOST fire's
                 # trigger timing decides the statement-level counter
-                # unwind in dml._guarded_dml (BEFORE → no row landed)
+                # unwind in dml._run (BEFORE → no row landed)
                 e.timing = t.timing
                 raise
     finally:
@@ -331,18 +341,13 @@ def _run_body_stmt(engine, stmt: str, tx: DataFrame) -> None:
         _body_select_raise(engine, stmt, tx)
     elif kw == "INSERT":
         _body_insert(engine, stmt, tx)
-    elif kw == "UPDATE":
-        _body_update(engine, stmt, tx)
     else:
-        _body_delete(engine, stmt, tx)
+        from filesql_spark import dml
 
-
-_BODY_INSERT_RE = re.compile(
-    r"""^\s*INSERT\s+INTO\s+(?:["'`\[]?)(?P<table>[\w$]+)(?:["'`\]]?)\s*
-        (?:\((?P<cols>[^)]*)\)\s*)?
-        (?P<src>VALUES\s*.*|SELECT\s+.*)$""",
-    re.I | re.S | re.X,
-)
+        # the transition relation is the correlation source of a body
+        # UPDATE/DELETE that reads new./old.; one that does not runs
+        # once per statement
+        dml._run(engine, stmt, tx if _has_transition_ref(stmt) else None)
 
 
 def _body_insert(engine, stmt: str, tx: DataFrame) -> None:
@@ -350,12 +355,14 @@ def _body_insert(engine, stmt: str, tx: DataFrame) -> None:
     parity): the VALUES tuple becomes a SELECT over the transition
     relation, then rides the normal INSERT path (and thereby fires any
     cascading triggers on the target)."""
-    m = _BODY_INSERT_RE.match(stmt)
+    from filesql_spark import dml
+
+    m = dml._INSERT_RE.match(stmt)
     if not m:
         raise FilesqlError(f"cannot parse trigger-body INSERT: {stmt[:120]}")
     view = _register_tx(engine, tx)
     try:
-        src = m.group("src").strip().rstrip(";")
+        src = m.group("body").strip().rstrip(";")
         if src.upper().startswith("VALUES"):
             tuples = _level0_tuples(src[6:])
             selects = [
@@ -373,119 +380,9 @@ def _body_insert(engine, stmt: str, tx: DataFrame) -> None:
             select_src = (
                 f"SELECT s.* FROM ({src.rstrip(';')}) AS s CROSS JOIN {view}"
             )
-        cols = f" ({m.group('cols')})" if m.group("cols") else ""
-        from filesql_spark import dml
-
-        dml.execute(engine, f"INSERT INTO {m.group('table')}{cols} {select_src}")
+        dml.execute(engine, stmt[: m.start("body")] + select_src)
     finally:
         _drop_tx(engine, view)
-
-
-_BODY_UPDATE_RE = re.compile(
-    r"""^\s*UPDATE\s+(?:["'`\[]?)(?P<table>[\w$]+)(?:["'`\]]?)\s+
-        SET\s+(?P<body>.*)$""",
-    re.I | re.S | re.X,
-)
-
-
-def _body_update(engine, stmt: str, tx: DataFrame) -> None:
-    """UPDATE body with new/old refs → correlated update: target rows
-    LEFT-join the transition relation on the WHERE predicate; matched
-    rows take the SET expressions (which may read new./old.), unmatched
-    rows pass through.  One shuffle-free broadcast join when the
-    transition batch is small — never a driver-side loop."""
-    from filesql_spark import dml
-
-    if not _has_transition_ref(stmt):
-        dml.execute(engine, stmt)  # statement-trigger semantics, once
-        return
-    m = _BODY_UPDATE_RE.match(stmt)
-    if not m:
-        raise FilesqlError(f"cannot parse trigger-body UPDATE: {stmt[:120]}")
-    table = m.group("table")
-    target = engine.table(table)
-    set_part, where = dml._extract_where(m.group("body"))
-    if where is None:
-        raise FilesqlError(
-            "trigger-body UPDATE referencing new/old requires a WHERE "
-            "clause correlating the target to the transition row"
-        )
-
-    seq = dml._with_seq(target)
-    txm = tx.withColumn("__hit__", F.lit(1))
-    cond = F.expr(dialect.rewrite(where, engine._column_types())).cast("boolean")
-    joined = seq.join(F.broadcast(txm), cond, "left")
-    multi = (
-        joined.filter(F.col("__hit__").isNotNull())
-        .groupBy("__seq")
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if multi:
-        raise FilesqlError(
-            f"trigger-body UPDATE on {table!r}: a target row matches "
-            "multiple transition rows; SQLite would apply them in rowid "
-            "order, which a distributed plan cannot reproduce"
-        )
-    types = {f.name: f.dataType for f in target.schema.fields}
-    assigns = {}
-    for piece in dml._split_level0(set_part):
-        col, _eq, expr_src = piece.partition("=")
-        name = col.strip().strip('"`')
-        resolved = dml._resolve_col(target, name)
-        if resolved is None:
-            raise FilesqlError(f"UPDATE: no such column {name!r} in {table!r}")
-        val = F.expr(dialect.rewrite(expr_src.strip(), engine._column_types())).cast(types[resolved])
-        assigns[resolved] = F.when(
-            F.col("__hit__").isNotNull(), val
-        ).otherwise(F.col(resolved))
-    result = joined.select(
-        *[assigns.get(c, F.col(c)).alias(c) for c in target.columns]
-    )
-    engine._reregister(table, result)
-    new_tx = joined.filter(F.col("__hit__").isNotNull()).select(
-        F.struct(*[F.col(c).alias(c) for c in target.columns]).alias("old"),
-        F.struct(
-            *[assigns.get(c, F.col(c)).alias(c) for c in target.columns]
-        ).alias("new"),
-    )
-    fire(engine, table, "UPDATE", new_tx, set_cols=set(assigns))
-
-
-def _body_delete(engine, stmt: str, tx: DataFrame) -> None:
-    """DELETE body with new/old refs → anti-join the target against the
-    transition relation on the WHERE predicate."""
-    from filesql_spark import dml
-
-    if not _has_transition_ref(stmt):
-        dml.execute(engine, stmt)
-        return
-    m = dml._DELETE_RE.match(stmt)
-    if not m:
-        raise FilesqlError(f"cannot parse trigger-body DELETE: {stmt[:120]}")
-    table = dml._ident(m)
-    target = engine.table(table)
-    rest = m.group("rest").strip().rstrip(";")
-    if not rest.lower().startswith("where"):
-        raise FilesqlError(
-            "trigger-body DELETE referencing new/old requires a WHERE clause"
-        )
-    cond = F.expr(dialect.rewrite(rest[5:].strip(), engine._column_types())).cast("boolean")
-    doomed = target.join(F.broadcast(tx), cond, "left_semi")
-    engine._reregister(
-        table, target.join(F.broadcast(tx), cond, "left_anti")
-    )
-    engine._catalog.rowid_hwm.pop(table, None)  # freed rowids: re-count next INSERT
-    fire(
-        engine,
-        table,
-        "DELETE",
-        doomed.select(
-            F.struct(*[F.col(c) for c in target.columns]).alias("old")
-        ),
-    )
 
 
 def _level0_tuples(values_src: str) -> list[str]:

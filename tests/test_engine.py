@@ -1432,15 +1432,128 @@ _MASTER = "SELECT type, name, tbl_name FROM sqlite_master WHERE name <> 'sample'
             ],
             "SELECT count(*) FROM log",
         ),
+        # a statement names a table or view in any letter case
+        (["INSERT INTO T VALUES (3, 'c')"], "SELECT id, v FROM t ORDER BY id"),
+        (["UPDATE T SET v = 'z' WHERE id = 1"], "SELECT id, v FROM t ORDER BY id"),
+        (["DELETE FROM T WHERE id = 2"], "SELECT id, v FROM t ORDER BY id"),
+        (
+            [
+                "CREATE TRIGGER vd INSTEAD OF DELETE ON v "
+                "BEGIN INSERT INTO log VALUES (OLD.id); END",
+                "DELETE FROM V",
+            ],
+            "SELECT id FROM log",
+        ),
+        (["DROP TABLE T"], _MASTER),
+        (["ALTER TABLE T ADD COLUMN c INTEGER"], "SELECT id, v, c FROM t ORDER BY id"),
+        (
+            [
+                "CREATE TRIGGER ta AFTER INSERT ON T "
+                "BEGIN INSERT INTO log VALUES (NEW.id); END",
+                "INSERT INTO t VALUES (3, 'c')",
+            ],
+            "SELECT id FROM log",
+        ),
+        (["CREATE TABLE k (ID INTEGER PRIMARY KEY, v TEXT)"], "PRAGMA table_info(K)"),
     ],
     ids=[
         "view_over_table", "view_twice", "table_over_view", "view_if_not_exists",
         "drop_wrong_kind", "names_ignore_case", "rename_onto_view", "quoted_view_name",
         "drop_view_drops_triggers", "rename_trigger_fires", "rename_trigger_tbl_name",
         "view_heals_on_recreate", "when_sees_statement_write", "when_sees_earlier_trigger_write",
+        "insert_table_case", "update_table_case", "delete_table_case", "delete_view_case",
+        "drop_table_case", "alter_table_case", "trigger_target_case", "pragma_table_case",
     ],
 )
 def test_one_namespace_matches_sqlite(eng, stmts, sql):
+    _catalog_differential(eng, stmts, sql)
+
+
+# ------------------------------------------------- one DML path vs sqlite3
+# Top-level, view (INSTEAD OF), trigger-body and upsert writes share one
+# statement compiler: column names resolve case-insensitively and the
+# target is aliased by its name everywhere.
+
+_UPSERT_SETUP = [
+    "CREATE TABLE u (id INTEGER PRIMARY KEY, v TEXT)",
+    "INSERT INTO u VALUES (1, 'a')",
+]
+_VIEW_SETUP = [
+    "CREATE VIEW w AS SELECT id, v FROM t",
+    "CREATE TRIGGER wu INSTEAD OF UPDATE ON w "
+    "BEGIN UPDATE t SET v = NEW.v WHERE id = OLD.id; END",
+]
+_T_ROWS = "SELECT id, v FROM t ORDER BY id"
+_U_ROWS = "SELECT id, v FROM u ORDER BY id"
+
+
+@pytest.mark.parametrize(
+    "stmts, sql",
+    [
+        (["INSERT INTO t (ID, V) VALUES (3, 'z')"], _T_ROWS),
+        (
+            _UPSERT_SETUP
+            + ["INSERT INTO u (ID, V) VALUES (1, 'b'), (2, 'c') "
+               "ON CONFLICT(id) DO UPDATE SET v = excluded.v"],
+            _U_ROWS,
+        ),
+        (["UPDATE t SET ID = 10 WHERE id = 1"], _T_ROWS),
+        (
+            _UPSERT_SETUP
+            + ["INSERT INTO u VALUES (1, 'b') ON CONFLICT(id) DO UPDATE SET V = excluded.v"],
+            _U_ROWS,
+        ),
+        (_VIEW_SETUP + ["UPDATE w SET V = 'w' WHERE id = 2"], _T_ROWS),
+        (["UPDATE t SET v = 'q' WHERE t.id = 2"], _T_ROWS),
+        (["UPDATE t SET v = t.v || '!' WHERE id = 2"], _T_ROWS),
+        (["DELETE FROM t WHERE t.id = 1"], _T_ROWS),
+        (
+            _VIEW_SETUP
+            + [
+                "CREATE TRIGGER li AFTER INSERT ON log "
+                "BEGIN UPDATE w SET v = 'L' || NEW.id WHERE id = 2; END",
+                "INSERT INTO log VALUES (7)",
+            ],
+            _T_ROWS,
+        ),
+        # a statement that changes no row fires no row trigger
+        (
+            [
+                "INSERT INTO log VALUES (0)",
+                "CREATE TRIGGER tu AFTER UPDATE ON t BEGIN UPDATE log SET id = id + 1; END",
+                "UPDATE t SET v = 'x' WHERE id = 9",
+            ],
+            "SELECT id FROM log",
+        ),
+        (
+            [
+                'CREATE TABLE "my t" (id INTEGER, v TEXT)',
+                "CREATE TRIGGER tl AFTER INSERT ON log "
+                "BEGIN INSERT INTO \"my t\" VALUES (NEW.id, 'x'); END",
+                "INSERT INTO log VALUES (5)",
+            ],
+            'SELECT id, v FROM "my t"',
+        ),
+        # a DO UPDATE that inserts moves the implicit-rowid mark on
+        (
+            [
+                "CREATE TABLE s (k TEXT PRIMARY KEY, v TEXT)",
+                "INSERT INTO s VALUES ('a', '1')",
+                "INSERT INTO s VALUES ('b', '2') ON CONFLICT(k) DO UPDATE SET v = excluded.v",
+                "INSERT INTO s VALUES ('c', '3')",
+            ],
+            "SELECT last_insert_rowid()",
+        ),
+    ],
+    ids=[
+        "insert_column_case", "upsert_insert_column_case", "update_set_case",
+        "upsert_set_case", "view_update_set_case", "update_where_qualified",
+        "update_set_qualified", "delete_where_qualified", "body_update_on_view",
+        "zero_row_update_fires_nothing", "body_insert_quoted_table",
+        "upsert_insert_moves_rowid",
+    ],
+)
+def test_dml_paths_match_sqlite(eng, stmts, sql):
     _catalog_differential(eng, stmts, sql)
 
 
