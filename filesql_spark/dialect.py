@@ -23,6 +23,22 @@ and ``_find_depth0`` for clause keywords. Comments never pass the front
 door: ``rewrite``, ``bind_params`` and ``split_statements`` blank them to
 spaces on entry, so no pass sees one, and nothing inside a literal or a
 quoted identifier is ever rewritten.
+
+The pass contract: a pass changes the statement in one of two ways.
+
+- It collects ``(start, end, replacement)`` edits over one mask of the
+  statement and returns ``_apply_edits(sql, edits)``, the one place such
+  edits are applied (its docstring states the tie rule).
+- Or, when one splice changes what the next site sees (nested or chained
+  sites), it supplies a site matcher to ``_rewrite_sites``, the one
+  leftmost-first fixpoint driver. The driver splices each hit into the
+  statement and its mask and resumes at the start of the depth-0 clause
+  item that holds the splice, never at position 0.
+
+The call rewrites (``_rewrite_calls``, ``_rewrite_json_tvf``) scan forward
+past each replacement instead, splicing statement and mask the same way
+(``_splice``). Replacement text must close every quote it opens: a splice
+re-masks only the replacement, never the whole statement.
 """
 
 from __future__ import annotations
@@ -317,13 +333,15 @@ def _requote_identifiers(sql: str) -> str:
     return "".join(parts)
 
 
-def _find_call(sql: str, name: str, start: int = 0) -> tuple[int, int, list[str]] | None:
+def _find_call(
+    sql: str, mask: str, name: str, start: int = 0
+) -> tuple[int, int, list[str]] | None:
     """Locate ``name( … )`` at a code position; return (start, end_exclusive,
-    args) with balanced-paren, token-aware arg splitting."""
+    args) with balanced-paren, token-aware arg splitting. ``mask`` is
+    ``_div_mask(sql)``, which a caller that splices hits keeps in step."""
     name_l = name.lower()
     if sql.lower().find(name_l, start) == -1:
         return None
-    mask = _div_mask(sql)
     low = mask.lower()
     for m in re.compile(re.escape(name_l)).finditer(low, start):
         i, j = m.start(), m.end()
@@ -360,9 +378,12 @@ def _rewrite_calls(sql: str, name: str, builder) -> str:
     to the prefix parse — and skipping the whole interior of a declined
     CAST(… AS DATE) left that raw REAL cast for Spark's ANSI mode to
     crash on junk text (r14 advice, high)."""
+    if name.lower() not in sql.lower():
+        return sql
+    mask = _div_mask(sql)
     pos = 0
     while True:
-        hit = _find_call(sql, name, pos)
+        hit = _find_call(sql, mask, name, pos)
         if hit is None:
             return sql
         start, end, args = hit
@@ -370,7 +391,7 @@ def _rewrite_calls(sql: str, name: str, builder) -> str:
         if replacement is None:
             pos = start + len(name)
             continue
-        sql = sql[:start] + replacement + sql[end:]
+        sql, mask = _splice(sql, mask, start, end, replacement)
         pos = start + len(replacement)
 
 
@@ -1067,7 +1088,7 @@ def _json_value_flag(expr: str) -> str:
         return "j"
     m = _CALL_HEAD_RX.match(e)
     if m and e.endswith(")"):
-        hit = _find_call(e, m.group(1))
+        hit = _find_call(e, _div_mask(e), m.group(1))
         if hit and hit[1] == len(e):
             name = m.group(1).lower()
             if name == "filesql_json_arrow":
@@ -1498,9 +1519,7 @@ def _rewrite_total_over(sql: str) -> str:
             f"coalesce(sum(CAST(({arg}) AS DOUBLE)) {spec}, "
             f"CAST(0 AS DOUBLE))"
         )))
-    for a, b, r0 in sorted(edits, reverse=True):
-        sql = sql[:a] + r0 + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _raise_outside_trigger():
@@ -2238,6 +2257,92 @@ def _mask_token(m: re.Match) -> str:
     return (" " if m.lastgroup == "comment" else "\x00") * (m.end() - m.start())
 
 
+def _splice(sql: str, mask: str, a: int, b: int, repl: str) -> tuple[str, str]:
+    """Replace [a, b) by ``repl`` in the statement and in its mask. Only
+    ``repl`` is masked: it closes every quote it opens, so the text
+    around it keeps its mask."""
+    return sql[:a] + repl + sql[b:], mask[:a] + _div_mask(repl) + mask[b:]
+
+
+def _apply_edits(sql: str, edits: list[tuple[int, int, str]]) -> str:
+    """Apply a pass's ``(start, end, replacement)`` edits, all in the
+    coordinates of ``sql``. Edits never overlap. Tie rule: edits apply
+    in (start, end) order, so an insertion at p lands before a
+    replacement that starts at p, and edits with the same span land in
+    reverse order of collection (the last collected is outermost)."""
+    if not edits:
+        return sql
+    out, pos = [], 0
+    for a, b, repl in sorted(reversed(edits), key=lambda e: (e[0], e[1])):
+        out += (sql[pos:a], repl)
+        pos = b
+    out.append(sql[pos:])
+    return "".join(out)
+
+
+# Depth-0 clause-item boundaries (`,`, `;` and clause keywords outside
+# parens). No operand a pass walks crosses one, so after a splice the
+# site driver resumes at the start of the item that holds it.
+_ITEM_BOUND_RX = re.compile(
+    r"[(),;]|(?i:\b(?:select|from|where|group|having|order|limit|union"
+    r"|intersect|except|on)\b)"
+)
+
+
+def _rewrite_sites(sql: str, chars: str, match) -> str:
+    """The one leftmost-first fixpoint driver. ``match(sql, mask, low,
+    pos)`` is tried at each code position whose mask character is in
+    ``chars``, left to right, and returns None (no site there), an edit
+    ``(a, b, repl)``, or ``(a, b, None)`` to leave [a, b) as it is and
+    resume the scan at b. An edit is spliced into the statement and its
+    mask; the scan then resumes at the start of the depth-0 clause item
+    holding the splice, so every site the splice can affect is tried
+    again. Each splice consumes a site, so more splices than the input
+    has characters means a pass that keeps matching its own output."""
+    sites = re.compile("[" + re.escape(chars) + "]")
+    mask = _div_mask(sql)
+    low = sql.lower()
+    limit = 2 * len(sql) + 16
+    pos = scanned = item = depth = 0
+    while True:
+        m = sites.search(mask, pos)
+        if m is None:
+            return sql
+        i = m.start()
+        for t in _ITEM_BOUND_RX.finditer(mask, scanned, i):
+            c = t.group()
+            if c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+            elif depth == 0 and not (
+                # a word cut short at i is not the keyword
+                c[0].isalpha() and t.end() == i
+                and (mask[i].isalnum() or mask[i] == "_")
+            ):
+                item = t.end()
+        scanned = i
+        hit = match(sql, mask, low, i)
+        if hit is None:
+            pos = i + 1
+            continue
+        a, b, repl = hit
+        if repl is None:
+            pos = max(b, i + 1)
+            continue
+        limit -= 1
+        if limit < 0:
+            raise FilesqlError(
+                f"SQL rewrite did not converge near: {sql[a:a + 60]!r}"
+            )
+        sql, mask = _splice(sql, mask, a, b, repl)
+        low = sql.lower()
+        if a < item:
+            item = 0
+        pos = scanned = item
+        depth = 0
+
+
 def _div_find_close(mask: str, open_pos: int, end: int) -> int:
     """Index of the ')' matching the '(' at open_pos, or -1."""
     depth = 0
@@ -2496,11 +2601,7 @@ def _rewrite_case_truthiness(sql: str) -> str:
             if prev_kw == "when" and kw == "then":
                 _cond_truthy_edits(sql, mask, low, prev_pos, mpos, edits)
             prev_pos, prev_kw = mpos + len(kw), kw
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda e: (e[0], e[1]), reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 _NOT_WORD_RX = re.compile(r"(?i)\bnot\b")
@@ -2641,11 +2742,7 @@ def _strip_unary_plus(sql: str) -> str:
         if prev_arith or nxt_arith or no_affinity:
             edits.append((i, i + 1, ""))
         i += 1
-    if not edits:
-        return sql
-    for a, b, repl in reversed(edits):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _rewrite_numlit_arith(sql: str) -> str:
@@ -2738,11 +2835,7 @@ def _rewrite_numlit_arith(sql: str) -> str:
             prev_int or nxt_int or prev_concat or nxt_concat
         ):
             edits.append((a, b, s_out))
-    if not edits:
-        return sql
-    for a, b, repl in reversed(edits):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _concat_run_left(sql, mask, i):
@@ -2828,44 +2921,37 @@ def _rewrite_concat_grouping(sql: str) -> str:
     the affinity/coercion passes walk the chains."""
     if "||" not in sql:
         return sql
-    for _ in range(sql.count("||") + 1):
-        mask = _div_mask(sql)
-        edit = None
-        pos = 0
-        while edit is None:
-            i = mask.find("||", pos)
-            if i == -1:
-                break
-            pos = i + 2
-            a = _concat_run_left(sql, mask, i)
-            if a is None:
-                continue
-            b = _concat_run_right(sql, mask, i)
-            if b is None:
-                continue
-            k = a - 1
-            while k >= 0 and mask[k] in " \t\r\n":
-                k -= 1
-            left_adj = k >= 0 and (
-                mask[k] in "+-*/%&"
-                or (mask[k] == "|" and (k == 0 or mask[k - 1] != "|"))
-                or (mask[k] in "<>" and k >= 1 and mask[k - 1] == mask[k])
-            )
-            j = b
-            while j < len(mask) and mask[j] in " \t\r\n":
-                j += 1
-            right_adj = j < len(mask) and (
-                mask[j:j + 2] in ("<<", ">>")
-                or mask[j] in "+-*/%&"
-                or (mask[j] == "|" and mask[j + 1:j + 2] != "|")
-            )
-            if left_adj or right_adj:
-                edit = (a, b)
-        if edit is None:
-            return sql
-        a, b = edit
-        sql = f"{sql[:a]}({sql[a:b]}){sql[b:]}"
-    return sql
+
+    def match(sql, mask, low, i):
+        if mask[i + 1:i + 2] != "|" or (i > 0 and mask[i - 1] == "|"):
+            return None
+        a = _concat_run_left(sql, mask, i)
+        if a is None:
+            return None
+        b = _concat_run_right(sql, mask, i)
+        if b is None:
+            return None
+        k = a - 1
+        while k >= 0 and mask[k] in " \t\r\n":
+            k -= 1
+        left_adj = k >= 0 and (
+            mask[k] in "+-*/%&"
+            or (mask[k] == "|" and (k == 0 or mask[k - 1] != "|"))
+            or (mask[k] in "<>" and k >= 1 and mask[k - 1] == mask[k])
+        )
+        j = b
+        while j < len(mask) and mask[j] in " \t\r\n":
+            j += 1
+        right_adj = j < len(mask) and (
+            mask[j:j + 2] in ("<<", ">>")
+            or mask[j] in "+-*/%&"
+            or (mask[j] == "|" and mask[j + 1:j + 2] != "|")
+        )
+        if left_adj or right_adj:
+            return a, b, f"({sql[a:b]})"
+        return None
+
+    return _rewrite_sites(sql, "|", match)
 
 
 _NULL_POSTFIX_RX = re.compile(
@@ -2923,11 +3009,7 @@ def _rewrite_null_postfix(sql: str) -> str:
                 continue
         repl = "IS NULL" if word == "isnull" else "IS NOT NULL"
         edits.append((m.start(), m.end(), repl))
-    if not edits:
-        return sql
-    for a, b, repl in reversed(edits):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 _EXISTS_WORD_RX = re.compile(r"(?i)\bexists\b")
@@ -2978,11 +3060,7 @@ def _rewrite_exists_operand(sql: str) -> str:
             f"TRY_CAST(({sql[m.start():close + 1]}) AS INT)",
         ))
         last_end = close + 1
-    if not edits:
-        return sql
-    for a, b, repl in reversed(edits):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 _NOT_ARG_NONCALL_WORDS = frozenset({
@@ -3044,10 +3122,7 @@ def _not_arg_cast_edit(sql, mask, low, not_start, j, end):
         return None
     tmp: list[tuple[int, int, str]] = []
     _cond_truthy_edits(sql, mask, low, j, end, tmp)
-    seg = sql[j:end]
-    for a2, b2, r2 in sorted(tmp, key=lambda e: (e[0], e[1]),
-                             reverse=True):
-        seg = seg[:a2 - j] + r2 + seg[b2 - j:]
+    seg = _apply_edits(sql[j:end], [(a2 - j, b2 - j, r2) for a2, b2, r2 in tmp])
     # TRY_CAST, not CAST: the SQLite-CAST call pass would re-expand a
     # spelled CAST(x AS INT) through the prefix parse; TRY_CAST is the
     # Spark-native spelling every pass leaves alone, and
@@ -3121,12 +3196,7 @@ def _rewrite_bare_not(sql: str) -> str:
                 wn = _WORD_RX.match(mask, jn) if jn < len(sql) else None
                 if wn:
                     edits.append((jc, wn.end(), ""))
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda e: (e[0], e[1]),
-                             reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 _INDEXED_RX = re.compile(
@@ -3246,11 +3316,7 @@ def _rewrite_values_columns(sql: str) -> str:
             # no alias: name the whole parenthesized relation
             edits.append((j + 1, j + 1,
                           f" AS filesql_values{n_seen} ({collist})"))
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda e: (e[0], e[1]), reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _sqlite_double_text_static(v: float) -> str:
@@ -3275,29 +3341,20 @@ _CMP_MIRROR = {
 }
 
 
-def _bitop_positions(mask: str) -> list[tuple[int, str]]:
-    """Candidate (pos, op) of bitwise & | << >> in code text — skipping
-    ||, JSON arrows (->>), and <=>."""
-    out: list[tuple[int, str]] = []
-    i = 0
-    while i < len(mask):
-        c = mask[i]
-        if c == "&":
-            out.append((i, "&"))
-        elif c == "|":
-            if mask[i + 1:i + 2] == "|":
-                i += 2
-                continue
-            if i == 0 or mask[i - 1] != "|":
-                out.append((i, "|"))
-        elif c in "<>" and mask[i + 1:i + 2] == c:
-            if (i == 0 or mask[i - 1] not in "<>-") and \
-                    mask[i + 2:i + 3] != c:
-                out.append((i, c + c))
-            i += 2
-            continue
-        i += 1
-    return out
+def _bitop_at(mask: str, i: int) -> str | None:
+    """The bitwise operator (& | << >>) starting at code position ``i``,
+    or None — ``||``, JSON arrows (->>) and <=> are not ones."""
+    c = mask[i]
+    if c == "&":
+        return "&"
+    if c == "|":
+        if mask[i + 1:i + 2] != "|" and (i == 0 or mask[i - 1] != "|"):
+            return "|"
+    elif c in "<>" and mask[i + 1:i + 2] == c and (
+        i == 0 or mask[i - 1] not in "<>-"
+    ) and mask[i + 2:i + 3] != c:
+        return c + c
+    return None
 
 
 _SHIFT_LIT_RX = re.compile(r"^\+?\s*(\d+)$")
@@ -3358,120 +3415,97 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
         core = f"CAST(({t}) AS INTEGER)"
         return f"({prefix}{core})" if prefix else core
 
-    # sweep 1: unary ~ over a non-INTEGER primary
-    for _ in range(sql.count("~") + 1):
-        mask = _div_mask(sql)
-        done = False
-        i = len(sql) - 1
-        while i >= 0:
-            if mask[i] != "~":
-                i -= 1
+    def unary(sql, mask, low, i):
+        # unary ~ over a non-INTEGER primary, typed after the ~ sites
+        # nested in it are coerced (`~~s` keeps its outer ~ native)
+        j = _skip_ws(mask, i + 1)
+        f0, e0, t0 = _div_scan_primary(sql, mask, j, len(sql), coltypes, [])
+        if t0 == "kw" or e0 <= j:
+            return None
+        leaf = sql[j:e0].strip()
+        if "~" in leaf:
+            leaf = _rewrite_sites(leaf, "~", unary)
+        if _leaf_type(leaf) == "int":
+            return None
+        return j, e0, f"CAST(({leaf}) AS INTEGER)"
+
+    def chain(sql, mask, low, pos):
+        # a binary & | << >> chain with a non-INTEGER leaf or an unsafe
+        # shift; (l_start, r_end, None) skips a chain that stays native
+        op = _bitop_at(mask, pos)
+        if op is None:
+            return None
+        e = pos
+        while e > 0 and mask[e - 1] in " \t\r\n":
+            e -= 1
+        l_start = _cmp_walk_back(sql, mask, e, stop_at_cmp=True)
+        if l_start is None:
+            return None
+        fwd = _cmp_walk_fwd(sql, mask, pos + len(op), coltypes,
+                            stop_at_cmp=True)
+        if fwd is None:
+            return None
+        r_end = fwd[1]
+        # tokenize [l_start, r_end) at depth 0 into leaves/ops
+        depth = 0
+        top_ops: list[tuple[int, str]] = []
+        k = l_start
+        while k < r_end:
+            o = _bitop_at(mask, k)
+            if mask[k] == "(":
+                depth += 1
+            elif mask[k] == ")":
+                depth -= 1
+            elif depth == 0 and o is not None:
+                top_ops.append((k - l_start, o))
+                k += len(o)
                 continue
-            j = _skip_ws(mask, i + 1)
-            f0, e0, t0 = _div_scan_primary(sql, mask, j, len(sql),
-                                           coltypes, [])
-            if t0 == "kw" or e0 <= j:
-                i -= 1
+            k += 1
+        if not top_ops:
+            return l_start, r_end, None
+        leaves: list[str] = []
+        prev = 0
+        for k, o in top_ops:
+            leaves.append(sql[l_start + prev:l_start + k].strip())
+            prev = k + len(o)
+        leaves.append(sql[l_start + prev:r_end].strip())
+        if not all(leaves):
+            return l_start, r_end, None
+        need = any(_leaf_type(lf) != "int" for lf in leaves)
+        for idx, ((k, o), cnt) in enumerate(zip(top_ops, leaves[1:])):
+            if o in ("<<", ">>"):
+                # native only when the count is an in-range literal
+                # AND the left side is a bare int column: Spark
+                # types small literals INT (32-bit) and shifts wrap
+                # at 32 bits there, while SQLite is always int64
+                # (1 << 63 read -2147483648 natively); engine
+                # columns are BIGINT, so a simple column is safe
+                m1 = _SHIFT_LIT_RX.match(cnt)
+                left_col = idx == 0 and _VD_IDENT_RX.fullmatch(leaves[0])
+                if not (m1 and int(m1.group(1)) <= 63 and left_col):
+                    need = True
+        if not need:
+            return l_start, r_end, None
+        acc = _coerce(leaves[0])
+        for (k, o), leaf in zip(top_ops, leaves[1:]):
+            cl = _coerce(leaf)
+            if o in ("&", "|"):
+                acc = f"({acc} {o} {cl})"
                 continue
-            leaf = sql[j:e0].strip()
-            if _leaf_type(leaf) == "int":
-                i -= 1
-                continue
-            sql = sql[:j] + f"CAST(({leaf}) AS INTEGER)" + sql[e0:]
-            done = True
-            break
-        if not done:
-            break
-    # sweep 2: binary chains
-    for _ in range(len(sql)):
-        mask = _div_mask(sql)
-        cands = _bitop_positions(mask)
-        if not cands:
-            return sql
-        edited = False
-        skip_before = 0
-        for pos, op in cands:
-            if pos < skip_before:
-                continue
-            e = pos
-            while e > 0 and mask[e - 1] in " \t\r\n":
-                e -= 1
-            l_start = _cmp_walk_back(sql, mask, e, stop_at_cmp=True)
-            if l_start is None:
-                continue
-            fwd = _cmp_walk_fwd(sql, mask, pos + len(op), coltypes,
-                                stop_at_cmp=True)
-            if fwd is None:
-                continue
-            r_end = fwd[1]
-            # tokenize [l_start, r_end) at depth 0 into leaves/ops
-            sub = mask[l_start:r_end]
-            ops_in = [(p - l_start, o) for p, o in cands
-                      if l_start <= p < r_end]
-            depth = 0
-            top_ops: list[tuple[int, str]] = []
-            oset = dict(ops_in)
-            k = 0
-            while k < len(sub):
-                if sub[k] == "(":
-                    depth += 1
-                elif sub[k] == ")":
-                    depth -= 1
-                elif depth == 0 and k in oset:
-                    top_ops.append((k, oset[k]))
-                    k += len(oset[k])
-                    continue
-                k += 1
-            if not top_ops:
-                skip_before = r_end
-                continue
-            leaves: list[str] = []
-            prev = 0
-            for k, o in top_ops:
-                leaves.append(sql[l_start + prev:l_start + k].strip())
-                prev = k + len(o)
-            leaves.append(sql[l_start + prev:r_end].strip())
-            if not all(leaves):
-                skip_before = r_end
-                continue
-            need = any(_leaf_type(lf) != "int" for lf in leaves)
-            for idx, ((k, o), cnt) in enumerate(zip(top_ops, leaves[1:])):
-                if o in ("<<", ">>"):
-                    # native only when the count is an in-range literal
-                    # AND the left side is a bare int column: Spark
-                    # types small literals INT (32-bit) and shifts wrap
-                    # at 32 bits there, while SQLite is always int64
-                    # (1 << 63 read -2147483648 natively); engine
-                    # columns are BIGINT, so a simple column is safe
-                    m1 = _SHIFT_LIT_RX.match(cnt)
-                    left_col = idx == 0 and _VD_IDENT_RX.fullmatch(
-                        leaves[0])
-                    if not (m1 and int(m1.group(1)) <= 63 and left_col):
-                        need = True
-            if not need:
-                skip_before = r_end
-                continue
-            acc = _coerce(leaves[0])
-            for (k, o), leaf in zip(top_ops, leaves[1:]):
-                cl = _coerce(leaf)
-                if o in ("&", "|"):
-                    acc = f"({acc} {o} {cl})"
-                    continue
-                # 64-bit shift arithmetic regardless of how Spark typed
-                # the left side (int literals are 32-bit)
-                acc = f"TRY_CAST({acc} AS BIGINT)"
-                m1 = _SHIFT_LIT_RX.match(leaf)
-                if m1 and int(m1.group(1)) <= 63:
-                    fn = "shiftleft" if o == "<<" else "shiftright"
-                    acc = f"{fn}({acc}, {m1.group(1)})"
-                else:
-                    acc = _bit_shift_emit(o, acc, cl)
-            sql = sql[:l_start] + acc + sql[r_end:]
-            edited = True
-            break
-        if not edited:
-            return sql
-    return sql
+            # 64-bit shift arithmetic regardless of how Spark typed
+            # the left side (int literals are 32-bit)
+            acc = f"TRY_CAST({acc} AS BIGINT)"
+            m1 = _SHIFT_LIT_RX.match(leaf)
+            if m1 and int(m1.group(1)) <= 63:
+                fn = "shiftleft" if o == "<<" else "shiftright"
+                acc = f"{fn}({acc}, {m1.group(1)})"
+            else:
+                acc = _bit_shift_emit(o, acc, cl)
+        return l_start, r_end, acc
+
+    if "~" in sql:
+        sql = _rewrite_sites(sql, "~", unary)
+    return _rewrite_sites(sql, "&|<>", chain)
 
 
 def _rewrite_row_values(sql: str) -> str:
@@ -3492,109 +3526,87 @@ def _rewrite_row_values(sql: str) -> str:
     element expressions."""
     if "(" not in sql:
         return sql
-    for _ in range(sql.count("(") + 1):
-        mask = _div_mask(sql)
-        low = sql.lower()
-        hit = None
-        pos = 0
-        low = sql.lower()
-        while pos < len(sql) and hit is None:
-            c = mask[pos]
-            op = None
-            if c in "iI" and low[pos:pos + 2] == "is" and (
+
+    def match(sql, mask, low, pos):
+        c = mask[pos]
+        op = None
+        if c in "iI":
+            if not (low[pos:pos + 2] == "is" and (
                 pos == 0 or not (mask[pos - 1].isalnum()
                                  or mask[pos - 1] == "_")
             ) and not (mask[pos + 2:pos + 3].isalnum()
-                       or mask[pos + 2:pos + 3] == "_"):
-                # row values under IS / IS NOT: element-wise IS
-                # conjunction (grid-pinned 162/162 vs sqlite3, r15)
-                op = "IS"
-                jn = _skip_ws(mask, pos + 2)
-                wn = _WORD_RX.match(mask, jn)
-                if wn and low[wn.start():wn.end()] == "not":
-                    op = "IS NOT"
-                    op_end = wn.end()
-                else:
-                    op_end = pos + 2
-            elif c not in "<>=!":
-                pos += 1
-                continue
-            if op is None:
-                two = mask[pos:pos + 2]
-                if two in ("<<", ">>"):
-                    pos += 2
-                    continue
-                op = two if two in _CMP_OPS else (
-                    c if c in "<>=" else None)
-                if op is None or (c == "!" and two != "!="):
-                    pos += 1
-                    continue
-                if pos > 0 and mask[pos - 1] in "<>=!":
-                    pos += 1
-                    continue
-                op_end = pos + len(op)
-            # right side must be a bare paren group
-            j = _skip_ws(mask, op_end)
-            if j >= len(sql) or mask[j] != "(":
-                pos = max(op_end, pos + 1)
-                continue
-            rclose = _div_find_close(mask, j, len(sql))
-            if rclose == -1:
-                pos = max(op_end, pos + 1)
-                continue
-            # left side must END with a paren group not glued to a name
-            e = pos
-            while e > 0 and mask[e - 1] in " \t\r\n":
-                e -= 1
-            if e == 0 or mask[e - 1] != ")":
-                pos = max(op_end, pos + 1)
-                continue
-            depth = 1
-            k = e - 2
-            while k >= 0 and depth:
-                if mask[k] == ")":
-                    depth += 1
-                elif mask[k] == "(":
-                    depth -= 1
-                k -= 1
-            if depth:
-                pos = max(op_end, pos + 1)
-                continue
-            lopen = k + 1
-            k2 = lopen - 1
-            while k2 >= 0 and mask[k2] in " \t\r\n":
-                k2 -= 1
-            if k2 >= 0 and (mask[k2].isalnum() or mask[k2] == "_"):
-                ws = k2
-                while ws > 0 and (mask[ws - 1].isalnum()
-                                  or mask[ws - 1] == "_"):
-                    ws -= 1
-                if low[ws:k2 + 1] not in (
-                    "select", "where", "and", "or", "not", "on", "when",
-                    "then", "else", "having", "by", "case", "union",
-                    "all", "except", "intersect", "distinct",
-                ):
-                    pos = max(op_end, pos + 1)  # function call glued to the group
-                    continue
-            elif k2 >= 0 and mask[k2] in "`\")'":
-                pos = max(op_end, pos + 1)  # identifier/close-paren glued
-                continue
-            ls = _div_split_args(mask, lopen + 1, e - 1)
-            rs = _div_split_args(mask, j + 1, rclose)
-            if (
-                len(ls) < 2 or len(ls) != len(rs)
-                or re.match(r"(?i)\s*select\b", sql[lopen + 1:e - 1])
-                or re.match(r"(?i)\s*select\b", sql[j + 1:rclose])
-                or re.match(r"(?i)\s*values\b", low[lopen + 1:e - 1])
+                       or mask[pos + 2:pos + 3] == "_")):
+                return None
+            # row values under IS / IS NOT: element-wise IS
+            # conjunction (grid-pinned 162/162 vs sqlite3, r15)
+            op = "IS"
+            jn = _skip_ws(mask, pos + 2)
+            wn = _WORD_RX.match(mask, jn)
+            if wn and low[wn.start():wn.end()] == "not":
+                op = "IS NOT"
+                op_end = wn.end()
+            else:
+                op_end = pos + 2
+        else:
+            two = mask[pos:pos + 2]
+            if two in ("<<", ">>"):
+                return None
+            op = two if two in _CMP_OPS else (c if c in "<>=" else None)
+            if op is None or (c == "!" and two != "!="):
+                return None
+            if pos > 0 and mask[pos - 1] in "<>=!":
+                return None
+            op_end = pos + len(op)
+        # right side must be a bare paren group
+        j = _skip_ws(mask, op_end)
+        if j >= len(sql) or mask[j] != "(":
+            return None
+        rclose = _div_find_close(mask, j, len(sql))
+        if rclose == -1:
+            return None
+        # left side must END with a paren group not glued to a name
+        e = pos
+        while e > 0 and mask[e - 1] in " \t\r\n":
+            e -= 1
+        if e == 0 or mask[e - 1] != ")":
+            return None
+        depth = 1
+        k = e - 2
+        while k >= 0 and depth:
+            if mask[k] == ")":
+                depth += 1
+            elif mask[k] == "(":
+                depth -= 1
+            k -= 1
+        if depth:
+            return None
+        lopen = k + 1
+        k2 = lopen - 1
+        while k2 >= 0 and mask[k2] in " \t\r\n":
+            k2 -= 1
+        if k2 >= 0 and (mask[k2].isalnum() or mask[k2] == "_"):
+            ws = k2
+            while ws > 0 and (mask[ws - 1].isalnum() or mask[ws - 1] == "_"):
+                ws -= 1
+            if low[ws:k2 + 1] not in (
+                "select", "where", "and", "or", "not", "on", "when",
+                "then", "else", "having", "by", "case", "union",
+                "all", "except", "intersect", "distinct",
             ):
-                pos = max(op_end, pos + 1)
-                continue
-            lparts = [sql[a0:b0].strip() for a0, b0 in ls]
-            rparts = [sql[a0:b0].strip() for a0, b0 in rs]
-            hit = (lopen, rclose + 1, op, lparts, rparts)
-        if hit is None:
-            return sql
-        a, b, op, lparts, rparts = hit
+                return None  # function call glued to the group
+        elif k2 >= 0 and mask[k2] in "`\")'":
+            return None  # identifier/close-paren glued
+        ls = _div_split_args(mask, lopen + 1, e - 1)
+        rs = _div_split_args(mask, j + 1, rclose)
+        if (
+            len(ls) < 2 or len(ls) != len(rs)
+            or re.match(r"(?i)\s*select\b", sql[lopen + 1:e - 1])
+            or re.match(r"(?i)\s*select\b", sql[j + 1:rclose])
+            or re.match(r"(?i)\s*values\b", low[lopen + 1:e - 1])
+        ):
+            return None
+        lparts = [sql[a0:b0].strip() for a0, b0 in ls]
+        rparts = [sql[a0:b0].strip() for a0, b0 in rs]
         if op in ("IS", "IS NOT"):
             body = " AND ".join(
                 f"({l}) IS ({r})" for l, r in zip(lparts, rparts)
@@ -3623,8 +3635,9 @@ def _rewrite_row_values(sql: str) -> str:
                 )
 
             repl = f"({_rec(0)})"
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+        return lopen, rclose + 1, repl
+
+    return _rewrite_sites(sql, "iI<>=!", match)
 
 
 def _affinity_triggers(sql: str, coltypes) -> bool:
@@ -3676,41 +3689,21 @@ def _rewrite_compare_affinity(
     Spark semantics (documented residue)."""
     if not _affinity_triggers(sql, coltypes):
         return sql
-    # the CASE-distribution emission (r16) adds one comparison site per
-    # arm, each needing its own iteration — budget for them
-    for _ in range(sql.count("=") + sql.count("<") + sql.count(">")
-                   + 1 + 4 * sql.lower().count("case")):
-        mask = _div_mask(sql)
-        pos = 0
-        replaced = False
-        while pos < len(sql):
-            c = mask[pos]
-            if c not in "<>=!":
-                pos += 1
-                continue
-            two = mask[pos:pos + 2]
-            if two in ("<<", ">>"):
-                pos += 2  # bitwise shift, not a comparison (r15)
-                continue
-            op = two if two in _CMP_OPS else (c if c in "<>=" else None)
-            if op is None or (c == "!" and two != "!="):
-                pos += 1
-                continue
-            # not part of a longer operator already consumed
-            if pos > 0 and mask[pos - 1] in "<>=!":
-                pos += 1
-                continue
-            hit = _cmp_match_site(sql, mask, pos, op, coltypes)
-            if hit is None:
-                pos += max(1, len(op))
-                continue
-            a, b, repl = hit
-            sql = sql[:a] + repl + sql[b:]
-            replaced = True
-            break
-        if not replaced:
-            break
-    return sql
+
+    def match(sql, mask, low, pos):
+        c = mask[pos]
+        two = mask[pos:pos + 2]
+        if two in ("<<", ">>"):
+            return None  # bitwise shift, not a comparison (r15)
+        op = two if two in _CMP_OPS else (c if c in "<>=" else None)
+        if op is None or (c == "!" and two != "!="):
+            return None
+        # not part of a longer operator already consumed
+        if pos > 0 and mask[pos - 1] in "<>=!":
+            return None
+        return _cmp_match_site(sql, mask, pos, op, coltypes)
+
+    return _rewrite_sites(sql, "<>=!", match)
 
 
 _BETWEEN_RX = re.compile(r"(?i)\b(not\s+)?between\b")
@@ -4185,10 +4178,7 @@ def _rewrite_range_affinity(sql: str, coltypes) -> str:
             for j, (a2, b2, _r2) in enumerate(edits)
         )
     ]
-    # apply right-to-left
-    for a, b, repl in sorted(edits, key=lambda t: t[0], reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _rev_case_start(sql, mask, e):
@@ -4859,9 +4849,7 @@ def _rewrite_is_operator(sql: str, coltypes) -> str:
             for j0, (a2, b2, _r2) in enumerate(edits)
         )
     ]
-    for a, b, repl in sorted(edits, key=lambda t: t[0], reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _is_body(x: str, r: str, coltypes) -> str:
@@ -5606,11 +5594,7 @@ def _rewrite_bare_minmax(sql: str) -> str:
                 a, b,
                 f" {fn}({ident}, {agg[1]}) AS {out_name}",
             ))
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda t: t[0], reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 _LIMIT_WORD_RX = re.compile(r"(?i)\blimit\b")
@@ -5676,9 +5660,7 @@ def _strip_rank_frames(sql: str) -> str:
                     j = w.end()
                     continue
             j += 1
-    for a, b, repl in sorted(edits, key=lambda t: t[0], reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _rewrite_limit_forms(sql: str) -> str:
@@ -5767,11 +5749,7 @@ def _rewrite_limit_forms(sql: str) -> str:
             # (offset still applies): LIMIT 1, -1 ≡ everything after 1
             b_txt = str(2**30)
         edits.append((m.start(), k2, f"LIMIT {b_txt} OFFSET {a_txt}"))
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda t: t[0], reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 _CLAUSE_WORD_RX = re.compile(r"(?i)\b(where|having|on)\b")
@@ -5849,11 +5827,7 @@ def _rewrite_clause_truthiness(sql: str) -> str:
                     continue
             i += 1
         _cond_truthy_edits(sql, mask, low, start, end, edits)
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda e: (e[0], e[1]), reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _skip_ws(mask: str, i: int) -> int:
@@ -6346,79 +6320,71 @@ _FILTER_KW_RX = re.compile(r"(?i)\bFILTER\s*\(")
 
 
 def _rewrite_filter_over(sql: str) -> str:
-    while True:
-        code = _div_mask(sql)
-        edit = None
-        for m in _FILTER_KW_RX.finditer(code):
-            fopen = code.index("(", m.start())
-            fclose = _div_find_close(code, fopen, len(code))
-            if fclose == -1:
-                continue
-            k = fclose + 1
-            while k < len(code) and code[k] in " \t\r\n":
-                k += 1
-            if code[k:k + 4].lower() != "over" or (
-                k + 4 < len(code) and (code[k + 4].isalnum() or code[k + 4] == "_")
-            ):
-                continue  # plain aggregate FILTER: Spark-native
-            inner = sql[fopen + 1:fclose].strip()
-            if not re.match(r"(?i)^WHERE\b", inner):
-                continue
-            pred = inner[5:].strip()
-            # backward: the aggregate call this FILTER attaches to
-            j = m.start() - 1
-            while j >= 0 and code[j] in " \t\r\n":
-                j -= 1
-            if j < 0 or code[j] != ")":
-                continue
-            depth = 0
-            copen = -1
-            for i in range(j, -1, -1):
-                if code[i] == ")":
-                    depth += 1
-                elif code[i] == "(":
-                    depth -= 1
-                    if depth == 0:
-                        copen = i
-                        break
-            if copen <= 0:
-                continue
-            e = copen - 1
-            while e >= 0 and code[e] in " \t\r\n":
-                e -= 1
-            s = e
-            while s >= 0 and (code[s].isalnum() or code[s] == "_"):
-                s -= 1
-            fn = sql[s + 1:e + 1]
-            if not fn or not (fn[0].isalpha() or fn[0] == "_"):
-                continue
-            arg = sql[copen + 1:j].strip()
-            dm = re.match(r"(?i)^DISTINCT\s+(.*)$", arg, re.S)
-            prefix = "DISTINCT " if dm else ""
-            core = dm.group(1) if dm else arg
-            if core == "*":
-                fn, core = "count", "1"
-            else:
-                depth2, multi = 0, False
-                for ch in code[copen + 1:j]:
-                    if ch == "(":
-                        depth2 += 1
-                    elif ch == ")":
-                        depth2 -= 1
-                    elif ch == "," and depth2 == 0:
-                        multi = True
-                        break
-                if multi:
-                    continue  # multi-arg aggregate: no single-slot reduction
-            new_call = (
-                f"{fn}({prefix}CASE WHEN ({pred}) THEN {core} END)"
-            )
-            edit = (s + 1, fclose + 1, new_call)
-            break
-        if edit is None:
-            return sql
-        a, b, repl = edit
-        sql = sql[:a] + repl + sql[b:]
+    def match(sql, code, low, pos):
+        m = _FILTER_KW_RX.match(code, pos)
+        if m is None:
+            return None
+        fopen = code.index("(", m.start())
+        fclose = _div_find_close(code, fopen, len(code))
+        if fclose == -1:
+            return None
+        k = fclose + 1
+        while k < len(code) and code[k] in " \t\r\n":
+            k += 1
+        if code[k:k + 4].lower() != "over" or (
+            k + 4 < len(code) and (code[k + 4].isalnum() or code[k + 4] == "_")
+        ):
+            return None  # plain aggregate FILTER: Spark-native
+        inner = sql[fopen + 1:fclose].strip()
+        if not re.match(r"(?i)^WHERE\b", inner):
+            return None
+        pred = inner[5:].strip()
+        # backward: the aggregate call this FILTER attaches to
+        j = m.start() - 1
+        while j >= 0 and code[j] in " \t\r\n":
+            j -= 1
+        if j < 0 or code[j] != ")":
+            return None
+        depth = 0
+        copen = -1
+        for i in range(j, -1, -1):
+            if code[i] == ")":
+                depth += 1
+            elif code[i] == "(":
+                depth -= 1
+                if depth == 0:
+                    copen = i
+                    break
+        if copen <= 0:
+            return None
+        e = copen - 1
+        while e >= 0 and code[e] in " \t\r\n":
+            e -= 1
+        s = e
+        while s >= 0 and (code[s].isalnum() or code[s] == "_"):
+            s -= 1
+        fn = sql[s + 1:e + 1]
+        if not fn or not (fn[0].isalpha() or fn[0] == "_"):
+            return None
+        arg = sql[copen + 1:j].strip()
+        dm = re.match(r"(?i)^DISTINCT\s+(.*)$", arg, re.S)
+        prefix = "DISTINCT " if dm else ""
+        core = dm.group(1) if dm else arg
+        if core == "*":
+            fn, core = "count", "1"
+        else:
+            depth2 = 0
+            for ch in code[copen + 1:j]:
+                if ch == "(":
+                    depth2 += 1
+                elif ch == ")":
+                    depth2 -= 1
+                elif ch == "," and depth2 == 0:
+                    return None  # multi-arg aggregate: no single-slot reduction
+        new_call = f"{fn}({prefix}CASE WHEN ({pred}) THEN {core} END)"
+        return s + 1, fclose + 1, new_call
+
+    return _rewrite_sites(sql, "Ff", match)
 
 
 # ------------------------------------------------- || float rendering
@@ -6465,11 +6431,7 @@ def _rewrite_concat_real(sql: str, coltypes: dict[str, str] | None) -> str:
     mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     _concat_walk(sql, mask, 0, len(sql), coltypes, edits)
-    if not edits:
-        return sql
-    for a, b, repl in sorted(edits, key=lambda e: (e[0], e[1]), reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _concat_strlit(sql, mask, a, b) -> bool:
@@ -6836,11 +6798,10 @@ def _rewrite_json_arrows(sql: str) -> str:
     LHS binds one primary (a `||`-chain LHS would need parens)."""
     if "->" not in sql:
         return sql
-    while True:
-        mask = _div_mask(sql)
-        pos = mask.find("->")
-        if pos == -1:
-            return sql
+
+    def match(sql, mask, low, pos):
+        if mask[pos + 1:pos + 2] != ">":
+            return None
         oplen = 3 if mask[pos + 2:pos + 3] == ">" else 2
         deep = oplen == 3  # ->> : SQL value; -> : JSON text
         e = pos
@@ -6892,7 +6853,9 @@ def _rewrite_json_arrows(sql: str) -> str:
             f"filesql_json_arrow(CAST(({sql[start:e]}) AS STRING), "
             f"'{p}', {'true' if deep else 'false'})"
         )
-        sql = sql[:start] + repl + sql[rhs_end:]
+        return start, rhs_end, repl
+
+    return _rewrite_sites(sql, "-", match)
 
 
 def _rewrite_string_aliases(sql: str) -> str:
@@ -6915,9 +6878,7 @@ def _rewrite_string_aliases(sql: str) -> str:
         )
         if quote == "'"
     ]
-    for a, b, repl in sorted(edits, reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 def _alias_shadow_types(
@@ -7954,37 +7915,18 @@ def _rewrite_value_dependent_div(
     # triggers, so `hex(n) + 1` fires on an all-numeric table)
     text_possible = maybe_text
     scan_chars = "/%" + ("+-*" if text_possible else "")
-    # each pass replaces one site, then rescans; emitted CASE arms never
-    # re-match (their operands are parenthesized, not direct calls), so
-    # the count of operator sites bounds the loop — cap generously above
-    for _ in range(sum(sql.count(c) for c in scan_chars) + 1):
-        mask = _div_mask(sql)
-        low = sql.lower()
-        pos = 0
-        replaced = False
-        while True:
-            nxt = [i for i in (mask.find(c, pos) for c in scan_chars)
-                   if i != -1]
-            if not nxt:
-                break
-            pos = min(nxt)
-            if mask[pos + 1 : pos + 2] == "/" and mask[pos] == "/":
-                pos += 2  # not a division token
-                continue
-            try:
-                hit = _vd_match_site(sql, mask, low, pos, column_types)
-            except FilesqlError:
-                hit = None
-            if hit is None:
-                pos += 1
-                continue
-            a, b, repl = hit
-            sql = sql[:a] + repl + sql[b:]
-            replaced = True
-            break
-        if not replaced:
-            return sql
-    return sql
+    # emitted CASE arms never re-match: their operands are
+    # parenthesized, not direct calls
+
+    def match(sql, mask, low, pos):
+        if mask[pos] == "/" and "/" in (mask[pos + 1:pos + 2], mask[pos - 1:pos]):
+            return None  # not a division token
+        try:
+            return _vd_match_site(sql, mask, low, pos, column_types)
+        except FilesqlError:
+            return None
+
+    return _rewrite_sites(sql, scan_chars, match)
 
 
 def _rewrite_division(sql: str, column_types: dict[str, str] | None = None) -> str:
@@ -7998,9 +7940,7 @@ def _rewrite_division(sql: str, column_types: dict[str, str] | None = None) -> s
     mask = _div_mask(sql)
     edits: list[tuple[int, int, str]] = []
     _div_walk(sql, mask, 0, len(sql), column_types, edits)
-    for a, b, repl in sorted(edits, key=lambda e: (e[0], e[1]), reverse=True):
-        sql = sql[:a] + repl + sql[b:]
-    return sql
+    return _apply_edits(sql, edits)
 
 
 # --------------------------------------------------- json_each / json_tree
@@ -8024,9 +7964,12 @@ def _rewrite_json_each(sql: str) -> str:
 
 
 def _rewrite_json_tvf(sql: str, fn: str) -> str:
+    if fn not in sql.lower():
+        return sql
+    mask = _div_mask(sql)
     pos = 0
     while True:
-        hit = _find_call(sql, fn, pos)
+        hit = _find_call(sql, mask, fn, pos)
         if hit is None:
             return sql
         start, end, args = hit
@@ -8095,11 +8038,11 @@ def _rewrite_json_tvf(sql: str, fn: str) -> str:
         if before.endswith(","):
             comma = len(before) - 1
             repl = f" LATERAL VIEW {inner} {alias}"
-            sql = sql[:comma] + repl + sql[aend:]
+            sql, mask = _splice(sql, mask, comma, aend, repl)
             pos = comma + len(repl)
         elif re.search(r"(?i)\b(from|join)\s*$", sql[:start]):
             repl = f"(SELECT {inner}) AS {alias}"
-            sql = sql[:start] + repl + sql[aend:]
+            sql, mask = _splice(sql, mask, start, aend, repl)
             pos = start + len(repl)
         else:
             raise FilesqlError(

@@ -260,14 +260,18 @@ def _strip_returning(sql: str) -> tuple[str, list[str] | None]:
 def _apply(engine, st: _Target, version, fires, rows, returning, assigns=None):
     """Store ``version`` as the table's next version (a view stores
     nothing), fire each ``(event, affected rows, count)`` in ``fires``
-    unless its count is 0 (None = not counted), and return (affected
-    rows, RETURNING over ``rows``). ``assigns`` are an UPDATE's SET."""
+    unless its count is 0, and return (affected rows, RETURNING over
+    ``rows``). ``assigns`` are an UPDATE's SET. A count of None (a view
+    or a correlated trigger-body statement) is taken here, and only when
+    a trigger is registered for the event."""
     assigns = assigns or {}
     if not st.view:
         engine._reregister(st.name, version)
-    if st.view or engine._catalog.triggers:
+    if engine._catalog.triggers:
         for event, affected, n in fires:
-            if n != 0:
+            if n is None and triggers.registered(engine, st.name, event):
+                n = affected.count()
+            if n:
                 images = assigns if event == "UPDATE" else {}
                 triggers.fire(
                     engine, st.name, event,
@@ -865,8 +869,9 @@ def _alter(engine, sql: str) -> int:
         raise FilesqlError(f"cannot parse ALTER: {sql.strip()[:120]}")
     table = engine._catalog.resolve(_ident(m)) or _ident(m)
     rest = m.group("rest")
-    df = engine.table(table)  # raises "no such table"
     low = rest.lstrip().lower()
+    view = table in engine._catalog.views
+    df = None if view else engine.table(table)  # raises "no such table"
 
     # Table rename only wins on a COMPLETE "RENAME TO <ident>" parse:
     # "RENAME total TO t2" must not match (TO is a prefix of the column
@@ -884,8 +889,18 @@ def _alter(engine, sql: str) -> int:
                     "there is already another table or index with this "
                     f"name: {new}"
                 )
+            if view:
+                raise FilesqlError(f"view {table} may not be altered")
             engine._catalog.rename_table(table, new)
             return 0
+    if view:  # SQLite's error for each column form
+        for verb, msg in (
+            ("add", "Cannot add a column to a view"),
+            ("rename", f'cannot rename columns of view "{table}"'),
+            ("drop", f'cannot drop column from view "{table}"'),
+        ):
+            if low.startswith(verb):
+                raise FilesqlError(msg)
 
     if low.startswith("rename"):
         body = rest.lstrip()[len("rename"):]

@@ -51,7 +51,10 @@ KMEANS_ITERS = 2
 
 
 def _centroid_literal_sql(centroids: list[list[int]]) -> str:
-    """`array(array(...), ...)` literal of the current centroids."""
+    """`array(array(...), ...)` literal of the current centroids (typed
+    when empty, so the distance map over it still analyzes)."""
+    if not centroids:
+        return "CAST(array() AS ARRAY<ARRAY<BIGINT>>)"
     inner = ", ".join(
         "array(" + ", ".join(f"{v}L" for v in c) + ")" for c in centroids
     )
@@ -109,6 +112,8 @@ def kmeans_fit(
     q = swap_persist("kmeans_fit.q", with_quantized(df, vec_col))
     seed_rows = q.orderBy(key_col).limit(k).select("qv").collect()
     centroids = [list(r.qv) for r in seed_rows]
+    if not centroids:  # no rows: no centroids, an empty assignment
+        return [], assign_clusters(q, [])
     dims = len(centroids[0])
     aggs = [F.count(F.lit(1)).alias("_n")] + [
         F.sum(F.element_at("qv", i + 1)).alias(f"_s{i}") for i in range(dims)

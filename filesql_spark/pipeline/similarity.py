@@ -593,6 +593,8 @@ def pq_fit(
         [list(r.qv[mi * sub_d : (mi + 1) * sub_d]) for r in seed]
         for mi in range(m)
     ]
+    if not seed:  # no rows: m empty codebooks
+        return books
     sum_exprs = [F.expr("count(1) AS _n")] + [
         F.expr(f"sum(sv[{i}]) AS _s{i}") for i in range(sub_d)
     ]

@@ -200,9 +200,12 @@ _RAISE_SEP = "\x01"
 
 
 def _rewrite_raise_calls(stmt: str) -> str:
+    if "raise" not in stmt.lower():
+        return stmt
+    mask = dialect._div_mask(stmt)
     pos = 0
     while True:
-        hit = dialect._find_call(stmt, "raise", pos)
+        hit = dialect._find_call(stmt, mask, "raise", pos)
         if hit is None:
             return stmt
         a, b, args = hit
@@ -216,7 +219,7 @@ def _rewrite_raise_calls(stmt: str) -> str:
         if kind not in _RAISE_KINDS or len(args) != 2:
             raise FilesqlError(f"cannot parse RAISE(): {stmt[a:b][:80]}")
         marker = f"('{kind}{_RAISE_SEP}' || ({args[1]}))"
-        stmt = stmt[:a] + marker + stmt[b:]
+        stmt, mask = dialect._splice(stmt, mask, a, b, marker)
         pos = a + len(marker)
 
 
@@ -272,6 +275,15 @@ def _body_select_raise(engine, stmt: str, tx: DataFrame) -> None:
 # ------------------------------------------------------------------ firing
 
 
+def registered(engine, table: str, event: str) -> list:
+    """The triggers registered for (table, event)."""
+    return [
+        t
+        for t in engine._catalog.triggers.values()
+        if t.table.lower() == table.lower() and t.event == event
+    ]
+
+
 def fire(
     engine,
     table: str,
@@ -281,11 +293,7 @@ def fire(
 ) -> None:
     """Fire every trigger registered for (table, event) with transition
     relation ``tx`` (columns: ``new`` and/or ``old`` structs)."""
-    matching = [
-        t
-        for t in engine._catalog.triggers.values()
-        if t.table.lower() == table.lower() and t.event == event
-    ]
+    matching = registered(engine, table, event)
     if not matching:
         return
     from filesql_spark.errors import TriggerRaise

@@ -1206,3 +1206,48 @@ def test_timediff(spark, tmp_path):
             assert got == hi, (a, b, d, got)
     finally:
         eng.close()
+
+
+_LINEAR_TYPES = {"n": "int", "m": "int", "id": "int", "s": "text", "doc": "text"}
+
+
+@pytest.mark.parametrize(
+    "unit",
+    [
+        "SELECT id FROM t WHERE s = 7",
+        "SELECT 1 + n || s FROM t",
+        "SELECT id FROM t WHERE (n, m) = (1, 2)",
+        "SELECT sum(n) FILTER (WHERE m > 1) OVER (ORDER BY id) FROM t",
+        "SELECT doc ->> '$.a' FROM t",
+        "SELECT s + 1 FROM t",
+        "SELECT ifnull(n, 0), substr(s, 1, 2), printf('%d', n) FROM t",
+        "SELECT n + m * 2, ifnull(n, 2.5) / 2, (n - m) / (m + 1) FROM t WHERE n / 3 > m",
+    ],
+    ids=[
+        "compare_affinity", "concat_grouping", "row_values", "filter_over",
+        "json_arrow", "text_value_dependent", "call_rewrites", "numeric_division",
+    ],
+)
+def test_rewrite_masking_is_linear(monkeypatch, unit):
+    """A splice re-masks only its replacement and the scan resumes in
+    the clause item that holds it, so the characters the mask builder
+    scans grow linearly with the statement: 4x the copies under UNION
+    ALL scan at most 4.5x the characters (a rescan from the start after
+    every splice scans 12-15x)."""
+    from filesql_spark import dialect
+
+    scanned = [0]
+    real_mask = dialect._div_mask
+
+    def counting_mask(sql):
+        scanned[0] += len(sql)
+        return real_mask(sql)
+
+    monkeypatch.setattr(dialect, "_div_mask", counting_mask)
+
+    def chars(copies):
+        scanned[0] = 0
+        rewrite(" UNION ALL ".join([unit] * copies), dict(_LINEAR_TYPES))
+        return scanned[0]
+
+    assert chars(64) <= 4.5 * chars(16)

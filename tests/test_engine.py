@@ -1455,6 +1455,11 @@ _MASTER = "SELECT type, name, tbl_name FROM sqlite_master WHERE name <> 'sample'
             "SELECT id FROM log",
         ),
         (["CREATE TABLE k (ID INTEGER PRIMARY KEY, v TEXT)"], "PRAGMA table_info(K)"),
+        # ALTER TABLE on a view raises SQLite's error for each form
+        (["ALTER TABLE v ADD COLUMN z INTEGER"], _MASTER),
+        (["ALTER TABLE v RENAME TO v2"], _MASTER),
+        (["ALTER TABLE v RENAME COLUMN id TO k"], _MASTER),
+        (["ALTER TABLE v DROP COLUMN id"], _MASTER),
     ],
     ids=[
         "view_over_table", "view_twice", "table_over_view", "view_if_not_exists",
@@ -1463,6 +1468,8 @@ _MASTER = "SELECT type, name, tbl_name FROM sqlite_master WHERE name <> 'sample'
         "view_heals_on_recreate", "when_sees_statement_write", "when_sees_earlier_trigger_write",
         "insert_table_case", "update_table_case", "delete_table_case", "delete_view_case",
         "drop_table_case", "alter_table_case", "trigger_target_case", "pragma_table_case",
+        "alter_view_add", "alter_view_rename", "alter_view_rename_column",
+        "alter_view_drop_column",
     ],
 )
 def test_one_namespace_matches_sqlite(eng, stmts, sql):
@@ -1534,6 +1541,49 @@ _U_ROWS = "SELECT id, v FROM u ORDER BY id"
             ],
             'SELECT id, v FROM "my t"',
         ),
+        # a view or correlated trigger-body statement that matches no
+        # row fires nothing either
+        (
+            [
+                "INSERT INTO log VALUES (0)",
+                "CREATE VIEW w AS SELECT id, v FROM t",
+                "CREATE TRIGGER wu INSTEAD OF UPDATE ON w "
+                "BEGIN UPDATE log SET id = id + 1; END",
+                "UPDATE w SET v = 'x' WHERE id = 9",
+            ],
+            "SELECT id FROM log",
+        ),
+        (
+            [
+                "INSERT INTO log VALUES (0)",
+                "CREATE VIEW w AS SELECT id, v FROM t",
+                "CREATE TRIGGER wd INSTEAD OF DELETE ON w "
+                "BEGIN UPDATE log SET id = id + 1; END",
+                "DELETE FROM w WHERE id = 9",
+            ],
+            "SELECT id FROM log",
+        ),
+        (
+            [
+                "INSERT INTO log VALUES (0)",
+                "CREATE VIEW w AS SELECT id, v FROM t",
+                "CREATE TRIGGER wi INSTEAD OF INSERT ON w "
+                "BEGIN UPDATE log SET id = id + 1; END",
+                "INSERT INTO w SELECT id, v FROM t WHERE 0",
+            ],
+            "SELECT id FROM log",
+        ),
+        (
+            [
+                "CREATE TABLE c (n INTEGER)",
+                "INSERT INTO c VALUES (0)",
+                "CREATE TRIGGER tu AFTER UPDATE ON t BEGIN UPDATE c SET n = n + 1; END",
+                "CREATE TRIGGER li AFTER INSERT ON log "
+                "BEGIN UPDATE t SET v = 'z' WHERE id = NEW.id + 100; END",
+                "INSERT INTO log VALUES (1)",
+            ],
+            "SELECT n FROM c",
+        ),
         # a DO UPDATE that inserts moves the implicit-rowid mark on
         (
             [
@@ -1550,6 +1600,8 @@ _U_ROWS = "SELECT id, v FROM u ORDER BY id"
         "upsert_set_case", "view_update_set_case", "update_where_qualified",
         "update_set_qualified", "delete_where_qualified", "body_update_on_view",
         "zero_row_update_fires_nothing", "body_insert_quoted_table",
+        "zero_row_view_update_fires_nothing", "zero_row_view_delete_fires_nothing",
+        "zero_row_view_insert_fires_nothing", "zero_row_body_update_fires_nothing",
         "upsert_insert_moves_rowid",
     ],
 )

@@ -494,19 +494,20 @@ def test_salted_ops_match_unsalted(spark):
     )
 
 
-@pytest.mark.parametrize("n_rows", ["one", "k_minus_1"])
+@pytest.mark.parametrize("n_rows", ["zero", "one", "k_minus_1"])
 @pytest.mark.parametrize("op", ["kmeans_fit", "pq_fit"])
 def test_trained_operators_fit_fewer_rows_than_k(spark, op, n_rows):
     """The deterministic seed takes the k lowest-id vectors; a corpus
     under k rows seeds fewer than k centroids/codewords, and training
-    must size its update loop by the seed, not by k."""
+    must size its update loop by the seed, not by k. No rows give no
+    centroids and an empty assignment with the usual columns."""
     import random
 
     from filesql_spark.pipeline.clustering import KMEANS_K, kmeans_fit
     from filesql_spark.pipeline.similarity import PQ_K, PQ_M, pq_encode, pq_fit
 
     k = KMEANS_K if op == "kmeans_fit" else PQ_K
-    n = 1 if n_rows == "one" else k - 1
+    n = {"zero": 0, "one": 1, "k_minus_1": k - 1}[n_rows]
     rng = random.Random(7)
     df = spark.createDataFrame(
         [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(n)],
@@ -516,6 +517,7 @@ def test_trained_operators_fit_fewer_rows_than_k(spark, op, n_rows):
         centroids, assigned = kmeans_fit(df)
         assert len(centroids) == n
         assert sorted(r.cluster for r in assigned.collect()) == list(range(n))
+        assert {"vec_id", "cluster", "dist"} <= set(assigned.columns)
     else:
         books = pq_fit(df)
         assert len(books) == PQ_M and all(len(b) == n for b in books)
