@@ -39,6 +39,18 @@ The call rewrites (``_rewrite_calls``, ``_rewrite_json_tvf``) scan forward
 past each replacement instead, splicing statement and mask the same way
 (``_splice``). Replacement text must close every quote it opens: a splice
 re-masks only the replacement, never the whole statement.
+
+The call rule, in ``_rewrite_calls``, the one driver of the per-name call
+sweeps (``_CALL_REWRITES``, in table order):
+
+- innermost first: the ``name(…)`` calls inside a hit's arguments are
+  rewritten before its builder sees the arguments, so no builder
+  re-sweeps its own arguments;
+- emitted text is never re-swept: the scan resumes after each
+  replacement, so a builder's own output (``concat(``, ``substring(``,
+  ``CAST(… AS DOUBLE)``) is not rewritten again by the same sweep;
+- a declined call keeps its text: a builder returns None to leave the
+  call as written, and only its rewritten arguments are spliced in.
 """
 
 from __future__ import annotations
@@ -335,10 +347,11 @@ def _requote_identifiers(sql: str) -> str:
 
 def _find_call(
     sql: str, mask: str, name: str, start: int = 0
-) -> tuple[int, int, list[str]] | None:
+) -> tuple[int, int, list[tuple[int, int]]] | None:
     """Locate ``name( … )`` at a code position; return (start, end_exclusive,
-    args) with balanced-paren, token-aware arg splitting. ``mask`` is
-    ``_div_mask(sql)``, which a caller that splices hits keeps in step."""
+    arg spans) with balanced-paren, token-aware arg splitting (a span
+    keeps its surrounding whitespace). ``mask`` is ``_div_mask(sql)``,
+    which a caller that splices hits keeps in step."""
     name_l = name.lower()
     if sql.lower().find(name_l, start) == -1:
         return None
@@ -363,36 +376,33 @@ def _find_call(
         close = _div_find_close(mask, j, len(mask))
         if close == -1:
             return None  # unbalanced; leave untouched
-        args = _div_split_args(mask, j + 1, close)
-        return i, close + 1, [sql[a:b].strip() for a, b in args]
+        return i, close + 1, _div_split_args(mask, j + 1, close)
     return None
 
 
 def _rewrite_calls(sql: str, name: str, builder) -> str:
-    """Repeatedly rewrite every ``name(...)`` call via builder(args)->str.
-    A builder may return None to leave that call untouched (e.g. CAST
-    forms outside its scope). A declined call's ARGUMENTS are still
-    scanned (advance past the name, not the close paren): earlier
-    passes emit SQLite-spelled interior forms — e.g. truthiness wraps a
-    WHEN condition in CAST(… AS REAL) expecting this pass to expand it
-    to the prefix parse — and skipping the whole interior of a declined
-    CAST(… AS DATE) left that raw REAL cast for Spark's ANSI mode to
-    crash on junk text (r14 advice, high)."""
+    """Rewrite every ``name(...)`` call through ``builder(args)``, the
+    innermost first (see the module docstring for the call rule)."""
     if name.lower() not in sql.lower():
         return sql
-    mask = _div_mask(sql)
-    pos = 0
-    while True:
-        hit = _find_call(sql, mask, name, pos)
-        if hit is None:
-            return sql
-        start, end, args = hit
-        replacement = builder(args)
-        if replacement is None:
-            pos = start + len(name)
-            continue
-        sql, mask = _splice(sql, mask, start, end, replacement)
-        pos = start + len(replacement)
+
+    def sweep(sql: str, mask: str) -> str:
+        pos = 0
+        while (hit := _find_call(sql, mask, name, pos)) is not None:
+            start, end, spans = hit
+            args = [sweep(sql[a:b], mask[a:b]) for a, b in spans]
+            repl = builder([arg.strip() for arg in args])
+            if repl is None:  # declined: keep the call, with its new args
+                repl = _apply_edits(sql[start:end], [
+                    (a - start, b - start, arg)
+                    for (a, b), arg in zip(spans, args) if arg != sql[a:b]
+                ])
+            if repl != sql[start:end]:
+                sql, mask = _splice(sql, mask, start, end, repl)
+            pos = start + len(repl)
+        return sql
+
+    return sweep(sql, _div_mask(sql))
 
 
 def translate_strftime_format(fmt: str) -> str:
@@ -465,7 +475,6 @@ def _julianday(args: list[str]) -> str:
 
 
 _SUM_CALL_RX = re.compile(r"(?is)^sum\s*\(")
-_SUM_COERCED_RX = re.compile(r"(?is)^cast\s*\(\s*\((.*)\)\s+as\s+real\s*\)$")
 
 
 def _sum_text_render(expr: str) -> str | None:
@@ -478,7 +487,8 @@ def _sum_text_render(expr: str) -> str | None:
     rendering sites: an aggregate condition over the same group picks
     INTEGER digits vs %!.15g. Returns the dispatched rendering of
     ``expr`` — a sum() call over a provably-TEXT argument, raw or
-    already coerced by _agg_numeric_coerce_call — or None."""
+    already coerced by _agg_numeric_coerce_call (whose CAST((x) AS
+    REAL) the cast sweep has expanded) — or None."""
     s = expr.strip()
     m = _SUM_CALL_RX.match(s)
     if not m or not s.endswith(")"):
@@ -489,16 +499,15 @@ def _sum_text_render(expr: str) -> str | None:
     args = _div_split_args(sm, m.end(), len(s) - 1)
     if len(args) != 1:
         return None
-    arg = s[args[0][0]:args[0][1]].strip()
-    cm = _SUM_COERCED_RX.match(arg)
-    x = cm.group(1).strip() if cm else arg
+    x = s[args[0][0]:args[0][1]].strip()
+    coerced = _cast_dispatch_operand(x)  # the sum() sweep's CAST((x) AS REAL)
+    if coerced and coerced[1] == "DOUBLE" and _parenthesized(coerced[0]):
+        x = coerced[0][1:-1].strip()
     if _static_affinity(x) != "text":
         return None
     # FINAL-form Spark only (TRY_CAST/try_cast, no SQLite-spelled CAST
     # except the skip-safe outer `AS STRING`): the emission may land
-    # either before or after the cast pass, and a nested SQLite CAST
-    # inside an outer call whose builder returns None is never visited
-    # (_rewrite_calls advances past the whole call)
+    # either before or after the cast pass
     int_rx = r"'^[ \\t\\r\\n]*[+-]?[0-9]+[ \\t\\r\\n]*$'"
     real_rx = (
         r"'^[ \\t\\r\\n]*([+-]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)"
@@ -570,17 +579,6 @@ def _scalar_minmax(fn: str):
     aggregates with 1 arg (→ leave untouched)."""
 
     def build(args: list[str]) -> str:
-        # the sweep resumes after each replacement, so nested scalar
-        # min/max inside the argument text must be rewritten here
-        # (same skip as _ascii_fold; found by tests/test_fuzz_dialect.py)
-        args = [
-            _rewrite_calls(
-                _rewrite_calls(a, "min", _CALL_REWRITES["min"]),
-                "max",
-                _CALL_REWRITES["max"],
-            )
-            for a in args
-        ]
         if len(args) >= 2:
             # SQLite scalar min/max return NULL if ANY argument is NULL;
             # Spark's least/greatest skip NULLs. Guard explicitly (args
@@ -924,13 +922,25 @@ def _json_extract(args: list[str]) -> str:
 
 
 def _json_array_length(args: list[str]) -> str:
-    """json_array_length(X[, P]) — Spark's builtin covers the 1-arg form;
-    the path form peels the subarray out with get_json_object first."""
-    if len(args) == 1:
-        return f"json_array_length({args[0]})"
-    if len(args) == 2:
-        return f"json_array_length(get_json_object({args[0]}, {args[1]}))"
-    raise FilesqlError(f"json_array_length expects 1-2 args, got {len(args)}")
+    """json_array_length(X[, P]): the element count of the array at X
+    (or at path P), 0 for any other JSON value, NULL for NULL input or a
+    missing path. Spark's builtin returns NULL for anything but an
+    array. Divergences (get_json_object unquotes strings and reads a
+    JSON null as missing): malformed X gives NULL where SQLite raises,
+    and at a path a string value that parses as an array counts its
+    elements, and a null value gives NULL, where SQLite gives 0."""
+    if len(args) not in (1, 2):
+        raise FilesqlError(
+            f"json_array_length expects 1-2 args, got {len(args)}"
+        )
+    x = f"({args[0]})"
+    path = args[1] if len(args) == 2 else "'$'"
+    found = f"get_json_object({x}, {path})"
+    v = x if len(args) == 1 else found
+    return (
+        f"(CASE WHEN {found} IS NOT NULL "
+        f"THEN coalesce(json_array_length({v}), 0) END)"
+    )
 
 
 def _json_valid(args: list[str]) -> str:
@@ -1036,11 +1046,7 @@ def _json_object(args: list[str]) -> str:
                 f"raise_error('json_object() labels must be TEXT') "
                 f"ELSE {_json_quote([k])} END)"
             )
-        fl = _json_value_flag(v)  # flag BEFORE recursion: raw spelling
-        # same-name nesting: the per-name sweep skips this builder's own
-        # emission, so an embedded json_object must be rewritten here
-        # (other json1 calls are expanded by their own later sweeps)
-        v = _rewrite_calls(v, "json_object", _json_object)
+        fl = _json_value_flag(v)
         val = (
             f"({v})" if fl == "j"
             else _json_array_loose(v) if fl == "l"
@@ -1102,15 +1108,6 @@ def _json_value_flag(expr: str) -> str:
     return "s"
 
 
-def _rewrite_json_family(expr: str) -> str:
-    """Recursively rewrite nested json-mutation calls inside an argument
-    (the per-name sweep skips text its own builder emitted, so nesting
-    like json_set(json_set(…), …) needs this explicit recursion)."""
-    for name, fn in _JSON_MUTATION_REWRITES.items():
-        expr = _rewrite_calls(expr, name, fn)
-    return expr
-
-
 _EMPTY_STR_ARRAY = "CAST(array() AS ARRAY<STRING>)"
 
 
@@ -1131,15 +1128,13 @@ def _json_set_family(op: str):
                 f"json_{op} expects an odd argument count ≥ 3 "
                 f"(doc, then path/value pairs), got {len(args)}"
             )
-        doc = _rewrite_json_family(args[0])
         paths, vals, flags = [], [], []
         for p, v in zip(args[1::2], args[2::2]):
-            paths.append(_rewrite_json_family(p))
+            paths.append(p)
             fl = _json_value_flag(v)
-            v = _rewrite_json_family(v)
             vals.append(_json_quote([v]) if fl == "s" else f"({v})")
             flags.append(fl)
-        return _json_mutate_call(doc, op, paths, vals, "".join(flags))
+        return _json_mutate_call(args[0], op, paths, vals, "".join(flags))
 
     return build
 
@@ -1147,24 +1142,19 @@ def _json_set_family(op: str):
 def _json_remove(args: list[str]) -> str:
     if not args:
         raise FilesqlError("json_remove expects at least 1 argument")
-    doc = _rewrite_json_family(args[0])
-    paths = [_rewrite_json_family(p) for p in args[1:]]
-    return _json_mutate_call(doc, "remove", paths, [], "")
+    return _json_mutate_call(args[0], "remove", args[1:], [], "")
 
 
 def _json_patch(args: list[str]) -> str:
     if len(args) != 2:
         raise FilesqlError(f"json_patch expects 2 args, got {len(args)}")
-    doc = _rewrite_json_family(args[0])
-    patch = _rewrite_json_family(args[1])
-    return _json_mutate_call(doc, "patch", [], [f"({patch})"], "j")
+    return _json_mutate_call(args[0], "patch", [], [f"({args[1]})"], "j")
 
 
 def _json_minify(args: list[str]) -> str:
     if len(args) != 1:
         raise FilesqlError(f"json expects 1 arg, got {len(args)}")
-    doc = _rewrite_json_family(args[0])
-    return _json_mutate_call(doc, "json", [], [], "")
+    return _json_mutate_call(args[0], "json", [], [], "")
 
 
 def _json_pretty(args: list[str]) -> str:
@@ -1172,9 +1162,8 @@ def _json_pretty(args: list[str]) -> str:
     engine; stdlib sqlite3 here is older, format pinned from the docs)."""
     if len(args) not in (1, 2):
         raise FilesqlError(f"json_pretty expects 1-2 args, got {len(args)}")
-    doc = _rewrite_json_family(args[0])
-    vals = [f"({_rewrite_json_family(args[1])})"] if len(args) == 2 else []
-    return _json_mutate_call(doc, "pretty", [], vals, "s" * len(vals))
+    vals = [f"({args[1]})"] if len(args) == 2 else []
+    return _json_mutate_call(args[0], "pretty", [], vals, "s" * len(vals))
 
 
 _JSON_MUTATION_REWRITES = {
@@ -1213,10 +1202,7 @@ def _json_array(args: list[str]) -> str:
     which ANSI mode outright rejects for int/text mixes (r10 fix)."""
     if not args or not args[0].strip():
         return "concat('[', ']')"  # flag-recognizable empty (folds)
-    flags = [_json_value_flag(a) for a in args]  # flag raw spellings
-    # same-name nesting: the per-name sweep skips this builder's own
-    # emission, so any embedded json_array must be expanded here
-    args = [_rewrite_calls(a, "json_array", _json_array) for a in args]
+    flags = [_json_value_flag(a) for a in args]
     quoted = [
         f"({a})" if fl == "j"
         else _json_array_loose(a) if fl == "l"
@@ -1230,12 +1216,6 @@ def _raise_fe(msg: str):
     raise FilesqlError(msg)
 
 
-_SIMPLE_RENAMES = {
-    "ifnull": "nvl",
-    "unicode": "ascii",  # first-codepoint (Spark ascii returns full codepoint)
-}
-
-
 def _iif_call(args: list[str]) -> str:
     """SQLite iif(X, Y[, Z]): Y when X is TRUE under SQLite truthiness —
     numeric coercion, non-zero, NULL → Z. Spark's if() demands a
@@ -1247,7 +1227,6 @@ def _iif_call(args: list[str]) -> str:
     The 2-arg form (SQLite 3.48) yields NULL on false."""
     if len(args) not in (2, 3):
         raise FilesqlError(f"iif expects 2-3 args, got {len(args)}")
-    args = [_rewrite_calls(a, "iif", _iif_call) for a in args]
     cond = f"nvl(TRY_CAST(({args[0]}) AS DOUBLE) <> 0, false)"
     z = args[2] if len(args) == 3 else "NULL"
     return f"if({cond}, {args[1]}, {z})"
@@ -1316,7 +1295,9 @@ _CALL_REWRITES = {
     # projection (r13b; crash-to-correct, divergence documented at the
     # builder)
     "coalesce": lambda args: _mixed_text_pick_call("coalesce", args),
-    "ifnull": lambda args: _mixed_text_pick_call("ifnull", args),
+    "ifnull": lambda args: (
+        _mixed_text_pick_call("ifnull", args) or f"nvl({', '.join(args)})"
+    ),
     "nvl": lambda args: _mixed_text_pick_call("nvl", args),
     "log": _log,
     "char": _char,
@@ -1469,6 +1450,8 @@ _CALL_REWRITES = {
         f"CAST(({args[0]}) AS STRING), ({args[1]})))), "
         f"map('ignoreNullFields', 'false'))"
     ),
+    # first codepoint (Spark's ascii returns the full codepoint)
+    "unicode": lambda args: f"ascii({', '.join(args)})",
 }
 
 
@@ -1681,8 +1664,6 @@ def _printf_call(args: list[str]) -> str | None:
     differently (%g/%G/%c) fall back to the plain rename."""
     if len(args) < 1:
         return None
-    for name in ("printf", "format"):
-        args = [_rewrite_calls(a, name, _CALL_REWRITES[name]) for a in args]
     fmt_tok = args[0].strip()
     if not (fmt_tok.startswith("'") and fmt_tok.endswith("'")):
         return f"format_string({', '.join(args)})"
@@ -1768,8 +1749,7 @@ def _cast_call(args: list[str]) -> str | None:
         # BLOB goes through the text form: CAST(7.5 AS BLOB) = b'7.5');
         # BINARY input is identity (Spark binary↔string round-trips
         # byte-exact). r13b — was an unrewritten Spark parse error.
-        inner = _rewrite_calls(expr, "cast", _CALL_REWRITES["cast"])
-        return f"CAST(({_sqlite_text_of(inner)}) AS BINARY)"
+        return f"CAST(({_sqlite_text_of(expr)}) AS BINARY)"
     if "INT" not in typ and any(t in typ for t in ("CHAR", "CLOB", "TEXT")):
         # TEXT affinity (checked after INT — SQLite's rule order): a
         # provably-REAL input renders as SQLite's %!.15g via the
@@ -1783,24 +1763,20 @@ def _cast_call(args: list[str]) -> str | None:
         # affinity float inputs keep Java rendering — documented
         # divergence (SURVEY §5).
         d = _sum_text_render(expr)  # sum() over TEXT: group dispatch
-        if d is not None:           # (pre-expansion: the recognizer
-            return d                # needs the CAST(… AS REAL) shape)
-        mask = _div_mask(expr)
-        t = _div_walk(expr, mask, 0, len(expr), _ACTIVE_COLUMN_TYPES, [])
-        inner = _rewrite_calls(expr, "cast", _CALL_REWRITES["cast"])
-        if t == "real":
-            return f"filesql_double_text(CAST(({inner}) AS DOUBLE))"
-        d = _vd_render_text(inner)  # value-dependent: runtime dispatch
+        if d is not None:
+            return d
+        if _static_affinity(expr) == "real":
+            return f"filesql_double_text(CAST(({expr}) AS DOUBLE))"
+        d = _vd_render_text(expr)  # value-dependent: runtime dispatch
         if d is not None:
             return d
         if "CHAR" in typ and "(" in typ:
             return None  # CHAR(n)/VARCHAR(n): Spark parses natively
         # bare CHAR/NCHAR/VARCHAR have no Spark spelling (DATATYPE_
         # MISSING_SIZE) — SQLite treats them as TEXT affinity (r17)
-        return f"CAST(({inner}) AS STRING)"
+        return f"CAST(({expr}) AS STRING)"
     if "INT" in typ:
         to = "BIGINT"
-        rx = r"'^[ \\t\\r\\n]*([+-]?[0-9]+)'"
     elif any(t in typ for t in ("REAL", "FLOA", "DOUB")) or \
             typ.split("(")[0].strip() == "NUMERIC":
         # bare NUMERIC target = SQLite numeric affinity: text prefix-
@@ -1810,19 +1786,27 @@ def _cast_call(args: list[str]) -> str | None:
         # internal emissions rely on Spark-native DECIMAL(p, s) and
         # CAST(NULL AS BOOLEAN) typing (r14).
         to = "DOUBLE"
-        rx = (
-            r"'^[ \\t\\r\\n]*([+-]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)"
-            r"(?:[eE][+-]?[0-9]+)?)'"
-        )
     else:
         return None
-    expr = _rewrite_calls(expr, "cast", _CALL_REWRITES["cast"])
+    spark = _spark_num_type(expr)
+    if spark == "int" or (spark == "real" and to == "DOUBLE"):
+        # a numeric Spark operand: the dispatch's string branch is dead
+        # (INTEGER over real keeps the dispatch, which saturates)
+        return f"CAST(({expr}) AS {to})"
+    return _cast_dispatch(expr, to)
+
+
+def _cast_dispatch(expr: str, to: str) -> str:
+    """SQLite's CAST(expr AS INTEGER|REAL) in Spark (``to`` is BIGINT or
+    DOUBLE): a typeof dispatch, with the numeric-prefix parse for
+    string values."""
     e = f"({expr})"
     if to == "BIGINT":
         # parse the integer prefix wide (DECIMAL 38,0, try_cast: ANSI-safe
         # on '' and >38-digit prefixes), clamp to the int64 bounds like
         # SQLite; numeric inputs clamp by sign on overflow (SQLite
         # saturates where an ANSI cast would raise)
+        rx = r"'^[ \\t\\r\\n]*([+-]?[0-9]+)'"
         return (
             f"(CASE WHEN {e} IS NULL THEN CAST(NULL AS BIGINT) "
             f"WHEN typeof({e}) = 'string' THEN "
@@ -1831,12 +1815,73 @@ def _cast_call(args: list[str]) -> str | None:
             f"ELSE nvl(try_cast({e} AS BIGINT), "
             f"CASE WHEN {e} > 0 THEN {_INT64_MAX} ELSE {_INT64_MIN} END) END)"
         )
+    rx = (
+        r"'^[ \\t\\r\\n]*([+-]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)"
+        r"(?:[eE][+-]?[0-9]+)?)'"
+    )
     return (
         f"(CASE WHEN {e} IS NULL THEN CAST(NULL AS DOUBLE) "
         f"WHEN typeof({e}) = 'string' THEN "
         f"nvl(try_cast(regexp_extract({e}, {rx}, 1) AS DOUBLE), 0.0d) "
         f"ELSE CAST({e} AS DOUBLE) END)"
     )
+
+
+def _parenthesized(e: str) -> bool:
+    """``e`` is one parenthesized expression: ``(`` … its matching ``)``."""
+    return e[:1] == "(" and _div_find_close(_div_mask(e), 0, len(e)) == len(e) - 1
+
+
+def _cast_dispatch_operand(expr: str) -> tuple[str, str] | None:
+    """(operand, to) when ``expr`` is ``_cast_dispatch(operand, to)``,
+    else None."""
+    if not expr.startswith("(CASE WHEN ("):
+        return None
+    close = _div_find_close(_div_mask(expr), 11, len(expr))
+    if close == -1:
+        return None
+    operand = expr[12:close]
+    for to in ("DOUBLE", "BIGINT"):
+        if expr == _cast_dispatch(operand, to):
+            return operand, to
+    return None
+
+
+_SIGNED_NUM_RX = re.compile(r"(?:[-+]\s*)*(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?[dD]?")
+_IDENT = r"(?:[A-Za-z_]\w*|`[^`]*`)"
+_COLUMN_REF_RX = re.compile(rf"(?:{_IDENT}\s*\.\s*)*({_IDENT})")
+_NUM_CAST_RX = re.compile(r"(?is)^(?:try_)?cast\s*\(.*\sas\s+(bigint|double)\s*\)$")
+
+
+def _spark_num_type(expr: str) -> str | None:
+    """'int' or 'real' when the *Spark* type of ``expr`` is provably
+    integral or fractional: a numeric literal, a column the catalog
+    types int or real, a CAST or TRY_CAST to BIGINT or DOUBLE, or
+    _cast_dispatch's output. Otherwise None. Unlike _static_affinity
+    (SQLite affinity), a string literal is never numeric here: Spark
+    keeps '99999999999999999999' a STRING, which a numeric cast of it
+    can reject."""
+    e = expr.strip()
+    if _SIGNED_NUM_RX.fullmatch(e):
+        return _div_lit_type(e.lstrip("+- \t\r\n"))
+    m = _COLUMN_REF_RX.fullmatch(e)
+    if m:
+        name = m.group(1)
+        if name.startswith("`"):
+            name = name[1:-1].replace("``", "`")
+        t = (_ACTIVE_COLUMN_TYPES or {}).get(name.lower())
+        return t if t in ("int", "real") else None
+    if not e.endswith(")"):
+        return None
+    d = _cast_dispatch_operand(e)
+    if d is not None:
+        return "int" if d[1] == "BIGINT" else "real"
+    if e.startswith("("):
+        return _spark_num_type(e[1:-1]) if _parenthesized(e) else None
+    m = _NUM_CAST_RX.match(e)
+    if m and _parenthesized(e[e.index("("):]):
+        return "int" if m.group(1).lower() == "bigint" else "real"
+    return None
 
 
 _INT_LIT_RE = re.compile(r"^\s*[-+]?\d+\s*$")
@@ -1861,8 +1906,6 @@ def _substr_call(args: list[str]) -> str:
     """
     if len(args) not in (2, 3):
         raise FilesqlError(f"substr expects 2-3 args, got {len(args)}")
-    for name in ("substr", "substring"):
-        args = [_rewrite_calls(a, name, _CALL_REWRITES[name]) for a in args]
     S = args[0]
     yl = _int_lit(args[1])
     zl = _int_lit(args[2]) if len(args) == 3 else None
@@ -1921,7 +1964,6 @@ def _round_call(args: list[str]) -> str:
     the input type, so integer inputs go through DOUBLE); negative Y is
     taken as 0 (never rounds into the integer part the way Spark's
     negative scale does); NULL Y stays NULL."""
-    args = [_rewrite_calls(a, "round", _CALL_REWRITES["round"]) for a in args]
     if len(args) == 1:
         return f"round(CAST(({args[0]}) AS DOUBLE))"
     if len(args) != 2:
@@ -1938,7 +1980,6 @@ def _trim_family(spark_kind: str, name: str):
     spells that trim(BOTH|LEADING|TRAILING Y FROM X)."""
 
     def build(args: list[str]) -> str:
-        args = [_rewrite_calls(a, name, _CALL_REWRITES[name]) for a in args]
         if len(args) == 1:
             return f"{name}({args[0]})"
         if len(args) != 2:
@@ -1955,7 +1996,6 @@ def _concat_call(args: list[str]) -> str:
     concat returns NULL if any argument is NULL."""
     if not args or not args[0].strip():
         raise FilesqlError("concat() expects at least one argument")
-    args = [_rewrite_calls(a, "concat", _CALL_REWRITES["concat"]) for a in args]
     parts = []
     for a in args:
         mask = _div_mask(a)
@@ -1971,7 +2011,7 @@ def _concat_call(args: list[str]) -> str:
 
 
 def _hex_call(args: list[str]) -> str:
-    x = _rewrite_calls(args[0], "hex", _CALL_REWRITES["hex"])
+    x = args[0]
     return (
         f"(CASE WHEN ({x}) IS NULL THEN '' "
         f"WHEN typeof({x}) = 'binary' THEN hex({x}) "
@@ -1980,13 +2020,8 @@ def _hex_call(args: list[str]) -> str:
 
 
 def _ascii_fold(which: str, args: list[str]) -> str:
-    """upper/lower → ASCII-only translate. The sweep in _rewrite_calls
-    resumes AFTER each replacement, so same-function nesting
-    (upper(upper(x))) would leave the inner call unrewritten — recurse
-    into the argument text for both folds before wrapping."""
+    """upper/lower → ASCII-only translate."""
     a = args[0]
-    a = _rewrite_calls(a, "upper", _CALL_REWRITES["upper"])
-    a = _rewrite_calls(a, "lower", _CALL_REWRITES["lower"])
     lo, up = "abcdefghijklmnopqrstuvwxyz", "ABCDEFGHIJKLMNOPQRSTUVWXYZ"
     frm, to = (lo, up) if which == "upper" else (up, lo)
     return f"translate({a}, '{frm}', '{to}')"
@@ -2158,6 +2193,9 @@ _DIV_INT_FUNCS = frozenset({
     "unicode", "count", "row_number", "rank", "dense_rank", "ntile",
     "changes", "total_changes", "random", "sign", "json_array_length",
     "json_valid", "strftime_int",
+    # the Spark spelling the julianday builder emits (a julianday of a
+    # julianday must read its base as REAL)
+    "unix_micros",
 })
 _DIV_REAL_FUNCS = frozenset({
     "round", "avg", "total", "julianday", "exp", "ln", "log", "log2",
@@ -6881,6 +6919,10 @@ def _rewrite_string_aliases(sql: str) -> str:
     return _apply_edits(sql, edits)
 
 
+# `name(col, …) AS (`: a CTE column list, which renames its body's columns
+_CTE_COLUMNS_RX = re.compile(r"(?i)(?:\b[A-Za-z_]\w*|\x00)\s*\(([^()]*)\)\s*as\s*\(")
+
+
 def _alias_shadow_types(
     sql: str, mask: str, coltypes: dict[str, str]
 ) -> dict[str, str | None]:
@@ -6901,10 +6943,18 @@ def _alias_shadow_types(
 
     Chained scopes (a CTE reading another CTE's alias) converge by
     fixpoint: bindings re-evaluate under the previous round's overrides,
-    and anything still unstable after 3 rounds degrades to None."""
+    and anything still unstable after 3 rounds degrades to None. A name
+    in a CTE column list (`WITH c(n) AS (SELECT '7x')`) is rebound too,
+    and degrades to None."""
+    renamed = {
+        sql[a:b].strip().strip("`").lower(): None
+        for m in _CTE_COLUMNS_RX.finditer(mask)
+        for a, b in _div_split_args(mask, m.start(1), m.end(1))
+    }
     items = _derived_select_items(sql, mask)
     if not items:
-        return {}
+        return renamed
+    coltypes = {k: v for k, v in coltypes.items() if k not in renamed}
     throwaway: list = []
     result: dict[str, str | None] = {}
     merged = dict(coltypes)
@@ -6919,7 +6969,7 @@ def _alias_shadow_types(
             else:
                 new[name] = t
         if new == result:
-            return result
+            return {**result, **renamed}
         result = new
         merged = dict(coltypes)
         for k, v in result.items():
@@ -6927,7 +6977,7 @@ def _alias_shadow_types(
                 merged.pop(k, None)
             else:
                 merged[k] = v
-    return {k: None for k in result}  # no fixpoint: degrade to untyped
+    return {k: None for k in [*result, *renamed]}  # no fixpoint: untyped
 
 
 def _apply_shadow(
@@ -7972,7 +8022,8 @@ def _rewrite_json_tvf(sql: str, fn: str) -> str:
         hit = _find_call(sql, mask, fn, pos)
         if hit is None:
             return sql
-        start, end, args = hit
+        start, end, spans = hit
+        args = [sql[a:b].strip() for a, b in spans]
         if len(args) not in (1, 2) or not args[0].strip():
             raise FilesqlError(
                 f"{fn} expects 1-2 args ({fn}(doc) or {fn}(doc, path)), "
@@ -8142,6 +8193,4 @@ def rewrite(sql: str, column_types: dict[str, str] | None = None) -> str:
     sql = _rewrite_total_over(sql)  # before the call pass (r17)
     for name, fn in _CALL_REWRITES.items():
         sql = _rewrite_calls(sql, name, fn)
-    for old, new in _SIMPLE_RENAMES.items():
-        sql = _rewrite_calls(sql, old, lambda args, n=new: f"{n}({', '.join(args)})")
     return sql

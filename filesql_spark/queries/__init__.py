@@ -125,14 +125,14 @@ def register(name: str, oracle: str | None):
 # tests/test_entry_queries.py). Entries absent here have never been graded.
 _LAST_DRIVER_ROUND: dict[str, int] = {
     "agg_conditional_case": 14,
-    "agg_count_distinct": 14,
+    "agg_count_distinct": 18,
     "agg_cube": 15,
     "agg_filter_clause": 16,
     "agg_group_concat": 14,
     "agg_grouping_sets": 15,
-    "agg_having": 14,
+    "agg_having": 18,
     "agg_median": 15,
-    "agg_rollup": 14,
+    "agg_rollup": 18,
     "agg_salted_two_phase": 17,
     "ann_bruteforce_topk": 17,
     "ann_ivf_build": 17,
@@ -140,42 +140,42 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "ann_lsh_topk": 17,
     "ann_pq_build": 16,
     "ann_pq_topk": 16,
-    "ann_recall_report": 13,
-    "asof_join_latest_order": 14,
+    "ann_recall_report": 18,
+    "asof_join_latest_order": 18,
     "asof_join_tolerance": 16,
     "cdc_merge_apply": 16,
-    "coalesce_cast": 14,
+    "coalesce_cast": 18,
     "corpus_datacard": 16,
-    "cte_vs_company_avg": 14,
+    "cte_vs_company_avg": 18,
     "customers_rfm_segments": 15,
     "customers_rfm_sketch": 15,
-    "date_functions": 14,
-    "date_hour_histogram": 14,
+    "date_functions": 18,
+    "date_hour_histogram": 18,
     "date_julianday_span": 15,
     "dedup_cluster_representatives": 16,
     "dedup_connected_components": 17,
     "dedup_containment": 14,
     "dedup_embedding_cosine": 17,
-    "dedup_exact": 14,
+    "dedup_exact": 18,
     "dedup_family_size_distribution": 14,
     "dedup_incremental": 15,
-    "dedup_lsh_tuning_report": 13,
+    "dedup_lsh_tuning_report": 18,
     "dedup_minhash_lsh": 17,
-    "dedup_ngram_jaccard": 14,
+    "dedup_ngram_jaccard": 18,
     "dedup_simhash": 17,
-    "dedup_threshold_sweep": 13,
+    "dedup_threshold_sweep": 18,
     "derived_table": 15,
     "docs_cross_source_dups": 17,
     "docs_lang_confusion": 17,
-    "docs_ngram_novelty": 13,
+    "docs_ngram_novelty": 18,
     "docs_pii_density_by_source": 14,
     "docs_quality_gate_sweep": 14,
     "docs_source_reputation": 16,
-    "docs_tokenizer_fertility": 13,
+    "docs_tokenizer_fertility": 18,
     "embedding_kmeans": 15,
     "embedding_knn_label": 16,
     "embedding_label_centroids": 17,
-    "embedding_norm_stats": 13,
+    "embedding_norm_stats": 18,
     "embedding_outliers": 16,
     "embedding_pair_distance_histogram": 14,
     "embedding_quantize_int8": 15,
@@ -190,20 +190,20 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "events_decayed_engagement": 16,
     "events_error_rate_monitor": 14,
     "events_forecast_seasonal": 17,
-    "events_funnel": 14,
+    "events_funnel": 18,
     "events_gap_fill": 15,
     "events_hazard_curve": 17,
     "events_ltv_cohort": 17,
     "events_markov_transitions": 15,
-    "events_retention_cohorts": 14,
+    "events_retention_cohorts": 18,
     "events_robust_stats": 15,
     "events_session_funnel": 17,
-    "events_sessionize": 14,
+    "events_sessionize": 18,
     "events_skew_report": 16,
-    "events_sliding_window": 14,
-    "events_stickiness_dau_wau": 13,
+    "events_sliding_window": 18,
+    "events_stickiness_dau_wau": 18,
     "events_top_paths": 16,
-    "events_tumbling_window": 14,
+    "events_tumbling_window": 18,
     "events_user_streaks": 16,
     "events_window_topk": 16,
     "features_user_wide": 17,
@@ -214,21 +214,21 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "in_subquery": 15,
     "interval_join_banded": 15,
     "join_bloom_semireduction": 15,
-    "join_cross": 14,
+    "join_cross": 18,
     "join_full_outer": 15,
-    "join_left_anti": 14,
+    "join_left_anti": 18,
     "join_left_outer": 14,
     "join_left_semi": 15,
-    "join_multiway_inner": 14,
-    "join_right_outer": 14,
+    "join_multiway_inner": 18,
+    "join_right_outer": 18,
     "join_salted_skew": 17,
     "join_theta_selfjoin": 15,
-    "json_extract": 14,
+    "json_extract": 18,
     "layout_zorder_stats": 15,
-    "limit_offset": 14,
+    "limit_offset": 18,
     "lineitem_discount_regression": 16,
     "lineitem_pareto_share": 16,
-    "math_functions": 14,
+    "math_functions": 18,
     "multimodal_decode": 17,
     "multimodal_extract_features": 15,
     "multimodal_frame_dedup": 14,
@@ -247,14 +247,14 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "pipeline_dataset_manifest": 15,
     "pipeline_decontaminate": 15,
     "pipeline_diversity_sample": 16,
-    "pipeline_eval_set_builder": 13,
-    "pipeline_incremental_decontaminate": 13,
+    "pipeline_eval_set_builder": 18,
+    "pipeline_incremental_decontaminate": 18,
     "pipeline_mixture_resample": 16,
     "pipeline_near_dup_eval": 17,
     "pipeline_pack_sequences": 15,
     "pipeline_per_source_cap": 16,
     "pipeline_semantic_decontaminate": 16,
-    "pipeline_split_overlap_qa": 13,
+    "pipeline_split_overlap_qa": 18,
     "pipeline_stage_metrics": 17,
     "pipeline_stratified_sample": 17,
     "pipeline_train_prep": 15,
@@ -266,23 +266,23 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "q14_promo_revenue": 15,
     "q18_large_orders": 16,
     "q1_pricing_summary": 17,
-    "q3_shipping_priority": 14,
-    "q5_local_supplier": 14,
+    "q3_shipping_priority": 18,
+    "q5_local_supplier": 18,
     "q6_forecast_revenue": 15,
     "q7_nation_volume": 16,
     "q8_market_share": 16,
     "quality_expectations_orders": 16,
-    "quality_signal_correlation": 13,
-    "recursive_cte": 14,
+    "quality_signal_correlation": 18,
+    "recursive_cte": 18,
     "scalar_subquery_correlated": 15,
     "scalar_subquery_select": 15,
-    "scd2_user_tier": 14,
-    "select_case_expr": 14,
-    "set_except": 14,
+    "scd2_user_tier": 18,
+    "select_case_expr": 18,
+    "set_except": 18,
     "set_except_all": 16,
     "set_intersect": 15,
     "set_intersect_all": 16,
-    "set_union_all": 14,
+    "set_union_all": 18,
     "set_union_distinct": 15,
     "sketch_cms_heavy_hitters": 16,
     "sketch_histogram_quantiles": 15,
@@ -296,27 +296,27 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "streaming_dedup_exact": 17,
     "streaming_dedup_within_watermark": 15,
     "streaming_events_enriched": 17,
-    "streaming_events_hourly": 14,
+    "streaming_events_hourly": 18,
     "streaming_events_sessionize": 15,
     "streaming_events_sliding": 15,
-    "streaming_events_user_state": 14,
+    "streaming_events_user_state": 18,
     "streaming_interval_join": 15,
     "streaming_kmv_sketch": 17,
-    "string_functions": 14,
+    "string_functions": 18,
     "text_bigram_lm": 16,
     "text_bm25_search": 17,
     "text_bpe_merges": 16,
     "text_chunk_stride": 16,
-    "text_dup_span_removal": 13,
+    "text_dup_span_removal": 18,
     "text_dup_spans": 16,
-    "text_fingerprint": 14,
-    "text_lang_id": 14,
+    "text_fingerprint": 18,
+    "text_lang_id": 18,
     "text_length_percentiles": 17,
     "text_lm_perplexity": 17,
     "text_pii_redact": 17,
-    "text_quality_score": 14,
+    "text_quality_score": 18,
     "text_rarity_score": 15,
-    "text_readability_scores": 13,
+    "text_readability_scores": 18,
     "text_repetition_filter": 17,
     "text_tfidf_topterms": 16,
     "text_token_count": 17,
@@ -333,10 +333,10 @@ _LAST_DRIVER_ROUND: dict[str, int] = {
     "window_nth_last_value": 15,
     "window_ntile_dense_first": 15,
     "window_percent_rank": 17,
-    "window_range_interval": 14,
+    "window_range_interval": 18,
     "window_rank": 15,
     "window_row_number": 15,
-    "window_running_sum": 14,
+    "window_running_sum": 18,
 }
 
 # Round-8 rotation (VERDICT r7 #2): _HOLD_AFTER_R4 (the round-7c late-add

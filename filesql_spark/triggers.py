@@ -199,28 +199,19 @@ _RAISE_KINDS = frozenset({"ROLLBACK", "ABORT", "FAIL"})
 _RAISE_SEP = "\x01"
 
 
-def _rewrite_raise_calls(stmt: str) -> str:
-    if "raise" not in stmt.lower():
-        return stmt
-    mask = dialect._div_mask(stmt)
-    pos = 0
-    while True:
-        hit = dialect._find_call(stmt, mask, "raise", pos)
-        if hit is None:
-            return stmt
-        a, b, args = hit
-        kind = args[0].strip().upper() if args else ""
-        if kind == "IGNORE":
-            raise FilesqlError(
-                "RAISE(IGNORE) is not supported: the statement applies "
-                "set-based before triggers run, so a per-row skip cannot "
-                "be reproduced"
-            )
-        if kind not in _RAISE_KINDS or len(args) != 2:
-            raise FilesqlError(f"cannot parse RAISE(): {stmt[a:b][:80]}")
-        marker = f"('{kind}{_RAISE_SEP}' || ({args[1]}))"
-        stmt, mask = dialect._splice(stmt, mask, a, b, marker)
-        pos = a + len(marker)
+def _raise_marker(args: list[str]) -> str:
+    """The ``raise`` call builder for ``dialect._rewrite_calls``."""
+    kind = args[0].upper()
+    if kind == "IGNORE":
+        raise FilesqlError(
+            "RAISE(IGNORE) is not supported: the statement applies "
+            "set-based before triggers run, so a per-row skip cannot "
+            "be reproduced"
+        )
+    if kind not in _RAISE_KINDS or len(args) != 2:
+        call = f"RAISE({', '.join(args)})"
+        raise FilesqlError(f"cannot parse RAISE(): {call[:80]}")
+    return f"('{kind}{_RAISE_SEP}' || ({args[1]}))"
 
 
 _TAIL_RX = re.compile(r"(?i)\b(?:where|group|having|order|limit)\b")
@@ -253,7 +244,7 @@ def _body_select_raise(engine, stmt: str, tx: DataFrame) -> None:
 
     view = _register_tx(engine, tx)
     try:
-        s = _rewrite_raise_calls(stmt.rstrip().rstrip(";"))
+        s = dialect._rewrite_calls(stmt.rstrip().rstrip(";"), "raise", _raise_marker)
         s = _splice_tx_source(s, view)
         df = engine.spark.sql(dialect.rewrite(s, engine._column_types()))
         if len(df.columns) != 1:

@@ -1251,3 +1251,129 @@ def test_rewrite_masking_is_linear(monkeypatch, unit):
         return scanned[0]
 
     assert chars(64) <= 4.5 * chars(16)
+
+
+# ------------------------------- nested calls: innermost first, vs sqlite3
+
+_NESTED_ROWS = [
+    (1, 100, "2024-03-01 12:34:56", "-2.5x", '{"a":{"b":7.5}}', "hello world"),
+    (2, 1000, "2023-12-31 23:59:59", "3", '{"a":{"b":-2}}', "ab"),
+]
+
+
+@pytest.fixture(scope="module")
+def nested_db(spark, tmp_path_factory):
+    """The same two rows in stdlib sqlite3 and in an engine over a CSV."""
+    import csv
+    import sqlite3
+
+    import filesql_spark as fs
+
+    con = sqlite3.connect(":memory:")
+    con.execute(
+        "CREATE TABLE t (id INTEGER, n INTEGER, s TEXT, x TEXT, doc TEXT, w TEXT)"
+    )
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?)", _NESTED_ROWS)
+    path = tmp_path_factory.mktemp("nested") / "t.csv"
+    with open(path, "w", newline="") as fh:
+        out = csv.writer(fh)
+        out.writerow(["id", "n", "s", "x", "doc", "w"])
+        out.writerows(_NESTED_ROWS)
+    eng = fs.open(str(path), spark=spark)
+    yield con, eng
+    eng.close()
+    con.close()
+
+
+def _nested_rows(db, expr):
+    """(sqlite3 rows, engine rows) of ``expr`` per row; floats to 6 places."""
+
+    def norm(v):
+        if isinstance(v, float) or type(v).__name__ == "Decimal":
+            return round(float(v), 6)
+        return v
+
+    con, eng = db
+    q = f"SELECT id, {expr} AS v FROM t ORDER BY id"
+    return (
+        [tuple(map(norm, r)) for r in con.execute(q).fetchall()],
+        [tuple(map(norm, r)) for r in eng.query(q).collect()],
+    )
+
+
+@pytest.mark.parametrize("expr", [
+    # json_extract returns text here (documented divergence): compare REAL
+    "CAST(json_extract(json_extract(doc, '$.a'), '$.b') AS REAL)",
+    "strftime('%d', strftime('%Y-%m-%d %H:%M:%S', s))",
+    "round(julianday(julianday(s)), 6)",
+    "unixepoch(datetime(datetime(s)))",
+    "time(time(s))",
+    "round(log(log(n)), 6)",
+    "abs(abs(x))",
+    "ifnull(ifnull('a', 3), n)",
+    "coalesce(coalesce('a', 3), n)",
+    "round(round(x, 1), 2)",
+    "substr(substr(w, 2, n), 1, n)",
+])
+def test_nested_same_name_calls_match_sqlite(nested_db, expr):
+    """A call nested in a same-name call's arguments is rewritten before
+    the outer builder runs (_rewrite_calls' call rule), so the outer
+    builder sees the inner call's Spark form and its SQLite type."""
+    want, got = _nested_rows(nested_db, expr)
+    assert got == want, (expr, got, want)
+
+
+@pytest.mark.parametrize("expr", [
+    "json_array_length('{\"b\":1}')",
+    "json_array_length('7')",
+    "json_array_length('\"x\"')",
+    "json_array_length('null')",
+    "json_array_length('{\"a\":{}}', '$.a')",
+    "json_array_length(doc, '$.a')",
+    "json_array_length('[1,[2,3]]', '$[1]')",
+    "json_array_length(NULL)",
+    "json_array_length('{\"a\":1}', '$.z')",
+])
+def test_json_array_length_matches_sqlite(nested_db, expr):
+    """0 for a valid JSON value that is not an array, NULL for NULL input
+    or a missing path (Spark's builtin returns NULL for any non-array)."""
+    want, got = _nested_rows(nested_db, expr)
+    assert got == want, (expr, got, want)
+
+
+@pytest.mark.parametrize("typ", ["REAL", "INTEGER"])
+@pytest.mark.parametrize("operand", ["n", "x", "s", "'12abc'"])
+def test_nested_numeric_casts_grow_linearly(typ, operand):
+    """A CAST over an operand whose Spark type is numeric (a typed
+    column, a numeric literal, an inner CAST) is a plain Spark CAST; only
+    a possibly-STRING operand takes the typeof dispatch, which copies the
+    operand. Five nested levels rewrote to 82,878 (REAL over an INTEGER
+    column) and 280,394 (INTEGER) characters when every level copied."""
+    expr = operand
+    for _ in range(5):
+        expr = f"CAST({expr} AS {typ})"
+    out = rewrite(f"SELECT {expr} FROM t", {"n": "int", "x": "real", "s": "text"})
+    assert len(out) < 600, len(out)
+
+
+@pytest.mark.parametrize("expr", [
+    "CAST(CAST(CAST(n AS REAL) AS REAL) AS INTEGER)",
+    "CAST(CAST(x AS INTEGER) AS REAL)",
+    "CAST(CAST(CAST(x AS REAL) AS INTEGER) AS INTEGER)",
+    "CAST(CAST('99999999999999999999' AS REAL) AS INTEGER)",
+    "CAST(CAST('99999999999999999999' AS INTEGER) AS REAL)",
+    "CAST(n * 1.5 AS INTEGER)",
+])
+def test_nested_numeric_casts_match_sqlite(nested_db, expr):
+    want, got = _nested_rows(nested_db, expr)
+    assert got == want, (expr, got, want)
+
+
+def test_cte_column_list_rebinds_catalog_types(nested_db):
+    """A CTE column list renames its body's columns: `n` below is TEXT
+    whatever type the catalog's column `n` has, so its CASTs keep
+    SQLite's numeric-prefix parse."""
+    con, eng = nested_db
+    q = "WITH c(n) AS (SELECT '7x') SELECT CAST(n AS INTEGER), CAST(n AS REAL) FROM c"
+    want = con.execute(q).fetchall()
+    assert [tuple(r) for r in eng.query(q).collect()] == want == [(7, 7.0)]

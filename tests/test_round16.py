@@ -208,8 +208,15 @@ def test_dup_spans_no_storage_growth(spark):
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
 
+    def persisted_ids():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    # count only RDDs persisted after this point: other tests' RDDs
+    # (engine snapshots) can be released between the calls below
+    before = persisted_ids()
+
     def n_persisted():
-        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        return len(persisted_ids() - before)
 
     counts = []
     for _ in range(3):
