@@ -51,6 +51,21 @@ sweeps (``_CALL_REWRITES``, in table order):
   ``CAST(… AS DOUBLE)``) is not rewritten again by the same sweep;
 - a declined call keeps its text: a builder returns None to leave the
   call as written, and only its rewritten arguments are spliced in.
+
+The binding rule: a template that reads an operand more than once is the
+body of a session SQL function (``session_functions``, registered once
+per SparkSession by ``json1.register_udfs``), and the site calls it, so
+Spark binds each operand once and nested calls grow linearly. Today that
+covers substr with a non-literal start or length (``filesql_substr``)
+and SQLite's TEXT → INTEGER / REAL prefix parse (``filesql_text_int``,
+``filesql_text_real``). Parameters are typed and SQLite values are not,
+so the static type dispatch stays here (``_spark_type``): it picks the
+function, a plain CAST, or an inline typeof dispatch for an operand of
+unknown Spark type. Where Spark takes no SQL function (ORDER BY, VALUES,
+LATERAL VIEW, a call over an aggregate), ``_inline_session_calls``
+expands the call to its body, which copies its operands. Other templates
+(value-dependent division, bitwise operators, scalar min/max guards)
+still copy their operands.
 """
 
 from __future__ import annotations
@@ -474,9 +489,6 @@ def _julianday(args: list[str]) -> str:
     return f"(unix_micros({x}) / 86400000000.0 + 2440587.5)"
 
 
-_SUM_CALL_RX = re.compile(r"(?is)^sum\s*\(")
-
-
 def _sum_text_render(expr: str) -> str | None:
     """SQLite types sum() INTEGER when EVERY non-NULL input is a clean
     integer string (func.c sumStep keeps the integer accumulator only
@@ -487,38 +499,22 @@ def _sum_text_render(expr: str) -> str | None:
     rendering sites: an aggregate condition over the same group picks
     INTEGER digits vs %!.15g. Returns the dispatched rendering of
     ``expr`` — a sum() call over a provably-TEXT argument, raw or
-    already coerced by _agg_numeric_coerce_call (whose CAST((x) AS
-    REAL) the cast sweep has expanded) — or None."""
-    s = expr.strip()
-    m = _SUM_CALL_RX.match(s)
-    if not m or not s.endswith(")"):
+    already coerced by _agg_numeric_coerce_call's filesql_text_real — or
+    None."""
+    call = _whole_call(expr.strip())
+    if not call or call[0] != "sum":
         return None
-    sm = _div_mask(s)
-    if _div_find_close(sm, m.end() - 1, len(s)) != len(s) - 1:
+    x = call[1].strip()
+    coerced = _whole_call(x)
+    if coerced and coerced[0] == "filesql_text_real":
+        x = coerced[1].strip()
+    if len(_div_split_args(_div_mask(x), 0, len(x))) != 1 or \
+            _static_affinity(x) != "text":
         return None
-    args = _div_split_args(sm, m.end(), len(s) - 1)
-    if len(args) != 1:
-        return None
-    x = s[args[0][0]:args[0][1]].strip()
-    coerced = _cast_dispatch_operand(x)  # the sum() sweep's CAST((x) AS REAL)
-    if coerced and coerced[1] == "DOUBLE" and _parenthesized(coerced[0]):
-        x = coerced[0][1:-1].strip()
-    if _static_affinity(x) != "text":
-        return None
-    # FINAL-form Spark only (TRY_CAST/try_cast, no SQLite-spelled CAST
-    # except the skip-safe outer `AS STRING`): the emission may land
-    # either before or after the cast pass
+    # final Spark spelling (TRY_CAST): the emission may land before or
+    # after the cast sweep
     int_rx = r"'^[ \\t\\r\\n]*[+-]?[0-9]+[ \\t\\r\\n]*$'"
-    real_rx = (
-        r"'^[ \\t\\r\\n]*([+-]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)"
-        r"(?:[eE][+-]?[0-9]+)?)'"
-    )
-    coerce = (
-        f"(CASE WHEN ({x}) IS NULL THEN TRY_CAST(NULL AS DOUBLE) "
-        f"ELSE nvl(try_cast(regexp_extract(({x}), {real_rx}, 1) "
-        f"AS DOUBLE), 0.0d) END)"
-    )
-    sum_d = f"sum({coerce})"
+    sum_d = f"sum(filesql_text_real({x}))"
     cond = (
         f"count(CASE WHEN ({x}) IS NOT NULL AND "
         f"NOT (({x}) RLIKE {int_rx}) THEN 1 END) = 0"
@@ -924,11 +920,12 @@ def _json_extract(args: list[str]) -> str:
 def _json_array_length(args: list[str]) -> str:
     """json_array_length(X[, P]): the element count of the array at X
     (or at path P), 0 for any other JSON value, NULL for NULL input or a
-    missing path. Spark's builtin returns NULL for anything but an
-    array. Divergences (get_json_object unquotes strings and reads a
-    JSON null as missing): malformed X gives NULL where SQLite raises,
-    and at a path a string value that parses as an array counts its
-    elements, and a null value gives NULL, where SQLite gives 0."""
+    missing path, and SQLite's 'malformed JSON' error for invalid X (as
+    json_type). Spark's builtin returns NULL for anything but an array.
+    Divergences (get_json_object unquotes strings and reads a JSON null
+    as missing): at a path a string value that parses as an array
+    counts its elements, and a null value gives NULL, where SQLite
+    gives 0."""
     if len(args) not in (1, 2):
         raise FilesqlError(
             f"json_array_length expects 1-2 args, got {len(args)}"
@@ -938,7 +935,10 @@ def _json_array_length(args: list[str]) -> str:
     found = f"get_json_object({x}, {path})"
     v = x if len(args) == 1 else found
     return (
-        f"(CASE WHEN {found} IS NOT NULL "
+        f"(CASE WHEN {x} IS NULL THEN NULL "
+        f"WHEN get_json_object({x}, '$') IS NULL "
+        f"THEN raise_error('malformed JSON') "
+        f"WHEN {found} IS NOT NULL "
         f"THEN coalesce(json_array_length({v}), 0) END)"
     )
 
@@ -1270,14 +1270,12 @@ _CALL_REWRITES = {
     # concat( safely because each pass sweeps once in dict order
     "concat": lambda args: _concat_call(args),
     # substring/substr SECOND (before every emission-producing pass):
-    # json_quote emits substring(arr, 2, length(arr) - 2) — non-literal
-    # third arg — and a later substr pass would re-expand it through the
-    # general staged path (~20× text per json_array element, r11 ADVICE
-    # fix). Sweeping substr first normalizes only user-written calls;
-    # every later pass's substring(...) emission is already Spark-native.
-    # substring stays BEFORE substr: the substr pass emits substring(...)
-    # with already-normalized args — a later substring pass would wrap
-    # the emission in a second (identity, textually huge) layer.
+    # later passes emit Spark-native substring(...) with Spark's own
+    # positions (json_quote's substring(arr, 2, length(arr) - 2)), which
+    # must not be re-read as SQLite's. Sweeping substr first translates
+    # only user-written calls. substring stays BEFORE substr: the substr
+    # pass emits substring(...) with already-normalized args, which a
+    # later substring pass would translate a second time.
     "substring": lambda args: _substr_call(args),
     "substr": lambda args: _substr_call(args),
     "strftime": _strftime,
@@ -1288,7 +1286,7 @@ _CALL_REWRITES = {
     "total": _total,
     # SQLite numeric coercion inside avg/sum over provably-TEXT inputs
     # (r13b; crash-to-correct: Spark's aggregates ANSI-fail on junk
-    # text). Before "cast" so the emitted CAST(… AS REAL) expands.
+    # text)
     "avg": lambda args: _agg_numeric_coerce_call("avg", args),
     "sum": lambda args: _agg_numeric_coerce_call("sum", args),
     # mixed text/numeric coalesce-family → SQLite TEXT rendering
@@ -1614,19 +1612,17 @@ def _agg_numeric_coerce_call(word: str, args: list[str]) -> str | None:
     """SQLite avg()/sum() apply numeric coercion to TEXT inputs (the
     CAST-AS-REAL rules: longest numeric prefix, no prefix → 0, NULLs
     still skipped); Spark's aggregates ANSI-crash on the first
-    non-numeric string. Wrap provably-TEXT arguments in the cast pass's
-    prefix-parse expansion. Documented divergence: SQLite types sum()
-    INTEGER when every coerced input is an integer — the coerced column
-    is DOUBLE here, so sum of clean-integer text renders 11.0 where
-    SQLite renders 11 (the value is exact either way)."""
+    non-numeric string. Wrap provably-TEXT arguments in the session
+    function filesql_text_real (the CAST-AS-REAL prefix parse).
+    Documented divergence: SQLite types sum() INTEGER when every coerced
+    input is an integer — the coerced column is DOUBLE here, so sum of
+    clean-integer text renders 11.0 where SQLite renders 11 (the value
+    is exact either way)."""
     if len(args) != 1:
         return None
     if _static_affinity(args[0]) != "text":
         return None
-    # SQLite-spelled CAST: the cast pass (later in the sweep order, same
-    # pattern as _total's emission) expands it to the typeof-dispatched
-    # prefix parse
-    return f"{word}(CAST(({args[0]}) AS REAL))"
+    return f"{word}(filesql_text_real({args[0]}))"
 
 
 def _mod_call(args: list[str]) -> str | None:
@@ -1788,42 +1784,65 @@ def _cast_call(args: list[str]) -> str | None:
         to = "DOUBLE"
     else:
         return None
-    spark = _spark_num_type(expr)
-    if spark == "int" or (spark == "real" and to == "DOUBLE"):
-        # a numeric Spark operand: the dispatch's string branch is dead
-        # (INTEGER over real keeps the dispatch, which saturates)
+    t = _spark_type(expr)
+    if t in ("int", "bool") or (t == "real" and to == "DOUBLE"):
+        # a plain cast (INTEGER over real keeps the dispatch, which
+        # saturates)
         return f"CAST(({expr}) AS {to})"
+    if t in ("string", "binary"):  # SQLite reads a BLOB as its text
+        return f"{_TEXT_NUM_FN[to]}({expr})"
     return _cast_dispatch(expr, to)
+
+
+# SQLite's numeric-prefix grammar for TEXT → INTEGER / REAL (leading
+# whitespace, then the longest prefix; group 1 is the prefix)
+_INT_PREFIX_RX = r"'^[ \\t\\r\\n]*([+-]?[0-9]+)'"
+_REAL_PREFIX_RX = (
+    r"'^[ \\t\\r\\n]*([+-]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)"
+    r"(?:[eE][+-]?[0-9]+)?)'"
+)
+_TEXT_NUM_FN = {"BIGINT": "filesql_text_int", "DOUBLE": "filesql_text_real"}
+
+
+def _text_num(s: str, to: str) -> str:
+    """SQLite's CAST of TEXT ``s`` to INTEGER (``to`` BIGINT) or REAL
+    (DOUBLE): the longest numeric prefix, 0 when there is none; INTEGER
+    parses wide (DECIMAL 38,0, try_cast: ANSI-safe on '' and >38-digit
+    prefixes) and clamps to the int64 bounds like SQLite. The body of
+    the session functions filesql_text_int / filesql_text_real."""
+    if to == "BIGINT":
+        num = (
+            f"CAST(least(greatest(nvl(try_cast(regexp_extract({s}, "
+            f"{_INT_PREFIX_RX}, 1) AS DECIMAL(38, 0)), 0), {_INT64_MIN}), "
+            f"{_INT64_MAX}) AS BIGINT)"
+        )
+    else:
+        num = (
+            f"nvl(try_cast(regexp_extract({s}, {_REAL_PREFIX_RX}, 1) "
+            f"AS DOUBLE), 0.0d)"
+        )
+    return f"CASE WHEN {s} IS NULL THEN NULL ELSE {num} END"
 
 
 def _cast_dispatch(expr: str, to: str) -> str:
     """SQLite's CAST(expr AS INTEGER|REAL) in Spark (``to`` is BIGINT or
-    DOUBLE): a typeof dispatch, with the numeric-prefix parse for
-    string values."""
+    DOUBLE) for an operand whose Spark type is not known statically: a
+    typeof dispatch (folded at analysis) whose string arm calls the
+    session function. Numeric inputs to INTEGER clamp by sign on
+    overflow (SQLite saturates where an ANSI cast would raise). Spelled
+    as a CAST to ``to`` so _spark_type reads it as numeric."""
     e = f"({expr})"
     if to == "BIGINT":
-        # parse the integer prefix wide (DECIMAL 38,0, try_cast: ANSI-safe
-        # on '' and >38-digit prefixes), clamp to the int64 bounds like
-        # SQLite; numeric inputs clamp by sign on overflow (SQLite
-        # saturates where an ANSI cast would raise)
-        rx = r"'^[ \\t\\r\\n]*([+-]?[0-9]+)'"
-        return (
-            f"(CASE WHEN {e} IS NULL THEN CAST(NULL AS BIGINT) "
-            f"WHEN typeof({e}) = 'string' THEN "
-            f"CAST(least(greatest(nvl(try_cast(regexp_extract({e}, {rx}, 1) "
-            f"AS DECIMAL(38, 0)), 0), {_INT64_MIN}), {_INT64_MAX}) AS BIGINT) "
-            f"ELSE nvl(try_cast({e} AS BIGINT), "
-            f"CASE WHEN {e} > 0 THEN {_INT64_MAX} ELSE {_INT64_MIN} END) END)"
+        num = (
+            f"nvl(try_cast({e} AS BIGINT), "
+            f"CASE WHEN {e} > 0 THEN {_INT64_MAX} ELSE {_INT64_MIN} END)"
         )
-    rx = (
-        r"'^[ \\t\\r\\n]*([+-]?(?:[0-9]+(?:\\.[0-9]*)?|\\.[0-9]+)"
-        r"(?:[eE][+-]?[0-9]+)?)'"
-    )
+        guard = f"WHEN {e} IS NULL THEN NULL "
+    else:
+        num, guard = f"CAST({e} AS DOUBLE)", ""
     return (
-        f"(CASE WHEN {e} IS NULL THEN CAST(NULL AS DOUBLE) "
-        f"WHEN typeof({e}) = 'string' THEN "
-        f"nvl(try_cast(regexp_extract({e}, {rx}, 1) AS DOUBLE), 0.0d) "
-        f"ELSE CAST({e} AS DOUBLE) END)"
+        f"CAST(CASE {guard}WHEN typeof({e}) = 'string' "
+        f"THEN {_TEXT_NUM_FN[to]}({expr}) ELSE {num} END AS {to})"
     )
 
 
@@ -1832,56 +1851,52 @@ def _parenthesized(e: str) -> bool:
     return e[:1] == "(" and _div_find_close(_div_mask(e), 0, len(e)) == len(e) - 1
 
 
-def _cast_dispatch_operand(expr: str) -> tuple[str, str] | None:
-    """(operand, to) when ``expr`` is ``_cast_dispatch(operand, to)``,
-    else None."""
-    if not expr.startswith("(CASE WHEN ("):
-        return None
-    close = _div_find_close(_div_mask(expr), 11, len(expr))
-    if close == -1:
-        return None
-    operand = expr[12:close]
-    for to in ("DOUBLE", "BIGINT"):
-        if expr == _cast_dispatch(operand, to):
-            return operand, to
+_CALL_HEAD_RX = re.compile(r"(?is)([a-z_]\w*)\s*\(")
+
+
+def _whole_call(e: str) -> tuple[str, str] | None:
+    """(lowercased name, argument text) when ``e`` is one call
+    ``name(…)``, else None."""
+    m = _CALL_HEAD_RX.match(e)
+    if m and e.endswith(")") and _parenthesized(e[m.end() - 1:]):
+        return m.group(1).lower(), e[m.end():-1]
     return None
 
 
-_SIGNED_NUM_RX = re.compile(r"(?:[-+]\s*)*(?:\d+\.?\d*|\.\d+)(?:[eE][+-]?\d+)?[dD]?")
-_IDENT = r"(?:[A-Za-z_]\w*|`[^`]*`)"
-_COLUMN_REF_RX = re.compile(rf"(?:{_IDENT}\s*\.\s*)*({_IDENT})")
-_NUM_CAST_RX = re.compile(r"(?is)^(?:try_)?cast\s*\(.*\sas\s+(bigint|double)\s*\)$")
+# calls whose Spark result type _cmp_classify does not report
+_SPARK_CALL_TYPE = {
+    "filesql_text_int": "int", "filesql_text_real": "real",
+    "get_json_object": "string", "filesql_substr": "string",
+    "zeroblob": "binary", "randomblob": "binary",
+}
+_BLOB_LIT_RX = re.compile(r"(?i)x'[0-9a-f]*'")
+_BLOB_CAST_RX = re.compile(r"(?is).*\sas\s+(?:blob|binary)\s*")
 
 
-def _spark_num_type(expr: str) -> str | None:
-    """'int' or 'real' when the *Spark* type of ``expr`` is provably
-    integral or fractional: a numeric literal, a column the catalog
-    types int or real, a CAST or TRY_CAST to BIGINT or DOUBLE, or
-    _cast_dispatch's output. Otherwise None. Unlike _static_affinity
-    (SQLite affinity), a string literal is never numeric here: Spark
-    keeps '99999999999999999999' a STRING, which a numeric cast of it
-    can reject."""
+def _spark_type(expr: str) -> str | None:
+    """The *Spark* type class of ``expr`` when it is known statically:
+    'int', 'real', 'string', 'bool' or 'binary', else None. Known are
+    the calls in _SPARK_CALL_TYPE, BLOB literals and casts, and what
+    _cmp_classify decides: numeric literals, typed columns and casts,
+    TEXT values (string literals, text columns, text-result calls) and
+    comparisons. Unlike _static_affinity (SQLite affinity), a string
+    literal is never numeric here: Spark keeps '99999999999999999999' a
+    STRING, which a numeric cast of it can reject."""
     e = expr.strip()
-    if _SIGNED_NUM_RX.fullmatch(e):
+    while _parenthesized(e):
+        e = e[1:-1].strip()
+    call = _whole_call(e)
+    if call and call[0] in _SPARK_CALL_TYPE:
+        return _SPARK_CALL_TYPE[call[0]]
+    if _BLOB_LIT_RX.fullmatch(e) or call and call[0] in ("cast", "try_cast") \
+            and _BLOB_CAST_RX.fullmatch(call[1]):
+        return "binary"
+    aff, vcl = _cmp_classify(e, _ACTIVE_COLUMN_TYPES)
+    if vcl == "numlit":
         return _div_lit_type(e.lstrip("+- \t\r\n"))
-    m = _COLUMN_REF_RX.fullmatch(e)
-    if m:
-        name = m.group(1)
-        if name.startswith("`"):
-            name = name[1:-1].replace("``", "`")
-        t = (_ACTIVE_COLUMN_TYPES or {}).get(name.lower())
-        return t if t in ("int", "real") else None
-    if not e.endswith(")"):
-        return None
-    d = _cast_dispatch_operand(e)
-    if d is not None:
-        return "int" if d[1] == "BIGINT" else "real"
-    if e.startswith("("):
-        return _spark_num_type(e[1:-1]) if _parenthesized(e) else None
-    m = _NUM_CAST_RX.match(e)
-    if m and _parenthesized(e[e.index("("):]):
-        return "int" if m.group(1).lower() == "bigint" else "real"
-    return None
+    if vcl == "num":
+        return aff if aff in ("int", "real") else None
+    return {"strlit": "string", "text": "string", "bool": "bool"}.get(vcl)
 
 
 _INT_LIT_RE = re.compile(r"^\s*[-+]?\d+\s*$")
@@ -1891,18 +1906,25 @@ def _int_lit(text: str) -> int | None:
     return int(text) if _INT_LIT_RE.match(text) else None
 
 
+# SQLITE_LIMIT_LENGTH's default: the Z of a 2-arg substr (func.c)
+_SQLITE_MAX_LENGTH = 1000000000
+
+
 def _substr_call(args: list[str]) -> str:
     """SQLite substr(S, Y[, Z]) — exact func.c semantics: Y=0 starts at 1
     but yields one fewer char, negative Y counts from the end (under-run
-    shortens Z), negative Z takes abs(Z) chars BEFORE position Y. Spark's
-    substring diverges on all three (found by tests/test_fuzz_dialect.py).
+    shortens Z), negative Z takes abs(Z) chars BEFORE position Y, and a
+    missing Z is SQLite's length limit. Spark's substring diverges on
+    all of these (found by tests/test_fuzz_dialect.py).
 
     Literal Y/Z — the overwhelmingly common case — partially evaluates
-    HERE, in Python: the staged sign-normalization collapses to a plain
-    substring (plus at most 3 length() references when Y counts from the
-    end), so nesting can't blow up the expression text. Non-literal Y/Z
-    take the general staged form, whose nested CASEs grow ~20x per call
-    — acceptable once, pathological when nested, hence the literal path.
+    HERE, in Python, to a plain substring (plus at most 3 length()
+    references when Y counts from the end): cheaper per row than a
+    call. Non-literal Y/Z take the staged sign normalization
+    (_substr_staged), which reads S, Y and Z many times, so it is the
+    body of the session function filesql_substr and the site binds each
+    operand once. A provably-BLOB S keeps the staged form inline: the
+    function's STRING parameter would count characters, not bytes.
     """
     if len(args) not in (2, 3):
         raise FilesqlError(f"substr expects 2-3 args, got {len(args)}")
@@ -1942,21 +1964,108 @@ def _substr_call(args: list[str]) -> str:
             f"substring({S}, greatest({A} + {zl}, 0) + 1, "
             f"greatest(-({zl} + least({A}, 0)) + least({A} + {zl}, 0), 0))"
         )
-    # general (non-literal) path: staged sign normalization as CASEs
-    y = f"({args[1]})"
-    L = f"length({S})"
-    z = f"({args[2]})" if len(args) == 3 else f"(2 * {L} + 2)"
-    p1a = f"(CASE WHEN {y} < 0 THEN {y} + {L} WHEN {y} > 0 THEN {y} - 1 ELSE 0 END)"
-    p2a = (
-        f"(CASE WHEN {y} = 0 AND {z} > 0 THEN {z} - 1 "
-        f"WHEN {y} < 0 AND {y} + {L} < 0 THEN {z} + {y} + {L} ELSE {z} END)"
+    if _spark_type(S) == "binary":
+        z = args[2] if len(args) == 3 else str(_SQLITE_MAX_LENGTH)
+        return _substr_staged(S, args[1], z)
+    return f"filesql_substr({', '.join(args)})"
+
+
+def _substr_staged(s: str, y: str, z: str) -> str:
+    """substr(s, y, z) for any Y/Z, func.c's sign normalization in
+    closed form (the body of filesql_substr): Y sets the 0-based start
+    p1 and the length p2 (an under-run start shortens it), then a
+    negative Z takes the p2 chars before p1 instead. A NULL Y leaves
+    both NULL (Spark's greatest/least skip NULLs)."""
+    y, z = f"({y})", f"({z})"
+    q = f"{y} + length({s})"
+    p1 = f"(CASE WHEN {y} > 0 THEN {y} - 1 WHEN {y} < 0 THEN greatest({q}, 0) WHEN {y} = 0 THEN 0 END)"
+    p2 = (
+        f"(CASE WHEN {y} < 0 THEN greatest(abs({z}) + least({q}, 0), 0) "
+        f"WHEN {y} = 0 THEN greatest(abs({z}) - 1, 0) WHEN {y} > 0 THEN abs({z}) END)"
     )
-    p1b = f"greatest({p1a}, 0)"
-    p1c = f"(CASE WHEN {p2a} < 0 THEN {p1b} + {p2a} ELSE {p1b} END)"
-    p2b = f"abs({p2a})"
-    p1d = f"greatest({p1c}, 0)"
-    p2c = f"(CASE WHEN {p1c} < 0 THEN {p2b} + {p1c} ELSE {p2b} END)"
-    return f"substring({S}, {p1d} + 1, greatest({p2c}, 0))"
+    return (
+        f"(CASE WHEN {z} < 0 THEN substring({s}, greatest({p1} - {p2}, 0) + 1, "
+        f"least({p1}, {p2})) ELSE substring({s}, {p1} + 1, {p2}) END)"
+    )
+
+
+# The session SQL functions: name → (parameters, result type, body
+# template). Each body is its template applied to the parameter names.
+_SESSION_FUNCTIONS = {
+    "filesql_text_int": (["s STRING"], "BIGINT", lambda s: _text_num(s, "BIGINT")),
+    "filesql_text_real": (["s STRING"], "DOUBLE", lambda s: _text_num(s, "DOUBLE")),
+    "filesql_substr": (
+        ["s STRING", "y BIGINT", f"z BIGINT DEFAULT {_SQLITE_MAX_LENGTH}"],
+        "STRING", _substr_staged,
+    ),
+}
+
+
+def session_functions() -> list[str]:
+    """The CREATE statements of the dialect's session SQL functions
+    (json1.register_udfs runs them once per SparkSession). A call site
+    binds each operand once however often the body reads it."""
+    return [
+        f"CREATE OR REPLACE TEMPORARY FUNCTION {name}({', '.join(params)}) "
+        f"RETURNS {ret} RETURN {body(*(q.split()[0] for q in params))}"
+        for name, (params, ret, body) in _SESSION_FUNCTIONS.items()
+    ]
+
+
+def _session_body(name: str, args: list[str]) -> str:
+    """A session call expanded to its body: each argument (or a missing
+    one's default) cast to its parameter's type."""
+    params, ret, body = _SESSION_FUNCTIONS[name]
+    bound = [
+        f"CAST(({args[i] if i < len(args) else q.split()[-1]}) AS {q.split()[1]})"
+        for i, q in enumerate(params)
+    ]
+    return f"CAST(({body(*bound)}) AS {ret})"
+
+
+_SESSION_CALL_RX = re.compile(r"\b(?:" + "|".join(_SESSION_FUNCTIONS) + r")\s*\(")
+_AGG_CALL_RX = re.compile(
+    r"(?i)\b(?:sum|avg|total|count|min|max|collect_list|collect_set|first|last)\s*\("
+)
+# clauses whose expressions Spark evaluates outside a Project, Filter,
+# Aggregate, Window or Join, where it rejects a SQL function: a query's
+# ORDER BY (Sort), VALUES rows and LATERAL VIEW (Generate)
+_NO_FUNCTION_CLAUSE_RX = re.compile(r"(?i)\b(?:order\s+by|values|lateral\s+view)\b")
+
+
+def _inline_session_calls(sql: str) -> str:
+    """Expand to their bodies (which copy their operands) the session
+    calls Spark cannot take: every call from a _NO_FUNCTION_CLAUSE_RX
+    clause to the end of its query, and every call whose arguments hold
+    an aggregate (a foldable argument beside it, such as round's scale,
+    stops being foldable)."""
+    if "filesql_" not in sql:
+        return sql
+    mask = _div_mask(sql)
+    spans: list[tuple[int, int]] = []
+    for m in _NO_FUNCTION_CLAUSE_RX.finditer(mask):
+        depth, o = 0, m.start() - 1  # the ( that encloses the clause
+        while o >= 0 and (mask[o] != "(" or depth):
+            depth += {")": 1, "(": -1}.get(mask[o], 0)
+            o -= 1
+        if m.group().lower().startswith("order") and o >= 0 and \
+                not re.match(r"(?i)\s*(?:select|with)\b", mask[o + 1:o + 16]):
+            continue  # a window's or an aggregate's ORDER BY: no Sort
+        if not any(a <= m.start() < b for a, b in spans):
+            close = _div_find_close(mask, o, len(sql)) if o >= 0 else -1
+            spans.append((m.end(), close if close != -1 else len(sql)))
+    for m in _SESSION_CALL_RX.finditer(mask):
+        close = _div_find_close(mask, m.end() - 1, len(sql))
+        if close != -1 and _AGG_CALL_RX.search(mask, m.end(), close) and \
+                not any(a <= m.start() < b for a, b in spans):
+            spans.append((m.start(), close + 1))
+    edits = []
+    for a, b in spans:
+        text = sql[a:b]
+        for name in _SESSION_FUNCTIONS:
+            text = _rewrite_calls(text, name, lambda args, n=name: _session_body(n, args))
+        edits.append((a, b, text))
+    return _apply_edits(sql, edits)
 
 
 def _round_call(args: list[str]) -> str:
@@ -2192,7 +2301,7 @@ _DIV_INT_FUNCS = frozenset({
     "length", "octet_length", "char_length", "character_length", "instr",
     "unicode", "count", "row_number", "rank", "dense_rank", "ntile",
     "changes", "total_changes", "random", "sign", "json_array_length",
-    "json_valid", "strftime_int",
+    "json_valid", "strftime_int", "filesql_text_int",
     # the Spark spelling the julianday builder emits (a julianday of a
     # julianday must read its base as REAL)
     "unix_micros",
@@ -2203,7 +2312,7 @@ _DIV_REAL_FUNCS = frozenset({
     "cos", "sin", "tan", "cosh", "sinh", "tanh", "degrees", "radians",
     "pi", "mod", "asinh", "acosh", "atanh",
     # nanvl: the r17 NaN→NULL emission around the math family
-    "nanvl",
+    "nanvl", "filesql_text_real",
 })
 _DIV_PASSTHRU_FUNCS = frozenset({
     "abs", "sum", "nullif", "likely", "unlikely",
@@ -2227,7 +2336,7 @@ _DIV_TEXT_FUNCS = frozenset({
     "upper", "lower", "trim", "ltrim", "rtrim", "replace", "hex",
     "quote", "char", "translate", "substr", "substring", "typeof",
     "printf", "format", "concat", "concat_ws", "group_concat",
-    "string_agg",
+    "string_agg", "filesql_substr",
 })
 
 # the optional [dDfF] suffix: this tracker also types expressions the
@@ -4628,8 +4737,8 @@ def _cmp_classify(span: str, coltypes):
         elif vcl == "strlit":
             vcl = "text"
         return aff, vcl
-    em = re.match(r"(?i)^exists\s*\(", core)
-    if em and _div_find_close(cm, em.end() - 1, len(core)) == len(core) - 1:
+    call = _whole_call(core)
+    if call and call[0] == "exists":
         # EXISTS is INTEGER 0/1 in SQLite (never NULL), boolean in
         # Spark: the 'bool' class routes it through an INT cast (r15)
         return None, "bool"
@@ -4656,11 +4765,8 @@ def _cmp_classify(span: str, coltypes):
     stripped = re.sub(r"^[+\-\s]+", "", core)
     if stripped and _NUM_LIT_RX.fullmatch(stripped):
         return None, "numlit"
-    cmm = re.match(r"(?i)^(?:try_)?cast\s*\(", core)
-    if cmm and core.endswith(")") and _div_find_close(
-        cm, cmm.end() - 1, len(core)
-    ) == len(core) - 1:
-        inner = low[cmm.end():-1]
+    if call and call[0] in ("cast", "try_cast"):
+        inner = call[1].lower()
         k = inner.rfind(" as ")
         target = inner[k + 4:].strip().split("(")[0].strip() if k != -1 \
             else ""
@@ -4675,18 +4781,9 @@ def _cmp_classify(span: str, coltypes):
             # Spark-typed user casts: boolean-valued (r15)
             return None, "bool"
         return "unk", "unk"  # BLOB / NUMERIC targets: out of scope
-    wm = re.match(r"(?i)^([a-z_][a-z0-9_]*)\s*\(", core)
-    if (
-        wm and core.endswith(")")
-        and wm.group(1).lower() in _CMP_TEXT_FUNCS
-        and _div_find_close(cm, wm.end() - 1, len(core)) == len(core) - 1
-    ):
+    if call and call[0] in _CMP_TEXT_FUNCS:
         return None, "text"  # text-RESULT function, no affinity
-    if (
-        wm and core.endswith(")")
-        and wm.group(1).lower() in _CMP_NUM_RESULT_FUNCS
-        and _div_find_close(cm, wm.end() - 1, len(core)) == len(core) - 1
-    ):
+    if call and call[0] in _CMP_NUM_RESULT_FUNCS:
         # numeric-RESULT call even over TEXT args: SQLite coerces the
         # arguments, so sum(s)/abs(s)/ceil(s) are NUMBERS — the
         # passthru tracker types them by the argument, which fed a
@@ -6944,17 +7041,13 @@ def _alias_shadow_types(
     Chained scopes (a CTE reading another CTE's alias) converge by
     fixpoint: bindings re-evaluate under the previous round's overrides,
     and anything still unstable after 3 rounds degrades to None. A name
-    in a CTE column list (`WITH c(n) AS (SELECT '7x')`) is rebound too,
-    and degrades to None."""
-    renamed = {
-        sql[a:b].strip().strip("`").lower(): None
-        for m in _CTE_COLUMNS_RX.finditer(mask)
-        for a, b in _div_split_args(mask, m.start(1), m.end(1))
-    }
+    in a CTE column list is rebound too (_cte_column_types)."""
+    renamed = _cte_column_types(sql, mask, coltypes)
     items = _derived_select_items(sql, mask)
     if not items:
         return renamed
     coltypes = {k: v for k, v in coltypes.items() if k not in renamed}
+    coltypes.update((k, v) for k, v in renamed.items() if v)
     throwaway: list = []
     result: dict[str, str | None] = {}
     merged = dict(coltypes)
@@ -6978,6 +7071,41 @@ def _alias_shadow_types(
             else:
                 merged[k] = v
     return {k: None for k in [*result, *renamed]}  # no fixpoint: untyped
+
+
+_SELECT_HEAD_RX = re.compile(r"(?i)\s*select\b(?:\s+(?:distinct|all)\b)?")
+_SELECT_LIST_END_RX = re.compile(
+    r"(?i)\b(?:from|where|group|having|order|limit|offset|window)\b"
+)
+_COMPOUND_RX = re.compile(r"(?i)\b(?:union|intersect|except)\b")
+
+
+def _cte_column_types(
+    sql: str, mask: str, coltypes: dict[str, str]
+) -> dict[str, str | None]:
+    """CTE column-list names (`WITH c(n) AS (SELECT '7x')`) → the type of
+    the item at the same position in the body's select list: 'int',
+    'real' or 'text', or None when that is undecidable (a compound or
+    non-SELECT body, an item count that differs, an untyped item, or
+    two lists that disagree)."""
+    out: dict[str, str | None] = {}
+    for m in _CTE_COLUMNS_RX.finditer(mask):
+        spans = _div_split_args(mask, m.start(1), m.end(1))
+        types: list = [None] * len(spans)
+        close = _div_find_close(mask, m.end() - 1, len(mask))
+        head = _SELECT_HEAD_RX.match(mask, m.end())
+        comp = _find_depth0(mask, _COMPOUND_RX, m.end()) if head else None
+        if head and close != -1 and not (comp and comp.start() < close):
+            end = _find_depth0(mask, _SELECT_LIST_END_RX, head.end())
+            stop = end.start() if end and end.start() < close else close
+            items = _div_split_args(mask, head.end(), stop)
+            if len(items) == len(spans):
+                types = [_div_walk(sql, mask, a, b, coltypes, []) for a, b in items]
+        for (a, b), t in zip(spans, types):
+            name = sql[a:b].strip().strip("`").lower()
+            t = t if t in ("int", "real", "text") else None
+            out[name] = t if out.get(name, t) == t else None
+    return out
 
 
 def _apply_shadow(
@@ -8193,4 +8321,4 @@ def rewrite(sql: str, column_types: dict[str, str] | None = None) -> str:
     sql = _rewrite_total_over(sql)  # before the call pass (r17)
     for name, fn in _CALL_REWRITES.items():
         sql = _rewrite_calls(sql, name, fn)
-    return sql
+    return _inline_session_calls(sql)

@@ -447,7 +447,7 @@ _EACH_SCHEMA = (
 
 _REGISTERED_FLAG = "filesql.internal.json1.registered"
 # bump when the UDF set changes so long-lived sessions re-register
-_REGISTERED_GEN = "3"  # 3: + filesql_quote_double (r14)
+_REGISTERED_GEN = "4"  # 4: + the dialect's session SQL functions
 
 
 # -------------------------------------------------------- -> / ->> ops
@@ -606,9 +606,10 @@ def timediff_text(a, b):
 
 
 def register_udfs(spark) -> None:
-    """Register the json1 session UDFs (idempotent per SparkSession).
-    Both are Arrow-batched pandas UDFs — the per-row Python work is the
-    unavoidable JSON tree edit; transfer stays vectorized.
+    """Register the json1 session UDFs and the dialect's session SQL
+    functions (idempotent per SparkSession). The UDFs are Arrow-batched
+    pandas UDFs — the per-row Python work is the unavoidable JSON tree
+    edit; transfer stays vectorized.
 
     Idempotency rides a session conf tag, NOT ``id(spark)``: after a
     stopped session is garbage-collected, a new one can reuse the same
@@ -705,4 +706,8 @@ def register_udfs(spark) -> None:
     spark.udf.register("filesql_timediff", pandas_udf(_timediff_fn, "string"))
     spark.udf.register("filesql_json_arrow", pandas_udf(_arrow_fn, "string"))
     spark.udf.register("filesql_json_type", pandas_udf(_jtype_fn, "string"))
+    from filesql_spark.dialect import session_functions
+
+    for ddl in session_functions():
+        spark.sql(ddl)
     spark.conf.set(_REGISTERED_FLAG, _REGISTERED_GEN)

@@ -1119,7 +1119,9 @@ def recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT CAST(n AS BIGINT) AS n, CAST(total AS BIGINT) AS total FROM seq
     """
     from filesql_spark import dialect
+    from filesql_spark.json1 import register_udfs
 
+    register_udfs(spark)  # the CASTs call the dialect's session functions
     return run_recursive(spark, sql, dialect.rewrite)
 
 

@@ -17,7 +17,12 @@ SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
+    from filesql_spark.json1 import register_udfs
+
     spark = get_spark(app_name="filesql_spark_tests")
+    # dialect.rewrite() output calls the session functions an engine
+    # registers; tests that run it on the bare session need them too
+    register_udfs(spark)
     yield spark
 
 

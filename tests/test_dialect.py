@@ -1377,3 +1377,171 @@ def test_cte_column_list_rebinds_catalog_types(nested_db):
     q = "WITH c(n) AS (SELECT '7x') SELECT CAST(n AS INTEGER), CAST(n AS REAL) FROM c"
     want = con.execute(q).fetchall()
     assert [tuple(r) for r in eng.query(q).collect()] == want == [(7, 7.0)]
+
+
+# ------------------- session functions: each operand bound once, vs sqlite3
+
+# A seeded random-statement find (CHANGES.md): before the session
+# functions it took 26.4 s to rewrite and grew to 5,962,289 characters.
+_FOUND_STMT = (
+    "SELECT t.s / x <> '1e2' IS NOT TRUE, `m` / (SELECT s - '7' == m / \"s\" "
+    "FROM t WHERE 1 % '1e2' - 0x1F / s) IS 'abc', substr((x >= TRUE != "
+    "'abc' >> '1e2') & 0x1F, m + '1e2' IS NOT `m`) % x != x FROM t WHERE "
+    "t.n << (0x1F > n) | `m` - TRUE"
+)
+_FOUND_TYPES = {
+    "n": "int", "m": "int", "id": "int", "s": "text", "doc": "text", "x": "real",
+}
+
+
+def test_found_statement_rewrites_small_and_fast():
+    import time
+
+    t0 = time.perf_counter()
+    out = rewrite(_FOUND_STMT, _FOUND_TYPES)
+    assert time.perf_counter() - t0 < 1.0
+    assert len(out) <= 5000, len(out)
+
+
+def _nest(depth, inner, wrap):
+    for _ in range(depth):
+        inner = wrap.format(inner)
+    return inner
+
+
+@pytest.mark.parametrize("wrap", [
+    "substr({}, 2, n)",
+    "substr({}, n)",
+    "CAST({} AS INTEGER)",
+    "CAST({} AS REAL)",
+])
+@pytest.mark.parametrize("base", ["w", "json_extract(doc, '$.a')"])
+def test_nested_calls_bind_their_operand_once(wrap, base):
+    """A non-literal substr and a CAST of a STRING operand call a session
+    function, so each nesting level adds a constant number of characters
+    (the templates copied the operand: ~20x per substr level, 5x per
+    dispatched CAST)."""
+    types = {"n": "int", "w": "text", "doc": "text"}
+    for depth in range(1, 7):
+        sql = f"SELECT {_nest(depth, base, wrap)} FROM t"
+        grown = len(rewrite(sql, types)) - len(sql)
+        assert grown <= 20 + 10 * depth, (depth, grown)
+
+
+def test_depth3_substr_stays_within_10x():
+    sql = "SELECT substr(substr(substr(w, 2, n), 2, n), 2, n) FROM t"
+    assert len(rewrite(sql, {"n": "int", "w": "text"})) <= 10 * len(sql)
+
+
+_BIND_S = ["12abc", "  -3.5e1x", "abc", "0x1F", "+7", "-", ".5", None, "1e2"]
+_BIND_DOC = ['{"a":"7.5x","b":3}', '{"a":" 12","b":-2.5}', '{"a":null}', '{"b":"x"}']
+
+
+@pytest.fixture(scope="module")
+def bind_db(spark, tmp_path_factory):
+    """Table t in stdlib sqlite3 and in an engine over a CSV: every
+    (n, m) start/length pair in [-8, 8] x [-6, 6] over two strings, plus
+    TEXT and JSON columns for the numeric casts."""
+    import csv
+    import itertools
+    import sqlite3
+
+    import filesql_spark as fs
+
+    rows = [
+        (i, n, m, "abcdef" if i % 3 else "héllo wörld",
+         _BIND_S[i % len(_BIND_S)], _BIND_DOC[i % len(_BIND_DOC)], (i % 7) - 2.5)
+        for i, (n, m) in enumerate(itertools.product(range(-8, 9), range(-6, 7)))
+    ]
+    cols = ["id", "n", "m", "w", "s", "doc", "x"]
+    con = sqlite3.connect(":memory:")
+    con.execute(
+        "CREATE TABLE t (id INTEGER, n INTEGER, m INTEGER, w TEXT, s TEXT, "
+        "doc TEXT, x REAL)"
+    )
+    con.executemany("INSERT INTO t VALUES (?, ?, ?, ?, ?, ?, ?)", rows)
+    path = tmp_path_factory.mktemp("bind") / "t.csv"
+    with open(path, "w", newline="") as fh:
+        out = csv.writer(fh)
+        out.writerow(cols)
+        out.writerows(rows)
+    eng = fs.open(str(path), spark=spark)
+    yield con, eng
+    eng.close()
+    con.close()
+
+
+@pytest.mark.parametrize("expr", [
+    "substr(w, n, m)",
+    "substr(w, n)",
+    "substr(w, n * 5)",
+    "substr(w, nullif(n, 3), m)",
+    "substr(w, 2, m)",
+    "substr(w, n, -2)",
+    "substr(substr(w, n, m), n, m)",
+    "substr(substr(substr(w, m), n, m), n)",
+    "substr(substr(substr(substr(w, n, m), n, m), n, m), n, m)",
+    "substr(x'41424344', n, m)",
+    "CAST('12abc' AS INTEGER) + CAST('  -3.5e1x' AS REAL) + n",
+    "CAST('99999999999999999999' AS INTEGER)",
+    "CAST(s AS INTEGER)",
+    "CAST(s AS REAL)",
+    "CAST(CAST(s AS REAL) AS INTEGER)",
+    "CAST(json_extract(doc, '$.a') AS INTEGER)",
+    "CAST(json_extract(doc, '$.a') AS REAL)",
+    "CAST(substr(s, n, 4) AS INTEGER)",
+    "CAST(substr(s, 1, m) AS REAL)",
+    "CAST(n > m AS INTEGER)",
+    "CAST(x'3132' AS INTEGER) + CAST(x'2D2E3578' AS REAL)",
+])
+def test_session_functions_match_sqlite(bind_db, expr):
+    want, got = _nested_rows(bind_db, expr)
+    assert got == want, (expr, [(w, g) for w, g in zip(want, got) if w != g][:5])
+
+
+@pytest.mark.parametrize("q", [
+    "SELECT sum(s), avg(s), CAST(sum(s) AS TEXT) FROM t",
+    "SELECT n % 3 AS g, sum(s), avg(s) FROM t GROUP BY g ORDER BY g",
+    # Spark takes no SQL function in ORDER BY, VALUES or LATERAL VIEW,
+    # and one over an aggregate unfolds round's scale: there the calls
+    # expand to their bodies
+    "SELECT id FROM t ORDER BY substr(w, n, m), CAST(s AS INTEGER) DESC, id",
+    "SELECT id FROM (SELECT id, s FROM t ORDER BY CAST(s AS REAL), id "
+    "LIMIT 9) ORDER BY NOT s, id",
+    "SELECT m, round(CAST(max(s) AS REAL), 2), round(CAST(sum(x) AS REAL) "
+    "/ count(*), 2), round(avg(s), 2) FROM t GROUP BY m ORDER BY m",
+    "SELECT * FROM (VALUES (CAST('7x' AS INTEGER), substr('abcdef', length('ab'))))",
+    "SELECT t.id, key FROM t, json_each(substr(doc, 1 + 0 * n)) "
+    "ORDER BY t.id, key",
+])
+def test_session_calls_in_every_clause_match_sqlite(bind_db, q):
+    con, eng = bind_db
+
+    def norm(r):
+        return tuple(round(v, 6) if isinstance(v, float) else v for v in r)
+
+    want = [norm(r) for r in con.execute(q).fetchall()]
+    assert [norm(r) for r in eng.query(q).collect()] == want
+
+
+def test_cte_column_list_types_from_body(nested_db):
+    """A CTE column-list name takes the type of the body's item at its
+    position: `n` is TEXT here, so `/` coerces its numeric prefix."""
+    con, eng = nested_db
+    q = "WITH c(n) AS (SELECT '7x') SELECT n / 2 AS v FROM c"
+    want = con.execute(q).fetchall()
+    assert [tuple(r) for r in eng.query(q).collect()] == want == [(3,)]
+
+
+def test_json_array_length_malformed_raises_like_sqlite(nested_db):
+    import sqlite3
+
+    con, eng = nested_db
+    for q in (
+        "SELECT json_array_length('not json')",
+        "SELECT json_array_length('not json', '$.tags')",
+    ):
+        with pytest.raises(sqlite3.OperationalError, match="malformed JSON"):
+            con.execute(q).fetchall()
+        with pytest.raises(Exception, match="malformed JSON"):
+            eng.query(q).collect()

@@ -311,7 +311,6 @@ def test_json_family_through_engine(spark, tmp_path):
         "id,props\n"
         '1,"{""kind"": ""a"", ""tags"": [1, 2, 3]}"\n'
         '2,"{""kind"": ""b"", ""tags"": []}"\n'
-        "3,not json\n"
     )
     with fs.open(str(tmp_path / "cfg.csv"), spark=spark) as eng:
         rows = eng.query(
@@ -322,8 +321,29 @@ def test_json_family_through_engine(spark, tmp_path):
         assert [(r.id, r.kind, r.n_tags, r.ok) for r in rows] == [
             (1, "a", 3, 1),
             (2, "b", 0, 1),
-            (3, None, None, 0),
         ]
+
+
+def test_json_family_malformed_row_through_engine(spark, tmp_path):
+    """A malformed JSON row: json_valid reads it as 0, and
+    json_array_length raises 'malformed JSON' for the whole query, as
+    sqlite3 does."""
+    import sqlite3
+
+    (tmp_path / "cfg.csv").write_text("id,props\n3,not json\n")
+    con = sqlite3.connect(":memory:")
+    con.execute("CREATE TABLE cfg (id INTEGER, props TEXT)")
+    con.execute("INSERT INTO cfg VALUES (3, 'not json')")
+    valid = "SELECT id, json_valid(props) AS ok FROM cfg"
+    length = "SELECT json_array_length(props, '$.tags') AS n_tags FROM cfg"
+    with fs.open(str(tmp_path / "cfg.csv"), spark=spark) as eng:
+        assert [tuple(r) for r in eng.query(valid).collect()] == \
+            con.execute(valid).fetchall() == [(3, 0)]
+        with pytest.raises(sqlite3.OperationalError, match="malformed JSON"):
+            con.execute(length).fetchall()
+        with pytest.raises(Exception, match="malformed JSON"):
+            eng.query(length).collect()
+    con.close()
 
 
 # ------------------------------------------------------------------

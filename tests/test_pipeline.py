@@ -522,3 +522,53 @@ def test_trained_operators_fit_fewer_rows_than_k(spark, op, n_rows):
         books = pq_fit(df)
         assert len(books) == PQ_M and all(len(b) == n for b in books)
         assert pq_encode(df, books).count() == n
+
+
+def _random_vectors(spark, n):
+    import random
+
+    rng = random.Random(7)
+    return spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(n)],
+        "vec_id long, embedding array<float>",
+    )
+
+
+@pytest.mark.parametrize("n_rows", ["zero", "one", "k_minus_1"])
+def test_ivf_index_fits_fewer_rows_than_k(spark, n_rows):
+    """An IVF index over 0, 1 or k-1 rows (k = the smallest cell count)
+    has at most one cell per row, assigns every row to one of its cells,
+    and serves top-k without the query row itself."""
+    from filesql_spark.pipeline.similarity import IVF_MIN_K_BITS, ivf_index, ivf_topk
+
+    n = {"zero": 0, "one": 1, "k_minus_1": (1 << IVF_MIN_K_BITS) - 1}[n_rows]
+    df = _random_vectors(spark, n)
+    index = ivf_index(df)
+    cids = {r.cid for r in index.cents.collect()}
+    assert len(cids) <= n
+    assert sorted(r.vec_id for r in index.corpus.collect()) == list(range(n))
+    assert {r.cid for r in index.corpus.collect()} <= cids
+    top = ivf_topk(index, df, k=5).collect()
+    assert all(r.q_id != r.vec_id for r in top)
+    per_query = {}
+    for r in top:
+        per_query[r.q_id] = per_query.get(r.q_id, 0) + 1
+    assert all(c <= min(5, n - 1) for c in per_query.values())
+
+
+@pytest.mark.parametrize("n_rows", ["zero", "one", "k_minus_1"])
+def test_diversity_sample_fits_fewer_rows_than_k(spark, tmp_path, n_rows):
+    """pipeline_diversity_sample (k-means fit, then a 2-per-cluster
+    quota) over fewer embeddings than k: one centroid per row, so every
+    row is sampled."""
+    from filesql_spark.pipeline.clustering import KMEANS_K
+    from filesql_spark.queries.pipeline_queries import (
+        ensure_diversity_centroids,
+        pipeline_diversity_sample,
+    )
+
+    n = {"zero": 0, "one": 1, "k_minus_1": KMEANS_K - 1}[n_rows]
+    _random_vectors(spark, n).write.parquet(str(tmp_path / "embeddings.parquet"))
+    sample = pipeline_diversity_sample(spark, str(tmp_path)).collect()
+    assert len(ensure_diversity_centroids(spark, str(tmp_path))) == n
+    assert sorted(r.vec_id for r in sample) == list(range(n))

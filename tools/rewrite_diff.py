@@ -14,8 +14,9 @@ Each statement is rewritten twice, with no column types and with one
 typed map, by ``filesql_spark.dialect`` imported from this tree and from
 PARENT_TREE (each in its own interpreter). An error counts as an output:
 its class name and message must match too. Prints the pair count, the
-total rewrite time of each tree and the first N differences; exits 1 on
-any difference.
+total rewrite time of each tree, the 10 largest output/input length
+ratios of each tree (a rewrite that blows up shows there) and the first
+N differences; exits 1 on any difference.
 """
 
 from __future__ import annotations
@@ -145,6 +146,15 @@ def main(argv=None) -> int:
     print(f"pairs: {len(pairs)}  differences: {len(diffs)}")
     print(f"rewrite seconds: parent {base['seconds']:.2f}  "
           f"this tree {head['seconds']:.2f}")
+    for label, res in (("parent", base), ("this tree", head)):
+        ratios = sorted((
+            (len(out) / max(len(sql), 1), len(sql), len(out), sql)
+            for (sql, _types), (kind, out) in zip(pairs, res["results"])
+            if kind == "ok"
+        ), reverse=True)[:10]
+        print(f"largest output/input ratios, {label}:")
+        for ratio, n_in, n_out, sql in ratios:
+            print(f"  {ratio:8.1f}x  {n_in} -> {n_out} chars  {sql[:80]!r}")
     for (sql, types), a, b in diffs[:args.show]:
         print("---", "typed" if types else "untyped", repr(sql[:300]))
         print("  parent:", repr(a[1][:300]))
