@@ -35,6 +35,13 @@ The pass contract: a pass changes the statement in one of two ways.
   statement and its mask and resumes at the start of the depth-0 clause
   item that holds the splice, never at position 0.
 
+The grouping rule: SQLite's operator precedence (parse.y) is written down
+once, in ``_PRECEDENCE``. Every operator pass finds an operator's operands
+with the one walker on that table, ``_operand_start`` / ``_operand_end``,
+so each groups a statement as SQLite does before Catalyst sees it; what a
+pass declines (a chained comparison, an operand it would have to copy)
+is its own check on the span the walker returns.
+
 The call rewrites (``_rewrite_calls``, ``_rewrite_json_tvf``) scan forward
 past each replacement instead, splicing statement and mask the same way
 (``_splice``). Replacement text must close every quote it opens: a splice
@@ -56,15 +63,17 @@ The binding rule: a template that reads an operand more than once is the
 body of a session SQL function (``session_functions``, registered once
 per SparkSession by ``json1.register_udfs``), and the site calls it, so
 Spark binds each operand once and nested calls grow linearly. Today that
-covers substr with a non-literal start or length (``filesql_substr``)
-and SQLite's TEXT → INTEGER / REAL prefix parse (``filesql_text_int``,
-``filesql_text_real``). Parameters are typed and SQLite values are not,
-so the static type dispatch stays here (``_spark_type``): it picks the
+covers substr with a non-literal start or length (``filesql_substr``),
+SQLite's TEXT → INTEGER / REAL prefix parse (``filesql_text_int``,
+``filesql_text_real``), INTEGER over a REAL operand
+(``filesql_real_int``) and shifts by a non-literal count (``filesql_shl``,
+``filesql_shr``). Parameters are typed and SQLite values are not, so the
+static type dispatch stays here (``_spark_type``): it picks the
 function, a plain CAST, or an inline typeof dispatch for an operand of
 unknown Spark type. Where Spark takes no SQL function (ORDER BY, VALUES,
 LATERAL VIEW, a call over an aggregate), ``_inline_session_calls``
 expands the call to its body, which copies its operands. Other templates
-(value-dependent division, bitwise operators, scalar min/max guards)
+(value-dependent division, comparison affinity, scalar min/max guards)
 still copy their operands.
 """
 
@@ -1786,9 +1795,9 @@ def _cast_call(args: list[str]) -> str | None:
         return None
     t = _spark_type(expr)
     if t in ("int", "bool") or (t == "real" and to == "DOUBLE"):
-        # a plain cast (INTEGER over real keeps the dispatch, which
-        # saturates)
         return f"CAST(({expr}) AS {to})"
+    if t == "real":  # INTEGER over REAL saturates
+        return f"filesql_real_int({expr})"
     if t in ("string", "binary"):  # SQLite reads a BLOB as its text
         return f"{_TEXT_NUM_FN[to]}({expr})"
     return _cast_dispatch(expr, to)
@@ -1824,19 +1833,24 @@ def _text_num(s: str, to: str) -> str:
     return f"CASE WHEN {s} IS NULL THEN NULL ELSE {num} END"
 
 
+def _saturating_int(e: str) -> str:
+    """SQLite's CAST of a non-NULL number ``e`` to INTEGER: it clamps by
+    sign on overflow where an ANSI cast would raise."""
+    return (
+        f"nvl(try_cast({e} AS BIGINT), "
+        f"CASE WHEN {e} > 0 THEN {_INT64_MAX} ELSE {_INT64_MIN} END)"
+    )
+
+
 def _cast_dispatch(expr: str, to: str) -> str:
     """SQLite's CAST(expr AS INTEGER|REAL) in Spark (``to`` is BIGINT or
     DOUBLE) for an operand whose Spark type is not known statically: a
     typeof dispatch (folded at analysis) whose string arm calls the
-    session function. Numeric inputs to INTEGER clamp by sign on
-    overflow (SQLite saturates where an ANSI cast would raise). Spelled
-    as a CAST to ``to`` so _spark_type reads it as numeric."""
+    session function. Spelled as a CAST to ``to`` so _spark_type reads
+    it as numeric."""
     e = f"({expr})"
     if to == "BIGINT":
-        num = (
-            f"nvl(try_cast({e} AS BIGINT), "
-            f"CASE WHEN {e} > 0 THEN {_INT64_MAX} ELSE {_INT64_MIN} END)"
-        )
+        num = _saturating_int(e)
         guard = f"WHEN {e} IS NULL THEN NULL "
     else:
         num, guard = f"CAST({e} AS DOUBLE)", ""
@@ -1866,6 +1880,7 @@ def _whole_call(e: str) -> tuple[str, str] | None:
 # calls whose Spark result type _cmp_classify does not report
 _SPARK_CALL_TYPE = {
     "filesql_text_int": "int", "filesql_text_real": "real",
+    "filesql_real_int": "int", "filesql_shl": "int", "filesql_shr": "int",
     "get_json_object": "string", "filesql_substr": "string",
     "zeroblob": "binary", "randomblob": "binary",
 }
@@ -1989,6 +2004,24 @@ def _substr_staged(s: str, y: str, z: str) -> str:
     )
 
 
+def _shift(op: str, a: str, n: str) -> str:
+    """SQLite's `a << n` / `a >> n` (vdbe.c OP_ShiftLeft): a negative
+    count shifts the other way and |n| >= 64 gives the sign fill, where
+    Java/Spark wrap the count mod 64. The body of the session functions
+    filesql_shl / filesql_shr."""
+    fill = f"shiftright({a}, 63)"
+    fwd, rev, big, neg_big = (
+        ("shiftleft", "shiftright", "0L", fill) if op == "<<"
+        else ("shiftright", "shiftleft", fill, "0L")
+    )
+    return (
+        f"CASE WHEN {a} IS NULL OR {n} IS NULL THEN NULL "
+        f"WHEN {n} >= 64 THEN {big} WHEN {n} <= -64 THEN {neg_big} "
+        f"WHEN {n} < 0 THEN {rev}({a}, CAST(-{n} AS INT)) "
+        f"ELSE {fwd}({a}, CAST({n} AS INT)) END"
+    )
+
+
 # The session SQL functions: name → (parameters, result type, body
 # template). Each body is its template applied to the parameter names.
 _SESSION_FUNCTIONS = {
@@ -1998,6 +2031,12 @@ _SESSION_FUNCTIONS = {
         ["s STRING", "y BIGINT", f"z BIGINT DEFAULT {_SQLITE_MAX_LENGTH}"],
         "STRING", _substr_staged,
     ),
+    "filesql_real_int": (
+        ["x DOUBLE"], "BIGINT",
+        lambda x: f"CASE WHEN {x} IS NULL THEN NULL ELSE {_saturating_int(x)} END",
+    ),
+    "filesql_shl": (["a BIGINT", "n BIGINT"], "BIGINT", lambda a, n: _shift("<<", a, n)),
+    "filesql_shr": (["a BIGINT", "n BIGINT"], "BIGINT", lambda a, n: _shift(">>", a, n)),
 }
 
 
@@ -2301,7 +2340,8 @@ _DIV_INT_FUNCS = frozenset({
     "length", "octet_length", "char_length", "character_length", "instr",
     "unicode", "count", "row_number", "rank", "dense_rank", "ntile",
     "changes", "total_changes", "random", "sign", "json_array_length",
-    "json_valid", "strftime_int", "filesql_text_int",
+    "json_valid", "strftime_int", "filesql_text_int", "filesql_real_int",
+    "filesql_shl", "filesql_shr",
     # the Spark spelling the julianday builder emits (a julianday of a
     # julianday must read its base as REAL)
     "unix_micros",
@@ -2605,6 +2645,9 @@ def _div_scan_case(sql, mask, pos, end, coltypes, edits):
 
 
 _CASE_WORD_RX = re.compile(r"(?i)\bcase\b")
+# a COLLATE clause that ends a span (a match implies depth 0: a
+# paren-nested COLLATE is followed by its closing ')')
+_COLLATE_TAIL_RX = re.compile(r"(?i)\bcollate\s+[A-Za-z_][A-Za-z0-9_]*\s*$")
 # tokens whose depth-0 presence makes a WHEN condition already boolean
 _BOOL_CTX_WORDS = frozenset({
     "is", "in", "like", "glob", "regexp", "match", "exists",
@@ -2705,15 +2748,12 @@ def _cond_truthy_edits(sql, mask, low, a, b, edits) -> None:
     # changes the value, only text comparison order) and breaks the
     # prefix-parse's typeof()='string' guard (typeof of a collated
     # Spark string is not 'string') — trim it from the operand (r16).
-    # A match implies depth 0: a paren-nested COLLATE is followed by
-    # its closing ')' before b.
     trail = b
     while True:
-        tm = re.search(r"(?i)\bcollate\s+[A-Za-z_][A-Za-z0-9_]*\s*$",
-                       mask[a:b])
+        tm = _COLLATE_TAIL_RX.search(mask, a, b)
         if not tm:
             break
-        b = a + tm.start()
+        b = tm.start()
         while b > a and mask[b - 1] in " \t\r\n":
             b -= 1
     if a >= b:
@@ -2756,47 +2796,6 @@ _NOT_SKIP_NEXT = frozenset({
     "in", "like", "glob", "regexp", "match", "between", "null",
     "exists", "indexed", "deferrable",
 })
-_NOT_STOP_WORDS = frozenset({
-    "as", "from", "where", "group", "order", "limit", "having", "then",
-    "else", "end", "when", "and", "or", "union", "intersect", "except",
-    "offset", "on", "join", "inner", "left", "right", "full", "cross",
-    "natural", "using", "window", "returning", "set", "values",
-    # ORDER BY modifiers + COLLATE bind outside the NOT operand:
-    # `ORDER BY NOT s DESC` is `(NOT s) DESC`, not NOT (s DESC)
-    "asc", "desc", "nulls", "collate",
-})
-
-
-def _not_operand_end(sql, mask, low, j) -> int:
-    depth = 0
-    i = j
-    while i < len(sql):
-        c = mask[i]
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            if depth == 0:
-                break
-            depth -= 1
-        elif depth == 0:
-            if c in ",;":
-                break
-            w = _WORD_RX.match(mask, i)
-            if w:
-                word = low[i:w.end()]
-                if word == "case":
-                    marks = _case_marks(sql, mask, i, len(sql))
-                    if marks is None:
-                        return j
-                    i = marks[-1][0] + 3
-                    continue
-                if word in _NOT_STOP_WORDS:
-                    break
-                i = w.end()
-                continue
-        i += 1
-    return i
-
 
 _UNARY_CTX_WORDS = frozenset({
     "select", "when", "then", "else", "and", "or", "not", "where",
@@ -2806,7 +2805,7 @@ _UNARY_CTX_WORDS = frozenset({
 })
 
 
-def _is_unary_sign(sql, mask, low, k) -> bool:
+def _is_unary_sign(mask, k) -> bool:
     """True when the +/- at ``k`` is UNARY: nothing but an operator,
     an opener, or an expression-starting keyword precedes it."""
     k2 = k - 1
@@ -2818,8 +2817,276 @@ def _is_unary_sign(sql, mask, low, k) -> bool:
         ws = k2
         while ws >= 0 and (mask[ws].isalnum() or mask[ws] == "_"):
             ws -= 1
-        return low[ws + 1:k2 + 1] in _UNARY_CTX_WORDS
+        return mask[ws + 1:k2 + 1].lower() in _UNARY_CTX_WORDS
     return False
+
+
+# SQLite's operator precedence (parse.y), loosest first: the one
+# grouping rule of the operator passes. They find an operator's operands
+# with _operand_start / _operand_end, which read this table, so every
+# pass groups a statement as SQLite does before Catalyst sees it. `div`
+# is the division pass's own integer-division emission (multiplicative
+# in Spark too) and `->` stands for both JSON arrows.
+_PRECEDENCE = (
+    ("or",),
+    ("and",),
+    ("not",),
+    ("is", "match", "like", "glob", "regexp", "between", "in", "isnull",
+     "notnull", "!=", "<>", "=", "=="),
+    ("<", "<=", ">", ">="),
+    ("escape",),
+    ("&", "|", "<<", ">>"),
+    ("+", "-"),
+    ("*", "/", "%", "div"),
+    ("||", "->"),
+    ("collate",),
+    ("~",),  # unary, like + and -: tighter than every binary operator
+)
+_LEVEL = {op: lvl for lvl, ops in enumerate(_PRECEDENCE) for op in ops}
+_NOT, _EQ, _ESCAPE, _BIT, _ADD, _MUL, _CONCAT = (
+    _LEVEL[op] for op in ("not", "=", "escape", "&", "+", "*", "||")
+)
+# binary operator spellings → their table entry (<=> is the null-safe
+# equality the IS pass emits)
+_SYMBOL_OPS = {
+    op: op for ops in _PRECEDENCE[:-1] for op in ops if not op.isalpha()
+}
+_SYMBOL_OPS.update({"<=>": "=", "->>": "->"})
+# words that take a NOT in front of them as one operator
+_NOT_OPS = frozenset({"like", "glob", "regexp", "match", "in", "between"})
+
+
+def _skip_ws_back(mask: str, e: int) -> int:
+    while e > 0 and mask[e - 1] in " \t\r\n":
+        e -= 1
+    return e
+
+
+def _word_before(mask, pos):
+    """(lowercased word, start) of the word ending before ``pos`` (past
+    whitespace), or None."""
+    end = ws = _skip_ws_back(mask, pos)
+    while ws > 0 and (mask[ws - 1].isalnum() or mask[ws - 1] == "_"):
+        ws -= 1
+    return (mask[ws:end].lower(), ws) if ws < end else None
+
+
+def _op_after(mask, j):
+    """(table entry, end) of the binary or postfix operator that starts at
+    ``j``, or None. A word operator spans its companions: `NOT LIKE`,
+    `IS NOT DISTINCT FROM`; `NOT NULL` is the postfix NOTNULL."""
+    for n in (3, 2, 1):
+        op = _SYMBOL_OPS.get(mask[j:j + n])
+        if op:
+            return op, j + n
+    w = _WORD_RX.match(mask, j)
+    if w is None:
+        return None
+    word, end = w.group().lower(), w.end()
+    if word == "not":
+        w2 = _WORD_RX.match(mask, _skip_ws(mask, end))
+        nxt = w2.group().lower() if w2 else ""
+        if nxt == "null":
+            return "notnull", w2.end()
+        if nxt in _NOT_OPS:
+            return nxt, w2.end()
+    elif word == "is":
+        for follow in ("not", "distinct", "from"):
+            w2 = _WORD_RX.match(mask, _skip_ws(mask, end))
+            if w2 and w2.group().lower() == follow:
+                end = w2.end()
+    return (word, end) if word in _LEVEL else None
+
+
+def _between_start(sql, mask, e):
+    """Start of the `[NOT] BETWEEN` keyword right before the operand that
+    ends at ``e``, or None: an AND there is BETWEEN's, not a logical one.
+    The operand crosses only operators tighter than BETWEEN, never an
+    earlier AND, so a run of ANDs is not walked again for each one."""
+    p = _rev_operand(sql, mask, e)
+    while p is not None:
+        w = _word_before(mask, p)
+        if w and w[0] == "between":
+            nw = _word_before(mask, w[1])
+            return nw[1] if nw and nw[0] == "not" else w[1]
+        k = _skip_ws_back(mask, p) - 1
+        if k < 0 or w and w[0] == "and":
+            return None
+        op = _op_before(sql, mask, k)
+        if op is None or _LEVEL[op[0]] <= _EQ:
+            return None
+        p = _rev_operand(sql, mask, _skip_ws_back(mask, op[1]))
+    return None
+
+
+def _op_before(sql, mask, k):
+    """(table entry, start) of the binary operator whose last character
+    is at ``k``, or None; a prefix NOT is not one. An AND is BETWEEN's
+    when the BETWEEN keyword precedes the operand before it: the entry is
+    then 'between', starting at that keyword."""
+    for n in (3, 2, 1):
+        if k - n + 1 >= 0 and mask[k - n + 1:k + 1] in _SYMBOL_OPS:
+            return _SYMBOL_OPS[mask[k - n + 1:k + 1]], k - n + 1
+    if not (mask[k].isalnum() or mask[k] == "_"):
+        return None
+    ws = k
+    while ws > 0 and (mask[ws - 1].isalnum() or mask[ws - 1] == "_"):
+        ws -= 1
+    word, prev = mask[ws:k + 1].lower(), _word_before(mask, ws)
+    if word == "and":
+        b = _between_start(sql, mask, _skip_ws_back(mask, ws))
+        if b is not None:
+            return "between", b
+    elif word == "not":  # IS NOT; any other NOT is a prefix
+        return ("is", prev[1]) if prev and prev[0] == "is" else None
+    elif word == "from":  # IS [NOT] DISTINCT FROM
+        if prev and prev[0] == "distinct":
+            prev = _word_before(mask, prev[1])
+            if prev and prev[0] == "not":
+                prev = _word_before(mask, prev[1])
+            if prev and prev[0] == "is":
+                return "is", prev[1]
+        return None
+    elif word in _NOT_OPS and prev and prev[0] == "not":
+        return word, prev[1]
+    if word in ("isnull", "notnull") or word not in _LEVEL:
+        return None  # a postfix operator ends an operand, never precedes one
+    return word, ws
+
+
+def _rev_operand(sql, mask, e):
+    """Start of the primary that ends at ``e`` with its prefix operators
+    (unary signs, ~, EXISTS), or None when unscannable."""
+    p = _rev_primary_start(sql, mask, e)
+    while p is not None:
+        k = _skip_ws_back(mask, p) - 1
+        if k >= 0 and (mask[k] == "~" or mask[k] in "+-" and _is_unary_sign(mask, k)):
+            p = k
+            continue
+        word = _word_before(mask, p)
+        if not (mask[p] == "(" and word and word[0] == "exists"):
+            return p
+        p = word[1]
+    return None
+
+
+def _operand_start(sql, mask, e, level):
+    """Start of the operand that ends at ``e`` (exclusive, past any
+    whitespace) of an operator at precedence ``level``. It crosses every
+    operator that binds tighter and, SQLite's binary operators being
+    left-associative, those at ``level`` too. None where the text cannot
+    be scanned."""
+    start = _rev_operand(sql, mask, e)
+    while start is not None:
+        k = _skip_ws_back(mask, start) - 1
+        op = _op_before(sql, mask, k) if k >= 0 else None
+        if op is None or _LEVEL[op[0]] < level:
+            return start
+        start = _rev_operand(sql, mask, _skip_ws_back(mask, op[1]))
+    return None
+
+
+def _operand_end(sql, mask, pos, level):
+    """End (exclusive) of the operand that starts at ``pos`` (or past the
+    whitespace after it) of an operator at precedence ``level``: it
+    crosses every operator that binds tighter. None where the text
+    cannot be scanned."""
+    j = _skip_ws(mask, pos)
+    w = _WORD_RX.match(mask, j)
+    word = w.group().lower() if w else ""
+    if word == "not" and level <= _NOT:  # prefix NOT, right-associative
+        end = _operand_end(sql, mask, w.end(), _NOT)
+    elif word == "exists":
+        p = _skip_ws(mask, w.end())
+        close = _div_find_close(mask, p, len(sql)) if mask[p:p + 1] == "(" else -1
+        end = close + 1 if close != -1 else None
+    else:
+        _first, end, t = _div_scan_primary(sql, mask, j, len(sql), None, [])
+        if t == "kw" or end <= j:
+            end = None
+    while end is not None:
+        op = _op_after(mask, _skip_ws(mask, end))
+        if op is None or _LEVEL[op[0]] <= level:
+            return end
+        key, end = op
+        if key == "between":
+            end = _operand_end(sql, mask, end, _EQ)
+            w = None if end is None else _WORD_RX.match(mask, _skip_ws(mask, end))
+            if not (w and w.group().lower() == "and"):
+                return None
+            end = w.end()
+        if key not in ("isnull", "notnull"):  # postfix: no right operand
+            end = _operand_end(sql, mask, end, _LEVEL[key])
+    return None
+
+
+def _loosest_level(text, mask):
+    """Precedence level of the loosest depth-0 operator of ``text`` (its
+    scan mask is ``mask``), None when there is none. A + - * / % with no
+    operand before it is a sign or a star, not an operator."""
+    loosest, depth, between, after = None, 0, 0, False
+    i = 0
+    while i < len(mask):
+        c = mask[i]
+        if c in "()":
+            depth += 1 if c == "(" else -1
+            after = True
+            i += 1
+            continue
+        if depth or c in " \t\r\n":
+            i += 1
+            continue
+        w = _WORD_RX.match(mask, i)
+        if w and w.group().lower() == "case":
+            marks = _case_marks(text, mask, i, len(mask))
+            if marks is None:
+                break
+            i, after = marks[-1][0] + 3, True
+            continue
+        op = _op_after(mask, i)
+        if op is None:  # an operand's token
+            after, i = True, (w.end() if w else i + 1)
+            continue
+        key, i = op
+        if key in ("+", "-", "*", "/", "%") and not after:
+            continue  # a sign or a star
+        if key == "between":
+            between += 1
+        elif key == "and" and between:
+            between, key = between - 1, "between"
+        lvl = _LEVEL[key]
+        loosest = lvl if loosest is None else min(loosest, lvl)
+        after = False
+    return loosest
+
+
+def _in_cmp_band(level) -> bool:
+    """``level`` is one of the comparison rows (=, <, ESCAPE and their
+    word operators), whose operands the affinity passes rewrite."""
+    return level is not None and _NOT < level < _BIT
+
+
+def _cmp_operand_start(sql, mask, e, level):
+    """Start of the left operand (ending at ``e``) of a comparison-band
+    operator at ``level``; None when unscannable or part of a chained
+    comparison, where the affinity passes keep Spark's semantics."""
+    start = _operand_start(sql, mask, e, level)
+    if start is None or _in_cmp_band(_loosest_level(sql[start:e], mask[start:e])):
+        return None
+    k = _skip_ws_back(mask, start) - 1
+    op = _op_before(sql, mask, k) if k >= 0 else None
+    return None if op and _in_cmp_band(_LEVEL[op[0]]) else start
+
+
+def _cmp_operand_end(sql, mask, pos, level):
+    """End of the right operand (starting at ``pos``) of a comparison-band
+    operator at ``level``; None as for _cmp_operand_start."""
+    a = _skip_ws(mask, pos)
+    end = _operand_end(sql, mask, a, level)
+    if end is None or _in_cmp_band(_loosest_level(sql[a:end], mask[a:end])):
+        return None
+    op = _op_after(mask, _skip_ws(mask, end))
+    return None if op and _in_cmp_band(_LEVEL[op[0]]) else end
 
 
 def _strip_unary_plus(sql: str) -> str:
@@ -2841,7 +3108,7 @@ def _strip_unary_plus(sql: str) -> str:
     edits = []
     i = 0
     while i < len(mask):
-        if mask[i] != "+" or not _is_unary_sign(sql, mask, low, i):
+        if mask[i] != "+" or not _is_unary_sign(mask, i):
             i += 1
             continue
         k = i - 1
@@ -2940,12 +3207,10 @@ def _rewrite_numlit_arith(sql: str) -> str:
         k = a - 1
         while k >= 0 and mask[k] in " \t\r\n":
             k -= 1
-        low0 = sql.lower()
         # parenthesize signed contents: a bare unquote of '-3' after a
         # unary minus would splice `--3` — a line comment (r16 c3 find)
         s_out = f"({s})" if s[:1] in "+-" else s
-        if k >= 0 and mask[k] == "-" and _is_unary_sign(sql, mask,
-                                                        low0, k):
+        if k >= 0 and mask[k] == "-" and _is_unary_sign(mask, k):
             # always parenthesized: `ORDER BY -'0'` must stay the
             # constant -(0), never the positional ORDER BY -0 (r16 c3)
             edits.append((a, b, f"({s})"))
@@ -2985,79 +3250,6 @@ def _rewrite_numlit_arith(sql: str) -> str:
     return _apply_edits(sql, edits)
 
 
-def _concat_run_left(sql, mask, i):
-    """Start of the maximal ``||`` run whose operator sits at ``i``
-    (run = primaries joined by ||, each with optional unary ~/+/-
-    prefixes, which bind tighter than || in SQLite). None when a left
-    operand is unscannable."""
-    low = sql.lower()
-    a = i
-    while True:
-        e0 = a
-        while e0 > 0 and mask[e0 - 1] in " \t\r\n":
-            e0 -= 1
-        st = _rev_primary_start(sql, mask, e0)
-        if st is None and e0 >= 3 and low[e0 - 3:e0] == "end" and (
-            e0 - 4 < 0 or not (mask[e0 - 4].isalnum()
-                               or mask[e0 - 4] == "_")
-        ):
-            # unparenthesized CASE … END operand: word-level depth scan
-            depth = 0
-            for wm in reversed(list(_WORD_RX.finditer(mask, 0, e0))):
-                w = low[wm.start():wm.end()]
-                if w == "end":
-                    depth += 1
-                elif w == "case":
-                    depth -= 1
-                    if depth == 0:
-                        st = wm.start()
-                        break
-        if st is None:
-            return None
-        # absorb directly-preceding unary operators (tighter than ||)
-        while True:
-            k = st - 1
-            while k >= 0 and mask[k] in " \t\r\n":
-                k -= 1
-            if k >= 0 and mask[k] == "~":
-                st = k
-                continue
-            if k >= 0 and mask[k] in "+-" and _is_unary_sign(
-                sql, mask, low, k
-            ):
-                st = k  # unary sign (keyword-preceded included — r16
-                # c3: `WHERE -n || ''` groups (-n) || '', never
-                # -(n || ''))
-                continue
-            break
-        a = st
-        k = a - 1
-        while k >= 0 and mask[k] in " \t\r\n":
-            k -= 1
-        if k >= 1 and mask[k] == "|" and mask[k - 1] == "|":
-            a = k - 1  # another || to the left: keep extending
-            continue
-        return a
-
-
-def _concat_run_right(sql, mask, i):
-    """End (exclusive) of the maximal ``||`` run whose operator sits at
-    ``i`` (two-char op). None when a right operand is unscannable."""
-    b = i + 2
-    while True:
-        r0, r1, _t = _div_scan_primary(sql, mask, b, len(sql), None, [])
-        if r1 <= r0 or _t == "kw":
-            return None
-        b = r1
-        j = b
-        while j < len(mask) and mask[j] in " \t\r\n":
-            j += 1
-        if mask[j:j + 2] == "||":
-            b = j + 2
-            continue
-        return b
-
-
 def _rewrite_concat_grouping(sql: str) -> str:
     """SQLite binds ``||`` ABOVE all arithmetic/bitwise operators
     (expr.y: only COLLATE and unary bind tighter); Spark binds it
@@ -3072,29 +3264,17 @@ def _rewrite_concat_grouping(sql: str) -> str:
     def match(sql, mask, low, i):
         if mask[i + 1:i + 2] != "|" or (i > 0 and mask[i - 1] == "|"):
             return None
-        a = _concat_run_left(sql, mask, i)
-        if a is None:
+        # the run: every || operand before and after i
+        a = _operand_start(sql, mask, _skip_ws_back(mask, i), _CONCAT)
+        b = _operand_end(sql, mask, i + 2, _CONCAT)
+        while b is not None and mask.startswith("||", _skip_ws(mask, b)):
+            b = _operand_end(sql, mask, _skip_ws(mask, b) + 2, _CONCAT)
+        if a is None or b is None:
             return None
-        b = _concat_run_right(sql, mask, i)
-        if b is None:
-            return None
-        k = a - 1
-        while k >= 0 and mask[k] in " \t\r\n":
-            k -= 1
-        left_adj = k >= 0 and (
-            mask[k] in "+-*/%&"
-            or (mask[k] == "|" and (k == 0 or mask[k - 1] != "|"))
-            or (mask[k] in "<>" and k >= 1 and mask[k - 1] == mask[k])
-        )
-        j = b
-        while j < len(mask) and mask[j] in " \t\r\n":
-            j += 1
-        right_adj = j < len(mask) and (
-            mask[j:j + 2] in ("<<", ">>")
-            or mask[j] in "+-*/%&"
-            or (mask[j] == "|" and mask[j + 1:j + 2] != "|")
-        )
-        if left_adj or right_adj:
+        k = _skip_ws_back(mask, a) - 1
+        left = _op_before(sql, mask, k) if k >= 0 else None
+        right = _op_after(mask, _skip_ws(mask, b))
+        if any(op and _BIT <= _LEVEL[op[0]] <= _MUL for op in (left, right)):
             return a, b, f"({sql[a:b]})"
         return None
 
@@ -3210,6 +3390,42 @@ def _rewrite_exists_operand(sql: str) -> str:
     return _apply_edits(sql, edits)
 
 
+# what a boolean operand spells: TRUE/FALSE, an operator of the
+# comparison rows or looser, EXISTS or a BOOLEAN cast
+_BOOL_HINT_RX = re.compile("(?i)" + "|".join(
+    [re.escape(op) for op in _LEVEL if _LEVEL[op] <= _ESCAPE and not op.isalpha()]
+    + [r"\b(?:true|false|exists|boolean|" + "|".join(
+        op for op in _LEVEL if _LEVEL[op] <= _ESCAPE and op.isalpha()) + r")\b"]
+))
+
+
+def _rewrite_bool_arith(sql: str, coltypes) -> str:
+    """SQLite reads a boolean operand of + - * / % as INTEGER 1/0 (TRUE,
+    FALSE, a comparison, EXISTS — `m - TRUE`, `(n > m) * 2`); Spark
+    rejects BOOLEAN there. Each operand _cmp_classify calls 'bool'
+    becomes TRY_CAST((…) AS INT): exactly 0/1/NULL, and a spelling the
+    SQLite-CAST call pass leaves alone (it would re-type the operand
+    after the LIKE pass made it an ILIKE)."""
+    mask = _div_mask(sql)
+    if not _BOOL_HINT_RX.search(mask):
+        return sql
+    spans = set()
+    for m in re.finditer(r"[-+*/%]", mask):
+        i = m.start()
+        if mask[i] in "+-" and _is_unary_sign(mask, i):
+            continue
+        level, e = _LEVEL[mask[i]], _skip_ws_back(mask, i)
+        r_first = _skip_ws(mask, i + 1)
+        for a, b in ((_operand_start(sql, mask, e, level), e),
+                     (r_first, _operand_end(sql, mask, r_first, level))):
+            if None not in (a, b) and _BOOL_HINT_RX.search(mask, a, b) and \
+                    _cmp_classify(sql[a:b], coltypes)[1] == "bool":
+                spans.add((a, b))
+    edits = [(a, a, "TRY_CAST((") for a, _b in spans]
+    edits += [(b, b, ") AS INT)") for _a, b in spans]
+    return _apply_edits(sql, edits)
+
+
 _NOT_ARG_NONCALL_WORDS = frozenset({
     "in", "values", "exists", "select", "where", "on", "using", "over",
     "all", "any", "some", "and", "or", "not", "when", "then", "else",
@@ -3314,9 +3530,12 @@ def _rewrite_bare_not(sql: str) -> str:
             if not (low[wm.start():wm.end()] == "null"
                     and k >= 0 and mask[k] in "(,"):
                 continue
-        end = _not_operand_end(sql, mask, low, j)
-        if end <= j:
+        end = _operand_end(sql, mask, j, _NOT)
+        if end is None:
             continue
+        mc = _COLLATE_TAIL_RX.search(mask, j, end)
+        if mc:  # a COLLATE ending the operand is inert: consumed below
+            end = mc.start()
         # function-argument VALUE position (r16, VERDICT r15 #5):
         # `abs(NOT s)` needs SQLite's 0/1/NULL INTEGER, not a Spark
         # boolean (abs/greatest/coalesce type-crash on BOOLEAN). When
@@ -3488,47 +3707,7 @@ _CMP_MIRROR = {
 }
 
 
-def _bitop_at(mask: str, i: int) -> str | None:
-    """The bitwise operator (& | << >>) starting at code position ``i``,
-    or None — ``||``, JSON arrows (->>) and <=> are not ones."""
-    c = mask[i]
-    if c == "&":
-        return "&"
-    if c == "|":
-        if mask[i + 1:i + 2] != "|" and (i == 0 or mask[i - 1] != "|"):
-            return "|"
-    elif c in "<>" and mask[i + 1:i + 2] == c and (
-        i == 0 or mask[i - 1] not in "<>-"
-    ) and mask[i + 2:i + 3] != c:
-        return c + c
-    return None
-
-
 _SHIFT_LIT_RX = re.compile(r"^\+?\s*(\d+)$")
-
-
-def _bit_shift_emit(op: str, a: str, b: str) -> str:
-    """Guarded shift with SQLite count semantics (vdbe.c OP_ShiftLeft):
-    negative count shifts the OTHER way, |count| >= 64 clamps to the
-    sign fill; Java/Spark wrap the count mod 64."""
-    # TRY_CAST / L-suffix literals for the plumbing: SQLite-spelled
-    # CAST(… AS INT*) here would be re-expanded by the later cast pass
-    if op == "<<":
-        big = "0L"
-        neg_big = f"(CASE WHEN ({a}) < 0 THEN -1L ELSE 0L END)"
-        fwd, rev = "shiftleft", "shiftright"
-    else:
-        big = f"(CASE WHEN ({a}) < 0 THEN -1L ELSE 0L END)"
-        neg_big = "0L"
-        fwd, rev = "shiftright", "shiftleft"
-    return (
-        f"(CASE WHEN ({a}) IS NULL OR ({b}) IS NULL "
-        f"THEN TRY_CAST(NULL AS BIGINT) "
-        f"WHEN ({b}) >= 64 THEN {big} "
-        f"WHEN ({b}) <= -64 THEN {neg_big} "
-        f"WHEN ({b}) < 0 THEN {rev}({a}, TRY_CAST(-({b}) AS INT)) "
-        f"ELSE {fwd}({a}, TRY_CAST(({b}) AS INT)) END)"
-    )
 
 
 def _rewrite_bitwise(sql: str, coltypes) -> str:
@@ -3536,15 +3715,14 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
     family): TEXT prefix-parses, REAL truncates toward zero, NULL
     poisons — '3.7' & 1 is 3 & 1, ~'2.5' is -3; Spark's & | << >> ~
     are integral-typed and throw on TEXT/REAL operands. Shift counts
-    also differ at the edges (see _bit_shift_emit). Chains whose
-    leaves are all provably INTEGER with in-range literal shift counts
-    stay native — the common case, zero plan change. Anything else is
-    rebuilt left-associatively with CAST(… AS INTEGER)-coerced leaves
-    (the later cast pass expands those to the prefix parse). Leaves
-    appear twice in guarded shifts — non-deterministic element
-    expressions diverge, the BETWEEN-expansion caveat. Unary ~ over a
-    non-INTEGER primary is coerced in a first sweep; a ~ embedded
-    mid-chain still bails that chain to native (residue)."""
+    also differ at the edges (see _shift). Chains whose leaves are all
+    provably INTEGER with in-range literal shift counts stay native —
+    the common case, zero plan change. Anything else is rebuilt
+    left-associatively with CAST(… AS INTEGER)-coerced leaves (the
+    later cast pass expands those to the prefix parse); a shift by a
+    non-literal count calls filesql_shl / filesql_shr, which bind both
+    operands once. Unary ~ over a non-INTEGER primary is coerced in a
+    first sweep."""
     if not any(ch in sql for ch in "&|<>~"):
         return sql
 
@@ -3579,47 +3757,28 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
     def chain(sql, mask, low, pos):
         # a binary & | << >> chain with a non-INTEGER leaf or an unsafe
         # shift; (l_start, r_end, None) skips a chain that stays native
-        op = _bitop_at(mask, pos)
-        if op is None:
-            return None
-        e = pos
-        while e > 0 and mask[e - 1] in " \t\r\n":
-            e -= 1
-        l_start = _cmp_walk_back(sql, mask, e, stop_at_cmp=True)
+        op = _op_after(mask, pos)
+        if op is None or _LEVEL[op[0]] != _BIT or pos and mask[pos - 1] in "|<>-":
+            return None  # the tail of ||, <<, >>, ->> or <=>
+        l_start = _operand_start(sql, mask, _skip_ws_back(mask, pos), _BIT)
         if l_start is None:
             return None
-        fwd = _cmp_walk_fwd(sql, mask, pos + len(op), coltypes,
-                            stop_at_cmp=True)
-        if fwd is None:
-            return None
-        r_end = fwd[1]
-        # tokenize [l_start, r_end) at depth 0 into leaves/ops
-        depth = 0
-        top_ops: list[tuple[int, str]] = []
-        k = l_start
-        while k < r_end:
-            o = _bitop_at(mask, k)
-            if mask[k] == "(":
-                depth += 1
-            elif mask[k] == ")":
-                depth -= 1
-            elif depth == 0 and o is not None:
-                top_ops.append((k - l_start, o))
-                k += len(o)
-                continue
-            k += 1
-        if not top_ops:
-            return l_start, r_end, None
         leaves: list[str] = []
-        prev = 0
-        for k, o in top_ops:
-            leaves.append(sql[l_start + prev:l_start + k].strip())
-            prev = k + len(o)
-        leaves.append(sql[l_start + prev:r_end].strip())
-        if not all(leaves):
-            return l_start, r_end, None
+        top_ops: list[str] = []
+        r_end = l_start
+        while True:
+            end = _operand_end(sql, mask, r_end, _BIT)
+            if end is None:
+                return None
+            leaves.append(sql[r_end:end].strip())
+            op = _op_after(mask, _skip_ws(mask, end))
+            if op is None or _LEVEL[op[0]] != _BIT:
+                break
+            top_ops.append(op[0])
+            r_end = op[1]
+        r_end = end
         need = any(_leaf_type(lf) != "int" for lf in leaves)
-        for idx, ((k, o), cnt) in enumerate(zip(top_ops, leaves[1:])):
+        for idx, (o, cnt) in enumerate(zip(top_ops, leaves[1:])):
             if o in ("<<", ">>"):
                 # native only when the count is an in-range literal
                 # AND the left side is a bare int column: Spark
@@ -3634,20 +3793,21 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
         if not need:
             return l_start, r_end, None
         acc = _coerce(leaves[0])
-        for (k, o), leaf in zip(top_ops, leaves[1:]):
+        for o, leaf in zip(top_ops, leaves[1:]):
             cl = _coerce(leaf)
             if o in ("&", "|"):
                 acc = f"({acc} {o} {cl})"
                 continue
             # 64-bit shift arithmetic regardless of how Spark typed
-            # the left side (int literals are 32-bit)
-            acc = f"TRY_CAST({acc} AS BIGINT)"
+            # the left side (int literals are 32-bit); the parameters of
+            # filesql_shl / filesql_shr are BIGINT
             m1 = _SHIFT_LIT_RX.match(leaf)
             if m1 and int(m1.group(1)) <= 63:
                 fn = "shiftleft" if o == "<<" else "shiftright"
-                acc = f"{fn}({acc}, {m1.group(1)})"
+                acc = f"{fn}(TRY_CAST({acc} AS BIGINT), {m1.group(1)})"
             else:
-                acc = _bit_shift_emit(o, acc, cl)
+                args = (x[1:-1] if _parenthesized(x) else x for x in (acc, cl))
+                acc = f"filesql_sh{'l' if o == '<<' else 'r'}({', '.join(args)})"
         return l_start, r_end, acc
 
     if "~" in sql:
@@ -3918,7 +4078,7 @@ def _in_subquery_affinity_edit(sql, mask, e, neg, p, close, coltypes):
     mixed-affinity sites are rewritten, so affinity-clean queries keep
     Spark's native plan (a left-semi join)."""
     low = sql.lower()
-    l_start = _cmp_walk_back(sql, mask, e)
+    l_start = _cmp_operand_start(sql, mask, e, _EQ)
     if l_start is None:
         return None
     x = sql[l_start:e].strip()
@@ -4037,7 +4197,7 @@ def _in_list_mixed_edit(sql, mask, e, neg, p, close, coltypes):
     (cross-family pairs are constant false, NULL-guarded). x is
     duplicated per item (the BETWEEN-expansion caveat). Lists needing
     no conversion stay native."""
-    l_start = _cmp_walk_back(sql, mask, e)
+    l_start = _cmp_operand_start(sql, mask, e, _EQ)
     if l_start is None:
         return None
     x = sql[l_start:e].strip()
@@ -4157,7 +4317,7 @@ def _rewrite_range_affinity(sql: str, coltypes) -> str:
         e = m.start()
         while e > 0 and mask[e - 1] in " \t\r\n":
             e -= 1
-        l_start = _cmp_walk_back(sql, mask, e)
+        l_start = _cmp_operand_start(sql, mask, e, _EQ)
         if l_start is None:
             continue  # also skips ROWS/RANGE BETWEEN window frames
         x = sql[l_start:e].strip()
@@ -4166,18 +4326,18 @@ def _rewrite_range_affinity(sql: str, coltypes) -> str:
         xa, xv = _cmp_classify(x, coltypes)
         if "unk" in (xa, xv) or xv == "null":
             continue
-        fa = _cmp_walk_fwd(sql, mask, m.end(), coltypes)
-        if fa is None:
+        a0 = _skip_ws(mask, m.end())
+        a1 = _cmp_operand_end(sql, mask, a0, _EQ)
+        if a1 is None:
             continue
-        a0, a1 = fa
         j = _skip_ws(mask, a1)
         wm = _WORD_RX.match(mask, j)
         if not wm or low[wm.start():wm.end()] != "and":
             continue
-        fb = _cmp_walk_fwd(sql, mask, wm.end(), coltypes)
-        if fb is None:
+        b0 = _skip_ws(mask, wm.end())
+        b1 = _cmp_operand_end(sql, mask, b0, _EQ)
+        if b1 is None:
             continue
-        b0, b1 = fb
         a_txt, b_txt = sql[a0:a1].strip(), sql[b0:b1].strip()
         aa, av = _cmp_classify(a_txt, coltypes)
         ba, bv = _cmp_classify(b_txt, coltypes)
@@ -4246,7 +4406,7 @@ def _rewrite_range_affinity(sql: str, coltypes) -> str:
         # path requires x to CARRY affinity: a literal/expression x has
         # none, and SQLite then compares storage classes raw
         # (7 IN ('7') is 0 — pinned), which the helper implements.
-        l_start = _cmp_walk_back(sql, mask, e)
+        l_start = _cmp_operand_start(sql, mask, e, _EQ)
         if l_start is None:
             continue
         x = sql[l_start:e].strip()
@@ -4326,355 +4486,6 @@ def _rewrite_range_affinity(sql: str, coltypes) -> str:
         )
     ]
     return _apply_edits(sql, edits)
-
-
-def _rev_case_start(sql, mask, e):
-    """Start of the CASE expression whose END keyword ends at e
-    (exclusive), or None — the backward twin of _div_scan_case, for
-    the comparison pass's left-operand walk (r14)."""
-    low = sql.lower()
-    j = e - 1
-    while j >= 0 and (mask[j].isalnum() or mask[j] == "_"):
-        j -= 1
-    if low[j + 1:e] != "end":
-        return None
-    depth = 1
-    k = j
-    while k >= 0:
-        if mask[k].isalnum() or mask[k] == "_":
-            w_end = k + 1
-            while k >= 0 and (mask[k].isalnum() or mask[k] == "_"):
-                k -= 1
-            w = low[k + 1:w_end]
-            if w == "end":
-                depth += 1
-            elif w == "case":
-                depth -= 1
-                if depth == 0:
-                    return k + 1
-        else:
-            k -= 1
-    return None
-
-
-def _cmp_walk_back(sql, mask, e, stop_at_cmp=False):
-    """Start of the arithmetic operand chain ENDING at e (exclusive):
-    primary ((+|-|*|/|%) primary)* with unary +/- allowed; a primary
-    may be a whole CASE … END. None when unscannable or glued to a
-    non-arithmetic operator (||, bitwise — stepped since r15 — or
-    another comparison: out of scope, Spark semantics kept).
-    ``stop_at_cmp`` (the bitwise pass): a comparison/word-operator
-    boundary ENDS the chain instead of bailing the site."""
-    l_start = _rev_primary_start(sql, mask, e)
-    if l_start is None:
-        l_start = _rev_case_start(sql, mask, e)
-    if l_start is None:
-        return None
-    while True:
-        k = l_start - 1
-        while k >= 0 and mask[k] in " \t\r\n":
-            k -= 1
-        if k < 0:
-            break
-        c = mask[k]
-        if c == "|" and k > 0 and mask[k - 1] == "|":
-            # || chain: the concat result is a TEXT value with NO
-            # affinity — include the left primary and walk on (r14)
-            k2 = k - 2
-            while k2 >= 0 and mask[k2] in " \t\r\n":
-                k2 -= 1
-            if k2 < 0:
-                return None
-            prev = _rev_primary_start(sql, mask, k2 + 1)
-            if prev is None:
-                prev = _rev_case_start(sql, mask, k2 + 1)
-            if prev is None:
-                return None
-            l_start = prev
-            continue
-        if c in "+-*/%":
-            k2 = k - 1
-            while k2 >= 0 and mask[k2] in " \t\r\n":
-                k2 -= 1
-            if k2 >= 0 and (
-                mask[k2].isalnum() or mask[k2] in "_)\x00"
-            ):
-                prev = _rev_primary_start(sql, mask, k2 + 1)
-                if prev is None:
-                    prev = _rev_case_start(sql, mask, k2 + 1)
-                if prev is not None:
-                    l_start = prev  # binary: include the left primary
-                    continue
-                # a keyword precedes (WHERE -1 …): the sign is unary
-            if c in "+-":
-                l_start = k  # unary sign binds into the operand
-                continue
-            return None  # stray * / % with nothing to its left
-        # bitwise glue (& single-| << >>): binds tighter than any
-        # comparison, result INTEGER with NO affinity (r15) — include
-        # the left primary and walk on, like arithmetic
-        bit = 0
-        if c == "&" or (c == "|" and (k == 0 or mask[k - 1] != "|")):
-            bit = 1
-        elif c in "<>" and k > 0 and mask[k - 1] == c:
-            bit = 2
-        if bit:
-            k2 = k - bit
-            while k2 >= 0 and mask[k2] in " \t\r\n":
-                k2 -= 1
-            if k2 < 0:
-                return None
-            prev = _rev_primary_start(sql, mask, k2 + 1)
-            if prev is None:
-                prev = _rev_case_start(sql, mask, k2 + 1)
-            if prev is None:
-                return None
-            l_start = prev
-            continue
-        if c == "~":
-            l_start = k  # unary ~ binds into the operand (r15)
-            continue
-        if c in "|&<>=!":
-            if stop_at_cmp:
-                break  # chain boundary, not a bail (bitwise pass)
-            return None
-        if c.isalnum() or c == "_":
-            # word OPERATOR glued to the chain (a LIKE b IS 0 parses as
-            # (a LIKE b) IS 0 — LIKE binds tighter than IS): bail like
-            # the symbol-operator case so the native compare is kept
-            # instead of misgrouping the operand (r14 advice, low).
-            ws = k
-            while ws > 0 and (mask[ws - 1].isalnum() or mask[ws - 1] == "_"):
-                ws -= 1
-            w = sql[ws:k + 1].lower()
-            if w == "div":
-                # the division pass's own ` DIV ` emission (it runs
-                # before the bitwise pass, whose operand walk lands
-                # here): a mul-chain operator — include the left
-                # primary and walk on (r16: `n / 3 >> x` became
-                # `n DIV nullif(3,0) >> x` and the shift's left walk
-                # stopped at the keyword, regrouping the division)
-                k2 = ws - 1
-                while k2 >= 0 and mask[k2] in " \t\r\n":
-                    k2 -= 1
-                if k2 < 0:
-                    return None
-                prev = _rev_primary_start(sql, mask, k2 + 1)
-                if prev is None:
-                    prev = _rev_case_start(sql, mask, k2 + 1)
-                if prev is None:
-                    return None
-                l_start = prev
-                continue
-            if w in (
-                "like", "glob", "regexp", "match", "escape", "is", "in",
-                "between",
-            ):
-                if stop_at_cmp:
-                    break
-                return None
-            if w == "and" and _and_closes_between(sql, mask, ws):
-                # BETWEEN's AND: the operand is the upper bound of
-                # (a BETWEEN b AND c) = s — rewriting [c = s] spliced
-                # mid-expression (r15, was silent corruption)
-                if stop_at_cmp:
-                    break
-                return None
-        break
-    # a paren-group primary preceded by EXISTS: the EXISTS belongs to
-    # the operand (r15 — without this the span classified as a SCALAR
-    # subquery, the wrong semantics entirely)
-    if l_start < len(mask) and mask[l_start] == "(":
-        k = l_start - 1
-        while k >= 0 and mask[k] in " \t\r\n":
-            k -= 1
-        if k >= 5 and sql[k - 5:k + 1].lower() == "exists" and (
-            k == 5 or not (mask[k - 6].isalnum() or mask[k - 6] == "_")
-        ):
-            l_start = k - 5
-    # a bare-word primary preceded by COLLATE is a collation NAME:
-    # the operand is `<expr> COLLATE <name>` — include the collated
-    # expression (r15; was an unconditional bail to native)
-    wl = _WORD_RX.match(mask, l_start)
-    if wl:
-        k = l_start - 1
-        while k >= 0 and mask[k] in " \t\r\n":
-            k -= 1
-        if k >= 6 and sql[k - 6:k + 1].lower() == "collate" and (
-            k == 6 or not (mask[k - 7].isalnum() or mask[k - 7] == "_")
-        ):
-            pe = k - 6
-            while pe > 0 and mask[pe - 1] in " \t\r\n":
-                pe -= 1
-            prev = _cmp_walk_back(sql, mask, pe, stop_at_cmp)
-            if prev is None or prev >= pe:
-                return None
-            l_start = prev
-    return l_start
-
-
-def _and_closes_between(sql, mask, pos) -> bool:
-    """True when the AND at ``pos`` is a BETWEEN's conjunction: scanning
-    BACKWARDS at the same paren depth, a `between` word appears before
-    any boolean/clause boundary (a boolean AND would hit the previous
-    predicate's comparison operator or keyword first)."""
-    low = sql.lower()
-    k = pos - 1
-    while k >= 0:
-        c = mask[k]
-        if c in " \t\r\n":
-            k -= 1
-            continue
-        if c == ")":
-            close_depth = 1
-            k -= 1
-            while k >= 0 and close_depth:
-                if mask[k] == ")":
-                    close_depth += 1
-                elif mask[k] == "(":
-                    close_depth -= 1
-                k -= 1
-            continue
-        if c == "(" or c in "=<>!,;":
-            return False
-        if c.isalnum() or c == "_":
-            ws = k
-            while ws > 0 and (mask[ws - 1].isalnum() or mask[ws - 1] == "_"):
-                ws -= 1
-            w = low[ws:k + 1]
-            if w == "between":
-                return True
-            if w in ("and", "or", "not", "where", "on", "when", "then",
-                     "else", "end", "having", "select", "from", "case",
-                     "is", "in", "like", "glob", "match", "regexp",
-                     "escape", "set", "by"):
-                return False
-            k = ws - 1
-            continue
-        k -= 1
-    return False
-
-
-# words that CONTINUE a comparison after a complete operand chain — a
-# same-band or looser word operator ((s = n) LIKE p), a postfix null
-# test, or an explicit collation; rewriting the inner site would splice
-# mid-expression, so the walkers bail and native semantics are kept
-_CMP_CONT_WORDS = frozenset({
-    "is", "in", "like", "glob", "regexp", "match", "between", "not",
-    "isnull", "notnull", "escape", "collate",
-})
-
-
-def _cmp_walk_fwd(sql, mask, pos, coltypes, stop_at_collate=False,
-                  stop_at_cmp=False):
-    """(first, end) of the arithmetic operand chain STARTING at pos:
-    primary ((+|-|*|/|%) primary)*. None when the next token is a
-    structural keyword or the chain glues into ||/bitwise."""
-    j0 = _skip_ws(mask, pos)
-    tpos = j0
-    while tpos < len(sql) and mask[tpos] == "~":
-        tpos = _skip_ws(mask, tpos + 1)  # unary ~ binds in (r15)
-    r_first, r_end, rt = _div_scan_primary(
-        sql, mask, tpos, len(sql), coltypes, []
-    )
-    if tpos > j0:
-        if rt == "kw" or r_end <= tpos:
-            return None
-        r_first, rt = j0, "expr"
-    if rt == "kw":
-        # EXISTS (…) is a valid operand primary (INTEGER 0/1 in
-        # SQLite): consume the keyword plus its paren group (r15)
-        wm0 = _WORD_RX.match(mask, j0)
-        if not (wm0 and sql[wm0.start():wm0.end()].lower() == "exists"):
-            return None
-        jp = _skip_ws(mask, wm0.end())
-        if jp >= len(sql) or mask[jp] != "(":
-            return None
-        close0 = _div_find_close(mask, jp, len(sql))
-        if close0 == -1:
-            return None
-        r_first, r_end = j0, close0 + 1
-    while True:
-        j = r_end
-        while j < len(sql) and mask[j] in " \t\r\n":
-            j += 1
-        if j + 1 < len(sql) and mask[j] == "|" and mask[j + 1] == "|":
-            # || chain: concat result is a TEXT value, NO affinity
-            nf, ne, nt = _div_scan_primary(
-                sql, mask, j + 2, len(sql), coltypes, []
-            )
-            if nt == "kw" or ne <= j + 2:
-                return None
-            r_end = ne
-            continue
-        if j < len(sql) and mask[j] in "+-*/%":
-            nf, ne, nt = _div_scan_primary(
-                sql, mask, j + 1, len(sql), coltypes, []
-            )
-            if nt == "kw" or ne <= j + 1:
-                return None
-            r_end = ne
-            continue
-        # ` DIV ` — the division pass's own emission (that pass runs
-        # BEFORE the bitwise pass, whose operand walk lands here): a
-        # mul-chain operator, continue through it (r16: `1 << n / 2`
-        # became `1 << n DIV nullif(2,0)` and the count walk stopped
-        # at the keyword, regrouping the shift)
-        wdiv = _WORD_RX.match(mask, j) if j < len(sql) else None
-        if wdiv and sql[wdiv.start():wdiv.end()].lower() == "div":
-            nf, ne, nt = _div_scan_primary(
-                sql, mask, wdiv.end(), len(sql), coltypes, []
-            )
-            if nt == "kw" or ne <= wdiv.end():
-                return None
-            r_end = ne
-            continue
-        # bitwise glue (& single-| << >>): tighter than any comparison,
-        # INTEGER result, NO affinity (r15) — include the next primary
-        bit = 0
-        if j < len(sql) and mask[j] == "&":
-            bit = 1
-        elif j < len(sql) and mask[j] == "|":
-            bit = 1  # single | (|| consumed above)
-        elif (
-            j + 1 < len(sql) and mask[j] in "<>" and mask[j + 1] == mask[j]
-        ):
-            bit = 2
-        if bit:
-            jn = _skip_ws(mask, j + bit)
-            while jn < len(sql) and mask[jn] == "~":
-                jn = _skip_ws(mask, jn + 1)  # unary ~ binds in (r15)
-            nf, ne, nt = _div_scan_primary(
-                sql, mask, jn, len(sql), coltypes, []
-            )
-            if nt == "kw" or ne <= jn:
-                return None
-            r_end = ne
-            continue
-        if j < len(sql) and mask[j] == "~":
-            return None  # unary-~ glued: out of scope
-        if j < len(sql) and mask[j] in "<>=!":
-            # chained comparison: the op we're the operand of binds
-            # LOOSER or equal (s = n < 1 is s = (n < 1) — SQLite's
-            # <-family binds tighter than =); rewriting [s = n] would
-            # splice mid-expression (r15, was silent corruption)
-            if stop_at_cmp:
-                break
-            return None
-        wmc = _WORD_RX.match(mask, j) if j < len(sql) else None
-        if (
-            stop_at_collate and wmc
-            and sql[wmc.start():wmc.end()].lower() == "collate"
-        ):
-            break  # caller handles the collation clause (r15)
-        if wmc and sql[wmc.start():wmc.end()].lower() in _CMP_CONT_WORDS:
-            # word-operator continuation ((s = n) LIKE p, (s = n) IS 0,
-            # x BETWEEN a AND (b = s) shapes): same mis-splice risk
-            if stop_at_cmp:
-                break
-            return None
-        break
-    return r_first, r_end
 
 
 # SQLite functions whose RESULT is text (func.c/date.c) — used only by
@@ -4822,88 +4633,25 @@ def _cmp_classify(span: str, coltypes):
             if len(cls) == 1:
                 return None, cls.pop()
             return "unk", "unk"
-    depth = 0
-    has_concat = has_bitwise = has_cmp = has_arith = False
-    after_operand = False
-    i0 = 0
-    while i0 < len(cm):
-        c0 = cm[i0]
-        if c0 == "(":
-            depth += 1
-        elif c0 == ")":
-            depth -= 1
-            if depth == 0:
-                after_operand = True
-        elif depth == 0:
-            if c0 == "|" and cm[i0 + 1:i0 + 2] == "|":
-                has_concat = True
-                after_operand = False
-                i0 += 2
-                continue
-            if (c0 in "<>" and cm[i0 + 1:i0 + 2] == c0):
-                has_bitwise = True
-                after_operand = False
-                i0 += 2
-                continue
-            if c0 in "&|":
-                has_bitwise = True
-                after_operand = False
-                i0 += 1
-                continue
-            if c0 in "<>=!":
-                has_cmp = True
-                after_operand = False
-                i0 += 1
-                continue
-            if c0 in "+-*/%":
-                # binary arithmetic (an operand precedes): the span's
-                # VALUE is numeric — SQLite coerces every operand, so
-                # `n + upper(s)` is a number even with text elements
-                # (r16 c3; leading signs stay unary and don't decide)
-                if after_operand:
-                    has_arith = True
-                after_operand = False
-                i0 += 1
-                continue
-            w0 = _WORD_RX.match(cm, i0)
-            if w0:
-                word = core[i0:w0.end()].lower()
-                if word == "case":
-                    marks = _case_marks(core, cm, i0, len(core))
-                    if marks is None:
-                        return "unk", "unk"
-                    i0 = marks[-1][0] + 3
-                    after_operand = True
-                    continue
-                if word in ("is", "in", "like", "glob", "match",
-                            "regexp", "between", "isnull", "notnull",
-                            "and", "or", "not", "exists"):
-                    # boolean connective / predicate at the top level:
-                    # the span's VALUE is SQLite 0/1 INTEGER (r15)
-                    has_cmp = True
-                    after_operand = False
-                    i0 = w0.end()
-                    continue
-                after_operand = True
-                i0 = w0.end()
-                continue
-            if c0 not in " \t\r\n":
-                after_operand = True
-        i0 += 1
-    if has_cmp:
-        # comparisons bind loosest: the span is a predicate — INTEGER
-        # 0/1 (possibly NULL) in SQLite, BOOLEAN in Spark
+    lvl = _loosest_level(core, cm)  # the top of the span's parse
+    if lvl is not None and lvl <= _ESCAPE:
+        # a comparison, predicate or boolean connective: the span is
+        # SQLite 0/1 INTEGER (possibly NULL), BOOLEAN in Spark (r15)
         return None, "bool"
-    if has_bitwise:
+    if lvl == _BIT:
         # bitwise glue binds LOOSEST of the value operators: the span's
         # top-level operator — result always INTEGER, no affinity (r15)
         return None, "num"
-    if has_concat and not has_arith:
+    if lvl == _CONCAT:
         # || binds TIGHTER than + - * / % — a span with top-level
         # binary arithmetic AND concat is an arithmetic chain over a
         # concat operand (numeric VALUE, r17); only a pure || chain
         # is a TEXT value
         return None, "text"  # || chain: TEXT value, no affinity
+    # binary arithmetic: the span's VALUE is numeric — SQLite coerces
+    # every operand, so `n + upper(s)` is a number even with text
+    # elements (r16 c3)
+    has_arith = lvl in (_ADD, _MUL)
     if tilde:
         # ~x is ALWAYS INTEGER in SQLite (operand coerced) — the type
         # walker sees through to the operand and mis-typed ~s as TEXT,
@@ -4956,14 +4704,14 @@ def _rewrite_is_operator(sql: str, coltypes) -> str:
             opd_start = j2
         elif wm and low[wm.start():wm.end()] in _IS_SKIP_WORDS:
             continue  # IS NULL / IS DISTINCT FROM / IS TRUE/FALSE
-        fwd = _cmp_walk_fwd(sql, mask, opd_start, coltypes)
-        if fwd is None:
+        r_first = _skip_ws(mask, opd_start)
+        r_end = _cmp_operand_end(sql, mask, r_first, _EQ)
+        if r_end is None:
             continue
-        r_first, r_end = fwd
         e = m.start()
         while e > 0 and mask[e - 1] in " \t\r\n":
             e -= 1
-        l_start = _cmp_walk_back(sql, mask, e)
+        l_start = _cmp_operand_start(sql, mask, e, _EQ)
         if l_start is None:
             continue
         x = sql[l_start:e].strip()
@@ -5272,17 +5020,14 @@ def _cmp_case_distribute(case_text, other_text, cmp_op, case_is_left):
 
 
 def _cmp_match_site(sql, mask, opos, op, coltypes):
-    e = opos
-    while e > 0 and mask[e - 1] in " \t\r\n":
-        e -= 1
-    l_start = _cmp_walk_back(sql, mask, e)
+    level, e = _LEVEL[op], _skip_ws_back(mask, opos)
+    l_start = _cmp_operand_start(sql, mask, e, level)
     if l_start is None:
         return None
-    fwd = _cmp_walk_fwd(sql, mask, opos + len(op), coltypes,
-                        stop_at_collate=True)
-    if fwd is None:
+    r_first = _skip_ws(mask, opos + len(op))
+    r_close = _cmp_operand_end(sql, mask, r_first, level)
+    if r_close is None:
         return None
-    r_first, r_end = fwd
     # trailing COLLATE (r15, datatype3.html §5.2): affinity conversion
     # happens FIRST, then the collation applies only if the comparison
     # is still textual. NOCASE on a text-compare site attaches as
@@ -5291,30 +5036,23 @@ def _cmp_match_site(sql, mask, opos, op, coltypes):
     # affinity-clean sites stay native (the collate pass renames them).
     low = sql.lower()
     coll = None
-    r_close = r_end
-    jc = _skip_ws(mask, r_end)
-    wmc = _WORD_RX.match(mask, jc) if jc < len(sql) else None
-    if wmc and low[wmc.start():wmc.end()] == "collate":
-        jn = _skip_ws(mask, wmc.end())
-        wmn = _WORD_RX.match(mask, jn) if jn < len(sql) else None
+    r_end = r_close
+    mc = _find_depth0(mask[r_first:r_close], _COLLATE_WORD_RX)
+    if mc:
+        r_end = _skip_ws_back(mask, r_first + mc.start())
+        wmn = _WORD_RX.match(mask, _skip_ws(mask, r_first + mc.end()))
         if not wmn or low[wmn.start():wmn.end()] not in ("nocase",
                                                          "binary"):
             return None  # RTRIM/custom: native (collate pass raises)
+        if wmn.end() != r_close:
+            # COLLATE binds tighter than || / arithmetic / bitwise, so
+            # an operator after the name continues the operand: `s = n
+            # COLLATE NOCASE || 'y'` is `s = ((n COLLATE NOCASE) ||
+            # 'y')`. Consuming the clause here would splice the bare
+            # compare and leave the operator glued to a boolean; keep
+            # the native path (the collate-rename pass groups it).
+            return None
         coll = low[wmn.start():wmn.end()]
-        r_close = wmn.end()
-        # COLLATE binds tighter than || / arithmetic / bitwise
-        # (datatype3.html §5.2): if such an operator follows the
-        # collation name, the right operand CONTINUES past it —
-        # `s = n COLLATE NOCASE || 'y'` is `s = ((n COLLATE NOCASE)
-        # || 'y')`. Consuming the clause here would splice the bare
-        # compare and leave the operator glued to a boolean; keep
-        # the native path instead (the collate-rename pass groups
-        # it correctly).
-        jp = _skip_ws(mask, r_close)
-        if jp < len(mask):
-            nx2 = mask[jp:jp + 2]
-            if nx2 in ("||", "<<", ">>") or mask[jp] in "+-*/%&|~":
-                return None
     coll_sfx = " COLLATE UTF8_LCASE" if coll == "nocase" else ""
     p_text = sql[l_start:e].strip()
     r_text = sql[r_first:r_end].strip()
@@ -6866,8 +6604,9 @@ def _item_alias(sql, mask, low, a, b):
 
 def _rev_primary_start(sql: str, mask: str, e: int):
     """Start index of the tight-binding primary ENDING at e (exclusive):
-    a literal/backtick token, an identifier (with t.c qualifiers), or a
-    paren group with an optional function name. None when unscannable."""
+    a literal/backtick token, an identifier (with t.c qualifiers), a
+    paren group with an optional function name, or a whole CASE … END.
+    None when unscannable."""
     i = e - 1
     if i < 0:
         return None
@@ -6902,7 +6641,22 @@ def _rev_primary_start(sql: str, mask: str, e: int):
         while i >= 0 and (mask[i].isalnum() or mask[i] == "_"):
             i -= 1
         start = i + 1
-        if sql[start:e].lower() in _DIV_KEYWORDS:
+        word = mask[start:e].lower()
+        if word == "end":  # back to its CASE, counting nested CASE … END
+            depth = 1
+            while i >= 0:
+                if mask[i].isalnum() or mask[i] == "_":
+                    w_end = i + 1
+                    while i >= 0 and (mask[i].isalnum() or mask[i] == "_"):
+                        i -= 1
+                    word = mask[i + 1:w_end].lower()
+                    depth += (word == "end") - (word == "case")
+                    if depth == 0:
+                        return i + 1
+                else:
+                    i -= 1
+            return None
+        if word in _DIV_KEYWORDS:
             return None
     else:
         return None
@@ -7689,38 +7443,21 @@ def _vd_text_repl(l, r, lt, rt, op):
     )
 
 
-def _vd_chain_back(sql, mask, low, l_start, coltypes, site_op):
-    """Start position of the whole left OPERAND of a ``site_op`` site
-    whose adjacent primary begins at ``l_start``; None unless every
-    chained operand is a duplication-safe primary (the chain text is
-    copied into both dispatch arms). Precedence-aware (r17): an
-    additive site's operand extends back across + - * / %; a
-    multiplicative site's only across * / % (binary + - bind looser
-    and END the operand)."""
-    stop_additive = site_op not in "+-"
-    start = l_start
-    for _guard in range(64):  # chains are short; hard bound
-        k = start - 1
-        while k >= 0 and mask[k] in " \t\r\n":
-            k -= 1
-        if k < 0:
-            return start
-        if mask[k] in "+-" and _is_unary_sign(sql, mask, low, k):
-            start = k  # the sign belongs to this operand; keep walking
-            continue
-        if mask[k] not in "+-*/%" or (stop_additive and mask[k] in "+-"):
-            return start
-        e2 = k
-        while e2 > 0 and mask[e2 - 1] in " \t\r\n":
-            e2 -= 1
-        p0 = _rev_primary_start(sql, mask, e2)
-        if p0 is None:
+def _vd_chain_types(sql, mask, a, b, coltypes):
+    """Static types of the operands of the arithmetic chain from ``a``
+    that start before ``b``; None unless each is a duplication-safe
+    primary, signs aside."""
+    types = set()
+    while a < b:
+        end = _operand_end(sql, mask, a, _MUL)
+        if end is None or not _vd_operand_ok(re.sub(r"^[+\-\s]+", "", sql[a:end])):
             return None
-        p_text = sql[p0:e2].strip()
-        if not p_text or not _vd_operand_ok(p_text):
-            return None
-        start = p0
-    return None
+        types.add(_div_walk(sql, mask, a, end, coltypes, []))
+        op = _op_after(mask, _skip_ws(mask, end))
+        if op is None:
+            return types if end >= b else None
+        a = _skip_ws(mask, op[1])
+    return types
 
 
 def _vd_match_site(sql, mask, low, slash, coltypes):
@@ -7735,29 +7472,16 @@ def _vd_match_site(sql, mask, low, slash, coltypes):
     if op in "+-" and l_start is None:
         # unary +/- over a TEXT primary: + is identity (SQLite keeps the
         # operand verbatim), - is 0 - x under numeric-prefix coercion
-        k = e - 1
-        # an arithmetic operator before the sign makes it unary too:
-        # `s - -s` — the inner -s is the right operand (r16)
-        ctx_ok = k < 0 or mask[k] in "(,;=<>+-*/%"
-        if not ctx_ok:
-            ws = k
-            while ws >= 0 and (mask[ws].isalnum() or mask[ws] == "_"):
-                ws -= 1
-            ctx_ok = ws < k and low[ws + 1:k + 1] in (
-                "select", "when", "then", "else", "and", "or", "not",
-                "where", "by", "having", "on", "set",
-                "returning", "limit", "offset", "in",
-            )
-        if ctx_ok:
+        # (an arithmetic operator before the sign makes it unary too:
+        # `s - -s` — the inner -s is the right operand, r16)
+        if _is_unary_sign(mask, slash):
             r_first, r_end, rt = _div_scan_primary(
                 sql, mask, slash + 1, len(sql), coltypes, []
             )
             r_text = sql[r_first:r_end].strip()
             if rt == "text" and _vd_operand_ok(r_text):
-                j = r_end
-                while j < len(sql) and mask[j] in " \t\r\n":
-                    j += 1
-                if j < len(sql) and mask[j] in "|&":
+                j = _skip_ws(mask, r_end)
+                if mask[j:j + 1] in ("|", "&"):
                     return None  # bitwise-glued: integer coercion of
                     # the SIGNED operand — the bitwise pass owns it
                 # continuation is value-safe (r16): an IMMEDIATE / or
@@ -7770,53 +7494,26 @@ def _vd_match_site(sql, mask, low, slash, coltypes):
                 # a real operand fixes the flavor real (native float
                 # is then correct) — only an unknown/text operand
                 # breaks the chain (bail, loud-native).
-                jj = j
-                seen_addmul = False
-                unsafe = False
-                while jj < len(sql):
-                    c2 = mask[jj]
-                    if c2 in " \t\r\n":
-                        jj += 1
-                        continue
-                    if c2 in "+-*/%":
-                        if c2 in "/%" and seen_addmul and unsafe:
-                            return None
-                        if c2 in "+-*":
-                            seen_addmul = True
-                        nf, ne, nt = _div_scan_primary(
-                            sql, mask, jj + 1, len(sql), coltypes, []
-                        )
-                        if nt == "kw" or ne <= jj:
-                            break
-                        if nt not in ("int", "real", "null"):
-                            unsafe = True
-                        jj = ne
-                        continue
-                    break  # any other token ends the arithmetic chain
-                # (`+s * EXISTS(…)` was an out-of-scope bail)
+                seen_addmul = unsafe = False
+                nxt = _op_after(mask, j)
+                while nxt and nxt[0] in ("+", "-", "*", "/", "%"):
+                    if nxt[0] in ("/", "%") and seen_addmul and unsafe:
+                        return None
+                    seen_addmul |= nxt[0] in ("+", "-", "*")
+                    ne = _operand_end(sql, mask, nxt[1], _MUL)
+                    if ne is None:
+                        break  # (`+s * EXISTS(…)` was an out-of-scope bail)
+                    unsafe |= _div_walk(sql, mask, nxt[1], ne, coltypes, []) \
+                        not in ("int", "real", "null")
+                    nxt = _op_after(mask, _skip_ws(mask, ne))
                 if op == "+":
                     return slash, r_end, f"({r_text})"
                 return slash, r_end, _vd_text_repl(
                     "0", r_text, "int", "text", "-"
                 )
         return None
-    if l_start is None and op in "/%" and e >= 3 and low[e - 3:e] == "end" \
-            and (
-        e - 4 < 0 or not (mask[e - 4].isalnum() or mask[e - 4] == "_")
-    ):
-        # unparenthesized CASE … END as the left operand: extend the
-        # primary back to its CASE (word-level case/end depth scan)
-        depth = 0
-        for wm in reversed(list(_WORD_RX.finditer(mask, 0, e))):
-            w = low[wm.start():wm.end()]
-            if w == "end":
-                depth += 1
-            elif w == "case":
-                depth -= 1
-                if depth == 0:
-                    l_start = wm.start()
-                    break
-    if l_start is None:
+    if l_start is None or op in "+-*" and _CASE_WORD_RX.match(mask, l_start):
+        # (a bare CASE … END takes only the / and % dispatch)
         return None
     # the matched primary must be the WHOLE left operand: a preceding
     # tight-binding operator would regroup the arithmetic ( `a * P / 2`
@@ -7828,30 +7525,36 @@ def _vd_match_site(sql, mask, low, slash, coltypes):
         k -= 1
     chain_ok = False
     if op in "+-*" and k >= 0 and mask[k] in "+-*%/" and not (
-        mask[k] in "+-" and _is_unary_sign(sql, mask, low, k)
+        mask[k] in "+-" and _is_unary_sign(mask, k)
     ):
         # the site's primary is MID-CHAIN (`n + 4 - s`, `a * b + s`):
         # extend the left operand to the whole chain when every earlier
-        # operand is a duplication-safe primary; the chain's static
-        # flavor then joins the dispatch (r17 — text operands past the
-        # second chain position were bailed loud-native)
-        cs = _vd_chain_back(sql, mask, low, l_start, coltypes, op)
-        if cs is None:
+        # operand is a duplication-safe primary (the chain text is
+        # copied into both dispatch arms); the chain's static flavor
+        # then joins the dispatch (r17 — text operands past the second
+        # chain position were bailed loud-native)
+        cs = _operand_start(sql, mask, e, _LEVEL[op])
+        if cs is None or _vd_chain_types(sql, mask, cs, l_start, coltypes) is None:
             return None
         # a multiplicative site stopped at a binary +/- without
         # extending: the primary IS the whole left operand — plain
         # primary path (text operands allowed), no chain constraint
         chain_ok = cs < l_start
         l_start = cs
-    elif k >= 0 and mask[k] in "*%/~":
+    elif k >= 0 and mask[k] in "*%/":
+        # a / or % over a multiplicative chain (`n * x / s`): only the
+        # TEXT-coercion dispatch below takes it
+        cs = _operand_start(sql, mask, e, _MUL)
+        if cs is None or _vd_chain_types(sql, mask, cs, l_start, coltypes) is None:
+            return None
+        chain_ok, l_start = True, cs
+    elif k >= 0 and mask[k] == "~":
         return None
     elif op in "+-*" and k >= 0 and mask[k] in "+-":
         # a unary sign before the primary: the unary-repl site (visited
         # first) owns signed operands — decline, as before r17
         return None
-    if op in "/%" and k >= 0 and mask[k] in "+-" and _is_unary_sign(
-        sql, mask, low, k
-    ):
+    if op in "/%" and k >= 0 and mask[k] in "+-" and _is_unary_sign(mask, k):
         # unary minus over a TEXT-valued primary REAL-parses it
         # (-'1e2' is -100.0) while this site's dispatch would INT-
         # prefix-parse the bare string (1) — the sign does NOT commute
@@ -7866,37 +7569,19 @@ def _vd_match_site(sql, mask, low, slash, coltypes):
     if rt == "kw":
         return None
     r_chain_ok = False
-    if op in "+-":
-        j = r_end
-        while j < len(sql) and mask[j] in " \t\r\n":
-            j += 1
-        if j < len(sql) and mask[j] in "*/%":
-            # a tighter op owns the right primary — the right operand
-            # is a multiplicative CHAIN. Extend across * / % when every
-            # element is a duplication-safe, statically numeric primary
-            # (r17 — `s + 1 / 2` was bailed loud-native); a text or
-            # unknown element still declines.
-            if rt not in ("int", "real", "null") or not _vd_operand_ok(
-                sql[r_first:r_end].strip()
-            ):
-                return None
-            r_chain_ok = True
-            types = {rt}
-            cur = j
-            while cur < len(sql) and mask[cur] in "*/%":
-                nf, ne, nt = _div_scan_primary(
-                    sql, mask, cur + 1, len(sql), coltypes, []
-                )
-                if nt not in ("int", "real", "null") or ne <= cur:
-                    return None
-                if not _vd_operand_ok(sql[nf:ne].strip()):
-                    return None
-                types.add(nt)
-                r_end = ne
-                cur = ne
-                while cur < len(sql) and mask[cur] in " \t\r\n":
-                    cur += 1
-            rt = "real" if "real" in types else "int"
+    j = _skip_ws(mask, r_end)
+    if op in "+-" and mask[j:j + 1] in ("*", "/", "%"):
+        # a tighter op owns the right primary — the right operand is a
+        # multiplicative CHAIN. Extend across * / % when every element
+        # is a duplication-safe, statically numeric primary (r17 —
+        # `s + 1 / 2` was bailed loud-native); a text or unknown element
+        # still declines.
+        r_end = _operand_end(sql, mask, r_first, _ADD)
+        types = r_end and _vd_chain_types(sql, mask, r_first, r_end, coltypes)
+        if not types or not types <= {"int", "real", "null"}:
+            return None
+        r_chain_ok = True
+        rt = "real" if "real" in types else "int"
     p_text = sql[l_start:e]
     r_text = sql[r_first:r_end]
     if op in "+-*":
@@ -7948,6 +7633,15 @@ def _vd_match_site(sql, mask, low, slash, coltypes):
                 return l_start, r_end, _vd_text_repl(
                     p_s, r_s, lt0, rt2, op
                 )
+        return None
+    if chain_ok:
+        lt0 = _div_walk(sql, mask, l_start, e, coltypes, [])
+        if rt == "text" and lt0 in ("int", "real", "null") and _vd_operand_ok(
+            r_text.strip()
+        ):
+            return l_start, r_end, _vd_text_repl(
+                p_text.strip(), r_text.strip(), lt0, rt, op
+            )
         return None
     # searched-CASE operand → distribute the operator into the arms
     if rt in ("int", "real", "null") and _vd_simple_primary(r_text):
@@ -8230,6 +7924,7 @@ def _rewrite_json_tvf(sql: str, fn: str) -> str:
             )
 
 
+_COLLATE_WORD_RX = re.compile(r"(?i)\bcollate\b")
 _COLLATE_NOCASE_RE = re.compile(r"\bcollate\s+nocase\b", re.IGNORECASE)
 _COLLATE_BINARY_RE = re.compile(r"\bcollate\s+binary\b", re.IGNORECASE)
 _COLLATE_RTRIM_RE = re.compile(r"\bcollate\s+rtrim\b", re.IGNORECASE)
@@ -8299,6 +7994,7 @@ def rewrite(sql: str, column_types: dict[str, str] | None = None) -> str:
     sql = _rewrite_exists_operand(sql)
     sql = _rewrite_numlit_arith(sql)
     sql = _rewrite_concat_grouping(sql)
+    sql = _rewrite_bool_arith(sql, column_types)
     sql = _rewrite_case_truthiness(sql)
     sql = _rewrite_clause_truthiness(sql)
     sql = _rewrite_bare_not(sql)

@@ -447,7 +447,7 @@ _EACH_SCHEMA = (
 
 _REGISTERED_FLAG = "filesql.internal.json1.registered"
 # bump when the UDF set changes so long-lived sessions re-register
-_REGISTERED_GEN = "4"  # 4: + the dialect's session SQL functions
+_REGISTERED_GEN = "5"  # 5: + filesql_real_int, filesql_shl, filesql_shr
 
 
 # -------------------------------------------------------- -> / ->> ops

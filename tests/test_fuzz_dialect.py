@@ -3066,7 +3066,7 @@ def test_case_operand_comparison_affinity_matches_sqlite(spark, tmp_path):
     """CASE … END operands (either side, nested, arithmetic-glued) carry
     NO affinity in SQLite — the TEXT column side wins and the rendered
     CASE value string-compares (r14; left side walks back through the
-    END keyword via _rev_case_start)."""
+    END keyword via _rev_primary_start)."""
     rows = [(1, 7, "7", "abc"), (2, 8, "8", "12"), (3, 9, "07", ""),
             (4, 7, "7x", "7")]
     exprs = [

@@ -5,10 +5,14 @@
 Builds one statement corpus from this tree:
 
 - the SQL string literals in ``tests/*.py`` and ``perfbench/workloads.py``;
-- ``workloads.dense_select`` for seeds 1-10 at every ``DENSE_SIZES`` size;
+- ``workloads.dense_select`` for seeds 1-20 at every ``DENSE_SIZES`` size;
 - the seeded generators of ``tests/test_fuzz_dialect.py`` (seeds 2024, 77
   and 31337), one statement per generated expression plus one wide SELECT
-  per generator and seed.
+  per generator and seed;
+- ``operator_pair_selects`` of ``tests/test_dialect.py``: `a op1 b op2 c`
+  for every ordered pair of SQLite binary operators but GLOB, one wide
+  SELECT per first operator, and ``between_rows``: [NOT] BETWEEN next to
+  each of those operators, 24 expressions per SELECT.
 
 Each statement is rewritten twice, with no column types and with one
 typed map, by ``filesql_spark.dialect`` imported from this tree and from
@@ -115,10 +119,20 @@ def corpus() -> list[str]:
     sys.path.insert(0, bench)
     import workloads
 
-    for seed in range(1, 11):
+    for seed in range(1, 21):
         for size in workloads.DENSE_SIZES:
             stmts.append(workloads.dense_select(random.Random(seed), size))
     stmts += _fuzz_statements()
+    import test_dialect
+
+    # GLOB takes only a literal pattern here: a column pattern fails the
+    # whole statement, in both trees alike
+    ops = [op for op in test_dialect.PRECEDENCE_OPS if op != "GLOB"]
+    stmts += test_dialect.operator_pair_selects(ops, ops).values()
+    rows = [" ".join(r) for r in test_dialect.between_rows(ops)]
+    stmts += [
+        "SELECT " + ", ".join(rows[k:k + 24]) + " FROM t" for k in range(0, len(rows), 24)
+    ]
     return list(dict.fromkeys(stmts))
 
 
