@@ -39,8 +39,17 @@ The grouping rule: SQLite's operator precedence (parse.y) is written down
 once, in ``_PRECEDENCE``. Every operator pass finds an operator's operands
 with the one walker on that table, ``_operand_start`` / ``_operand_end``,
 so each groups a statement as SQLite does before Catalyst sees it; what a
-pass declines (a chained comparison, an operand it would have to copy)
-is its own check on the span the walker returns.
+pass declines (an operand it would have to copy) is its own check on the
+span the walker returns.
+
+The comparison band (= == != <> < <= > >=, IS, IN, BETWEEN and row
+values) is one pass, ``_rewrite_comparisons``, over one affinity rule:
+``_affinity`` decides SQLite's comparison affinity for a pair of
+operands and ``_cmp_render`` writes it for =, < and IS alike; BETWEEN's
+expansion test and IN's item and subquery conversions read the same
+decision. A comparison that is another comparison's operand is emitted
+parenthesized as SQLite groups it, since Spark puts every comparison
+operator on one level.
 
 The call rewrites (``_rewrite_calls``, ``_rewrite_json_tvf``) scan forward
 past each replacement instead, splicing statement and mask the same way
@@ -73,8 +82,8 @@ function, a plain CAST, or an inline typeof dispatch for an operand of
 unknown Spark type. Where Spark takes no SQL function (ORDER BY, VALUES,
 LATERAL VIEW, a call over an aggregate), ``_inline_session_calls``
 expands the call to its body, which copies its operands. Other templates
-(value-dependent division, comparison affinity, scalar min/max guards)
-still copy their operands.
+(value-dependent division, the comparison band's per-row conversion in
+``_cmp_render``, scalar min/max guards) still copy their operands.
 """
 
 from __future__ import annotations
@@ -1865,6 +1874,14 @@ def _parenthesized(e: str) -> bool:
     return e[:1] == "(" and _div_find_close(_div_mask(e), 0, len(e)) == len(e) - 1
 
 
+def _unparen(e: str) -> str:
+    """``e`` stripped, without its balanced outer parentheses."""
+    e = e.strip()
+    while _parenthesized(e):
+        e = e[1:-1].strip()
+    return e
+
+
 _CALL_HEAD_RX = re.compile(r"(?is)([a-z_]\w*)\s*\(")
 
 
@@ -1897,9 +1914,7 @@ def _spark_type(expr: str) -> str | None:
     comparisons. Unlike _static_affinity (SQLite affinity), a string
     literal is never numeric here: Spark keeps '99999999999999999999' a
     STRING, which a numeric cast of it can reject."""
-    e = expr.strip()
-    while _parenthesized(e):
-        e = e[1:-1].strip()
+    e = _unparen(expr)
     call = _whole_call(e)
     if call and call[0] in _SPARK_CALL_TYPE:
         return _SPARK_CALL_TYPE[call[0]]
@@ -3066,29 +3081,6 @@ def _in_cmp_band(level) -> bool:
     return level is not None and _NOT < level < _BIT
 
 
-def _cmp_operand_start(sql, mask, e, level):
-    """Start of the left operand (ending at ``e``) of a comparison-band
-    operator at ``level``; None when unscannable or part of a chained
-    comparison, where the affinity passes keep Spark's semantics."""
-    start = _operand_start(sql, mask, e, level)
-    if start is None or _in_cmp_band(_loosest_level(sql[start:e], mask[start:e])):
-        return None
-    k = _skip_ws_back(mask, start) - 1
-    op = _op_before(sql, mask, k) if k >= 0 else None
-    return None if op and _in_cmp_band(_LEVEL[op[0]]) else start
-
-
-def _cmp_operand_end(sql, mask, pos, level):
-    """End of the right operand (starting at ``pos``) of a comparison-band
-    operator at ``level``; None as for _cmp_operand_start."""
-    a = _skip_ws(mask, pos)
-    end = _operand_end(sql, mask, a, level)
-    if end is None or _in_cmp_band(_loosest_level(sql[a:end], mask[a:end])):
-        return None
-    op = _op_after(mask, _skip_ws(mask, end))
-    return None if op and _in_cmp_band(_LEVEL[op[0]]) else end
-
-
 def _strip_unary_plus(sql: str) -> str:
     """SQLite's unary ``+`` is a VALUE no-op (expr.c: `+'2e1' | 0` is
     2 — the STRING survives into the bitwise int-prefix parse) while
@@ -3685,28 +3677,6 @@ def _rewrite_values_columns(sql: str) -> str:
     return _apply_edits(sql, edits)
 
 
-def _sqlite_double_text_static(v: float) -> str:
-    """SQLite's %!.15g rendering of a REAL, computed statically for
-    literal operands (json1.double_to_text is the runtime twin)."""
-    s = f"{v:.15g}"
-    if "." not in s and "e" not in s and "inf" not in s and "nan" not in s:
-        s += ".0"
-    return s
-
-
-_CMP_OPS = ("<=", ">=", "<>", "!=", "==", "=", "<", ">")
-# result when the TEXT side is unconvertible (numerics order before
-# text, collation order BINARY): keyed by op with the text side RIGHT
-_CMP_TEXT_GREATER = {
-    "=": "false", "==": "false", "!=": "true", "<>": "true",
-    "<": "true", "<=": "true", ">": "false", ">=": "false",
-}
-_CMP_MIRROR = {
-    "=": "=", "==": "==", "!=": "!=", "<>": "<>",
-    "<": ">", "<=": ">=", ">": "<", ">=": "<=",
-}
-
-
 _SHIFT_LIT_RX = re.compile(r"^\+?\s*(\d+)$")
 
 
@@ -3815,206 +3785,491 @@ def _rewrite_bitwise(sql: str, coltypes) -> str:
     return _rewrite_sites(sql, "&|<>", chain)
 
 
-def _rewrite_row_values(sql: str) -> str:
-    """Row-value comparisons `(a, b) op (c, d)` (SQLite rowvalue.html;
-    Spark has no tuple-comparison syntax) expand to their scalar
-    equivalents BEFORE the affinity pass, so each element pair gets
-    per-element comparison affinity exactly as SQLite applies it:
+_CMP_BAND = frozenset({"=", "==", "!=", "<>", "<", "<=", ">", ">=", "is", "in", "between"})
+_CMP_BAND_RX = re.compile(r"[<>=!]|(?i:\b(?:is|in|between)\b)")
+_NUM = ("int", "real")
+# result when the TEXT side is unconvertible (numerics order before
+# text, collation order BINARY): keyed by op with the text side RIGHT
+_CMP_TEXT_GREATER = {
+    "=": "false", "==": "false", "!=": "true", "<>": "true",
+    "<": "true", "<=": "true", ">": "false", ">=": "false",
+}
+_CMP_MIRROR = {
+    "=": "=", "==": "==", "!=": "!=", "<>": "<>",
+    "<": ">", "<=": ">=", ">": "<", ">=": "<=",
+}
 
-    - `=`  → (a=c) AND (b=d); `!=` → NOT of that — pinned equivalent
-      for every NULL placement (81-combination grid vs sqlite3, r15)
-    - `<`  → (a<c) OR ((a=c) AND (b<d)), recursive for arity > 2; the
-      non-strict ops relax only the LAST element (also grid-pinned)
 
-    Scope: both sides literal parenthesized lists of equal arity ≥ 2.
-    Row values vs subqueries, in IN lists, or under IS stay native
-    (Spark's loud error). Elements are duplicated by the ordering
-    expansion — same caveat as BETWEEN expansion for non-deterministic
-    element expressions."""
-    if "(" not in sql:
+def _rewrite_comparisons(sql: str, coltypes) -> str:
+    """SQLite's comparison band in one pass: = == != <> < <= > >=,
+    IS [NOT], [NOT] IN, [NOT] BETWEEN and row values. One matcher reads
+    the operator at each position (_op_after) and hands the site to its
+    operator's body builder; each builder takes SQLite's comparison
+    affinity from _affinity and renders it with _cmp_render:
+
+    - `l op r`, and `l IS r`: = that also holds between two NULLs
+      (Spark's `<=>`; Spark parses IS only before NULL, TRUE, FALSE and
+      DISTINCT FROM, which stay as written);
+    - BETWEEN becomes its two comparisons when a bound needs a
+      conversion (_between_body);
+    - IN applies its left operand's affinity to a list's items
+      (_in_list_body) and the pair's affinity to a subquery's column,
+      inside SQL's three-valued IN (_in_sub_body);
+    - `(a, b) op (c, d)` becomes its element comparisons
+      (_row_value_body).
+
+    Sites are spliced leftmost first (_rewrite_sites), so a site nested
+    in another's operand or subquery is rewritten in each copy the
+    outer body makes, and in a chained comparison (`n < x = s`) the
+    later site takes the earlier comparison as its operand, which
+    _cmp_classify calls 'bool'. An operand that holds a comparison is
+    always emitted parenthesized (_group_chained): Spark puts every
+    comparison operator on one level and reads `n = x < 1` as
+    `(n = x) < 1`, where SQLite reads `n = (x < 1)`. The IS body's own
+    `<=>` is never a site."""
+    if not _CMP_BAND_RX.search(sql):
         return sql
 
     def match(sql, mask, low, pos):
-        c = mask[pos]
-        op = None
-        if c in "iI":
-            if not (low[pos:pos + 2] == "is" and (
-                pos == 0 or not (mask[pos - 1].isalnum()
-                                 or mask[pos - 1] == "_")
-            ) and not (mask[pos + 2:pos + 3].isalnum()
-                       or mask[pos + 2:pos + 3] == "_")):
+        if pos and (mask[pos - 1].isalnum() or mask[pos - 1] in "_<>=!"):
+            return None  # inside a word, or the tail of an operator
+        op = _op_after(mask, pos)
+        if op is None or op[0] not in _CMP_BAND or mask[pos:op[1]] == "<=>":
+            return None
+        key, op_end = op
+        words = low[pos:op_end].split()
+        before = _word_before(mask, pos)
+        if "distinct" in words or key in ("in", "between") and before and before[0] == "not":
+            return None  # IS [NOT] DISTINCT FROM; NOT IN / NOT BETWEEN match at the NOT
+        e = _skip_ws_back(mask, pos)
+        l_start = _operand_start(sql, mask, e, _LEVEL[key])
+        if l_start is None or l_start == e:
+            return None
+        x, neg, r_first = sql[l_start:e].strip(), "not" in words, _skip_ws(mask, op_end)
+        spans = [(l_start, e)]
+        if key == "in":
+            if mask[r_first:r_first + 1] != "(":
                 return None
-            # row values under IS / IS NOT: element-wise IS
-            # conjunction (grid-pinned 162/162 vs sqlite3, r15)
-            op = "IS"
-            jn = _skip_ws(mask, pos + 2)
-            wn = _WORD_RX.match(mask, jn)
-            if wn and low[wn.start():wn.end()] == "not":
-                op = "IS NOT"
-                op_end = wn.end()
+            close = _div_find_close(mask, r_first, len(sql))
+            if close == -1:
+                return None
+            end, w = close + 1, _WORD_RX.match(mask, _skip_ws(mask, r_first + 1))
+            if w and low[w.start():w.end()] == "select":
+                item = _in_sub_first_item(sql, mask, low, w.end(), close)
+                body = _in_sub_body(x, sql[r_first + 1:close].strip(), item, neg,
+                                    _filter_term(sql, mask, l_start, end), coltypes)
             else:
-                op_end = pos + 2
+                items = [sql[a:b].strip() for a, b in _div_split_args(mask, r_first + 1, close)]
+                body = _in_list_body(x, items, neg, coltypes)
+        elif key == "between":
+            lo = _operand_end(sql, mask, r_first, _EQ)
+            w = lo and _WORD_RX.match(mask, _skip_ws(mask, lo))
+            if not w or low[w.start():w.end()] != "and":
+                return None
+            hi_first = _skip_ws(mask, w.end())
+            end = _operand_end(sql, mask, hi_first, _EQ)
+            if end is None:
+                return None
+            spans += [(r_first, lo), (hi_first, end)]
+            body = _between_body(x, sql[r_first:lo].strip(), sql[hi_first:end].strip(),
+                                 neg, coltypes)
         else:
-            two = mask[pos:pos + 2]
-            if two in ("<<", ">>"):
+            w = _WORD_RX.match(mask, r_first)
+            if key == "is" and w and low[w.start():w.end()] in ("null", "true", "false"):
+                # Spark's own IS [NOT] NULL / TRUE / FALSE, but SQLite's
+                # IS TRUE also reads a number or text by its truth value
+                if low[w.start():w.end()] == "null" or \
+                        _cmp_classify(x, coltypes)[1] in ("bool", "null", "unk"):
+                    return None
+                return l_start, e, f"(CAST(({x}) AS REAL) <> 0)"
+            end = _operand_end(sql, mask, r_first, _LEVEL[key])
+            if end is None:
                 return None
-            op = two if two in _CMP_OPS else (c if c in "<>=" else None)
-            if op is None or (c == "!" and two != "!="):
-                return None
-            if pos > 0 and mask[pos - 1] in "<>=!":
-                return None
-            op_end = pos + len(op)
-        # right side must be a bare paren group
-        j = _skip_ws(mask, op_end)
-        if j >= len(sql) or mask[j] != "(":
+            spans.append((r_first, end))
+            op = "<=>" if key == "is" else "=" if key == "==" else key
+            body = _row_value_body(sql, mask, spans, op, neg) \
+                or _cmp_site(sql, mask, low, x, r_first, end, op, neg, coltypes)
+        if body is None:
+            return _group_chained(sql, mask, l_start, end, spans)
+        return l_start, end, body
+
+    return _rewrite_sites(sql, "<>=!iInNbB", match)
+
+
+def _chained(sql, mask, a, b) -> bool:
+    """The operand [a, b) holds a comparison-band operator at depth 0."""
+    return _in_cmp_band(_loosest_level(sql[a:b], mask[a:b]))
+
+
+def _group_chained(sql, mask, a, b, spans):
+    """The site [a, b) with each operand span that holds a comparison
+    parenthesized, or None when none does."""
+    out, pos = [], a
+    for s, t in spans:
+        if _chained(sql, mask, s, t):
+            out += [sql[pos:s], "(", sql[s:t], ")"]
+            pos = t
+    return None if pos == a else (a, b, "".join(out) + sql[pos:b])
+
+
+def _wrap(t: str) -> str:
+    """``t`` as an operand: bare when it is one primary, else in parens."""
+    return t if _vd_simple_primary(t) else f"({t})"
+
+
+def _row_value_body(sql, mask, spans, op, neg):
+    """`(a, b) op (c, d)` (rowvalue.html; Spark has no tuple comparison)
+    as its element comparisons, which this pass then converts one by
+    one, each under its own pair's affinity:
+
+    - `=` → (a = c) AND (b = d); `!=` → NOT of that, and IS / IS NOT
+      likewise over element IS (grid-pinned against sqlite3 for every
+      NULL placement);
+    - `<` → (a < c) OR ((a = c) AND (b < d)), recursive for arity > 2;
+      the non-strict operators relax only the last element.
+
+    None unless both operands are parenthesized lists of one arity ≥ 2
+    (a subquery or VALUES side stays as written). The ordering
+    expansion copies elements, as the BETWEEN expansion does."""
+    sides = []
+    for a, b in spans:
+        text = sql[a:b]
+        if not _parenthesized(text) or re.match(r"(?i)\(\s*(select|values)\b", text):
             return None
-        rclose = _div_find_close(mask, j, len(sql))
-        if rclose == -1:
+        sides.append([sql[s:t].strip() for s, t in _div_split_args(mask, a + 1, b - 1)])
+    ls, rs = sides
+    if len(ls) < 2 or len(ls) != len(rs):
+        return None
+    if op in ("=", "!=", "<>", "<=>"):
+        eq = "IS" if op == "<=>" else "="
+        body = " AND ".join(f"({l}) {eq} ({r})" for l, r in zip(ls, rs))
+        return f"(NOT ({body}))" if neg or op in ("!=", "<>") else f"({body})"
+
+    def order(i: int) -> str:
+        l, r = ls[i], rs[i]
+        if i == len(ls) - 1:
+            return f"({l}) {op} ({r})"
+        return f"(({l}) {op[0]} ({r})) OR ((({l}) = ({r})) AND ({order(i + 1)}))"
+
+    return f"({order(0)})"
+
+
+def _cmp_site(sql, mask, low, x, r_first, r_close, op, neg, coltypes):
+    """Body of the scalar comparison `x op r`, r spanning [r_first,
+    r_close); `<=>` stands for IS. None where Spark's comparison is
+    right. A trailing COLLATE NOCASE / BINARY on r applies after the
+    affinity conversion (datatype3 §5.2): NOCASE on a text comparison
+    attaches as UTF8_LCASE, on a numeric or type-order one it is
+    consumed; other collations stay as written (the collate pass
+    raises). A comparison whose operand is a mixed-arm searched CASE
+    (`CASE WHEN c THEN '0' ELSE abs(n) END`, no static class) is
+    distributed into the CASE's arms when the other side is cheap to
+    copy: SQLite compares the fired arm's value, and each arm is then a
+    site of its own."""
+    coll, r_end = None, r_close
+    mc = None if op == "<=>" or _chained(sql, mask, r_first, r_close) else \
+        _find_depth0(mask[r_first:r_close], _COLLATE_WORD_RX)
+    if mc:
+        r_end = _skip_ws_back(mask, r_first + mc.start())
+        w = _WORD_RX.match(mask, _skip_ws(mask, r_first + mc.end()))
+        if not w or low[w.start():w.end()] not in ("nocase", "binary") or w.end() != r_close:
+            # an operator after the name continues the operand (COLLATE
+            # binds tighter than || and arithmetic): the collate pass
+            # groups it
             return None
-        # left side must END with a paren group not glued to a name
-        e = pos
-        while e > 0 and mask[e - 1] in " \t\r\n":
-            e -= 1
-        if e == 0 or mask[e - 1] != ")":
-            return None
-        depth = 1
-        k = e - 2
-        while k >= 0 and depth:
-            if mask[k] == ")":
-                depth += 1
-            elif mask[k] == "(":
-                depth -= 1
-            k -= 1
-        if depth:
-            return None
-        lopen = k + 1
-        k2 = lopen - 1
-        while k2 >= 0 and mask[k2] in " \t\r\n":
-            k2 -= 1
-        if k2 >= 0 and (mask[k2].isalnum() or mask[k2] == "_"):
-            ws = k2
-            while ws > 0 and (mask[ws - 1].isalnum() or mask[ws - 1] == "_"):
-                ws -= 1
-            if low[ws:k2 + 1] not in (
-                "select", "where", "and", "or", "not", "on", "when",
-                "then", "else", "having", "by", "case", "union",
-                "all", "except", "intersect", "distinct",
-            ):
-                return None  # function call glued to the group
-        elif k2 >= 0 and mask[k2] in "`\")'":
-            return None  # identifier/close-paren glued
-        ls = _div_split_args(mask, lopen + 1, e - 1)
-        rs = _div_split_args(mask, j + 1, rclose)
-        if (
-            len(ls) < 2 or len(ls) != len(rs)
-            or re.match(r"(?i)\s*select\b", sql[lopen + 1:e - 1])
-            or re.match(r"(?i)\s*select\b", sql[j + 1:rclose])
-            or re.match(r"(?i)\s*values\b", low[lopen + 1:e - 1])
+        coll = low[w.start():w.end()]
+    r = sql[r_first:r_end].strip()
+    if not r:
+        return None
+    plan, k, vcls = _affinity(x, r, coltypes)
+    if op == "<=>":
+        body = _cmp_render(x, r, op, plan, k, vcls, coltypes) or f"(({x}) <=> ({r}))"
+        return f"(NOT {body})" if neg else body
+    if plan != "unk":
+        return _cmp_render(x, r, op, plan, k, vcls, coltypes, coll)
+    for k, (case, other) in enumerate(((x, r), (r, x))):
+        if vcls[k] == "unk" and coll is None and (
+            _vd_operand_ok(other) or _vd_compound_operand(f"({other})")
         ):
-            return None
-        lparts = [sql[a0:b0].strip() for a0, b0 in ls]
-        rparts = [sql[a0:b0].strip() for a0, b0 in rs]
-        if op in ("IS", "IS NOT"):
-            body = " AND ".join(
-                f"({l}) IS ({r})" for l, r in zip(lparts, rparts)
-            )
-            repl = f"({body})" if op == "IS" else f"(NOT ({body}))"
-        elif op in ("=", "=="):
-            body = " AND ".join(
-                f"({l}) = ({r})" for l, r in zip(lparts, rparts)
-            )
-            repl = f"({body})"
-        elif op in ("!=", "<>"):
-            body = " AND ".join(
-                f"({l}) = ({r})" for l, r in zip(lparts, rparts)
-            )
-            repl = f"(NOT ({body}))"
+            return _cmp_case_distribute(case, other, op, k == 0)
+    return None
+
+
+def _affinity(l: str, r: str, coltypes, left_only=False):
+    """SQLite's comparison affinity (datatype3 §4.2, expr.c
+    comparisonAffinity) for the operands ``l`` and ``r``: NUMERIC
+    affinity on one side converts the other, TEXT affinity converts a
+    side that has none, and what is left compares by storage class
+    (NULL < numbers < text). ``left_only`` drops r's affinity: IN reads
+    only its left operand's. Returns (plan, k, (vcl_l, vcl_r)), k the
+    side (0 for l, 1 for r) that the plan converts, and the plan one of
+
+    - 'native': Spark compares the values as SQLite does;
+    - 'rowwise': side k is text under NUMERIC affinity, converted row by
+      row; text that does not convert orders above every number;
+    - 'order': side k is text that never equals the other side's number
+      (a junk string literal under NUMERIC affinity, or text against a
+      number with no affinity at all): the type-order constant;
+    - 'unquote': side k is a clean-numeric string literal under NUMERIC
+      affinity, compared as its number;
+    - 'int': side k is a boolean (TRUE, a predicate) against a number:
+      SQLite's INTEGER 0/1;
+    - 'text': side k is a number under TEXT affinity, compared as its
+      SQLite text;
+    - 'null', 'unk': a NULL operand, or one _cmp_classify cannot type."""
+    (aff0, v0), (aff1, v1) = _cmp_classify(l, coltypes), _cmp_classify(r, coltypes)
+    if left_only and aff1 != "unk":
+        aff1 = None
+    vcls = (v0, v1)
+    if "unk" in (aff0, aff1, v0, v1):
+        return "unk", None, vcls
+    if "null" in vcls:
+        return "null", None, vcls
+    if aff0 is not None and aff1 is not None:
+        if aff0 in _NUM and aff1 == "text":
+            return "rowwise", 1, vcls
+        if aff0 == "text" and aff1 in _NUM:
+            return "rowwise", 0, vcls
+        return "native", None, vcls
+    if aff0 is not None or aff1 is not None:
+        k = 0 if aff0 is None else 1
+        xa, ov = aff0 or aff1, vcls[k]
+        if xa in _NUM and ov == "strlit":
+            clean = _div_str_lit_type(_literal_content(_unparen((l, r)[k]))) in _NUM
+            return ("unquote" if clean else "order"), k, vcls
+        if xa in _NUM:
+            plan = {"text": "rowwise", "bool": "int"}.get(ov, "native")
         else:
-            strict = op[0]
-
-            def _rec(i: int) -> str:
-                l, r = lparts[i], rparts[i]
-                if i == len(lparts) - 1:
-                    return f"({l}) {op} ({r})"
-                return (
-                    f"(({l}) {strict} ({r})) OR "
-                    f"((({l}) = ({r})) AND ({_rec(i + 1)}))"
-                )
-
-            repl = f"({_rec(0)})"
-        return lopen, rclose + 1, repl
-
-    return _rewrite_sites(sql, "iI<>=!", match)
+            plan = "text" if ov in ("bool", "numlit", "num") else "native"
+        return plan, (None if plan == "native" else k), vcls
+    nums = ("num", "numlit", "bool")
+    if (v0 == "bool") != (v1 == "bool") and v0 in nums and v1 in nums:
+        return "int", (0 if v0 == "bool" else 1), vcls
+    for k in (0, 1):
+        if vcls[k] in ("strlit", "text") and vcls[1 - k] in nums:
+            return "order", k, vcls
+    return "native", None, vcls
 
 
-def _affinity_triggers(sql: str, coltypes) -> bool:
-    """Shared gate for the comparison- and range-affinity passes: a
-    TEXT column or string literal (classic affinity sites), or an
-    r15 bool-operand site (EXISTS/predicate/TRUE/FALSE/~) or a
-    collation-consuming site — those fire without any TEXT column
-    (`true IN (n, 2)` must coerce the boolean even on an all-numeric
-    table; r16 advice extended this gate to the range pass too)."""
-    return bool(
-        (coltypes and "text" in coltypes.values()) or "'" in sql
-        or "~" in sql
-        or re.search(r"(?i)\b(exists|collate|true|false)\b", sql)
-        or ("(" in sql and re.search(r"\)\s*[<>=!]|[<>=!]=?\s*\(", sql))
-        # parenthesized predicate as IN/BETWEEN left operand:
-        # `(n = 1) IN (0, 2)` has its comparison chars inside the
-        # parens, so the adjacency regex above never fires (r16)
-        or (re.search(r"[<>=!]", sql)
-            and re.search(r"(?i)\)\s*(not\s+)?(in|between)\b", sql))
+def _cmp_render(l, r, op, plan, k, vcls, coltypes, coll=None):
+    """The text of `l op r` under _affinity's (plan, k, vcls), or None
+    where the comparison as written is right. ``op`` is a comparison
+    operator or `<=>` for IS, whose NULL operands compare equal: there
+    the type-order constant and the row-wise conversion's NULL arm read
+    NULL equality. ``coll`` is a trailing NOCASE / BINARY."""
+    is_op = op == "<=>"
+    sides = [l, r]
+    if plan == "null":
+        # NULL against a boolean operand, or under a COLLATE: Spark
+        # rejects both, and SQLite's result is NULL
+        return None if is_op or not ("bool" in vcls or coll) else "TRY_CAST(NULL AS BOOLEAN)"
+    if plan in ("native", "unk"):
+        # a numeric comparison ignores the collation, which Spark rejects
+        # on a number: re-emitted without it
+        if coll and plan == "native" and not {"text", "strlit"} & set(vcls):
+            return f"(({l}) {op} ({r}))"
+        return None
+    eq = "=" if is_op else op
+    const = _CMP_TEXT_GREATER[eq if k else _CMP_MIRROR[eq]]
+    if plan == "rowwise":
+        num, txt = sides[1 - k], sides[k]
+        d = f"TRY_CAST(({txt}) AS DOUBLE)"
+        test = f"({num}) {eq} {d}" if k else f"{d} {eq} ({num})"
+        on_null = f"(({num}) IS NULL AND ({txt}) IS NULL)" if is_op else "CAST(NULL AS BOOLEAN)"
+        return (
+            f"(CASE WHEN ({num}) IS NULL OR ({txt}) IS NULL THEN {on_null} "
+            f"WHEN {d} IS NOT NULL THEN {test} ELSE {const} END)"
+        )
+    if plan == "order":
+        guards = [f"({t}) IS NULL" for t, v in zip(sides, vcls) if v in ("num", "text", "bool")]
+        if is_op:
+            return f"({guards[0]} AND {guards[1]})" if len(guards) == 2 else "(1 = 0)"
+        if not guards:
+            # (1 = 1), not (true): a bare parenthesized identifier after
+            # WHERE parses as a column-alias list in Spark
+            return "(1 = 1)" if const == "true" else "(1 = 0)"
+        return f"(CASE WHEN {' OR '.join(guards)} THEN CAST(NULL AS BOOLEAN) ELSE {const} END)"
+    if plan == "unquote":
+        sides[k] = _literal_content(_unparen(sides[k])).strip()
+    elif plan == "int":
+        sides[k] = f"TRY_CAST(({sides[k]}) AS INT)"
+    else:
+        text = _as_text(sides[k], vcls[k], coltypes)
+        if text is None:
+            return None
+        sides[k] = text + (" COLLATE UTF8_LCASE" if coll == "nocase" else "")
+    return f"(({sides[0]}) {op} ({sides[1]}))"
+
+
+def _as_text(o: str, vcl: str, coltypes, val: str | None = None) -> str | None:
+    """SQLite's TEXT of the numeric operand ``o`` of value class ``vcl``
+    (TEXT affinity applied to it), reading its value from ``val`` (``o``
+    itself by default); None when its int / real flavor is unknown."""
+    if vcl == "numlit" and val is None:
+        return _numlit_text(o)
+    v = val or f"({o})"
+    if vcl == "bool":  # BIGINT first: Spark casts a boolean to 'true'
+        return f"TRY_CAST(TRY_CAST({v} AS BIGINT) AS STRING)"
+    t = _cmp_num_type(o, coltypes)
+    if t == "int":
+        # TRY_CAST, not CAST: the cast pass skips the whole interior of a
+        # CAST it declines, leaving SQLite-spelled casts inside unexpanded
+        return f"TRY_CAST({v} AS STRING)"
+    if t == "real":
+        return f"filesql_double_text(TRY_CAST({v} AS DOUBLE))"
+    # a value-dependent arithmetic chain: runtime flavor dispatch
+    return None if val else _cmp_chain_render(o, coltypes)
+
+
+def _numlit_text(text: str) -> str:
+    """SQLite's TEXT of the numeric literal ``text`` (under any signs and
+    parentheses) as a string literal: a REAL renders %!.15g
+    (json1.double_to_text is the runtime twin)."""
+    body, neg = text, False
+    while True:
+        body = body.lstrip("+ \t")
+        while body.startswith("-"):
+            neg, body = not neg, body[1:].lstrip("+ \t")
+        if not _parenthesized(body):
+            break
+        body = body[1:-1].strip()
+    if body[:2].lower() == "0x":
+        lit = str(-int(body, 16) if neg else int(body, 16))
+    elif _div_lit_type(body) == "real" or body[-1:] in "dDfF":
+        v = float(body.rstrip("dDfF"))
+        lit = f"{-v if neg else v:.15g}"
+        if not any(c in lit for c in (".", "e", "inf", "nan")):
+            lit += ".0"
+    else:
+        lit = ("-" if neg else "") + body
+    return "'" + lit.replace("'", "''") + "'"
+
+
+def _between_body(x, lo, hi, neg, coltypes):
+    """`x [NOT] BETWEEN lo AND hi` as its comparisons `x >= lo AND x <=
+    hi` (expr.c evaluates it so) when either needs a comparison-affinity
+    conversion; this pass then converts them one by one. None
+    otherwise. A boolean operand converts too: it is INTEGER 0/1 in
+    SQLite and crashes Spark's BETWEEN against numbers."""
+    plans = {_affinity(x, b, coltypes)[0] for b in (lo, hi)}
+    if "unk" in plans or plans <= {"native", "null"}:
+        return None
+    body = f"({_wrap(x)} >= {_wrap(lo)} AND {_wrap(x)} <= {_wrap(hi)})"
+    return f"(NOT {body})" if neg else body
+
+
+def _in_list_body(x, items, neg, coltypes):
+    """`x [NOT] IN (items…)`. SQLite's IN applies only x's affinity to
+    the items (pinned: '7.0' IN (CAST('7' AS REAL)) is 0 while '7.0' =
+    CAST('7' AS REAL) is 1). Literal items under an x with affinity
+    keep a native IN over the literals as x reads them: clean-numeric
+    strings unquoted, junk ones dropped (they never equal a number),
+    numbers as SQLite's text; NULL items stay for the three-valued
+    result. Any other list that needs a conversion becomes its OR chain
+    of `x = item`, IN's own three-valued semantics, which copies x per
+    item. None when no item needs one."""
+    aff, vcl = _cmp_classify(x, coltypes)
+    if "" in items or "unk" in (aff, vcl) or vcl == "null":
+        return None
+    sites = []
+    for t in items:
+        site = ("null", None, None) if t.lower() == "null" else \
+            _affinity(x, t, coltypes, left_only=True)
+        if site[0] == "unk" or site[0] == "null" and t.lower() != "null":
+            return None
+        sites.append(site)
+    if aff in ("int", "real", "text") and _vd_simple_primary(x) and all(
+        _VD_LIT_RX.fullmatch(t) or _NUM_LIT_RX.fullmatch(t.lstrip("+-")) for t in items
+    ):
+        out = []
+        for t, (plan, _k, _v) in zip(items, sites):
+            if plan == "unquote":
+                out.append(_literal_content(t).strip())
+            elif plan == "text":
+                out.append(_numlit_text(t))
+            elif plan != "order":
+                out.append(t)
+        if out == items:
+            return None
+        body = f"(({x}) {'NOT ' if neg else ''}IN ({', '.join(out)}))" if out else \
+            f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) ELSE false END)"
+        return f"(NOT {body})" if neg and not out else body
+    parts = [None if s[0] == "null" else _cmp_render(x, t, "=", *s, coltypes)
+             for t, s in zip(items, sites)]
+    if not any(parts):
+        return None
+    body = "(" + " OR ".join(
+        p or f"{_wrap(x)} = {_wrap(t)}" for p, t in zip(parts, items)
+    ) + ")"
+    return f"(NOT {body})" if neg else body
+
+
+_FILTER_HEADS = frozenset({"where", "having", "on", "when"})
+
+
+def _filter_term(sql, mask, a, b) -> bool:
+    """The predicate [a, b) is a term of the AND / OR chain right under a
+    WHERE, HAVING, ON or WHEN, where a NULL and a false alike reject."""
+    k = _skip_ws_back(mask, a) - 1
+    op = _op_before(sql, mask, k) if k >= 0 else None
+    if op is not None:
+        if op[0] not in ("and", "or"):
+            return False
+        a = _operand_start(sql, mask, _skip_ws_back(mask, op[1]), _LEVEL["or"])
+        if a is None:
+            return False
+    head, after = _word_before(mask, a), _op_after(mask, _skip_ws(mask, b))
+    return bool(head and head[0] in _FILTER_HEADS) and (
+        after is None or after[0] in ("and", "or")
     )
 
 
-def _rewrite_compare_affinity(
-    sql: str, coltypes: dict[str, str] | None
-) -> str:
-    """SQLite comparison affinity (expr.c comparisonAffinity) between
-    numeric and TEXT operands:
-
-    - numeric-affinity side vs TEXT column → NUMERIC conversion is
-      attempted per row; unconvertible text stays TEXT and numerics
-      order before all text (Spark's implicit string→double cast
-      ANSI-crashes on the first junk value instead).
-    - TEXT-affinity column vs numeric LITERAL (which carries NO
-      affinity) → TEXT affinity applies to the literal: the comparison
-      is a STRING comparison against SQLite's text rendering
-      (s = 7.0 matches '7.0'; Spark would compare numerically).
-    - numeric side vs junk TEXT literal → statically unconvertible:
-      the type-order constant (NULL-guarded on the other side).
-
-    Affinity model (pinned empirically vs sqlite3, r14): only COLUMN
-    references (parens transparent) and CASTs carry affinity;
-    arithmetic chains, function calls, CASE, and unary +/- carry NONE —
-    so `a + 1 > s` string-compares the rendered sum (the TEXT column
-    side wins), `abs(a) = s` likewise, and `'abc' > 5*2` is a type-
-    order constant (text above numerics), NULL-guarded.
-
-    Scope: operands are primaries or +-*/% chains of primaries; ||/
-    bitwise-glued operands, CASE operands, and unknown-typed spans keep
-    Spark semantics (documented residue)."""
-    if not _affinity_triggers(sql, coltypes):
-        return sql
-
-    def match(sql, mask, low, pos):
-        c = mask[pos]
-        two = mask[pos:pos + 2]
-        if two in ("<<", ">>"):
-            return None  # bitwise shift, not a comparison (r15)
-        op = two if two in _CMP_OPS else (c if c in "<>=" else None)
-        if op is None or (c == "!" and two != "!="):
-            return None
-        # not part of a longer operator already consumed
-        if pos > 0 and mask[pos - 1] in "<>=!":
-            return None
-        return _cmp_match_site(sql, mask, pos, op, coltypes)
-
-    return _rewrite_sites(sql, "<>=!", match)
-
-
-_BETWEEN_RX = re.compile(r"(?i)\b(not\s+)?between\b")
-_IN_RX = re.compile(r"(?i)\b(not\s+)?in\b")
+def _in_sub_body(x, sub, item, neg, filtering, coltypes):
+    """`x [NOT] IN (sub)`, ``item`` the subquery's one column (None when
+    it has more). The pair (x, item) takes comparison affinity as a
+    direct comparison does (expr.c sqlite3CompareAffinity on TK_IN):
+    NUMERIC converts a text side row by row (junk text in the subquery
+    is dropped: it never equals a number), TEXT renders a numeric side
+    as SQLite's text, and numbers never equal text with no affinity.
+    The result is SQL's three-valued IN: false on an empty set, NULL
+    for a NULL x, true on a match, else NULL when the set holds a NULL
+    and false when not. Spark plans an IN subquery outside a filter as
+    an existence join, which never yields NULL, so every site takes that
+    template but a term of a filter condition (``filtering``,
+    _filter_term) that needs no conversion, where a NULL and a false
+    alike reject. None for a multi-column subquery."""
+    if item is None:
+        return None
+    plan, k, vcls = _affinity(x, item, coltypes)
+    hit = f"({x}) IN ({sub})"
+    if plan in ("rowwise", "unquote") and k:
+        hit = (
+            f"({x}) IN (SELECT CASE WHEN __c IS NULL THEN CAST(NULL AS DOUBLE) "
+            f"ELSE TRY_CAST(__c AS DOUBLE) END FROM ({sub}) AS __in_aff(__c) "
+            f"WHERE __c IS NULL OR TRY_CAST(__c AS DOUBLE) IS NOT NULL)"
+        )
+    elif plan in ("rowwise", "unquote"):
+        hit = f"TRY_CAST(({x}) AS DOUBLE) IN ({sub})"
+    elif plan == "order":
+        hit = None
+    elif plan == "text":
+        text = _as_text(item, vcls[1], coltypes, "__c") if k else _as_text(x, vcls[0], coltypes)
+        if text is None:
+            plan = "unk"
+        elif k:
+            hit = f"({x}) IN (SELECT {text} FROM ({sub}) AS __in_r(__c))"
+        else:
+            hit = f"({text}) IN ({sub})"
+    if filtering and plan in ("native", "unk", "null", "int"):
+        return None
+    body = (
+        f"(CASE WHEN (SELECT count(*) FROM ({sub}) AS __in_e) = 0 THEN false "
+        f"WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "
+        + (f"WHEN {hit} THEN true " if hit else "")
+        + f"ELSE (SELECT CASE WHEN count(__c) = count(*) THEN false END "
+        f"FROM ({sub}) AS __in_nul(__c)) END)"
+    )
+    return f"(NOT {body})" if neg else body
 
 
 def _in_sub_first_item(sql, mask, low, a, b):
@@ -4059,437 +4314,6 @@ def _in_sub_first_item(sql, mask, low, a, b):
     return item
 
 
-def _in_subquery_affinity_edit(sql, mask, e, neg, p, close, coltypes):
-    """`x IN (SELECT y …)` under comparison affinity (r14): the affinity
-    pair (x, first select item) decides the conversion, exactly as for
-    a direct comparison (expr.c sqlite3CompareAffinity on TK_IN):
-
-    - NUMERIC: text-valued sides convert per row; junk text on the
-      subquery side is dropped (it can never equal a numeric), junk x
-      falls to FALSE — or NULL when the list holds a NULL.
-    - TEXT: the no-affinity numeric-valued side renders as SQLite text
-      and the IN becomes a string-set membership.
-    - no affinity on both sides, mixed value classes: numerics and text
-      never compare equal — FALSE, NULL-guarded.
-
-    NULL-presence note: Spark's IN-subquery yields FALSE where SQL
-    three-valued logic yields NULL (no match + NULL in list); in WHERE
-    context both drop the row, which is the exercised contract. Only
-    mixed-affinity sites are rewritten, so affinity-clean queries keep
-    Spark's native plan (a left-semi join)."""
-    low = sql.lower()
-    l_start = _cmp_operand_start(sql, mask, e, _EQ)
-    if l_start is None:
-        return None
-    x = sql[l_start:e].strip()
-    if not x:
-        return None
-    affX, vclX = _cmp_classify(x, coltypes)
-    if "unk" in (affX, vclX) or vclX in ("null", "bool"):
-        return None
-    ia = _skip_ws(mask, p + 1)
-    wsel = _WORD_RX.match(mask, ia)
-    item = _in_sub_first_item(sql, mask, low, wsel.end(), close)
-    if item is None:
-        return None
-    affY, vclY = _cmp_classify(item, coltypes)
-    if "unk" in (affY, vclY) or vclY in ("null", "bool"):
-        return None
-    sub = sql[p + 1:close].strip()
-    NUM = ("int", "real")
-    if affX is not None and affY is not None:
-        if affX in NUM and affY in NUM:
-            return None  # both numeric: native semantics agree
-        if affX == "text" and affY == "text":
-            return None  # both TEXT: binary value compare — native
-        a_cmp = "numeric"
-    elif affX is not None:
-        a_cmp = "numeric" if affX in NUM else "text"
-    elif affY is not None:
-        a_cmp = "numeric" if affY in NUM else "text"
-    else:
-        a_cmp = "none"
-    x_textval = affX == "text" or (
-        affX is None and vclX in ("text", "strlit"))
-    y_textval = affY == "text" or (
-        affY is None and vclY in ("text", "strlit"))
-    if a_cmp == "numeric":
-        if not x_textval and not y_textval:
-            return None
-        sub_num = f"({sub})"
-        if y_textval:
-            sub_num = (
-                f"(SELECT CASE WHEN __c IS NULL THEN CAST(NULL AS DOUBLE) "
-                f"ELSE TRY_CAST(__c AS DOUBLE) END "
-                f"FROM ({sub}) AS __in_aff(__c) "
-                f"WHERE __c IS NULL OR TRY_CAST(__c AS DOUBLE) IS NOT NULL)"
-            )
-        if x_textval:
-            # empty-set gate FIRST: SQLite's x IN (empty) is 0 (false)
-            # even for NULL x (r14 advice, low) — the IS NULL arm must
-            # not fire before emptiness is known.
-            body = (
-                f"(CASE WHEN (SELECT count(*) FROM ({sub}) AS __in_e) = 0 "
-                f"THEN false "
-                f"WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-                f"WHEN TRY_CAST(({x}) AS DOUBLE) IS NOT NULL "
-                f"THEN TRY_CAST(({x}) AS DOUBLE) IN {sub_num} "
-                f"ELSE (SELECT CASE WHEN count(__c) = count(*) THEN false "
-                f"END FROM ({sub}) AS __in_nul(__c)) END)"
-            )
-        else:
-            body = f"(({x}) IN {sub_num})"
-    elif a_cmp == "text":
-        if x_textval and y_textval:
-            return None  # both text-valued: native string membership
-        if not x_textval:
-            cm0 = _div_mask(x)
-            t0 = _div_walk(x, cm0, 0, len(x), coltypes, [])
-            if t0 == "int":
-                rend = f"TRY_CAST(({x}) AS STRING)"  # see _cmp render
-            elif t0 == "real":
-                rend = f"filesql_double_text(TRY_CAST(({x}) AS DOUBLE))"
-            else:
-                return None
-            body = f"(({rend}) IN ({sub}))"
-        else:
-            cm0 = _div_mask(item)
-            t0 = _div_walk(item, cm0, 0, len(item), coltypes, [])
-            if t0 == "int":
-                rend = "TRY_CAST(__c AS STRING)"
-            elif t0 == "real":
-                rend = "filesql_double_text(TRY_CAST(__c AS DOUBLE))"
-            else:
-                return None
-            body = f"(({x}) IN (SELECT {rend} FROM ({sub}) AS __in_r(__c)))"
-    else:
-        if x_textval == y_textval:
-            return None  # same value class: native semantics agree
-        const = (
-            f"(SELECT CASE WHEN count(__c) = count(*) THEN false END "
-            f"FROM ({sub}) AS __in_c(__c))"
-        )
-        if vclX in ("numlit", "strlit"):
-            body = const
-        else:
-            # same empty-set-first ordering as the numeric branch
-            body = (
-                f"(CASE WHEN (SELECT count(*) FROM ({sub}) AS __in_e) = 0 "
-                f"THEN false "
-                f"WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-                f"ELSE {const} END)"
-            )
-    if neg:
-        body = f"(NOT {body})"
-    return l_start, close + 1, body
-
-
-def _in_list_mixed_edit(sql, mask, e, neg, p, close, coltypes):
-    """`x IN (e1, e2, …)` with non-literal or compound operands of
-    mixed value class (r15 campaign find): natively Spark type-crashes
-    ('abc' IN (-n, CAST(s AS REAL))). SQLite's IN uses ONLY the LEFT
-    operand's affinity — item affinities are IGNORED (pinned: '7.0' IN
-    (CAST('7' AS REAL)) is 0 while '7.0' = CAST('7' AS REAL) is 1, and
-    7 IN (s) is 0 while 7 = s is 1). Expand to the OR chain — exactly
-    IN's three-valued semantics — converting each item per x's
-    affinity: numeric x converts text items per row, TEXT x renders
-    numeric items, no-affinity x compares storage classes raw
-    (cross-family pairs are constant false, NULL-guarded). x is
-    duplicated per item (the BETWEEN-expansion caveat). Lists needing
-    no conversion stay native."""
-    l_start = _cmp_operand_start(sql, mask, e, _EQ)
-    if l_start is None:
-        return None
-    x = sql[l_start:e].strip()
-    if not x:
-        return None
-    affX, vclX = _cmp_classify(x, coltypes)
-    if "unk" in (affX, vclX) or vclX == "null":
-        return None
-    NUM = ("int", "real")
-    NUMISH = ("num", "numlit", "bool")
-    TEXTISH = ("text", "strlit")
-
-    def fam(aff, vcl):
-        if aff in NUM or (aff is None and vcl in NUMISH):
-            return "n"
-        if aff == "text" or (aff is None and vcl in TEXTISH):
-            return "t"
-        return "?"
-
-    fx = fam(affX, vclX)
-    if fx == "?":
-        return None
-
-    def wr(t):
-        return t if _vd_simple_primary(t) else f"({t})"
-
-    x_r = wr(x)
-    if affX is None and vclX == "bool":
-        x_r = f"TRY_CAST(({x}) AS INT)"
-    parts = []
-    any_help = False
-    for s0, s1 in _div_split_args(mask, p + 1, close):
-        t = sql[s0:s1].strip()
-        if not t:
-            return None
-        if t.lower() == "null":
-            parts.append(f"{x_r} = NULL")
-            continue
-        affI, vclI = _cmp_classify(t, coltypes)
-        if "unk" in (affI, vclI) or vclI == "null":
-            return None
-        fi = fam(affI, vclI)
-        if fi == "?":
-            return None
-        ib = vclI == "bool"
-        if affX in NUM:
-            if fi == "t":
-                parts.append(
-                    f"(CASE WHEN ({x}) IS NULL OR ({t}) IS NULL "
-                    f"THEN CAST(NULL AS BOOLEAN) "
-                    f"WHEN TRY_CAST(({t}) AS DOUBLE) IS NOT NULL "
-                    f"THEN ({x}) = TRY_CAST(({t}) AS DOUBLE) "
-                    f"ELSE false END)"
-                )
-                any_help = True
-            elif ib:
-                parts.append(f"{x_r} = TRY_CAST(({t}) AS INT)")
-                any_help = True
-            else:
-                parts.append(f"{x_r} = {wr(t)}")
-        elif affX == "text":
-            if fi == "n":
-                if ib:
-                    rend = f"TRY_CAST(TRY_CAST(({t}) AS BIGINT) AS STRING)"
-                else:
-                    t0 = _cmp_num_type(t, coltypes)
-                    if t0 == "int":
-                        rend = f"TRY_CAST(({t}) AS STRING)"
-                    elif t0 == "real":
-                        rend = (f"filesql_double_text("
-                                f"TRY_CAST(({t}) AS DOUBLE))")
-                    else:
-                        return None
-                parts.append(f"{x_r} = ({rend})")
-                any_help = True
-            else:
-                parts.append(f"{x_r} = {wr(t)}")
-        else:  # x carries NO affinity: raw storage-class compare
-            if fi != fx:
-                parts.append(
-                    f"(CASE WHEN ({x}) IS NULL OR ({t}) IS NULL "
-                    f"THEN CAST(NULL AS BOOLEAN) ELSE false END)"
-                )
-                any_help = True
-            elif ib != (vclX == "bool"):
-                ir = f"TRY_CAST(({t}) AS INT)" if ib else wr(t)
-                parts.append(f"{x_r} = {ir}")
-                any_help = True
-            elif ib:
-                parts.append(f"{wr(x)} = {wr(t)}")  # both boolean
-            else:
-                parts.append(f"{x_r} = {wr(t)}")
-    if not any_help or not parts:
-        return None
-    body = "(" + " OR ".join(parts) + ")"
-    if neg:
-        body = f"(NOT {body})"
-    return l_start, close + 1, body
-
-
-def _rewrite_range_affinity(sql: str, coltypes) -> str:
-    """BETWEEN and literal IN-lists under comparison affinity (r13b —
-    runs BEFORE _rewrite_compare_affinity so its sites land there):
-
-    - `x BETWEEN a AND b` with a string literal bound and a numeric-
-      affinity x (or numeric bound and TEXT x) expands to the
-      comparison conjunction, which the affinity pass then converts.
-    - `x IN (literals…)`: x's affinity applies to each item (SQLite
-      in-operator rules): numeric x unquotes clean-numeric strings and
-      DROPS junk ones (they can never match; NULL items kept for the
-      three-valued result); TEXT x renders numeric items as SQLite
-      text. Subquery / non-literal lists stay untouched."""
-    mask = _div_mask(sql)
-    low = sql.lower()
-    edits: list[tuple[int, int, str]] = []
-    for m in _BETWEEN_RX.finditer(mask):
-        e = m.start()
-        while e > 0 and mask[e - 1] in " \t\r\n":
-            e -= 1
-        l_start = _cmp_operand_start(sql, mask, e, _EQ)
-        if l_start is None:
-            continue  # also skips ROWS/RANGE BETWEEN window frames
-        x = sql[l_start:e].strip()
-        if not x:
-            continue
-        xa, xv = _cmp_classify(x, coltypes)
-        if "unk" in (xa, xv) or xv == "null":
-            continue
-        a0 = _skip_ws(mask, m.end())
-        a1 = _cmp_operand_end(sql, mask, a0, _EQ)
-        if a1 is None:
-            continue
-        j = _skip_ws(mask, a1)
-        wm = _WORD_RX.match(mask, j)
-        if not wm or low[wm.start():wm.end()] != "and":
-            continue
-        b0 = _skip_ws(mask, wm.end())
-        b1 = _cmp_operand_end(sql, mask, b0, _EQ)
-        if b1 is None:
-            continue
-        a_txt, b_txt = sql[a0:a1].strip(), sql[b0:b1].strip()
-        aa, av = _cmp_classify(a_txt, coltypes)
-        ba, bv = _cmp_classify(b_txt, coltypes)
-        if "unk" in (aa, av, ba, bv):
-            continue
-        NUM = ("int", "real")
-
-        def _tx(aff, vcl):
-            return aff == "text" or (aff is None and vcl in
-                                     ("strlit", "text"))
-
-        def _nm(aff, vcl):
-            return aff in NUM or (aff is None and vcl in
-                                  ("num", "numlit"))
-
-        mixed = (
-            _tx(xa, xv) and (_nm(aa, av) or _nm(ba, bv))
-        ) or (
-            _nm(xa, xv) and (_tx(aa, av) or _tx(ba, bv))
-        )
-        # a bool-valued operand (TRUE/FALSE/EXISTS/predicate) is
-        # INTEGER 0/1 in SQLite but crashes Spark's BETWEEN against
-        # ints — expand and let the comparison-affinity pass convert
-        # each site with its r15 bool-operand handling (an explicit
-        # TRY_CAST AS INT here would LEAK int affinity the bare SQLite
-        # boolean does not carry — r16 campaign find: `true BETWEEN s
-        # AND …` must TEXT-compare '1' vs s, not numeric-compare)
-        boolish = "bool" in (xv, av, bv)
-        if not mixed and not boolish:
-            continue
-        # expand to the conjunction the comparison-affinity pass then
-        # converts site by site (expr.c evaluates BETWEEN exactly so);
-        # compounds get parens (the chain walk re-scans through them),
-        # simple primaries stay bare
-        wr = (lambda t: t if _vd_simple_primary(t) else f"({t})")
-        body = (
-            f"({wr(x)} >= {wr(a_txt)} AND {wr(x)} <= {wr(b_txt)})"
-        )
-        if m.group(1):
-            body = f"(NOT {body})"
-        edits.append((l_start, b1, body))
-    for m in _IN_RX.finditer(mask):
-        e = m.start()
-        while e > 0 and mask[e - 1] in " \t\r\n":
-            e -= 1
-        p = _skip_ws(mask, m.end())
-        if p >= len(sql) or mask[p] != "(":
-            continue
-        close = _div_find_close(mask, p, len(sql))
-        if close == -1:
-            continue
-        inner_a = _skip_ws(mask, p + 1)
-        wsel = _WORD_RX.match(mask, inner_a) if inner_a < close else None
-        if wsel and low[wsel.start():wsel.end()] == "select":
-            # IN (SELECT …): comparison affinity between x and the
-            # subquery's result column (r14, VERDICT r13 #5)
-            edit = _in_subquery_affinity_edit(
-                sql, mask, e, bool(m.group(1)), p, close, coltypes
-            )
-            if edit is not None:
-                edits.append(edit)
-            continue
-        # x is the full operand CHAIN (r15: _rev_primary_start grabbed
-        # only the last primary, splicing `n + 1 IN (…)` into
-        # `n + ((1) IN …)` — silent corruption), and the literal fast
-        # path requires x to CARRY affinity: a literal/expression x has
-        # none, and SQLite then compares storage classes raw
-        # (7 IN ('7') is 0 — pinned), which the helper implements.
-        l_start = _cmp_operand_start(sql, mask, e, _EQ)
-        if l_start is None:
-            continue
-        x = sql[l_start:e].strip()
-        affX0, _vclX0 = _cmp_classify(x, coltypes)
-        if affX0 not in ("int", "real", "text") or \
-                not _vd_simple_primary(x):
-            edit = _in_list_mixed_edit(
-                sql, mask, e, bool(m.group(1)), p, close, coltypes)
-            if edit is not None:
-                edits.append(edit)
-            continue
-        xt = affX0
-        items = []
-        changed = False
-        ok = True
-        for s0, s1 in _div_split_args(mask, p + 1, close):
-            t = sql[s0:s1].strip()
-            if t.lower() == "null":
-                items.append(t)
-                continue
-            if not (_VD_LIT_RX.fullmatch(t) or _NUM_LIT_RX.fullmatch(
-                    t.lstrip("+-"))):
-                ok = False
-                break
-            it = _div_walk(sql, mask, s0, s1, coltypes, [])
-            if xt in ("int", "real"):
-                if t.startswith("'"):
-                    changed = True
-                    if it in ("int", "real"):
-                        items.append(_literal_content(t).strip())
-                    # junk text: can never match a numeric — dropped
-                else:
-                    items.append(t)
-            else:  # TEXT x: numeric items render as SQLite text
-                if not t.startswith("'") and it in ("int", "real"):
-                    body = t.lstrip("+-")
-                    neg = t[:len(t) - len(body)].count("-") % 2 == 1
-                    if _div_lit_type(body) == "real" or body[-1:] in "dDfF":
-                        v = float(body.rstrip("dDfF"))
-                        lit = _sqlite_double_text_static(-v if neg else v)
-                    else:
-                        lit = ("-" if neg else "") + body
-                    items.append("'" + lit.replace("'", "''") + "'")
-                    changed = True
-                else:
-                    items.append(t)
-        if not ok:
-            edit = _in_list_mixed_edit(
-                sql, mask, e, bool(m.group(1)), p, close, coltypes)
-            if edit is not None:
-                edits.append(edit)
-            continue
-        if not changed:
-            continue
-        neg = bool(m.group(1))
-        if not items:
-            body = (
-                f"(CASE WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "
-                f"ELSE false END)"
-            )
-            if neg:
-                body = f"(NOT {body})"
-        else:
-            body = f"(({x}) {'NOT ' if neg else ''}IN ({', '.join(items)}))"
-        edits.append((l_start, close + 1, body))
-    if not edits:
-        return sql
-    # BETWEEN/literal-IN edits never nest, but an IN-subquery edit can
-    # CONTAIN a site inside its subquery body: the inner rewrite wins
-    # and the outer keeps native semantics (its body text would clobber
-    # the inner edit otherwise)
-    edits = [
-        (a, b, r) for i0, (a, b, r) in enumerate(edits)
-        if not any(
-            j != i0 and a2 >= a and b2 <= b and (a2, b2) != (a, b)
-            for j, (a2, b2, _r2) in enumerate(edits)
-        )
-    ]
-    return _apply_edits(sql, edits)
-
-
-# SQLite functions whose RESULT is text (func.c/date.c) — used only by
-# the comparison classifier for the value class; they carry NO affinity
 # numeric-RESULT functions whose passthru/static typing follows the
 # argument, but whose SQLite VALUE is always a number (args coerce):
 # the comparison classifier must not treat them as text (r17)
@@ -4517,12 +4341,7 @@ def _cmp_classify(span: str, coltypes):
     Returns (affinity, vclass): affinity in {'int','real','text',None,
     'unk'} with None = SQLite's NO affinity; vclass in {'num','text',
     'numlit','strlit','null','unk'} describing the static VALUE."""
-    core = span.strip()
-    while core.startswith("("):
-        cm = _div_mask(core)
-        if _div_find_close(cm, 0, len(core)) != len(core) - 1:
-            break
-        core = core[1:-1].strip()
+    core = _unparen(span)
     if not core:
         return "unk", "unk"
     cmc = re.match(r"(?is)^(.*\S)\s+collate\s+[a-z_][a-z0-9_]*$", core)
@@ -4673,171 +4492,11 @@ def _cmp_classify(span: str, coltypes):
     return "unk", "unk"
 
 
-_IS_WORD_RX = re.compile(r"(?i)\bis\b")
-_IS_SKIP_WORDS = frozenset({"null", "true", "false", "distinct"})
-
-
-def _rewrite_is_operator(sql: str, coltypes) -> str:
-    """SQLite `x IS y` / `x IS NOT y` with a general operand: null-safe
-    equality UNDER COMPARISON AFFINITY (expr.c treats IS exactly like =
-    plus NULL-equality; pinned: `s IS 7` matches '7', `n IS '7'`
-    matches 7). Spark only parses IS [NOT] NULL/TRUE/FALSE/DISTINCT
-    FROM, so the general form was a loud parse error before (r14).
-    Untouched: those Spark-native forms."""
-    if " is " not in sql.lower() and "\tis " not in sql.lower():
-        if not re.search(r"(?i)\bis\b", sql):
-            return sql
-    mask = _div_mask(sql)
-    low = sql.lower()
-    edits: list[tuple[int, int, str]] = []
-    for m in _IS_WORD_RX.finditer(mask):
-        j = _skip_ws(mask, m.end())
-        wm = _WORD_RX.match(mask, j)
-        neg = False
-        opd_start = j
-        if wm and low[wm.start():wm.end()] == "not":
-            neg = True
-            j2 = _skip_ws(mask, wm.end())
-            wm2 = _WORD_RX.match(mask, j2)
-            if wm2 and low[wm2.start():wm2.end()] in _IS_SKIP_WORDS:
-                continue  # IS NOT NULL / IS NOT DISTINCT FROM / booleans
-            opd_start = j2
-        elif wm and low[wm.start():wm.end()] in _IS_SKIP_WORDS:
-            continue  # IS NULL / IS DISTINCT FROM / IS TRUE/FALSE
-        r_first = _skip_ws(mask, opd_start)
-        r_end = _cmp_operand_end(sql, mask, r_first, _EQ)
-        if r_end is None:
-            continue
-        e = m.start()
-        while e > 0 and mask[e - 1] in " \t\r\n":
-            e -= 1
-        l_start = _cmp_operand_start(sql, mask, e, _EQ)
-        if l_start is None:
-            continue
-        x = sql[l_start:e].strip()
-        r = sql[r_first:r_end].strip()
-        if not x or not r:
-            continue
-        body = _is_body(x, r, coltypes)
-        if neg:
-            body = f"(NOT {body})"
-        edits.append((l_start, r_end, body))
-    # IS sites never nest inside each other's operand spans (the walks
-    # stop at comparison glue), but an operand may be a subquery holding
-    # another site: inner wins, as in the range pass
-    edits = [
-        (a, b, r0) for i0, (a, b, r0) in enumerate(edits)
-        if not any(
-            j0 != i0 and a2 >= a and b2 <= b and (a2, b2) != (a, b)
-            for j0, (a2, b2, _r2) in enumerate(edits)
-        )
-    ]
-    return _apply_edits(sql, edits)
-
-
-def _is_body(x: str, r: str, coltypes) -> str:
-    """Null-safe-equality body for `x IS r` under comparison affinity."""
-    affL, vclL = _cmp_classify(x, coltypes)
-    affR, vclR = _cmp_classify(r, coltypes)
-    base = f"(({x}) <=> ({r}))"
-    if "unk" in (affL, affR, vclL, vclR) or "null" in (vclL, vclR):
-        return base
-    NUM = ("int", "real")
-
-    def _ns_rowwise(num, txt):
-        d = f"TRY_CAST(({txt}) AS DOUBLE)"
-        return (
-            f"(CASE WHEN ({num}) IS NULL OR ({txt}) IS NULL "
-            f"THEN (({num}) IS NULL AND ({txt}) IS NULL) "
-            f"WHEN {d} IS NOT NULL THEN ({num}) = {d} "
-            f"ELSE false END)"
-        )
-
-    if affL is not None and affR is not None:
-        if affL in NUM and affR == "text":
-            return _ns_rowwise(x, r)
-        if affL == "text" and affR in NUM:
-            return _ns_rowwise(r, x)
-        return base
-    if (affL is None) != (affR is None):
-        x_is_left = affR is None
-        xa = affL if x_is_left else affR
-        x_text = x if x_is_left else r
-        o_text = r if x_is_left else x
-        ov = vclR if x_is_left else vclL
-        if ov in ("strlit", "numlit"):
-            # peel balanced outer parens — classify saw through them
-            # (row-value IS expansion emits `(n) IS ('2')` shapes, r15)
-            while o_text.startswith("("):
-                om = _div_mask(o_text)
-                if _div_find_close(om, 0, len(o_text)) != len(o_text) - 1:
-                    break
-                o_text = o_text[1:-1].strip()
-        if xa in NUM:
-            if ov == "strlit":
-                if _div_str_lit_type(_literal_content(o_text)) in NUM:
-                    bare = _literal_content(o_text).strip()
-                    return f"(({x_text}) <=> ({bare}))"
-                return "(1 = 0)"  # junk literal never IS a numeric
-            if ov == "text":
-                return _ns_rowwise(x_text, o_text)
-            if ov == "bool":
-                return (f"(({x_text}) <=> "
-                        f"(TRY_CAST(({o_text}) AS INT)))")
-            return base
-        if ov == "bool":
-            # TEXT affinity: render the 0/1 through BIGINT (r15)
-            return (f"(({x_text}) <=> "
-                    f"(TRY_CAST(TRY_CAST(({o_text}) AS BIGINT) "
-                    f"AS STRING)))")
-        if ov == "numlit":
-            body = o_text.lstrip("+- \t")
-            neg0 = o_text[:len(o_text) - len(body)].count("-") % 2 == 1
-            if _div_lit_type(body) == "real" or body[-1:] in "dDfF":
-                v = float(body.rstrip("dDfF"))
-                lit = _sqlite_double_text_static(-v if neg0 else v)
-            else:
-                lit = ("-" if neg0 else "") + body
-            lit_sql = "'" + lit.replace("'", "''") + "'"
-            return f"(({x_text}) <=> {lit_sql})"
-        if ov == "num":
-            t0 = _cmp_num_type(o_text, coltypes)
-            if t0 == "int":
-                rend = f"TRY_CAST(({o_text}) AS STRING)"
-            elif t0 == "real":
-                rend = f"filesql_double_text(TRY_CAST(({o_text}) AS DOUBLE))"
-            else:
-                return base
-            return f"(({x_text}) <=> ({rend}))"
-        return base
-    num_l = vclL in ("num", "numlit")
-    txt_r = vclR in ("strlit", "text")
-    num_r = vclR in ("num", "numlit")
-    txt_l = vclL in ("strlit", "text")
-    if (num_l and txt_r) or (txt_l and num_r):
-        guards = [
-            f"({t0}) IS NULL"
-            for t0, vc in ((x, vclL), (r, vclR))
-            if vc in ("num", "text")
-        ]
-        if not guards:
-            return "(1 = 0)"  # literal vs literal of mixed classes
-        if len(guards) == 2:
-            return f"({guards[0]} AND {guards[1]})"
-        return "(1 = 0)"  # one side a literal: never both NULL
-    return base
-
-
 def _cmp_num_type(span: str, coltypes):
     """Static int/real type of a numeric-valued comparison operand, for
     the TEXT-rendering branch — descends into a scalar subquery's first
     select item (the span itself walks as unknown)."""
-    core = span.strip()
-    while core.startswith("("):
-        cm0 = _div_mask(core)
-        if _div_find_close(cm0, 0, len(core)) != len(core) - 1:
-            break
-        core = core[1:-1].strip()
+    core = _unparen(span)
     sm = re.match(r"(?i)^select\b", core)
     if sm:
         cm0 = _div_mask(core)
@@ -4876,15 +4535,7 @@ def _cmp_chain_render(span: str, coltypes) -> str | None:
     value-dependent arithmetic pass uses (r17 — closes the concat-
     inside-arithmetic-inside-comparison loud residue). None when the
     span has non-analyzable operands (stays loud-native)."""
-    core = span.strip()
-    while core.startswith("("):
-        cm0 = _div_mask(core)
-        if _div_find_close(cm0, 0, len(core)) != len(core) - 1:
-            break
-        inner = core[1:-1].strip()
-        if not inner:
-            return None
-        core = inner
+    core = _unparen(span)
     mask = _div_mask(core)
     conds: list[str] = []
     saw_real = False
@@ -4964,12 +4615,7 @@ def _cmp_case_distribute(case_text, other_text, cmp_op, case_is_left):
     compare pass under that arm's own affinity). None when the span is
     not a full searched CASE. A missing ELSE yields NULL — compared,
     still NULL."""
-    core = case_text.strip()
-    while core.startswith("("):
-        cm0 = _div_mask(core)
-        if _div_find_close(cm0, 0, len(core)) != len(core) - 1:
-            break
-        core = core[1:-1].strip()
+    core = _unparen(case_text)
     if not re.match(r"(?i)^case\b", core):
         return None
     cm = _div_mask(core)
@@ -5017,269 +4663,6 @@ def _cmp_case_distribute(case_text, other_text, cmp_op, case_is_left):
         parts.append("ELSE CAST(NULL AS BOOLEAN)")
     parts.append("END")
     return "(" + " ".join(parts) + ")"
-
-
-def _cmp_match_site(sql, mask, opos, op, coltypes):
-    level, e = _LEVEL[op], _skip_ws_back(mask, opos)
-    l_start = _cmp_operand_start(sql, mask, e, level)
-    if l_start is None:
-        return None
-    r_first = _skip_ws(mask, opos + len(op))
-    r_close = _cmp_operand_end(sql, mask, r_first, level)
-    if r_close is None:
-        return None
-    # trailing COLLATE (r15, datatype3.html §5.2): affinity conversion
-    # happens FIRST, then the collation applies only if the comparison
-    # is still textual. NOCASE on a text-compare site attaches as
-    # UTF8_LCASE; on a numeric-conversion or type-order site the
-    # collation is irrelevant and is consumed. Unknown collations and
-    # affinity-clean sites stay native (the collate pass renames them).
-    low = sql.lower()
-    coll = None
-    r_end = r_close
-    mc = _find_depth0(mask[r_first:r_close], _COLLATE_WORD_RX)
-    if mc:
-        r_end = _skip_ws_back(mask, r_first + mc.start())
-        wmn = _WORD_RX.match(mask, _skip_ws(mask, r_first + mc.end()))
-        if not wmn or low[wmn.start():wmn.end()] not in ("nocase",
-                                                         "binary"):
-            return None  # RTRIM/custom: native (collate pass raises)
-        if wmn.end() != r_close:
-            # COLLATE binds tighter than || / arithmetic / bitwise, so
-            # an operator after the name continues the operand: `s = n
-            # COLLATE NOCASE || 'y'` is `s = ((n COLLATE NOCASE) ||
-            # 'y')`. Consuming the clause here would splice the bare
-            # compare and leave the operator glued to a boolean; keep
-            # the native path (the collate-rename pass groups it).
-            return None
-        coll = low[wmn.start():wmn.end()]
-    coll_sfx = " COLLATE UTF8_LCASE" if coll == "nocase" else ""
-    p_text = sql[l_start:e].strip()
-    r_text = sql[r_first:r_end].strip()
-    if not p_text or not r_text:
-        return None
-    cmp_op = "=" if op == "==" else op
-    affL, vclL = _cmp_classify(p_text, coltypes)
-    affR, vclR = _cmp_classify(r_text, coltypes)
-    if "unk" in (affL, affR, vclL, vclR):
-        # a mixed-arm searched CASE operand (arms of DIFFERENT value
-        # classes — `CASE WHEN c THEN '0' ELSE abs(n) END`) has
-        # PER-ROW comparison semantics SQLite decides by the fired
-        # arm's storage class; no static class captures it. When the
-        # OTHER side is cheap to duplicate, DISTRIBUTE the comparison
-        # into the arms and let this pass re-process each site with
-        # its exact affinity (r16 campaign 4; Spark's static typing
-        # would coerce every arm to the common STRING type instead).
-        def _dup_ok(t0):
-            # the other side is duplicated per arm: simple/compound
-            # operands qualify directly; deterministic chains qualify
-            # through a paren wrap (same cap/blocklist)
-            return _vd_operand_ok(t0) or _vd_compound_operand(f"({t0})")
-
-        d = None
-        if "unk" in (affL, vclL) and coll is None and _dup_ok(r_text):
-            d = _cmp_case_distribute(p_text, r_text, cmp_op, True)
-        elif "unk" in (affR, vclR) and coll is None and _dup_ok(p_text):
-            d = _cmp_case_distribute(r_text, p_text, cmp_op, False)
-        if d is not None:
-            return l_start, r_close, d
-        return None
-    if "null" in (vclL, vclR):
-        if "bool" in (vclL, vclR) or coll is not None:
-            # NULL vs a predicate/EXISTS operand (boolean crash) or a
-            # trailing COLLATE (Spark rejects it on non-strings): the
-            # SQLite result is NULL unconditionally — emit it (r15)
-            return l_start, r_close, "TRY_CAST(NULL AS BOOLEAN)"
-        return None
-    NUM = ("int", "real")
-
-    def _strip_coll():
-        # the comparison resolved NUMERIC on both sides: SQLite ignores
-        # the collation there, but Spark rejects COLLATE on a numeric —
-        # re-emit the bare comparison, consuming the clause (r15)
-        if coll is None:
-            return None
-        return l_start, r_close, f"(({p_text}) {cmp_op} ({r_text}))"
-
-    def _rowwise(num, txt, text_right):
-        # numeric-affinity side vs text-VALUED side: NUMERIC conversion
-        # attempted per row; unconvertible text keeps type order
-        d = f"TRY_CAST(({txt}) AS DOUBLE)"
-        n_op_d = (
-            f"({num}) {cmp_op} {d}" if text_right
-            else f"{d} {cmp_op} ({num})"
-        )
-        const = _CMP_TEXT_GREATER[
-            cmp_op if text_right else _CMP_MIRROR[cmp_op]
-        ]
-        return l_start, r_close, (
-            f"(CASE WHEN ({num}) IS NULL OR ({txt}) IS NULL "
-            f"THEN CAST(NULL AS BOOLEAN) "
-            f"WHEN {d} IS NOT NULL THEN {n_op_d} "
-            f"ELSE {const} END)"
-        )
-
-    # ---- both sides carry affinity (columns / CASTs): NUMERIC wins
-    if affL is not None and affR is not None:
-        if affL in NUM and affR == "text":
-            return _rowwise(p_text, r_text, True)
-        if affL == "text" and affR in NUM:
-            return _rowwise(r_text, p_text, False)
-        if affL in NUM and affR in NUM:
-            return _strip_coll()  # numeric compare: collation inert
-        return None  # both text: native semantics agree
-    # ---- exactly one side carries affinity: it applies to the other
-    if (affL is None) != (affR is None):
-        x_is_left = affR is None
-        xa = affL if x_is_left else affR
-        x_text = p_text if x_is_left else r_text
-        o_text = r_text if x_is_left else p_text
-        ov = vclR if x_is_left else vclL
-        if ov in ("strlit", "numlit"):
-            # classify saw through balanced outer parens — peel them so
-            # the literal render/unquote paths see the bare token (r15:
-            # row-value expansion emits `(n) = ('2')` shapes)
-            while o_text.startswith("("):
-                om = _div_mask(o_text)
-                if _div_find_close(om, 0, len(o_text)) != len(o_text) - 1:
-                    break
-                o_text = o_text[1:-1].strip()
-        if xa in NUM:
-            if ov == "strlit":
-                if _div_str_lit_type(_literal_content(o_text)) in NUM:
-                    # clean-numeric string literal converts: unquote so
-                    # Spark compares numerically (its native cast to
-                    # the column's INTEGER type ANSI-crashes on '7.5')
-                    bare = _literal_content(o_text).strip()
-                    if x_is_left:
-                        return l_start, r_close, \
-                            f"(({x_text}) {cmp_op} ({bare}))"
-                    return l_start, r_close, f"(({bare}) {cmp_op} ({x_text}))"
-                # junk literal: statically unconvertible → type order
-                const = _CMP_TEXT_GREATER[
-                    cmp_op if x_is_left else _CMP_MIRROR[cmp_op]
-                ]
-                return l_start, r_close, (
-                    f"(CASE WHEN ({x_text}) IS NULL "
-                    f"THEN CAST(NULL AS BOOLEAN) ELSE {const} END)"
-                )
-            if ov == "text":
-                # text-valued no-affinity operand (upper(s), s1||s2 via
-                # funcs): NUMERIC affinity converts per row
-                return _rowwise(x_text, o_text, x_is_left)
-            if ov == "bool":
-                # predicate operand: SQLite 0/1 INTEGER vs Spark
-                # BOOLEAN — numeric compare through an INT cast (r15)
-                ob = f"TRY_CAST(({o_text}) AS INT)"
-                if x_is_left:
-                    return l_start, r_close, f"(({x_text}) {cmp_op} ({ob}))"
-                return l_start, r_close, f"(({ob}) {cmp_op} ({x_text}))"
-            # numeric-valued operand: both sides numeric
-            return _strip_coll()
-        # X carries TEXT affinity: it applies to the numeric other side
-        if ov == "bool":
-            # TEXT affinity renders the 0/1 (BIGINT first: a bare
-            # boolean casts to 'true'/'false' strings in Spark)
-            rend = f"TRY_CAST(TRY_CAST(({o_text}) AS BIGINT) AS STRING)"
-            if x_is_left:
-                return l_start, r_close, \
-                    f"(({x_text}) {cmp_op} ({rend}{coll_sfx}))"
-            return l_start, r_close, \
-                f"(({rend}{coll_sfx}) {cmp_op} ({x_text}))"
-        if ov == "numlit":
-            # STRING comparison against SQLite's static rendering;
-            # peel parens AND signs in any nesting order — classify
-            # saw through them, so `(1)` / `-(2)` reach here (r15)
-            body, neg = o_text, False
-            while True:
-                b2 = body.lstrip("+ \t")
-                while b2.startswith("-"):
-                    neg = not neg
-                    b2 = b2[1:].lstrip("+ \t")
-                if b2.startswith("("):
-                    bm0 = _div_mask(b2)
-                    if _div_find_close(bm0, 0, len(b2)) == len(b2) - 1:
-                        body = b2[1:-1].strip()
-                        continue
-                body = b2
-                break
-            if _div_lit_type(body) == "real" or body[-1:] in "dDfF":
-                v = float(body.rstrip("dDfF"))
-                lit = _sqlite_double_text_static(-v if neg else v)
-            else:
-                lit = ("-" if neg else "") + body
-            lit_sql = "'" + lit.replace("'", "''") + "'"
-            if x_is_left:
-                return l_start, r_close, \
-                    f"(({x_text}) {cmp_op} ({lit_sql}{coll_sfx}))"
-            return l_start, r_close, \
-                f"(({lit_sql}{coll_sfx}) {cmp_op} ({x_text}))"
-        if ov == "num":
-            # numeric-valued compound/function (a+1, abs(a), a/2 …):
-            # TEXT affinity renders the VALUE, then string-compares
-            # (r14 — the compound-operand residue, VERDICT r13 #4;
-            # empirically arithmetic carries NO affinity in SQLite, so
-            # the TEXT column side wins — not NUMERIC as assumed)
-            t0 = _cmp_num_type(o_text, coltypes)
-            if t0 == "int":
-                # TRY_CAST, not CAST: the cast pass skips the whole
-                # interior of a CAST it declines, leaving any SQLite-
-                # spelled casts inside o_text (truthiness wraps, user
-                # CASTs) unexpanded; try_cast is not matched by it
-                rend = f"TRY_CAST(({o_text}) AS STRING)"
-            elif t0 == "real":
-                rend = f"filesql_double_text(TRY_CAST(({o_text}) AS DOUBLE))"
-            else:
-                # value-dependent chain (TEXT operands): runtime
-                # flavor dispatch (r17)
-                rend = _cmp_chain_render(o_text, coltypes)
-                if rend is None:
-                    return None
-            if x_is_left:
-                return l_start, r_close, \
-                    f"(({x_text}) {cmp_op} ({rend}{coll_sfx}))"
-            return l_start, r_close, \
-                f"(({rend}{coll_sfx}) {cmp_op} ({x_text}))"
-        return None  # strlit / text value vs TEXT affinity: native
-    # ---- neither side carries affinity: raw values, type order
-    if (vclL == "bool") != (vclR == "bool") and {vclL, vclR} <= {
-        "num", "numlit", "bool"
-    }:
-        # bool vs numeric value: SQLite compares the 0/1 numerically;
-        # Spark cannot compare BOOLEAN with a number — INT-cast it
-        bool_left = vclL == "bool"
-        b_t = p_text if bool_left else r_text
-        o_t = r_text if bool_left else p_text
-        ob = f"TRY_CAST(({b_t}) AS INT)"
-        if bool_left:
-            return l_start, r_close, f"(({ob}) {cmp_op} ({o_t}))"
-        return l_start, r_close, f"(({o_t}) {cmp_op} ({ob}))"
-    num_l = vclL in ("num", "numlit", "bool")
-    txt_r = vclR in ("strlit", "text")
-    num_r = vclR in ("num", "numlit", "bool")
-    txt_l = vclL in ("strlit", "text")
-    if (num_l and txt_r) or (txt_l and num_r):
-        const = _CMP_TEXT_GREATER[
-            cmp_op if txt_r else _CMP_MIRROR[cmp_op]
-        ]
-        guards = [
-            f"({t0}) IS NULL"
-            for t0, vc in ((p_text, vclL), (r_text, vclR))
-            if vc in ("num", "text", "bool")  # literals are never NULL
-        ]
-        if not guards:
-            # (1 = 1)/(1 = 0), not (true)/(false): a bare paren'd
-            # identifier after WHERE parses as a relation column-alias
-            # list in Spark (r15 campaign find)
-            safe = "(1 = 1)" if const == "true" else "(1 = 0)"
-            return l_start, r_close, safe
-        return l_start, r_close, (
-            f"(CASE WHEN {' OR '.join(guards)} "
-            f"THEN CAST(NULL AS BOOLEAN) ELSE {const} END)"
-        )
-    if not (txt_l or txt_r):
-        return _strip_coll()  # numeric/bool compare: collation inert
-    return None
 
 
 _SELECT_WORD_RX = re.compile(r"(?i)\bselect\b")
@@ -7998,11 +7381,7 @@ def rewrite(sql: str, column_types: dict[str, str] | None = None) -> str:
     sql = _rewrite_case_truthiness(sql)
     sql = _rewrite_clause_truthiness(sql)
     sql = _rewrite_bare_not(sql)
-    sql = _rewrite_row_values(sql)
-    if _affinity_triggers(sql, column_types):
-        sql = _rewrite_range_affinity(sql, column_types)
-    sql = _rewrite_compare_affinity(sql, column_types)
-    sql = _rewrite_is_operator(sql, column_types)
+    sql = _rewrite_comparisons(sql, column_types)
     sql = _rewrite_filter_over(sql)
     sql = _rewrite_concat_real(sql, column_types)
     sql = _rewrite_value_dependent_div(sql, column_types)

@@ -97,10 +97,10 @@ def test_is_pass_bails_on_word_operator_operand():
         "SELECT a LIKE b IS 0 AS c FROM t", {"a": "text", "b": "text"}
     )
     # (a LIKE b) IS 0 in SQLite; misgrouping rendered a ILIKE ((b) <=> 0)
-    # — silently wrong. The pass now bails: the form stays a loud Spark
-    # parse error, as before r14.
+    # — silently wrong. The comparison pass takes the LIKE as IS's left
+    # operand, a boolean read as INTEGER 0/1, as SQLite groups it.
     assert "ILIKE ((b)" not in out, out
-    assert "<=> (0)" not in out.replace("'", ""), out
+    assert out == "SELECT ((TRY_CAST((a ILIKE b) AS INT)) <=> (0)) AS c FROM t", out
 
 
 # -------------- r14 advice (low): x IN (empty subquery) is FALSE even
@@ -197,8 +197,13 @@ def test_bitwise_glued_comparison_affinity(spark, tmp_path, stmt):
 # ---------------- r15: chained comparisons must not be mis-spliced.
 # SQLite binds <-family tighter than =-family and left-associates the
 # rest; the affinity pass used to rewrite the inner [s = n] site and
-# splice mid-expression (silent corruption). Now it bails — the form
-# keeps native Spark semantics (typically a loud type error).
+# splice mid-expression (silent corruption). The comparison pass now
+# rewrites the inner comparison whole and hands it to the outer site as
+# its operand, a boolean read as INTEGER 0/1 (or its TEXT '0'/'1').
+
+_ROW = ("CASE WHEN (n) IS NULL OR (s) IS NULL THEN CAST(NULL AS BOOLEAN) WHEN "
+        "TRY_CAST((s) AS DOUBLE) IS NOT NULL THEN TRY_CAST((s) AS DOUBLE) {} (n) ELSE false END")
+
 
 @pytest.mark.parametrize("stmt", [
     "SELECT s = n < 1 AS c FROM t",
@@ -210,7 +215,17 @@ def test_chained_comparisons_not_spliced(stmt):
     from filesql_spark.dialect import rewrite
 
     out = rewrite(stmt, {"s": "text", "n": "int", "a": "int"})
-    assert "CASE WHEN" not in out, (stmt, out)  # no affinity splice
+    assert out == {
+        "SELECT s = n < 1 AS c FROM t":
+            "SELECT ((s) = (TRY_CAST(TRY_CAST((n < 1) AS BIGINT) AS STRING))) AS c FROM t",
+        "SELECT s < n = 1 AS c FROM t":
+            f"SELECT ((TRY_CAST((({_ROW.format('<')})) AS INT)) = (1)) AS c FROM t",
+        "SELECT a BETWEEN 1 AND n = s AS c FROM t":
+            "SELECT ((TRY_CAST(TRY_CAST((a BETWEEN 1 AND n) AS BIGINT) AS STRING)) = (s)) "
+            "AS c FROM t",
+        "SELECT s = n IS 0 AS c FROM t":
+            f"SELECT ((TRY_CAST((({_ROW.format('=')})) AS INT)) <=> (0)) AS c FROM t",
+    }[stmt], (stmt, out)
 
 
 def test_boolean_and_still_rewrites():
@@ -256,7 +271,7 @@ def test_row_value_comparisons(spark, tmp_path, stmt):
 
 
 def test_row_value_non_targets_untouched():
-    from filesql_spark.dialect import _rewrite_row_values
+    from filesql_spark.dialect import _rewrite_comparisons
 
     for s in [
         "SELECT f(a, b) = (c, d) AS x FROM t",      # function call
@@ -264,7 +279,7 @@ def test_row_value_non_targets_untouched():
         "SELECT (a, b) = (SELECT 1, 2) FROM t",     # subquery side
         "SELECT max(a, b) = (1, 2) FROM t",
     ]:
-        assert _rewrite_row_values(s) == s, s
+        assert _rewrite_comparisons(s, None) == s, s
 
 
 # ------------- verdict r15 #6: affinity-then-collation (datatype3 §5.2:

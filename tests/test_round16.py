@@ -101,7 +101,7 @@ def test_truthiness_trims_inert_collate(spark, tmp_path, stmt):
 
 # ------- r15 advice (low): bool operands reach the range-affinity pass
 # even with no TEXT column / quote in the SQL (the compare-pass gate's
-# r15 triggers, now shared via _affinity_triggers)
+# r15 triggers; the fused comparison pass has no such gate now)
 
 # ------- VERDICT r15 #4: EXISTS glued into arithmetic/bitwise/concat
 # chains evaluates to INTEGER 0/1 (coerced via TRY_CAST AS INT before

@@ -11,8 +11,10 @@ Builds one statement corpus from this tree:
   per generator and seed;
 - ``operator_pair_selects`` of ``tests/test_dialect.py``: `a op1 b op2 c`
   for every ordered pair of SQLite binary operators but GLOB, one wide
-  SELECT per first operator, and ``between_rows``: [NOT] BETWEEN next to
-  each of those operators, 24 expressions per SELECT.
+  SELECT per first operator, ``between_rows``: [NOT] BETWEEN next to
+  each of those operators, and ``in_rows``: [NOT] IN lists and
+  subqueries next to each of them, row values and sites nested in an IN
+  or IS subquery, 24 expressions per SELECT.
 
 Each statement is rewritten twice, with no column types and with one
 typed map, by ``filesql_spark.dialect`` imported from this tree and from
@@ -129,10 +131,11 @@ def corpus() -> list[str]:
     # whole statement, in both trees alike
     ops = [op for op in test_dialect.PRECEDENCE_OPS if op != "GLOB"]
     stmts += test_dialect.operator_pair_selects(ops, ops).values()
-    rows = [" ".join(r) for r in test_dialect.between_rows(ops)]
-    stmts += [
-        "SELECT " + ", ".join(rows[k:k + 24]) + " FROM t" for k in range(0, len(rows), 24)
-    ]
+    for gen in (test_dialect.between_rows, test_dialect.in_rows):
+        rows = [" ".join(r) for r in gen(ops)]
+        stmts += [
+            "SELECT " + ", ".join(rows[k:k + 24]) + " FROM t" for k in range(0, len(rows), 24)
+        ]
     return list(dict.fromkeys(stmts))
 
 
