@@ -2995,6 +2995,10 @@ def _operand_start(sql, mask, e, level):
     while start is not None:
         k = _skip_ws_back(mask, start) - 1
         op = _op_before(sql, mask, k) if k >= 0 else None
+        if op is not None and op[0] == "in" and level > _EQ:
+            # `x IN (…)` ends at its list (parse.y): the whole of it is
+            # the operand of a tighter operator after the list
+            return _operand_start(sql, mask, _skip_ws_back(mask, op[1]), _EQ)
         if op is None or _LEVEL[op[0]] < level:
             return start
         start = _rev_operand(sql, mask, _skip_ws_back(mask, op[1]))
@@ -3038,8 +3042,10 @@ def _operand_end(sql, mask, pos, level):
 def _loosest_level(text, mask):
     """Precedence level of the loosest depth-0 operator of ``text`` (its
     scan mask is ``mask``), None when there is none. A + - * / % with no
-    operand before it is a sign or a star, not an operator."""
-    loosest, depth, between, after = None, 0, 0, False
+    operand before it is a sign or a star, not an operator. `x IN (…)`
+    followed by an operator is that operator's operand (_operand_start):
+    its IN, and what it holds at IN's level or tighter, is not loosest."""
+    loosest, depth, between, after, in_last = None, 0, 0, False, False
     i = 0
     while i < len(mask):
         c = mask[i]
@@ -3069,16 +3075,16 @@ def _loosest_level(text, mask):
             between += 1
         elif key == "and" and between:
             between, key = between - 1, "between"
+        elif key == "in":
+            if loosest is not None and loosest >= _EQ:
+                loosest = None
+            in_last = True
+            continue
+        in_last = False
         lvl = _LEVEL[key]
         loosest = lvl if loosest is None else min(loosest, lvl)
         after = False
-    return loosest
-
-
-def _in_cmp_band(level) -> bool:
-    """``level`` is one of the comparison rows (=, <, ESCAPE and their
-    word operators), whose operands the affinity passes rewrite."""
-    return level is not None and _NOT < level < _BIT
+    return _EQ if in_last and (loosest is None or loosest > _EQ) else loosest
 
 
 def _strip_unary_plus(sql: str) -> str:
@@ -3897,8 +3903,10 @@ def _rewrite_comparisons(sql: str, coltypes) -> str:
 
 
 def _chained(sql, mask, a, b) -> bool:
-    """The operand [a, b) holds a comparison-band operator at depth 0."""
-    return _in_cmp_band(_loosest_level(sql[a:b], mask[a:b]))
+    """The operand [a, b) holds a comparison-row operator (=, <, ESCAPE
+    and their word operators) at depth 0."""
+    level = _loosest_level(sql[a:b], mask[a:b])
+    return level is not None and _NOT < level < _BIT
 
 
 def _group_chained(sql, mask, a, b, spans):
@@ -4230,38 +4238,36 @@ def _in_sub_body(x, sub, item, neg, filtering, coltypes):
     direct comparison does (expr.c sqlite3CompareAffinity on TK_IN):
     NUMERIC converts a text side row by row (junk text in the subquery
     is dropped: it never equals a number), TEXT renders a numeric side
-    as SQLite's text, and numbers never equal text with no affinity.
-    The result is SQL's three-valued IN: false on an empty set, NULL
-    for a NULL x, true on a match, else NULL when the set holds a NULL
-    and false when not. Spark plans an IN subquery outside a filter as
-    an existence join, which never yields NULL, so every site takes that
-    template but a term of a filter condition (``filtering``,
-    _filter_term) that needs no conversion, where a NULL and a false
-    alike reject. None for a multi-column subquery."""
+    as SQLite's text, a boolean side is INTEGER 0/1, and numbers never
+    equal text with no affinity. The result is SQL's three-valued IN:
+    false on an empty set, NULL for a NULL x, true on a match, else NULL
+    when the set holds a NULL and false when not. Spark plans an IN
+    subquery outside a filter as an existence join, which never yields
+    NULL, so every site takes that template but a term of a filter
+    condition (``filtering``, _filter_term) that needs no conversion,
+    where a NULL and a false alike reject. None for a multi-column
+    subquery."""
     if item is None:
         return None
     plan, k, vcls = _affinity(x, item, coltypes)
-    hit = f"({x}) IN ({sub})"
-    if plan in ("rowwise", "unquote") and k:
-        hit = (
-            f"({x}) IN (SELECT CASE WHEN __c IS NULL THEN CAST(NULL AS DOUBLE) "
-            f"ELSE TRY_CAST(__c AS DOUBLE) END FROM ({sub}) AS __in_aff(__c) "
-            f"WHERE __c IS NULL OR TRY_CAST(__c AS DOUBLE) IS NOT NULL)"
-        )
-    elif plan in ("rowwise", "unquote"):
-        hit = f"TRY_CAST(({x}) AS DOUBLE) IN ({sub})"
-    elif plan == "order":
-        hit = None
+    v, conv = "__c" if k else f"({x})", None
+    if plan in ("rowwise", "unquote", "int"):
+        conv = f"TRY_CAST({v} AS {'INT' if plan == 'int' else 'DOUBLE'})"
     elif plan == "text":
-        text = _as_text(item, vcls[1], coltypes, "__c") if k else _as_text(x, vcls[0], coltypes)
-        if text is None:
-            plan = "unk"
-        elif k:
-            hit = f"({x}) IN (SELECT {text} FROM ({sub}) AS __in_r(__c))"
-        else:
-            hit = f"({text}) IN ({sub})"
-    if filtering and plan in ("native", "unk", "null", "int"):
+        conv = _as_text((x, item)[k], vcls[k], coltypes, v if k else None)
+        plan = plan if conv else "unk"
+    if filtering and plan in ("native", "unk", "null"):
         return None
+    # only a true hit counts: the arms around it decide false and NULL,
+    # so a value the conversion drops (junk text as NULL) needs no filter
+    if plan == "order":
+        hit = None
+    elif conv is None:
+        hit = f"({x}) IN ({sub})"
+    elif k:
+        hit = f"({x}) IN (SELECT {conv} FROM ({sub}) AS __in_r(__c))"
+    else:
+        hit = f"({conv}) IN ({sub})"
     body = (
         f"(CASE WHEN (SELECT count(*) FROM ({sub}) AS __in_e) = 0 THEN false "
         f"WHEN ({x}) IS NULL THEN CAST(NULL AS BOOLEAN) "

@@ -1785,28 +1785,42 @@ def test_long_and_runs_rewrite():
 _ENGINE_PAIR_OPS = PRECEDENCE_OPS[2:4] + PRECEDENCE_OPS[6:]
 
 
-@pytest.mark.parametrize("op1", _ENGINE_PAIR_OPS)
-def test_operator_precedence_pairs_match_sqlite(pair_db, op1):
-    """`a op1 b op2 c` through the engine against sqlite3, one wide SELECT
-    per op1, over int, real and text columns in every position."""
-    con, eng = pair_db
-    q = operator_pair_selects([op1], _ENGINE_PAIR_OPS)[op1]
-
-    def norm(r):
-        return tuple(round(v, 6) if isinstance(v, float) else v for v in r)
-
-    want = [norm(r) for r in con.execute(q).fetchall()]
-    got = [norm(r) for r in eng.query(q).collect()]
-    assert got == want
-
-
 def _pair_rows(pair_db, q):
+    """(engine rows, sqlite3 rows) of ``q`` over pair_db, reals rounded."""
     con, eng = pair_db
 
     def norm(r):
         return tuple(round(v, 6) if isinstance(v, float) else v for v in r)
 
     return [norm(r) for r in eng.query(q).collect()], [norm(r) for r in con.execute(q).fetchall()]
+
+
+@pytest.mark.parametrize("op1", _ENGINE_PAIR_OPS)
+def test_operator_precedence_pairs_match_sqlite(pair_db, op1):
+    """`a op1 b op2 c` through the engine against sqlite3, one wide SELECT
+    per op1, over int, real and text columns in every position."""
+    got, want = _pair_rows(pair_db, operator_pair_selects([op1], _ENGINE_PAIR_OPS)[op1])
+    assert got == want
+
+
+def _in_rows_open(parts) -> bool:
+    """in_rows rows that still fail through the engine (CHANGES.md FOUND):
+    an IN result concatenated renders 'true' / 'false', and arithmetic
+    between an IN subquery and a text column leaves the text unconverted."""
+    return len(parts) == 5 and (
+        parts[1] in ("IN", "NOT IN") and parts[3] == "||"
+        or parts[1] == "NOT IN" and parts[3] in ("+", "-", "*", "/", "%") and parts[4] == "s"
+    )
+
+
+def test_in_rows_match_sqlite(pair_db):
+    """Every row of in_rows over the engine's pair operators through the
+    engine against sqlite3, 24 expressions per SELECT."""
+    rows = [" ".join(r) for r in in_rows(_ENGINE_PAIR_OPS) if not _in_rows_open(r)]
+    for k in range(0, len(rows), 24):
+        batch = rows[k:k + 24]
+        got, want = _pair_rows(pair_db, "SELECT id, " + ", ".join(batch) + " FROM t ORDER BY id")
+        assert got == want, batch
 
 
 @pytest.mark.parametrize("expr", [
@@ -1817,6 +1831,7 @@ def _pair_rows(pair_db, q):
     "n IS NOT x BETWEEN s AND n",
     "n IN (1, 3) = (x > 1)",
     "s = 7 IN (0, 1)",
+    "n < x NOT IN (SELECT x FROM t AS u)",
 ])
 def test_chained_comparisons_match_sqlite(pair_db, expr):
     """A comparison whose operand is another comparison groups as SQLite

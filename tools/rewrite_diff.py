@@ -5,7 +5,9 @@
 Builds one statement corpus from this tree:
 
 - the SQL string literals in ``tests/*.py`` and ``perfbench/workloads.py``;
-- ``workloads.dense_select`` for seeds 1-20 at every ``DENSE_SIZES`` size;
+- ``workloads.dense_select`` for seeds 1-20 at every ``DENSE_SIZES`` size,
+  and every statement the benchmark's front_door and sqlite_session
+  workloads run at seeds 1-20;
 - the seeded generators of ``tests/test_fuzz_dialect.py`` (seeds 2024, 77
   and 31337), one statement per generated expression plus one wide SELECT
   per generator and seed;
@@ -119,11 +121,16 @@ def corpus() -> list[str]:
     bench = os.path.join(REPO, "perfbench")
     stmts += _literals(os.path.join(bench, "workloads.py"))
     sys.path.insert(0, bench)
+    import datagen
     import workloads
 
     for seed in range(1, 21):
         for size in workloads.DENSE_SIZES:
             stmts.append(workloads.dense_select(random.Random(seed), size))
+        ctx = workloads.Ctx(None, "", seed)
+        tables = datagen.make_tables(seed, workloads.SESSION_SF)
+        for st in workloads.FrontDoor(ctx).statements() + workloads.SqliteSession(ctx).statements(tables):
+            stmts.append(st.sql)
     stmts += _fuzz_statements()
     import test_dialect
 
